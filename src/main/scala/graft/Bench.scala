@@ -169,6 +169,13 @@ object Bench {
   private def benchGc: String =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "Parallel")
 
+  /** Extra child-session confs for A/B config studies, e.g.
+    * SPARK_GRAFT_EXTRA_CONF="spark.sql.join.preferSortMergeJoin=false;..."
+    * — empty by default so the published methodology is unchanged. A
+    * run with extra confs is stamped with them and never refreshes the
+    * committed cost seed. */
+  private def extraConf: String = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
+
   /** Per-query prior warm cost: committed seed overlaid by the local
     * scratch detail of the most recent full run, then any partial run
     * (partial runs are the freshest signal but cover few queries).
@@ -415,8 +422,14 @@ object Bench {
     if (contaminated)
       System.err.println(s"[bench] WARNING: loadavg_start ${fmt(loadavgStart)} > " +
         s"$maxLoadavg — box was not idle at launch; artifact stamped contaminated")
+    val extraConfJson = "\"" + extraConf.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
     val envJson =
-      s"""{"child_heap_mb":$benchHeapMb,"gc":"$benchGc","cpus":"${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}","loadavg_start":${fmt(loadavgStart)},"loadavg":${fmt(loadavg)},"max_loadavg_gate":$maxLoadavg,"idle_waited_sec":$idleWaited}"""
+      s"""{"child_heap_mb":$benchHeapMb,"gc":"$benchGc","cpus":"${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}","extra_conf":$extraConfJson,"loadavg_start":${fmt(loadavgStart)},"loadavg":${fmt(loadavg)},"max_loadavg_gate":$maxLoadavg,"idle_waited_sec":$idleWaited}"""
     val reverifiedJson = reverified.map("\"" + _ + "\"").mkString("[", ",", "]")
     val detailLine =
       s"""{"metric":"total_warm","value":${fmt(warmTotal)},"unit":"sec","cold_total":${fmt(coldTotal)},"core_r1_total":${fmt(coreTotal)},"num_queries":${timings.size},"warm_runs_per_query":$WarmRuns,"contaminated":$contaminated,"env":$envJson,"queries":$detailJson,"sf":"$sfDir","failed":$failedJson,"suspect":$suspectJson,"drift":$driftJson,"solo_reverified":$reverifiedJson}"""
@@ -426,8 +439,9 @@ object Bench {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), detailLine + "\n")
 
     // a FULL run refreshes the committed cost seed so the next run's
-    // grouping reflects current reality (partial runs must not clobber)
-    if (only.isEmpty && timings.nonEmpty) {
+    // grouping reflects current reality (partial runs must not clobber,
+    // and neither may a run under extra confs: its costs are a study's)
+    if (only.isEmpty && timings.nonEmpty && extraConf.isEmpty) {
       val body = timings.toSeq.sortBy(-_._2._2)
         .map { case (k, (_, w)) => s""" "$k": ${fmt(w)}""" }
         .mkString(s"""{\n "__sf": "$sfDir",\n "__cpus": "${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}",\n""", ",\n", "\n}\n")
@@ -492,11 +506,7 @@ object Bench {
 
   private def child(sfDir: String, outPath: String, names: Seq[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // extra session confs for A/B config studies, e.g.
-    // SPARK_GRAFT_EXTRA_CONF="spark.sql.join.preferSortMergeJoin=false;..."
-    // — empty by default so the published methodology is unchanged
-    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(";").toSeq.map(_.trim).filter(_.contains("="))
+    val extra = extraConf.split(";").toSeq.map(_.trim).filter(_.contains("="))
       .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -1,6 +1,8 @@
 package graft.dedup
 
+import graft.iteration.Loop
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -14,7 +16,8 @@ import org.apache.spark.storage.StorageLevel
  *    edge list. Each round every vertex takes the minimum label among
  *    itself and its neighbors; convergence after O(graph diameter)
  *    rounds, one shuffle-join + map-side-combined min aggregate per
- *    round. Right for LSH near-duplicate clusters, which are dense
+ *    round, and one job that stores the round and counts its changed
+ *    labels. Right for LSH near-duplicate clusters, which are dense
  *    (diameter typically ≤ 3).
  *
  *  - `star` (the default distributed path): alternating
@@ -30,8 +33,13 @@ import org.apache.spark.storage.StorageLevel
  * Scale notes (100 TB design): the edge list produced by an LSH
  * similarity join is orders of magnitude smaller than the corpus
  * (only colliding pairs under the distance threshold). Lineage is
- * truncated with localCheckpoint every few rounds so the plan does
- * not grow unboundedly with iterations.
+ * truncated with a local checkpoint every round (star) or every fifth
+ * (minlabel) so the plan does not grow with iterations. Every round is
+ * stored by [[graft.iteration.Loop.materialize]], whose one job also
+ * returns what the driver needs to decide convergence, and released
+ * once the next round is stored; the returned frame is stored before
+ * the last round is released, so after the caller's `unpersist` no
+ * cache or checkpoint of the call remains.
  */
 object ConnectedComponents {
 
@@ -113,48 +121,43 @@ object ConnectedComponents {
     var iter = 0
     while (!converged && iter < maxIter) {
       // min neighbor label per vertex (partial aggregation map-side)
-      val nbrMin = adj.join(labels.withColumnRenamed("id", "v"), "v")
+      val nbrMin = adj.join(labels.select(col("id").as("v"), col("component")), "v")
         .groupBy(col("u").as("id")).agg(min("component").as("nbrMin"))
-      // the cached frame stays EXACTLY (id, component) — round 16
-      // carried a third `changed` column and unpersisted a 2-column
-      // PROJECTION of it each round, which does not sameResult-match
-      // the 3-column cache entry and silently released nothing
-      // (probed on Spark 4.1.2): one leaked O(V) cache per round.
-      // The changed probe is now a co-partitioned join against the
-      // previous labels (both sides hash(id)-cached, no exchange —
-      // the LabelPropagation shape), and `labels` always holds the
-      // persisted handle itself, so unpersist genuinely releases.
+      // the round's frame carries its own `changed` flag, and the job
+      // that stores it also counts the flags: one job per round decides
+      // convergence. `labels` always holds the stored frame itself:
+      // unpersisting a projection of it would match no cache entry and
+      // leak one O(V) cache per round.
       val next = labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"),
-          least(col("component"), coalesce(col("nbrMin"), col("component"))).as("component"))
-      val mat =
-        if ((iter + 1) % 5 == 0) next.localCheckpoint(true)
-        else next.persist(StorageLevel.MEMORY_AND_DISK)
-      // FULL-SCAN changed count, not where(changed).isEmpty: isEmpty
-      // short-circuits after the first changed row, leaving most of
-      // the lazily persisted mat's partitions uncached when the old
-      // labels unpersist below — every later round would then recompute
-      // the chain back to the last localCheckpoint (the PageRank r11
-      // ADVICE bug, same class). The aggregate is O(V) — the price the
-      // convergence check pays anyway — and doubles as the action that
-      // fills the cache while its parent is still alive.
-      val changed = mat
-        .join(labels.withColumnRenamed("component", "c0"), "id")
-        .where(col("component") =!= col("c0")).count()
+          least(col("component"), coalesce(col("nbrMin"), col("component"))).as("component"),
+          coalesce(col("nbrMin") < col("component"), lit(false)).as("changed"))
+      val (mat, changed) = Loop.materialize(next, checkpoint = (iter + 1) % 5 == 0, 0L)(
+        (n, r) => if (r.getBoolean(2)) n + 1 else n, _ + _)
       converged = changed == 0L
-      labels.unpersist()
+      Loop.release(labels)
       labels = mat
       iter += 1
     }
     adj.unpersist()
     sym.unpersist()
     lastRounds = iter
-    if (!converged)
+    if (!converged) {
+      Loop.release(labels)
       throw new IllegalStateException(
         s"ConnectedComponents did not converge within $maxIter rounds — component labels " +
           "would be partial (members of one cluster keeping different canonical ids). " +
           "Raise maxIter past the graph diameter.")
-    labels
+    }
+    stored(labels.select("id", "component"), labels)
+  }
+
+  /** Stores the returned frame and then releases the loop's last frame,
+    * so the caller's `unpersist` is all that is left to free. */
+  private def stored(out: DataFrame, last: DataFrame): DataFrame = {
+    val (kept, _) = Loop.materialize(out, checkpoint = false, 0L)((n, _) => n + 1, _ + _)
+    Loop.release(last)
+    kept
   }
 
   /**
@@ -169,79 +172,82 @@ object ConnectedComponents {
    *
    * Both preserve connectivity; a full round at least halves the
    * min-distance of every vertex, so components contract to stars
-   * centered at their minimum in O(log n) rounds. Convergence =
-   * edge-set fixpoint, detected in two phases: every round computes
-   * (count, bit_xor of per-edge xxhash64) in ONE aggregate job — an
-   * order-insensitive set signature — and only a signature match
-   * (i.e. the suspected final round) pays the exact `except`
-   * confirmation; a non-final round costs one scan, not a
-   * distinct+anti-join shuffle of the full edge set.
+   * centered at their minimum in O(log n) rounds.
+   *
+   * Round structure: each star op is ONE `min(v) over (partition by u)`
+   * window — one exchange, and every input row emits exactly one output
+   * row, so neither op needs a self-join or a distinct of its own. One
+   * `distinct` per round restores the edge SET. Small-star reads the
+   * large-star output once, inside the same plan, so nothing between
+   * them is persisted.
+   *
+   * Each round's edge set is local-checkpointed: the plan would
+   * otherwise nest every earlier round. The job that writes the
+   * checkpoint also folds an order-insensitive set signature (count,
+   * xor of per-edge 64-bit hashes) — no separate aggregate job. Equal
+   * signatures on two consecutive rounds mean a fixpoint up to a hash
+   * collision, which the exact `except` rules out, so the expensive
+   * check runs once, at the true final round. A round's checkpoint is
+   * released once the next one is written and checked; the last one is
+   * released once the returned (id, component) frame is stored.
+   *
+   * Executor loss: the released checkpoints held the only copy of the
+   * rounds, so losing an executor fails the running call, or a later
+   * read of the returned frame that needs a lost cache block rebuilt —
+   * rerun the call. The minlabel loop behaves the same.
    */
   private def runStar(sym: DataFrame, maxIter: Int): DataFrame = {
-    def largeStar(e: DataFrame): DataFrame = {
-      val symE = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = symE.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      symE.join(mins, "u").where(col("v") > col("u"))
+    val byU = Window.partitionBy("u")
+    def largeStar(e: DataFrame): DataFrame =
+      e.union(e.select(col("v").as("u"), col("u").as("v")))
+        .withColumn("m", least(col("u"), min("v").over(byU)))
+        .where(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v"))
-        .distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val mins = e.groupBy("u").agg(min("v").as("m"))
-      val rewired = e.join(mins, "u").where(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-      rewired.union(mins.select(col("u"), col("m").as("v")))
-        .where(col("u") =!= col("v"))
-        .distinct()
-    }
+    // the row holding m itself stands for u's own rewire (u, m)
+    def smallStar(e: DataFrame): DataFrame =
+      e.withColumn("m", min("v").over(byU))
+        .select(when(col("v") === col("m"), col("u")).otherwise(col("v")).as("u"),
+          col("m").as("v"))
+    def checkpointed(e: DataFrame): (DataFrame, (Long, Long)) =
+      Loop.materialize(e, checkpoint = true, (0L, 0L))(
+        (s, r) => (s._1 + 1, s._2 ^ edgeHash(r.get(0), r.get(1))),
+        (a, b) => (a._1 + b._1, a._2 ^ b._2))
 
-    // order-insensitive edge-set signature in ONE job: (count, xor of
-    // per-edge 64-bit hashes). Two consecutive rounds with equal
-    // signatures are a fixpoint up to a ~2^-64 xor collision, which
-    // the exact except() below rules out — so the expensive check
-    // runs once, at the true final round, instead of every round.
-    def signature(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)),
-        call_function("bit_xor", xxhash64(col("u"), col("v")))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-
-    // localCheckpoint EVERY round: each star op references its input
-    // 3-4 times, so the logical plan grows ~12x per round — persist
-    // alone (which keeps lineage) turns the optimizer exponential.
-    // The edge table only shrinks across rounds, so the checkpoint
-    // write is bounded by the input edge count.
-    var edges = sym.where(col("u") > col("v")).select("u", "v")
-      .localCheckpoint(true)
-    var prevSig = signature(edges)
+    var (edges, sig) = checkpointed(sym.where(col("u") > col("v")).select("u", "v"))
     sym.unpersist(blocking = false)
 
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      // persist the large-star output: small-star consumes it twice
-      // (its min aggregate and its rewire join)
-      val ls = largeStar(edges).persist(StorageLevel.MEMORY_AND_DISK)
-      val mat = smallStar(ls).localCheckpoint(true)
-      val nextSig = signature(mat)
-      converged = nextSig == prevSig && mat.except(edges).isEmpty
-      ls.unpersist(blocking = false)
-      edges = mat
-      prevSig = nextSig
+      val (next, nextSig) = checkpointed(smallStar(largeStar(edges)).distinct())
+      converged = nextSig == sig && next.except(edges).isEmpty
+      Loop.release(edges)
+      edges = next
+      sig = nextSig
       iter += 1
     }
     lastRounds = iter
-    if (!converged)
+    if (!converged) {
+      Loop.release(edges)
       throw new IllegalStateException(
         s"ConnectedComponents(star) did not converge within $maxIter rounds — " +
           "component labels would be partial. Raise maxIter (rounds grow with " +
           "log of the largest component, so this indicates a pathological input).")
-    // fixpoint is a star forest: (member, center) rows; add the centers
-    edges.select(col("u").as("id"), col("v").as("component"))
-      .union(edges.select(col("v").as("id"), col("v").as("component")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    // the fixpoint is a star forest: one (member, center) row per member
+    // (already a set), plus one (center, center) row per center
+    stored(edges.select(col("u").as("id"), col("v").as("component"))
+      .union(edges.select(col("v").as("id"), col("v").as("component")).distinct()), edges)
+  }
+
+  /** 64-bit hash of an edge for the set signature (splitmix64 finalizer
+    * over both endpoints' hash codes). Only equal signatures matter, and
+    * a collision is caught by the exact check, so any fixed mix serves. */
+  private def edgeHash(u: Any, v: Any): Long = {
+    var z = (u.##.toLong << 32) ^ (v.## & 0xffffffffL)
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z ^ (z >>> 31)
   }
 
   /** Union-find over a collected edge list; component = min member

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.iteration.Loop
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -30,9 +31,14 @@ import org.apache.spark.storage.StorageLevel
  * every iteration's rank join then reuses that partitioning, so only
  * the O(V) rank table shuffles per round, never the O(E) edges; the
  * per-destination contribution sum is map-side combined to O(V) rows.
- * Dangling mass is one tiny aggregate over the (persisted) dangling-id
- * anti-join. Lineage is cut with localCheckpoint every few rounds
- * (the ConnectedComponents lesson: iterative plans must not nest).
+ * The node table is built by one groupBy(id) exchange and carries each
+ * vertex's dangling flag into the rank frame, so the dangling mass
+ * needs no join: the one job that stores round t
+ * ([[graft.iteration.Loop.materialize]]) also sums D_t for round t+1,
+ * in partition order, so two runs give bit-identical ranks. Lineage is
+ * cut with a local checkpoint every few rounds (the
+ * ConnectedComponents lesson: iterative plans must not nest); a
+ * checkpoint is released once a later one supersedes it.
  */
 object PageRank {
 
@@ -46,7 +52,9 @@ object PageRank {
    * @param dampingFactor classic 0.85.
    * @param numIter   fixed iteration count (deterministic replay).
    * @param tol       when > 0, stop early once Σ|r_{t+1} − r_t| < tol
-   *                  (checked with one extra O(V) aggregate per round).
+   *                  (checked with one extra O(V) aggregate per round;
+   *                  an early stop stores the final (id, r) table with
+   *                  one more job).
    * @param weightCol optional edge-weight column name; "" = unweighted.
    *                  Weights must be positive (zero/negative raise).
    * @param idOut     output vertex-id column name (callers that would
@@ -59,13 +67,15 @@ object PageRank {
    *         is a same-order pure-rename projection of that table, which
    *         sameResult-matches its cache entry — so `result.unpersist()`
    *         genuinely releases it (and `result.storageLevel` reports
-   *         it). When the final iteration landed on a localCheckpoint
-   *         round (numIter ≡ 0 mod 4) there is no cache-manager entry
-   *         at all: the data sits in a checkpoint RDD freed by the
-   *         ContextCleaner once the DataFrame is unreachable, and
-   *         unpersist is a harmless no-op. Either way nothing leaks
-   *         per run. Callers must NOT re-project with different column
-   *         ORDER before unpersisting (a reordered projection does not
+   *         it). When all numIter rounds ran and the last one was a
+   *         localCheckpoint round (numIter ≡ 0 mod 4) there is no
+   *         cache-manager entry at all: the data sits in a checkpoint
+   *         RDD freed by the ContextCleaner once the DataFrame is
+   *         unreachable, and unpersist is a harmless no-op. The latest
+   *         checkpoint the result's lineage reaches is likewise left
+   *         to the ContextCleaner. Either way nothing leaks per run.
+   *         Callers must NOT re-project with different column ORDER
+   *         before unpersisting (a reordered projection does not
    *         sameResult-match; rename through idOut/rankOut instead).
    */
   def run(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
@@ -150,106 +160,102 @@ object PageRank {
       .select(col("src"), col("dst"), col("share"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // nodes and dangling ids persist HASH-PARTITIONED ON id: the
-    // per-iteration contribution join and dangling-mass aggregate then
-    // reuse this partitioning (and the rank table inherits it through
-    // the join), so only the rank→src shuffle moves data each round
-    // distinct() already leaves the table hash-partitioned on id — an
-    // explicit repartition(id) on top would be a second identical
-    // exchange of the same O(V) rows
-    val nodeIds = edges.select(col(srcCol).as("id"))
-      .union(edges.select(col(dstCol).as("id")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodeIds.count()
-    require(n > 0, "PageRank on an empty edge list is undefined")
-
-    // teleport column p: uniform 1/n (classic), or 1/|seeds∩graph| on
-    // the seed set and 0 elsewhere (personalized). The personalized
-    // tag join persists so no round re-joins the seed table; the
-    // uniform case is a free projection of the cached id table.
-    val (nodes, seedTagged) = teleport match {
-      case None =>
-        (nodeIds.withColumn("p", lit(1.0 / n)), Option.empty[DataFrame])
+    // ONE node table (id, dangling[, seed]), persisted HASH-PARTITIONED
+    // ON id by its single groupBy(id) exchange: every vertex, whether it
+    // has no out-edge, and — personalized — whether it is a seed (seed
+    // rows carry a null `out`, so seeds outside the graph drop out). The
+    // per-round join against it reuses that partitioning (the rank table
+    // inherits it through the join), so only the rank→src shuffle moves
+    // data each round; and the rank frame carries the dangling flag, so
+    // no round joins a dangling table.
+    val personalized = teleport.isDefined
+    val endpoints = edges.select(col(srcCol).as("id"), lit(true).as("out"))
+      .union(edges.select(col(dstCol).as("id"), lit(false).as("out")))
+    val dangling = (!bool_or(col("out"))).as("dangling")
+    val flagged = teleport match {
+      case None => endpoints.groupBy("id").agg(dangling)
       case Some((seedDf, seedCol)) =>
-        val seedIds = seedDf.select(col(seedCol).as("id")).distinct()
-          .withColumn("__seed", lit(1))
-        val tagged = nodeIds.join(seedIds, Seq("id"), "left")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val s = tagged.agg(sum(when(col("__seed").isNotNull, 1L).otherwise(0L)))
-          .head.getLong(0)
-        require(s > 0, "personalized PageRank: no seed appears in the graph")
-        (tagged.select(col("id"),
-          when(col("__seed").isNotNull, lit(1.0 / s)).otherwise(lit(0.0)).as("p")),
-          Some(tagged))
+        endpoints.withColumn("seed", lit(false))
+          .union(seedDf.select(col(seedCol).as("id"), lit(null).cast("boolean").as("out"),
+            lit(true).as("seed")))
+          .groupBy("id").agg(dangling, bool_or(col("seed")).as("seed"))
+          .where(col("dangling").isNotNull)
     }
+    // (vertices, teleport vertices, dangling teleport vertices) in the
+    // job that stores the table; classic teleport is every vertex
+    val (nodes, (n, s, danglingSeeds)) = Loop.materialize(flagged, checkpoint = false,
+      (0L, 0L, 0L))(
+      (a, r) => {
+        val seed = !personalized || r.getBoolean(2)
+        (a._1 + 1, if (seed) a._2 + 1 else a._2, if (seed && r.getBoolean(1)) a._3 + 1 else a._3)
+      },
+      (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
+    if (n == 0 || s == 0) nodes.unpersist(blocking = false)
+    require(n > 0, "PageRank on an empty edge list is undefined")
+    require(s > 0, "personalized PageRank: no seed appears in the graph")
 
-    // dangling ids: appear as a destination but never as a source —
-    // anti-join directly against the cached share table (hash(src)
-    // partitioned, same modulus as nodes' hash(id): no exchange; an
-    // anti join needs no distinct on its right side)
-    val dangling = nodes.join(shares.select(col("src").as("id")), Seq("id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var ranks = nodes.select(col("id"), col("p").as("r"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // The per-round dangling-mass aggregate is folded FORWARD: each
-    // iteration computes the NEXT round's mass from the fresh rank
-    // table, which doubles as the action that materializes its cache
-    // BEFORE the previous ranks are unpersisted. Without it, a lazily
-    // persisted `mat` whose parent was already unpersisted recomputes
-    // the whole chain back to the last localCheckpoint on its first
-    // real use (~2.5x redundant compute per non-checkpoint round).
-    // LEFT join (not inner): with zero dangling vertices an inner join
-    // against the empty side lets AQE's empty-relation propagation skip
-    // the rank scan entirely — which would also skip the cache
-    // materialization this aggregate is load-bearing for.
-    def danglingMassOf(r: DataFrame): Double =
-      r.join(dangling.withColumn("__dang", lit(1)), Seq("id"), "left")
-        .agg(coalesce(sum(when(col("__dang").isNotNull, col("r"))
-          .otherwise(lit(0.0))), lit(0.0))).head.getDouble(0)
-    var danglingMass = danglingMassOf(ranks)
+    // teleport p: uniform 1/n (classic), or 1/|seeds∩graph| on the seed
+    // set and 0 elsewhere (personalized)
+    val p =
+      if (personalized) when(col("seed"), lit(1.0 / s)).otherwise(lit(0.0))
+      else lit(1.0 / n)
+    // r₀ = p, a projection of the cached node table; D₀ = Σ p over the
+    // dangling vertices
+    var ranks = nodes.select(col("id"), p.as("r"), col("dangling"))
+    var danglingMass = danglingSeeds.toDouble / s
+    var liveCheckpoint = Option.empty[DataFrame]
     var iter = 0
     var converged = false
     while (iter < numIter && !converged) {
-      val contribs = shares.join(ranks.withColumnRenamed("id", "src"), "src")
+      val contribs = shares.join(ranks.select(col("id").as("src"), col("r")), "src")
         .groupBy(col("dst").as("id"))
         .agg(sum(col("share") * col("r")).as("c"))
       // the uniform branch keeps the EXACT r12 expression ((1-d)/n and
       // dm/n as divisions): x/n and x*(1/n) differ at the ulp level,
       // and the classic path's oracle parity (ROUND(r, 10) after 3
       // iterations) is pinned to the division form
-      val rankExpr = teleport match {
-        case None =>
+      val rankExpr =
+        if (personalized)
+          lit(1.0 - d) * p + lit(d) * (coalesce(col("c"), lit(0.0)) + lit(danglingMass) * p)
+        else
           lit((1.0 - d) / n) +
             lit(d) * (coalesce(col("c"), lit(0.0)) + lit(danglingMass / n))
-        case Some(_) =>
-          lit(1.0 - d) * col("p") +
-            lit(d) * (coalesce(col("c"), lit(0.0)) + lit(danglingMass) * col("p"))
-      }
+      // the last round stores exactly (id, r) — see the rename below; the
+      // others keep the flag, and the job that stores the round sums the
+      // next round's dangling mass
+      val last = iter == numIter - 1
       val next = nodes.join(contribs, Seq("id"), "left")
-        .select(col("id"), rankExpr.as("r"))
-      val mat =
-        if ((iter + 1) % CheckpointEvery == 0) next.localCheckpoint(true)
-        else next.persist(StorageLevel.MEMORY_AND_DISK)
-      // materializes mat (full scan through the join) AND is next
-      // round's input — one aggregate, two jobs done
-      val nextMass = danglingMassOf(mat)
+        .select(Seq(col("id"), rankExpr.as("r")) ++ (if (last) Nil else Seq(col("dangling"))): _*)
+      val checkpoint = (iter + 1) % CheckpointEvery == 0
+      val (mat, nextMass) = Loop.materialize(next, checkpoint, 0.0)(
+        (m, r) => if (!last && r.getBoolean(2)) m + r.getDouble(1) else m, _ + _)
       if (tol > 0.0) {
-        val delta = mat.join(ranks.withColumnRenamed("r", "r0"), "id")
-          .agg(sum(abs(col("r") - col("r0")))).head.getDouble(0)
+        val delta = mat.join(ranks.select(col("id"), col("r").as("r0")), "id")
+          .agg(sum(abs(col("r") - col("r0")))).head().getDouble(0)
         converged = delta < tol
       }
-      ranks.unpersist(blocking = false)
+      // persisted rounds go as soon as their successor is stored; a
+      // checkpoint stays until a later checkpoint supersedes it, because
+      // the persisted rounds after it recompute from it
+      if (iter > 0 && iter % CheckpointEvery != 0) ranks.unpersist(blocking = false)
+      if (checkpoint) {
+        liveCheckpoint.foreach(Loop.release)
+        liveCheckpoint = Some(mat)
+      }
       ranks = mat
       danglingMass = nextMass
       iter += 1
     }
     lastIterations = iter
+    if (iter < numIter) {
+      // tol stopped the loop before its last round: store (id, r) now
+      val (out, _) = Loop.materialize(ranks.select("id", "r"), checkpoint = false, 0L)(
+        (c, _) => c + 1, _ + _)
+      if (iter % CheckpointEvery != 0) ranks.unpersist(blocking = false)
+      ranks = out
+    }
     shares.unpersist(blocking = false)
-    nodeIds.unpersist(blocking = false)
-    seedTagged.foreach(_.unpersist(blocking = false))
-    dangling.unpersist(blocking = false)
+    nodes.unpersist(blocking = false)
     // SAME-ORDER pure-rename projection, deliberately: canonicalization
     // collapses such a Project, so the returned plan sameResult-matches
     // the final rank table's cache entry — result.storageLevel reports

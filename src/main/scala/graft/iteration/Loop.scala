@@ -1,6 +1,11 @@
 package graft.iteration
 
-import org.apache.spark.sql.DataFrame
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -46,6 +51,14 @@ final case class LoopResult[S](state: S, rounds: Int, history: Array[Double])
  * driver. KMeans and SGD run on this utility; it is public so users
  * can build their own iterative algorithms the way reference users
  * call Iterations directly.
+ *
+ * DataFrame loops pay a fixed driver and scheduler cost for every job
+ * they launch, so a round should launch as few as it can: the exchanges
+ * its plan needs, plus ONE job that both stores the round's frame and
+ * computes what the driver must know about it (a convergence count, a
+ * signature, the next round's scalar). [[materialize]] is that job;
+ * [[release]] frees what it stored. ConnectedComponents, PageRank and
+ * [[iterateDataFrame]] are built on the pair.
  */
 object Loop {
 
@@ -80,11 +93,12 @@ object Loop {
    * [[iterate]] for DataFrame-valued state, with the lineage
    * management every long Spark loop needs and the reference's
    * runtime did implicitly: each round's output is persisted and
-   * materialized, the previous round's is unpersisted, and every
-   * `checkpointEvery` rounds the plan is truncated with an eager
-   * localCheckpoint — without which plan depth grows per round and
-   * Catalyst re-analysis makes round N cost O(N) (the lesson baked
-   * into ConnectedComponents/BpeTrainer, here for user algorithms).
+   * materialized ([[materialize]], one job), the previous round's is
+   * unpersisted, and every `checkpointEvery` rounds the plan is
+   * truncated with a localCheckpoint instead — without which plan depth
+   * grows per round and Catalyst re-analysis makes round N cost O(N)
+   * (the lesson baked into ConnectedComponents/BpeTrainer, here for
+   * user algorithms).
    *
    * `criterion(previous, current)` — if supplied — is evaluated AFTER
    * the round's frame is persisted and materialized, so a delta
@@ -96,20 +110,81 @@ object Loop {
       body: (DataFrame, Int) => DataFrame): LoopResult[DataFrame] = {
     var prev: Option[DataFrame] = None
     val result = iterate(init, termination) { (state, round) =>
-      val nextRaw = body(state, round)
-      val next =
-        if (checkpointEvery > 0 && (round + 1) % checkpointEvery == 0)
-          nextRaw.localCheckpoint(true) // eager: also truncates lineage
-        else {
-          val p = nextRaw.persist(StorageLevel.MEMORY_AND_DISK)
-          p.count() // materialize so unpersisting the parent is safe
-          p
-        }
+      // materialized before the parent is unpersisted
+      val (next, _) = materialize(body(state, round),
+        checkpoint = checkpointEvery > 0 && (round + 1) % checkpointEvery == 0, 0L)(
+        (n, _) => n + 1, _ + _)
       val crit = criterion(state, next)
       prev.foreach(_.unpersist(blocking = false))
       prev = Some(next)
       (next, crit)
     }
     result
+  }
+
+  /**
+   * Store one loop frame and fold its rows, in ONE Spark job.
+   *
+   * The frame is persisted (MEMORY_AND_DISK, lineage kept) or, with
+   * `checkpoint`, local-checkpointed lazily (lineage cut when the job
+   * ends). The job that fills the cache or the checkpoint also folds
+   * every partition from `zero` with `seqOp`; the driver combines the
+   * per-partition results with `combOp` in partition-index order, so a
+   * floating-point fold is deterministic for a fixed partitioning
+   * (`RDD.reduce` merges in task-completion order and is not).
+   *
+   * An eager `localCheckpoint(true)`, or a persist followed by a
+   * separate `count()` or `agg(...).head`, costs more: under AQE a global
+   * SQL aggregate is a map-stage job plus a result job on top of the job
+   * that materialized the frame. The frame's own exchanges still run as
+   * map-stage jobs first.
+   *
+   * Pass a frame no action has run on: a sameResult-equal frame that is
+   * already cached would make the persist a no-op, and [[release]] would
+   * then drop the other holder's cache.
+   *
+   * @return the stored frame (release it with [[release]]) and the fold.
+   */
+  def materialize[A: ClassTag](df: DataFrame, checkpoint: Boolean, zero: A)(
+      seqOp: (A, Row) => A, combOp: (A, A) => A): (DataFrame, A) = {
+    val kept =
+      if (checkpoint) df.localCheckpoint(eager = false)
+      else df.persist(StorageLevel.MEMORY_AND_DISK)
+    val qe = kept.queryExecution
+    // the job runs on the stored rows directly: the checkpoint RDD, whose
+    // blocks it writes, or a scan of the new cache entry, whose buffers
+    // it builds. Reading the cache through a query instead would let AQE
+    // fill it in a job of its own first (a table-cache query stage). It
+    // runs as an SQL execution, like any Dataset action: outside one, the
+    // cached plan's generated code misses the codegen cache and is
+    // compiled again on every call.
+    SQLExecution.withNewExecutionId(qe, Some("materialize")) {
+      val stored = qe.logical match {
+        case r: LogicalRDD => r.rdd
+        case _ =>
+          val rel = qe.sparkSession.sharedState.cacheManager
+            .lookupCachedData(qe.sparkSession, qe.analyzed)
+            .getOrElse(throw new IllegalStateException("persisted frame has no cache entry"))
+            .cachedRepresentation
+          InMemoryTableScanExec(rel.output, Nil, rel).execute()
+      }
+      val schema = kept.schema
+      val partials = stored.sparkContext.runJob(stored, (it: Iterator[InternalRow]) => {
+        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+        it.foldLeft(zero)((a, r) => seqOp(a, toRow(r).asInstanceOf[Row]))
+      })
+      (kept, partials.foldLeft(zero)(combOp))
+    }
+  }
+
+  /**
+   * Free what [[materialize]] stored for `df`: its cache entry, or its
+   * local checkpoint's blocks. A released checkpoint cannot be
+   * recomputed, so release a frame only once nothing will read it —
+   * including through the lineage of a cache that may need rebuilding.
+   */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => df.unpersist(blocking = false)
   }
 }

@@ -84,10 +84,26 @@ class PlanShapeSpec extends SparkSpec {
   test("Swing broadcasts the over-cap item set") {
     import spark.implicits._
     val rows = (0L until 30L).flatMap(u => Seq((u, 99L), (u, 100L + u % 5)))
-    val out = new graft.recommendation.Swing()
-      .setMinUserBehavior(1).setMaxUserBehavior(10).setMaxUserNumPerItem(7)
-      .transform(rows.toDF("user", "item")).head
-    val plan = out.queryExecution.executedPlan.toString
+    // Swing local-checkpoints its output, so the returned frame's plan is
+    // a scan of the checkpoint: the plan under test is the one the
+    // localCheckpoint action executed
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      new graft.recommendation.Swing()
+        .setMinUserBehavior(1).setMaxUserBehavior(10).setMaxUserNumPerItem(7)
+        .transform(rows.toDF("user", "item")).head
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 1, s"expected one localCheckpoint plan, got ${plans.size}")
+    val plan = plans.peek()
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }

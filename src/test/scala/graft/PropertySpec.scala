@@ -283,15 +283,20 @@ class PropertySpec extends SparkSpec {
       m <- Gen.choose(4, 120)         // edges
       es <- Gen.listOfN(m, Gen.zip(Gen.choose(0L, n.toLong), Gen.choose(0L, n.toLong)))
     } yield es.filter { case (a, b) => a != b }
-    (1 to 5).foreach { i =>
-      val es = draw(edgeGen, 31L * i)
+    // plus a hub star: one vertex with 1,200 neighbours, a self-loop and
+    // duplicate (also reversed) edges — one window partition holds the
+    // whole component
+    val hub = (1L to 1200L).map(v => (5000L, 5000L + v)) ++
+      Seq((5000L, 5000L), (5000L, 5001L), (5002L, 5000L), (5003L, 5000L), (5003L, 5000L))
+    val cases = (1 to 5).map(i => s"case $i" -> draw(edgeGen, 31L * i)) :+ ("hub star" -> hub)
+    cases.foreach { case (name, es) =>
       if (es.nonEmpty) {
         val edges = es.toDF("src", "dst")
         val want = graft.dedup.ConnectedComponents.run(edges)       // driver union-find
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         val got = graft.dedup.ConnectedComponents.run(edges, driverEdgeLimit = 0)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        assert(got === want, s"case $i")
+        assert(got === want, name)
       }
     }
   }

@@ -109,6 +109,21 @@ class DedupSpec extends SparkSpec {
     assert(star === driver)
   }
 
+  test("ConnectedComponents: nothing outlives run() plus the caller's unpersist") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val chain = (100L until 120L).map(i => (i, i + 1)).toDF("src", "dst")
+    for (algorithm <- Seq("star", "minlabel")) {
+      // every round's cache and checkpoint is registered here until freed
+      val before = sc.getPersistentRDDs.keySet
+      val out = ConnectedComponents.run(chain, driverEdgeLimit = 0, algorithm = algorithm)
+      assert(out.collect().map(_.getLong(1)).toSet == Set(100L), algorithm)
+      out.unpersist(blocking = true)
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$algorithm left RDDs $left registered")
+    }
+  }
+
   test("ConnectedComponents star works on string vertex ids") {
     import spark.implicits._
     val edges = Seq(("b", "a"), ("b", "c"), ("x", "y")).toDF("src", "dst")

@@ -104,6 +104,25 @@ class PageRankSpec extends SparkSpec {
       "a checkpoint-final run must leave no cache-manager entries behind")
   }
 
+  test("two runs give bit-identical ranks") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val edges = Seq.fill(400)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
+      .toDF("src", "dst").repartition(3)
+    def ranks(): Map[Long, Double] = {
+      val out = PageRank.run(edges, numIter = 6)
+      val got = out.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      out.unpersist()
+      got
+    }
+    val (a, b) = (ranks(), ranks())
+    assert(a.keySet == b.keySet)
+    a.foreach { case (v, r) =>
+      assert(java.lang.Double.doubleToRawLongBits(r) ==
+        java.lang.Double.doubleToRawLongBits(b(v)), s"node $v: $r vs ${b(v)}")
+    }
+  }
+
   test("guards: bad damping, empty graph, non-positive weight") {
     import spark.implicits._
     intercept[IllegalArgumentException] {
