@@ -49,7 +49,7 @@ def connected_components(edges, src="src", dst="dst", max_iter=50,
     if driver_edge_limit is None:
         driver_edge_limit = cc.DriverEdgeLimit()
     jdf = cc.run(edges._jdf, src, dst, int(max_iter), int(driver_edge_limit),
-                 algorithm)
+                 algorithm).state()
     return DataFrame(jdf, spark)
 
 
@@ -68,7 +68,7 @@ def page_rank(edges, src="src", dst="dst", damping_factor=0.85,
     spark = edges.sparkSession
     jdf = spark._jvm.graft.graph.PageRank.run(
         edges._jdf, src, dst, float(damping_factor), int(num_iter),
-        float(tol), weight_col, id_out, rank_out)
+        float(tol), weight_col, id_out, rank_out).state()
     return DataFrame(jdf, spark)
 
 
@@ -86,7 +86,7 @@ def personalized_page_rank(edges, seeds, src="src", dst="dst",
     spark = edges.sparkSession
     jdf = spark._jvm.graft.graph.PageRank.runPersonalized(
         edges._jdf, seeds._jdf, src, dst, seed_col, float(damping_factor),
-        int(num_iter), float(tol), weight_col, id_out, rank_out)
+        int(num_iter), float(tol), weight_col, id_out, rank_out).state()
     return DataFrame(jdf, spark)
 
 
@@ -107,7 +107,7 @@ def label_propagation(edges, src="src", dst="dst", num_iter=10,
     spark = edges.sparkSession
     jdf = spark._jvm.graft.graph.LabelPropagation.run(
         edges._jdf, src, dst, int(num_iter), bool(directed), weight_col,
-        id_out, label_out)
+        id_out, label_out).state()
     return DataFrame(jdf, spark)
 
 
@@ -122,13 +122,13 @@ def hits(edges, src="src", dst="dst", num_iter=20, tol=0.0, weight_col="",
     exchanges are reduced to O(V) rows by partial aggregation. With
     ``tol`` > 0 the loop stops early once the hub vector's L1
     movement falls below it (same contract as page_rank). The result
-    is an eager localCheckpoint: no unpersist contract, the data is
-    freed when the DataFrame becomes unreachable."""
+    is persisted (internal caches and checkpoints released): call
+    result.unpersist() once consumed."""
     from pyspark.sql import DataFrame
     spark = edges.sparkSession
     jdf = spark._jvm.graft.graph.Hits.run(
         edges._jdf, src, dst, int(num_iter), float(tol), weight_col,
-        id_out, hub_out, auth_out)
+        id_out, hub_out, auth_out).state()
     return DataFrame(jdf, spark)
 
 
@@ -140,12 +140,13 @@ def bfs(edges, seeds, src="src", dst="dst", seed_col="id", max_iter=20,
     symmetrizes once up front. Unreached vertices emit no row (left
     join + coalesce for a sentinel). Delegates to graft.graph.Bfs:
     the edge table is partitioned once, each round expands only the
-    frontier, so total join work is O(edges) across the whole run."""
+    frontier, so total join work is O(edges) across the whole run.
+    Same cache-release contract as hits."""
     from pyspark.sql import DataFrame
     spark = edges.sparkSession
     jdf = spark._jvm.graft.graph.Bfs.run(
         edges._jdf, seeds._jdf, src, dst, seed_col, int(max_iter),
-        bool(undirected), id_out, dist_out)
+        bool(undirected), id_out, dist_out).state()
     return DataFrame(jdf, spark)
 
 

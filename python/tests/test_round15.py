@@ -124,16 +124,40 @@ def test_warc_parser(spark):
 
 
 def test_hits_tol_early_stop(spark):
-    from graftml.functions import hits
+    from pyspark.sql import DataFrame
+    from graftml.functions import hits as hits_fn
+
+    def scores(df):
+        return {r["id"]: (r["hub"], r["authority"]) for r in df.collect()}
+
+    def hits(edges, num_iter, tol):
+        # the JVM result carries the rounds next to the frame
+        res = spark._jvm.graft.graph.Hits.run(
+            edges._jdf, "src", "dst", num_iter, float(tol), "", "id", "hub",
+            "authority")
+        df = DataFrame(res.state(), spark)
+        out = scores(df)
+        df.unpersist()
+        return out, res.rounds()
+    # uniform complete-bipartite graph: fixed point from iteration 2
     edges = spark.createDataFrame(
         [(1, 10), (1, 11), (2, 10), (2, 11)], ["src", "dst"])
-    # uniform complete-bipartite graph: fixed point from iteration 2
-    out = {r["id"]: (r["hub"], r["authority"])
-           for r in hits(edges, num_iter=20, tol=1e-9).collect()}
-    last = spark._jvm.graft.graph.Hits.lastIterations()
+    out, last = hits(edges, 20, 1e-9)
     assert 2 <= last < 20
-    full = {r["id"]: (r["hub"], r["authority"])
-            for r in hits(edges, num_iter=20).collect()}
-    assert spark._jvm.graft.graph.Hits.lastIterations() == 20
+    full, rounds = hits(edges, 20, 0.0)
+    assert rounds == 20
     for v, (h, a) in out.items():
         assert abs(h - full[v][0]) < 1e-12 and abs(a - full[v][1]) < 1e-12
+    # the wrapper forwards tol: on a graph still moving when the early
+    # stop fires, its scores are the JVM tol run's and not the full run's
+    moving = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (4, 1), (2, 5), (5, 6), (6, 4)],
+        ["src", "dst"])
+    early, last = hits(moving, 30, 1e-3)
+    assert last < 30
+    wrapped = hits_fn(moving, num_iter=30, tol=1e-3)
+    assert scores(wrapped) == early
+    wrapped.unpersist()
+    untol = hits_fn(moving, num_iter=30)
+    assert scores(untol) != early
+    untol.unpersist()

@@ -499,7 +499,7 @@ object SparkEntry {
       val edges = ev.where(col("event_id") % 5 =!= 0)
         .select(col("event_id").as("src"), (col("event_id") - 1).as("dst"))
       graft.dedup.ConnectedComponents.run(edges, "src", "dst",
-          maxIter = 50, driverEdgeLimit = 0L)
+          maxIter = 50, driverEdgeLimit = 0L).state
         .select(col("id"), col("component"))
     }),
 
@@ -511,7 +511,7 @@ object SparkEntry {
       val edges = ev.where(col("event_id") % 5 =!= 0)
         .select(col("event_id").as("src"), (col("event_id") - 1).as("dst"))
       graft.dedup.ConnectedComponents.run(edges, "src", "dst",
-          maxIter = 50, driverEdgeLimit = 0L, algorithm = "minlabel")
+          maxIter = 50, driverEdgeLimit = 0L, algorithm = "minlabel").state
         .select(col("id"), col("component"))
     }),
 
@@ -524,7 +524,7 @@ object SparkEntry {
       val ev = t(s, dir, "events")
       val edges = ev.where(col("event_id") % 7 =!= 0)
         .select(col("event_id").as("src"), (col("event_id") * 31 % 1000).as("dst"))
-      graft.graph.PageRank.run(edges, "src", "dst", dampingFactor = 0.85, numIter = 3)
+      graft.graph.PageRank.run(edges, "src", "dst", dampingFactor = 0.85, numIter = 3).state
         .select(col("id"), round(col("pagerank"), 10).as("pagerank"))
     }),
 
@@ -540,7 +540,7 @@ object SparkEntry {
       val seeds = edges.select(col("src").as("id"))
         .union(edges.select(col("dst").as("id")))
         .where(col("id") % 10 === 0).distinct()
-      graft.graph.PageRank.runPersonalized(edges, seeds, numIter = 3)
+      graft.graph.PageRank.runPersonalized(edges, seeds, numIter = 3).state
         .select(col("id"), round(col("pagerank"), 10).as("pagerank"))
     }),
 
@@ -560,7 +560,7 @@ object SparkEntry {
         .transform(emb, emb).head
         .where(col("neighbor_id") =!= col("query_id"))
         .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-      graft.graph.LabelPropagation.run(knn, numIter = 3)
+      graft.graph.LabelPropagation.run(knn, numIter = 3).state
     }),
 
     // --- Label propagation (community detection): synchronous LPA
@@ -570,7 +570,7 @@ object SparkEntry {
       val ev = t(s, dir, "events")
       val edges = ev.where(col("event_id") % 7 =!= 0)
         .select(col("event_id").as("src"), (col("event_id") * 31 % 1000).as("dst"))
-      graft.graph.LabelPropagation.run(edges, numIter = 3)
+      graft.graph.LabelPropagation.run(edges, numIter = 3).state
     }),
 
     // --- Directed label propagation: same graph, but votes flow
@@ -582,7 +582,7 @@ object SparkEntry {
       val ev = t(s, dir, "events")
       val edges = ev.where(col("event_id") % 7 =!= 0)
         .select(col("event_id").as("src"), (col("event_id") * 31 % 1000).as("dst"))
-      graft.graph.LabelPropagation.run(edges, numIter = 3, directed = true)
+      graft.graph.LabelPropagation.run(edges, numIter = 3, directed = true).state
     }),
 
     // --- HITS hubs/authorities on the same directed graph: 2
@@ -594,7 +594,7 @@ object SparkEntry {
       val ev = t(s, dir, "events")
       val edges = ev.where(col("event_id") % 7 =!= 0)
         .select(col("event_id").as("src"), (col("event_id") * 31 % 1000).as("dst"))
-      graft.graph.Hits.run(edges, numIter = 2)
+      graft.graph.Hits.run(edges, numIter = 2).state
         .select(col("id"), round(col("hub"), 10).as("hub"),
           round(col("authority"), 10).as("authority"))
     }),
@@ -607,7 +607,7 @@ object SparkEntry {
       val edges = ev.where(col("event_id") % 7 =!= 0)
         .select(col("event_id").as("src"), (col("event_id") * 31 % 1000).as("dst"))
         .withColumn("w", (col("src") % 3 + 1).cast("double"))
-      graft.graph.LabelPropagation.run(edges, numIter = 3, weightCol = "w")
+      graft.graph.LabelPropagation.run(edges, numIter = 3, weightCol = "w").state
     }),
 
     // --- TextRank keywords over the corpus word-co-occurrence graph:
@@ -2984,7 +2984,7 @@ object SparkEntry {
         .select(col("s_url").as("src"), col("d_url").as("dst"))
         .localCheckpoint(true)
       graft.graph.PageRank.run(edges, "src", "dst",
-          dampingFactor = 0.85, numIter = 3)
+          dampingFactor = 0.85, numIter = 3).state
         .select(col("id").as("url"), round(col("pagerank"), 10).as("pagerank"))
     }),
 
@@ -3282,7 +3282,7 @@ object SparkEntry {
       val shortcut = docs.where(off < 6 && col("doc_id") + 2 <= maxId)
         .select(col("doc_id").as("src"), (col("doc_id") + 2).as("dst"))
       val seeds = docs.where(off === 0).select(col("doc_id").as("id"))
-      graft.graph.Bfs.run(chain.union(shortcut), seeds, maxIter = 10)
+      graft.graph.Bfs.run(chain.union(shortcut), seeds, maxIter = 10).state
         .select(col("id").as("doc_id"),
           col("distance").cast("long").as("distance"))
     }),
@@ -3330,7 +3330,7 @@ object SparkEntry {
           .as("html"))
       val edges = graft.text.LinkGraphExtractor.hostEdges(pages)
       graft.graph.PageRank.run(edges, "src_host", "dst_host",
-          dampingFactor = 0.85, numIter = 3)
+          dampingFactor = 0.85, numIter = 3).state
         .select(col("id").as("host"), round(col("pagerank"), 10).as("pagerank"))
     }),
 
@@ -3371,7 +3371,7 @@ object SparkEntry {
         .select(col("s_url").as("src"), col("d_url").as("dst"))
         .localCheckpoint(true)
       graft.graph.PageRank.run(edges, "src", "dst",
-          dampingFactor = 0.85, numIter = 3)
+          dampingFactor = 0.85, numIter = 3).state
         .select(col("id").as("url"), round(col("pagerank"), 10).as("pagerank"))
     }),
 

@@ -1,5 +1,6 @@
 package graft.benchmark
 
+import graft.iteration.LoopResult
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -415,10 +416,9 @@ object ScaleUp {
       val chain = spark.range(0, 1000).select(
         (col("id") + 6000000L).as("src"), (col("id") + 6000001L).as("dst"))
       val t0 = System.nanoTime()
-      val labels = graft.dedup.ConnectedComponents.run(er.union(chain), maxIter = 30)
+      val LoopResult(labels, rounds, _) = graft.dedup.ConnectedComponents.run(er.union(chain), maxIter = 30)
       val n = labels.count()
       val sec = (System.nanoTime() - t0) / 1e9
-      val rounds = graft.dedup.ConnectedComponents.lastRounds
       val chainOk = labels.where(col("id") >= 6000000L)
         .agg(count(lit(1)).as("n"),
           sum(when(col("component") === 6000000L, 1L).otherwise(0L)).as("ok")).head
@@ -451,14 +451,14 @@ object ScaleUp {
         pmod(xxhash64(col("id"), lit(3)), lit(5000000L)).as("src"),
         pmod(xxhash64(col("id"), lit(4)), lit(1000L)).as("dst"))
       val t0 = System.nanoTime()
-      val ranks = graft.graph.PageRank.run(er.union(hubs), numIter = 10)
+      val LoopResult(ranks, iters, _) = graft.graph.PageRank.run(er.union(hubs), numIter = 10)
       val agg = ranks.agg(count(lit(1)).as("n"), sum("pagerank").as("mass"),
         max("pagerank").as("top")).head
       val sec = (System.nanoTime() - t0) / 1e9
       ranks.unpersist(blocking = false)
       println(s"""{"pr_sec":${String.format(java.util.Locale.ROOT, "%.2f", Double.box(sec))},""" +
         s""""pr_vertices":${agg.getLong(0)},"pr_mass":${agg.getDouble(1)},""" +
-        s""""pr_top":${agg.getDouble(2)},"pr_iters":${graft.graph.PageRank.lastIterations}}""")
+        s""""pr_top":${agg.getDouble(2)},"pr_iters":$iters}""")
       agg.getLong(0)
     }
 
@@ -474,11 +474,10 @@ object ScaleUp {
         pmod(xxhash64(col("id"), lit(3)), lit(5000000L)).as("src"),
         pmod(xxhash64(col("id"), lit(4)), lit(1000L)).as("dst"))
       val t0 = System.nanoTime()
-      val ranks = graft.graph.PageRank.run(er.union(hubs), numIter = 50, tol = 1e-4)
+      val LoopResult(ranks, iters, _) = graft.graph.PageRank.run(er.union(hubs), numIter = 50, tol = 1e-4)
       val agg = ranks.agg(count(lit(1)).as("n"), sum("pagerank").as("mass")).head
       val sec = (System.nanoTime() - t0) / 1e9
       ranks.unpersist(blocking = false)
-      val iters = graft.graph.PageRank.lastIterations
       println(s"""{"prtol_sec":${String.format(java.util.Locale.ROOT, "%.2f", Double.box(sec))},""" +
         s""""prtol_vertices":${agg.getLong(0)},"prtol_mass":${agg.getDouble(1)},""" +
         s""""prtol_iters":$iters}""")
@@ -502,7 +501,7 @@ object ScaleUp {
         pmod(xxhash64(col("id"), lit(4)), lit(1000L)).as("dst"))
       val seeds = spark.range(0, 5000000L, 100L).select(col("id"))
       val t0 = System.nanoTime()
-      val ranks = graft.graph.PageRank.runPersonalized(er.union(hubs), seeds, numIter = 10)
+      val ranks = graft.graph.PageRank.runPersonalized(er.union(hubs), seeds, numIter = 10).state
       val agg = ranks.agg(count(lit(1)).as("n"), sum("pagerank").as("mass"),
         max("pagerank").as("top")).head
       val sec = (System.nanoTime() - t0) / 1e9
@@ -534,15 +533,16 @@ object ScaleUp {
       // rounds and skip their checkpoint materializations (the
       // per-round L1-delta probe is an O(V) join, cheap next to a
       // saved round)
-      val out = graft.graph.Hits.run(er.union(hubBlock), numIter = 10, tol = 1e-5)
+      val LoopResult(out, iters, _) = graft.graph.Hits.run(er.union(hubBlock), numIter = 10, tol = 1e-5)
       val agg = out.agg(count(lit(1)).as("n"), sum("hub").as("hm"),
         sum("authority").as("am")).head
       val topAuth = out.orderBy(desc("authority")).select("id").head.getLong(0)
       val sec = (System.nanoTime() - t0) / 1e9
+      out.unpersist(blocking = false)
       println(s"""{"hits_sec":${String.format(java.util.Locale.ROOT, "%.2f", Double.box(sec))},""" +
         s""""hits_vertices":${agg.getLong(0)},"hits_hub_mass":${agg.getDouble(1)},""" +
         s""""hits_auth_mass":${agg.getDouble(2)},"hits_top_authority":$topAuth,""" +
-        s""""hits_iterations":${graft.graph.Hits.lastIterations}}""")
+        s""""hits_iterations":$iters}""")
       require(math.abs(agg.getDouble(1) - 1.0) < 1e-9 &&
         math.abs(agg.getDouble(2) - 1.0) < 1e-9,
         s"HITS L1 mass invariant broke: ${agg.getDouble(1)} / ${agg.getDouble(2)}")
@@ -568,16 +568,16 @@ object ScaleUp {
         (grp * 5 + element_at(pi, idx)).as("src"),
         (grp * 5 + element_at(pj, idx)).as("dst"))
       val t0 = System.nanoTime()
-      val labels = graft.graph.LabelPropagation.run(edges, numIter = 5)
+      val LoopResult(labels, iters, _) = graft.graph.LabelPropagation.run(edges, numIter = 5)
       val wrong = labels.where(col("label") =!= (col("id") - col("id") % 5)).count()
       val n = labels.count()
       val sec = (System.nanoTime() - t0) / 1e9
       labels.unpersist(blocking = false)
       println(s"""{"lpa_sec":${String.format(java.util.Locale.ROOT, "%.2f", Double.box(sec))},""" +
         s""""lpa_vertices":$n,"lpa_wrong_labels":$wrong,""" +
-        s""""lpa_iters":${graft.graph.LabelPropagation.lastIterations}}""")
+        s""""lpa_iters":$iters}""")
       require(wrong == 0L, s"LPA clique convergence broke: $wrong mislabeled")
-      require(graft.graph.LabelPropagation.lastIterations < 5, "early stop should fire")
+      require(iters < 5, "early stop should fire")
       n
     }
 
@@ -919,7 +919,7 @@ object ScaleUp {
         seed = 2022L, numHashTables = 16, numPlanes = 16, minSimilarity = 0.9)
         .persist()
       val edgeCount = edges.count()
-      val labels = graft.graph.LabelPropagation.run(edges, numIter = 5)
+      val LoopResult(labels, lpaIters, _) = graft.graph.LabelPropagation.run(edges, numIter = 5)
       val wrong = labels.where(col("label") =!=
         (col("id") - col("id") % clusterSize)).count()
       val labeled = labels.count()
@@ -964,7 +964,7 @@ object ScaleUp {
         s""""semcomm_planted_pair_recall":${pct(plantedFound, plantedTotal)},""" +
         s""""semcomm_bf_pairs_sample":$bfCount,""" +
         s""""semcomm_lsh_recall_vs_bf":${pct(bfRecovered, bfCount)},""" +
-        s""""semcomm_lpa_iters":${graft.graph.LabelPropagation.lastIterations}}""")
+        s""""semcomm_lpa_iters":$lpaIters}""")
       // bound, don't forbid: an accidental cross-block edge merges two
       // blocks (≤ 2·clusterSize mislabels each); a fully-isolated
       // minimum-id member re-roots its block. Both are rare
@@ -1066,8 +1066,7 @@ object ScaleUp {
         .transform(docs).head
       val top = out.orderBy(col("rank").desc).limit(3).collect()
         .map(r => s"${r.getString(0)}:${"%.5f".formatLocal(java.util.Locale.ROOT, r.getDouble(1))}")
-      println(s"""{"kw_top":"${top.mkString(" ")}","kw_rows":${out.count()},""" +
-        s""""kw_iters":${graft.graph.PageRank.lastIterations}}""")
+      println(s"""{"kw_top":"${top.mkString(" ")}","kw_rows":${out.count()}}""")
       out.count()
     }
 
@@ -1927,7 +1926,7 @@ object ScaleUp {
       val edges = graft.text.LinkGraphExtractor.hostEdges(pages).persist()
       val total = edges.count()
       val ranks = graft.graph.PageRank.run(edges, "src_host", "dst_host",
-        dampingFactor = 0.85, numIter = 3)
+        dampingFactor = 0.85, numIter = 3).state
       val hosts = ranks.count()
       val mass = ranks.agg(sum("pagerank")).first().getDouble(0)
       ranks.unpersist(blocking = false)
@@ -1987,7 +1986,7 @@ object ScaleUp {
         .persist(StorageLevel.MEMORY_AND_DISK)
       val total = edges.count()
       val ranks = graft.graph.PageRank.run(edges, "src", "dst",
-        dampingFactor = 0.85, numIter = 3)
+        dampingFactor = 0.85, numIter = 3).state
       val vertices = ranks.count()
       val mass = ranks.agg(sum("pagerank")).first().getDouble(0)
       val top = ranks.orderBy(desc("pagerank")).select("id").head.getString(0)
@@ -2520,8 +2519,7 @@ object ScaleUp {
         .where(col("dst") < n)
       val seeds = spark.range(0, 1).select(col("id"))
       val t0 = System.nanoTime()
-      val out = graft.graph.Bfs.run(edges, seeds, maxIter = 30)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val LoopResult(out, rounds, _) = graft.graph.Bfs.run(edges, seeds, maxIter = 30)
       val reached = out.count()
       val wrong = out.where(
         col("distance") =!= (length(bin(col("id") + 1)) - 1)).count()
@@ -2530,7 +2528,7 @@ object ScaleUp {
       out.unpersist(blocking = false)
       println(s"""{"bfs_sec":${String.format(java.util.Locale.ROOT, "%.2f", Double.box(sec))},""" +
         s""""bfs_reached":$reached,"bfs_wrong":$wrong,"bfs_max_depth":$maxD,""" +
-        s""""bfs_rounds":${graft.graph.Bfs.lastRounds}}""")
+        s""""bfs_rounds":$rounds}""")
       require(reached == n, s"every tree vertex must settle: $reached != $n")
       require(wrong == 0, s"closed-form depth mismatch on $wrong vertices")
       require(maxD == 22, s"5M-vertex binary tree depth must be 22, got $maxD")
@@ -2559,9 +2557,7 @@ object ScaleUp {
         (col("id") + base).as("dst"))
       val seeds = spark.range(0, 1).select(col("id"))
       val t0 = System.nanoTime()
-      val out = graft.graph.Bfs.run(leaves.union(chain), seeds,
-        maxIter = hops.toInt + 5)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val LoopResult(out, rounds, _) = graft.graph.Bfs.run(leaves.union(chain), seeds, maxIter = hops.toInt + 5)
       val reached = out.count()
       val wrongLeaves = out.where(col("id").between(1, nLeaves) &&
         col("distance") =!= 1).count()
@@ -2571,14 +2567,13 @@ object ScaleUp {
       out.unpersist(blocking = false)
       println(s"""{"bfs_chain_sec":${String.format(java.util.Locale.ROOT, "%.2f", Double.box(sec))},""" +
         s""""bfs_chain_reached":$reached,"bfs_chain_wrong":${wrongLeaves + wrongChain},""" +
-        s""""bfs_chain_rounds":${graft.graph.Bfs.lastRounds},""" +
-        s""""bfs_chain_sec_per_round":${String.format(java.util.Locale.ROOT, "%.4f", Double.box(sec / graft.graph.Bfs.lastRounds))}}""")
+        s""""bfs_chain_rounds":$rounds,""" +
+        s""""bfs_chain_sec_per_round":${String.format(java.util.Locale.ROOT, "%.4f", Double.box(sec / rounds))}}""")
       require(reached == nLeaves + hops + 1,
         s"reached broke: $reached != ${nLeaves + hops + 1}")
       require(wrongLeaves == 0 && wrongChain == 0,
         s"closed-form depth mismatch: $wrongLeaves leaves, $wrongChain chain")
-      require(graft.graph.Bfs.lastRounds == hops.toInt,
-        s"rounds broke: ${graft.graph.Bfs.lastRounds} != $hops")
+      require(rounds == hops.toInt, s"rounds broke: $rounds != $hops")
       reached
     }
 

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.iteration.Loop
+import graft.iteration.{Loop, LoopResult}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,19 +43,6 @@ import org.apache.spark.storage.StorageLevel
  */
 object ConnectedComponents {
 
-  /**
-   * @param edges DataFrame with two columns naming vertex pairs; any
-   *              orderable vertex type (long ids, strings, ...).
-   * @return DataFrame (id, component) — one row per vertex that
-   *         appears in `edges`; `component` is the minimum vertex id
-   *         reachable from `id` (a canonical cluster representative).
-   *         The result is returned persisted (MEMORY_AND_DISK);
-   *         callers may `unpersist()` it once consumed.
-   * @throws IllegalStateException if labels have not converged within
-   *         `maxIter` rounds (labels spread one hop per round, so
-   *         graphs with diameter > maxIter need a higher setting) —
-   *         partial labels would silently under-deduplicate.
-   */
   /** Edge lists at or under this size run union-find on the driver:
     * an LSH dedup join typically leaves a few thousand edges, where
     * the distributed loop's per-iteration job overhead (join + agg +
@@ -64,21 +51,30 @@ object ConnectedComponents {
     * shuffle loop takes over unchanged. */
   val DriverEdgeLimit: Long = 1L << 20
 
-  /** Instrumentation only: rounds the last distributed run() took
-    * (one large-star+small-star pass = one round for `star`; one
-    * label-propagation pass for `minlabel`). 0 after a driver-path
-    * run. Not part of the result contract. */
-  @volatile var lastRounds: Int = 0
-
   /**
+   * @param edges DataFrame with two columns naming vertex pairs; any
+   *              orderable vertex type (long ids, strings, ...).
    * @param algorithm distributed algorithm: "star" (alternating
    *        large-star/small-star, O(log n) rounds at any diameter),
    *        "minlabel" (O(diameter) rounds, slightly cheaper per
    *        round — fine for dense low-diameter dedup clusters).
+   * @return in `state`, the frame (id, component) — one row per vertex
+   *         that appears in `edges`; `component` is the minimum vertex
+   *         id reachable from `id` (a canonical cluster representative).
+   *         It is returned persisted (MEMORY_AND_DISK); callers may
+   *         `unpersist()` it once consumed. `rounds` counts
+   *         large-star+small-star passes (`star`) or label passes
+   *         (`minlabel`), 0 on the driver path; `history` holds each
+   *         round's edge count (`star`) or changed-label count
+   *         (`minlabel`).
+   * @throws IllegalStateException if labels have not converged within
+   *         `maxIter` rounds (labels spread one hop per round, so
+   *         graphs with diameter > maxIter need a higher setting) —
+   *         partial labels would silently under-deduplicate.
    */
   def run(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
       maxIter: Int = 50, driverEdgeLimit: Long = DriverEdgeLimit,
-      algorithm: String = "star"): DataFrame = {
+      algorithm: String = "star"): LoopResult[DataFrame] = {
     require(algorithm == "star" || algorithm == "minlabel",
       s"unknown algorithm '$algorithm' (expected star or minlabel)")
     val symRaw = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
@@ -99,10 +95,9 @@ object ConnectedComponents {
     if (checkDriver) {
       val edgeCount = sym.count()
       if (edgeCount <= driverEdgeLimit) {
-        lastRounds = 0
         val out = runOnDriver(sym, edges.schema(edges.columns.indexOf(srcCol)).dataType)
         sym.unpersist(blocking = false)
-        return out
+        return LoopResult(out, 0, Array.empty)
       }
     }
     if (algorithm == "star") return runStar(sym, maxIter)
@@ -117,6 +112,7 @@ object ConnectedComponents {
       .withColumn("component", col("id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
+    val history = Array.newBuilder[Double]
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -135,13 +131,13 @@ object ConnectedComponents {
       val (mat, changed) = Loop.materialize(next, checkpoint = (iter + 1) % 5 == 0, 0L)(
         (n, r) => if (r.getBoolean(2)) n + 1 else n, _ + _)
       converged = changed == 0L
+      history += changed.toDouble
       Loop.release(labels)
       labels = mat
       iter += 1
     }
     adj.unpersist()
     sym.unpersist()
-    lastRounds = iter
     if (!converged) {
       Loop.release(labels)
       throw new IllegalStateException(
@@ -149,15 +145,7 @@ object ConnectedComponents {
           "would be partial (members of one cluster keeping different canonical ids). " +
           "Raise maxIter past the graph diameter.")
     }
-    stored(labels.select("id", "component"), labels)
-  }
-
-  /** Stores the returned frame and then releases the loop's last frame,
-    * so the caller's `unpersist` is all that is left to free. */
-  private def stored(out: DataFrame, last: DataFrame): DataFrame = {
-    val (kept, _) = Loop.materialize(out, checkpoint = false, 0L)((n, _) => n + 1, _ + _)
-    Loop.release(last)
-    kept
+    LoopResult(Loop.keep(labels.select("id", "component"), labels), iter, history.result())
   }
 
   /**
@@ -196,7 +184,7 @@ object ConnectedComponents {
    * read of the returned frame that needs a lost cache block rebuilt —
    * rerun the call. The minlabel loop behaves the same.
    */
-  private def runStar(sym: DataFrame, maxIter: Int): DataFrame = {
+  private def runStar(sym: DataFrame, maxIter: Int): LoopResult[DataFrame] = {
     val byU = Window.partitionBy("u")
     def largeStar(e: DataFrame): DataFrame =
       e.union(e.select(col("v").as("u"), col("u").as("v")))
@@ -216,17 +204,18 @@ object ConnectedComponents {
     var (edges, sig) = checkpointed(sym.where(col("u") > col("v")).select("u", "v"))
     sym.unpersist(blocking = false)
 
+    val history = Array.newBuilder[Double]
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
       val (next, nextSig) = checkpointed(smallStar(largeStar(edges)).distinct())
       converged = nextSig == sig && next.except(edges).isEmpty
+      history += nextSig._1.toDouble
       Loop.release(edges)
       edges = next
       sig = nextSig
       iter += 1
     }
-    lastRounds = iter
     if (!converged) {
       Loop.release(edges)
       throw new IllegalStateException(
@@ -236,8 +225,9 @@ object ConnectedComponents {
     }
     // the fixpoint is a star forest: one (member, center) row per member
     // (already a set), plus one (center, center) row per center
-    stored(edges.select(col("u").as("id"), col("v").as("component"))
+    val out = Loop.keep(edges.select(col("u").as("id"), col("v").as("component"))
       .union(edges.select(col("v").as("id"), col("v").as("component")).distinct()), edges)
+    LoopResult(out, iter, history.result())
   }
 
   /** 64-bit hash of an edge for the set signature (splitmix64 finalizer

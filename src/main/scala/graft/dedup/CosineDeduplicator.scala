@@ -77,7 +77,7 @@ class CosineDeduplicator extends AlgoOperator[CosineDeduplicator]
     val edges = CosineDeduplicator.edges(df, getIdCol, getInputCol,
       getSeed, getNumHashTables, getNumPlanes, getMinSimilarity)
 
-    val components = ConnectedComponents.run(edges)
+    val components = ConnectedComponents.run(edges).state
       .withColumnRenamed("id", getIdCol)
     val out = df.join(components, Seq(getIdCol), "left")
       .withColumn(getCanonicalCol, coalesce(col("component"), col(getIdCol)))

@@ -81,7 +81,7 @@ class EntityResolver extends AlgoOperator[EntityResolver]
       .transform(df, df).head
       .where(col("left_id") < col("right_id"))
 
-    val comps = ConnectedComponents.run(pairs, "left_id", "right_id")
+    val comps = ConnectedComponents.run(pairs, "left_id", "right_id").state
       .select(col("id").as("__er_id"), col("component").as("__er_comp"))
 
     val out = df.join(comps, df(id) === comps("__er_id"), "left_outer")

@@ -62,7 +62,7 @@ class MinHashDeduplicator extends AlgoOperator[MinHashDeduplicator]
     val edges = model.approxSimilarityJoin(df, df, getThreshold, getIdCol)
       .where(col("datasetA_id") < col("datasetB_id"))
       .select(col("datasetA_id").as("src"), col("datasetB_id").as("dst"))
-    val components = ConnectedComponents.run(edges)
+    val components = ConnectedComponents.run(edges).state
       .withColumnRenamed("id", getIdCol)
     val out = df.join(components, Seq(getIdCol), "left")
       .withColumn(getCanonicalCol, coalesce(col("component"), col(getIdCol)))

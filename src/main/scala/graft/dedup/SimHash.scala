@@ -157,7 +157,7 @@ object HammingJoin {
   def clusterComponents(df: DataFrame, idCol: String, fpCol: String,
       maxHamming: Int, numBands: Int): DataFrame = {
     val p = pairs(df.where(col(fpCol).isNotNull), idCol, fpCol, maxHamming, numBands)
-    val comp = ConnectedComponents.run(p, "id_a", "id_b")
+    val comp = ConnectedComponents.run(p, "id_a", "id_b").state
       .withColumnRenamed("id", idCol)
     val slim = df.select(col(idCol), col(fpCol))
     val clustered = slim.join(comp, Seq(idCol), "left")
@@ -205,7 +205,7 @@ object HammingJoin {
       .groupBy(idCol)
       .agg(array_join(array_sort(collect_set(col("modality"))), ",").as("via"))
     val comp = ConnectedComponents
-      .run(edges.select(col("id_a"), col("id_b")).distinct(), "id_a", "id_b")
+      .run(edges.select(col("id_a"), col("id_b")).distinct(), "id_a", "id_b").state
       .withColumnRenamed("id", idCol)
     df.select(col(idCol))
       .join(comp, Seq(idCol), "left")

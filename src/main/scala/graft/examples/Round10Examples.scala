@@ -44,10 +44,10 @@ object StarComponentsExample {
     val chain = (0L until 40L).map(i => (i, i + 1))
     val pair = Seq((100L, 101L))
     val edges = (chain ++ pair).toDF("src", "dst")
-    val labels = graft.dedup.ConnectedComponents.run(edges, driverEdgeLimit = 0)
-    labels.groupBy("component").agg(count(lit(1)).as("size"))
+    val cc = graft.dedup.ConnectedComponents.run(edges, driverEdgeLimit = 0)
+    cc.state.groupBy("component").agg(count(lit(1)).as("size"))
       .orderBy("component").show(false)
-    println(s"rounds=${graft.dedup.ConnectedComponents.lastRounds}")
+    println(s"rounds=${cc.rounds}")
     spark.stop()
   }
 }

@@ -90,9 +90,9 @@ object PageRankExample {
       ("blog", "hub"), ("wiki", "hub"), ("news", "hub"),
       ("hub", "docs"), ("docs", "hub"),
       ("spam", "spam2")).toDF("src", "dst")
-    val ranks = graft.graph.PageRank.run(edges, numIter = 30)
-    ranks.orderBy(desc("pagerank")).show(false)
-    println(s"iterations=${graft.graph.PageRank.lastIterations}")
+    val pr = graft.graph.PageRank.run(edges, numIter = 30)
+    pr.state.orderBy(desc("pagerank")).show(false)
+    println(s"iterations=${pr.rounds}")
     spark.stop()
   }
 }

@@ -165,7 +165,7 @@ object PersonalizedPageRankExample {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 10L),
       (10L, 11L), (11L, 12L), (12L, 10L)).toDF("src", "dst")
     val seeds = Seq(0L).toDF("id")
-    val ranks = graft.graph.PageRank.runPersonalized(edges, seeds, numIter = 25)
+    val ranks = graft.graph.PageRank.runPersonalized(edges, seeds, numIter = 25).state
     ranks.orderBy(desc("pagerank")).show(false)
     ranks.unpersist()
     spark.stop()
@@ -183,7 +183,7 @@ object LabelPropagationExample {
       base <- Seq(0L, 10L)
       i <- 0 until 4; j <- (i + 1) until 4
     } yield (base + i, base + j)).toDF("src", "dst")
-    val labels = graft.graph.LabelPropagation.run(edges, numIter = 10)
+    val labels = graft.graph.LabelPropagation.run(edges, numIter = 10).state
     labels.orderBy("id").show(false)
     labels.unpersist()
     spark.stop()

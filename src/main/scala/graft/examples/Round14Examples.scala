@@ -42,10 +42,10 @@ object LinkGraphExample {
 
     // host graph → rank + communities (multiplicity kept as weight)
     val edges = LinkGraphExtractor.hostEdges(pages)
-    val ranks = graft.graph.PageRank.run(edges, "src_host", "dst_host", 0.85, 10)
+    val ranks = graft.graph.PageRank.run(edges, "src_host", "dst_host", 0.85, 10).state
     ranks.orderBy(desc("pagerank")).show(false) // the hub ranks first
     ranks.unpersist()
-    val comms = graft.graph.LabelPropagation.run(edges, "src_host", "dst_host", 5)
+    val comms = graft.graph.LabelPropagation.run(edges, "src_host", "dst_host", 5).state
     comms.orderBy("label", "id").show(false)
     comms.unpersist()
     spark.stop()
@@ -68,7 +68,7 @@ object HitsExample {
       ("dir2.example", "docs.example"), ("news.example", "dir1.example")
     ).toDF("src", "dst")
 
-    val scores = graft.graph.Hits.run(edges, numIter = 15)
+    val scores = graft.graph.Hits.run(edges, numIter = 15).state
     scores.orderBy(desc("authority")).show(false) // news/docs lead authority
     scores.orderBy(desc("hub")).show(false)       // dir1/dir2 lead hub
     spark.stop()

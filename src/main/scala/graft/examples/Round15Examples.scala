@@ -105,7 +105,7 @@ object WarcIngestExample {
     val pages = recs.where(col("w_type") === "response")
       .select(col("w_uri").as("url"), col("w_body").as("html"))
     val edges = graft.text.LinkGraphExtractor.hostEdges(pages)
-    val ranks = graft.graph.PageRank.run(edges, "src_host", "dst_host", 0.85, 5)
+    val ranks = graft.graph.PageRank.run(edges, "src_host", "dst_host", 0.85, 5).state
     ranks.orderBy(desc("pagerank")).show(false)
     ranks.unpersist()
     spark.stop()
@@ -139,7 +139,7 @@ object SitemapBfsExample {
       ("b.example", "spamfarm.biz"), ("a.example", "c.example")
     ).toDF("src", "dst")
     val seeds = Seq("seed.example").toDF("id")
-    graft.graph.Bfs.run(edges, seeds)
+    graft.graph.Bfs.run(edges, seeds).state
       .orderBy("distance", "id")
       .show(false) // spamfarm.biz sits 3 hops from trust
     spark.stop()

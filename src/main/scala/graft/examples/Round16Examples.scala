@@ -156,7 +156,7 @@ object CrawlPipelineExample {
       .select(col("s_url").as("src"), col("d_url").as("dst"))
       .localCheckpoint(true)
 
-    graft.graph.PageRank.run(edges, "src", "dst", numIter = 3)
+    graft.graph.PageRank.run(edges, "src", "dst", numIter = 3).state
       .orderBy(desc("pagerank"))
       .show(false) // /private/ never entered the graph
     spark.stop()

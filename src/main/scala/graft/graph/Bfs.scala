@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.iteration.{Loop, LoopResult, TerminateOnMaxIterOrTol}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -32,18 +33,25 @@ import org.apache.spark.storage.StorageLevel
  * (vertices settled last round) against it, so total join work across
  * the whole run is O(E) — every edge is expanded exactly once, the
  * textbook BFS bound, not O(E·rounds). Only each round's FRONTIER is
- * eagerly localCheckpointed; `settled` stays a lazy union of the flat
- * checkpointed frontier legs (the per-round anti-join and the final
- * select read that union either way, and each leg is already a
- * LogicalRDD, so plan depth stays O(1) per leg — the HITS lesson).
- * Total checkpoint MATERIALIZATION is therefore O(V), not the
- * O(V·depth) a per-round settled rewrite pays — on a CC-style
- * 1,000-hop chain that is the difference between writing the visited
- * set once and writing it a thousand times. Every `compactEvery`
- * (32) rounds the union is compacted into a single checkpoint so the
- * leg fan-in and per-round analysis stay bounded on deep graphs
+ * stored, as a local checkpoint whose one write job also counts it
+ * ([[graft.iteration.Loop.materialize]]); the settled set is a lazy
+ * union of the flat checkpointed frontier legs (the per-round anti-join
+ * reads that union, and each leg is already a LogicalRDD, so plan depth
+ * stays O(1) per leg — the HITS lesson). Total checkpoint
+ * MATERIALIZATION is therefore O(V), not the O(V·depth) a per-round
+ * settled rewrite pays — on a CC-style 1,000-hop chain that is the
+ * difference between writing the visited set once and writing it a
+ * thousand times. Once there are `compactEvery` (32) legs, every leg
+ * but the frontier is compacted into a single checkpoint and released,
+ * so the leg fan-in and per-round analysis stay bounded on deep graphs
  * (amortized materialization O(V·depth/32), still ~97% below the
- * per-round rewrite). Early-stops the round the frontier empties.
+ * per-round rewrite). Early-stops the round the frontier empties (that
+ * empty frontier is released at once, and not counted as a round).
+ *
+ * Cache-release contract: the (idOut, distOut) frame is stored before
+ * the legs and the edge table are released, so after the caller's
+ * `unpersist()` nothing of the call remains.
+ * Executor loss: rerun the call, as for [[graft.dedup.ConnectedComponents]].
  *
  * Exactly SQL-replayable: distances are INTEGERS and each round is a
  * min over (settled ∪ frontier-expansion) — the oracle replays k
@@ -51,10 +59,6 @@ import org.apache.spark.storage.StorageLevel
  * integer-replay precedent).
  */
 object Bfs {
-
-  /** Instrumentation only: rounds the last run() took (settled
-    * frontiers, not counting the seed round). */
-  @volatile var lastRounds: Int = 0
 
   /**
    * @param edges    (src, dst) rows; any orderable vertex type.
@@ -66,12 +70,14 @@ object Bfs {
    * @param undirected symmetrize edges before expanding.
    * @param idOut    output vertex-id column name.
    * @param distOut  output hop-distance column name (integer).
-   * @return one row per REACHED vertex: (idOut, distOut).
+   * @return in `state`, one row per REACHED vertex: (idOut, distOut);
+   *         `rounds` = non-empty frontiers settled (the seed round not
+   *         counted) and, in `history`, their sizes.
    */
   def run(edges: DataFrame, seeds: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", seedCol: String = "id", maxIter: Int = 20,
       undirected: Boolean = false, idOut: String = "id",
-      distOut: String = "distance"): DataFrame = {
+      distOut: String = "distance"): LoopResult[DataFrame] = {
     require(maxIter > 0, s"maxIter must be positive, got $maxIter")
 
     val fwd = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -81,39 +87,34 @@ object Bfs {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     val compactEvery = 32
-    var settled = seeds.select(col(seedCol).as("id")).distinct()
-      .select(col("id"), lit(0).as("d"))
-      .localCheckpoint(true)
-    var frontier = settled
-    var legs = 1
-    var k = 0
-    var done = false
-    while (k < maxIter && !done) {
+    def stored(frontier: DataFrame): (DataFrame, Long) =
+      Loop.materialize(frontier, checkpoint = true, 0L)((c, _) => c + 1, _ + _)
+    def union(legs: Seq[DataFrame]): DataFrame = legs.reduce(_ union _)
+    val (seeded, _) = stored(seeds.select(col(seedCol).as("id")).distinct()
+      .select(col("id"), lit(0).as("d")))
+    // state: the settled set's legs, the frontier last; the criterion is
+    // the frontier size, so an empty one stops the loop
+    val result = Loop.iterate(Vector(seeded), TerminateOnMaxIterOrTol(maxIter, 0.0)) { (legs, k) =>
       // shuffle_hash on the settled side: the anti-join's build side
       // is the visited set — hashing it beats sort-merge's per-round
       // O(V log V) sort of the whole union (the frontier side is
       // usually far smaller than the settled set on deep graphs)
-      val next = bySrc.join(frontier.select(col("id").as("src")), "src")
+      val (next, size) = stored(bySrc.join(legs.last.select(col("id").as("src")), "src")
         .select(col("dst").as("id")).distinct()
-        .join(settled.hint("shuffle_hash"), Seq("id"), "left_anti")
-        .select(col("id"), lit(k + 1).as("d"))
-        .localCheckpoint(true)
-      if (next.isEmpty) done = true
+        .join(union(legs).hint("shuffle_hash"), Seq("id"), "left_anti")
+        .select(col("id"), lit(k + 1).as("d")))
+      if (size == 0) {
+        Loop.release(next)
+        (legs, Some(0.0))
+      } else if (legs.size + 1 < compactEvery) (legs :+ next, Some(size.toDouble))
       else {
-        k += 1
-        // frontier-only checkpointing: settled stays a LAZY union of
-        // the flat frontier legs; compact occasionally to bound fan-in
-        settled = settled.union(next)
-        legs += 1
-        if (legs >= compactEvery) {
-          settled = settled.localCheckpoint(true)
-          legs = 1
-        }
-        frontier = next
+        val (compact, _) = stored(union(legs))
+        legs.foreach(Loop.release)
+        (Vector(compact, next), Some(size.toDouble))
       }
     }
-    lastRounds = k
-    bySrc.unpersist(blocking = false)
-    settled.select(col("id").as(idOut), col("d").as(distOut))
+    val sizes = result.history.takeWhile(_ > 0)
+    val out = union(result.state).select(col("id").as(idOut), col("d").as(distOut))
+    LoopResult(Loop.keep(out, bySrc +: result.state: _*), sizes.length, sizes)
   }
 }

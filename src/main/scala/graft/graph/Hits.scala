@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.iteration.{Loop, LoopResult, TerminateOnMaxIterOrTol}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -39,26 +40,29 @@ import org.apache.spark.storage.StorageLevel
  * half-step's groupBy still exchanges the joined edge-sized
  * contribution table, but partial aggregation (map-side combine)
  * reduces the bytes that actually move to O(V) rows per round. Each
- * half-step lands in an eager
- * localCheckpoint of the unnormalized sums with the L1 constant
- * folded afterward as a flat projection (see the in-loop comment for
- * why per-half-step checkpointing is load-bearing here, unlike
- * PageRank's every-4th-round cut). With `tol` > 0 the loop stops
- * early once the hub vector's L1 movement falls below it — same
- * convergence contract as [[PageRank]] — so a converged graph stops
- * paying the per-round driver actions and checkpoint
- * materializations.
+ * half-step stores its unnormalized sums as a local checkpoint, and
+ * the one job that writes it ([[graft.iteration.Loop.materialize]])
+ * also folds the L1 constant, which the next step divides by in a flat
+ * projection (see the in-loop comment for why per-half-step
+ * checkpointing is load-bearing here, unlike PageRank's every-4th-round
+ * cut). A half-step's checkpoint is released once its successor is
+ * written. With `tol` > 0 the loop stops early once the hub vector's
+ * L1 movement falls below it — same convergence contract as
+ * [[PageRank]]; the hub step's checkpoint carries the hub it replaces,
+ * so the movement is one more pass over that checkpoint.
  *
- * Cache-release contract: simpler than PageRank's rename rule — the
- * result is an eager localCheckpoint of the final (id, hub,
- * authority) join, every internal cache is released before returning,
- * and the checkpoint RDDs are freed by the ContextCleaner once
- * unreachable. No unpersist required.
+ * Cache-release contract: the final (id, hub, authority) frame is
+ * stored before every internal cache and checkpoint is released, so
+ * after the caller's `unpersist()` nothing of the call remains.
+ * Executor loss: rerun the call, as for [[graft.dedup.ConnectedComponents]].
  */
 object Hits {
 
-  /** Instrumentation only: iterations the last run() took. */
-  @volatile var lastIterations: Int = 0
+  /** A half-step's stored scores: the checkpoint `raw` (id, s, …) of
+    * unnormalized sums s and their L1 constant z. */
+  private final case class Step(raw: DataFrame, z: Double) {
+    def scores(name: String): DataFrame = raw.select(col("id"), (col("s") / z).as(name))
+  }
 
   /**
    * @param edges     (src, dst [, weight]) rows; any orderable vertex type.
@@ -73,13 +77,15 @@ object Hits {
    * @param idOut     output vertex-id column name.
    * @param hubOut    output hub-score column name.
    * @param authOut   output authority-score column name.
-   * @return one row per vertex appearing in `edges`; hub and authority
-   *         each sum to 1.
+   * @return in `state`, one row per vertex appearing in `edges`; hub
+   *         and authority each sum to 1. `rounds` run and, in
+   *         `history`, the hub L1 deltas checked (tol > 0; none after
+   *         the last allowed round).
    */
   def run(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
       numIter: Int = 20, tol: Double = 0.0, weightCol: String = "",
       idOut: String = "id", hubOut: String = "hub",
-      authOut: String = "authority"): DataFrame = {
+      authOut: String = "authority"): LoopResult[DataFrame] = {
     require(numIter > 0, s"numIter must be positive, got $numIter")
     require(tol >= 0.0, s"tol must be >= 0, got $tol")
 
@@ -97,6 +103,15 @@ object Hits {
           .otherwise(wd)
       }
 
+    // distinct() already leaves the table hash-partitioned on id — an
+    // explicit repartition(id) on top would be a second identical
+    // exchange of the same O(V) rows. Stored and counted in one job.
+    val (nodes, n) = Loop.materialize(edges.select(col(srcCol).as("id"))
+      .union(edges.select(col(dstCol).as("id")))
+      .distinct(), checkpoint = false, 0L)((c, _) => c + 1, _ + _)
+    if (n == 0) Loop.release(nodes)
+    require(n > 0, "HITS on an empty edge list is undefined")
+
     val agg = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
       .groupBy("src", "dst").agg(sum("w").as("w"))
@@ -107,77 +122,48 @@ object Hits {
     // the hub half-step in round 1)
     val byDst = bySrc.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
 
-    // distinct() already leaves the table hash-partitioned on id — an
-    // explicit repartition(id) on top would be a second identical
-    // exchange of the same O(V) rows
-    val nodes = edges.select(col(srcCol).as("id"))
-      .union(edges.select(col(dstCol).as("id")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    require(n > 0, "HITS on an empty edge list is undefined")
-
-    // Every half-step lands in an eager localCheckpoint of the
-    // UNNORMALIZED per-vertex sums, and the L1 normalization is a flat
-    // projection over that checkpoint with the constant folded as a
-    // literal. Checkpointing per half-step is not optional here: a
+    // Every half-step stores the UNNORMALIZED per-vertex sums of `base`'s
+    // vertices (0 where no mass arrives, base's other columns carried) as
+    // a local checkpoint, and the job that writes it folds their L1
+    // constant; the normalization is a flat projection with the constant
+    // as a literal. Checkpointing per half-step is not optional here: a
     // two-table iteration chains FOUR InMemoryRelations per round, and
     // IMR string rendering re-prints its child tree — measured ×16
     // plan-TEXT growth per round, 300 MB of explain string by round 3
     // (AQE renders it on every plan update), an OOM on any modest
     // driver. With the checkpoint the plan is a LogicalRDD scan every
-    // round: flat forever, no persist/unpersist choreography, and the
-    // per-round z constants are O(V) aggregates over checkpointed
-    // data. Old checkpoint RDDs are freed by the ContextCleaner as
-    // the score tables are reassigned.
-    var hubs = nodes.select(col("id"), lit(1.0 / n).as("h"))
-    var auths: DataFrame = null
-    var iter = 0
-    var converged = false
-    while (iter < numIter && !converged) {
-      val prevHubs = hubs
-      // authority step: hub mass flows along edge direction
-      val rawA = nodes.join(
-          bySrc.join(hubs.withColumnRenamed("id", "src"), "src")
-            .groupBy(col("dst").as("id"))
-            .agg(sum(col("w") * col("h")).as("ra")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("ra"), lit(0.0)).as("ra"))
-        .localCheckpoint(true)
-      val za = rawA.agg(sum("ra")).head.getDouble(0)
-      auths = rawA.select(col("id"), (col("ra") / za).as("a"))
-      // hub step: authority mass flows AGAINST edge direction
-      val rawH = nodes.join(
-          byDst.join(auths.withColumnRenamed("id", "dst"), "dst")
-            .groupBy(col("src").as("id"))
-            .agg(sum(col("w") * col("a")).as("rh")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("rh"), lit(0.0)).as("rh"))
-        .localCheckpoint(true)
-      val zh = rawH.agg(sum("rh")).head.getDouble(0)
-      hubs = rawH.select(col("id"), (col("rh") / zh).as("h"))
-      iter += 1
-      if (tol > 0.0 && iter < numIter) {
-        // O(V) join of two checkpoint-backed flat projections — one
-        // extra driver action per round, only on the tol path
-        val delta = hubs.withColumnRenamed("h", "hn")
-          .join(prevHubs.withColumnRenamed("h", "hp"), "id")
-          .agg(sum(abs(col("hn") - col("hp")))).head.getDouble(0)
-        converged = delta < tol
-      }
+    // round: flat forever.
+    def halfStep(base: DataFrame, sums: DataFrame): Step = {
+      val (raw, z) = Loop.materialize(base.join(sums, Seq("id"), "left")
+          .select(col("id") +: coalesce(col("s"), lit(0.0)).as("s") +: base.columns.tail.map(col): _*),
+        checkpoint = true, 0.0)((z, r) => z + r.getDouble(1), _ + _)
+      Step(raw, z)
     }
-    lastIterations = iter
-    // eager checkpoint of the final join, then release EVERYTHING —
-    // the returned data lives in a checkpoint RDD the ContextCleaner
-    // frees once the DataFrame is unreachable (no unpersist contract
-    // for callers to get wrong)
-    val out = hubs
-      .join(auths.withColumnRenamed("a", "__a"), "id")
-      .select(col("id").as(idOut), col("h").as(hubOut), col("__a").as(authOut))
-      .localCheckpoint(true)
-    bySrc.unpersist(blocking = false)
-    byDst.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
+    // h₀ = 1/n: unit sums over the node table, constant n
+    val h0 = Step(nodes.select(col("id"), lit(1.0).as("s")), n.toDouble)
+    // TerminateOnMaxIterOrTol stops at delta ≤ its tol: one ulp below
+    // `tol` makes that delta < tol, the documented rule
+    val result = Loop.iterate((h0, Option.empty[Step]),
+        TerminateOnMaxIterOrTol(numIter, math.nextDown(tol))) { case ((h, a), round) =>
+      // authority step: hub mass flows along edge direction
+      val na = halfStep(nodes, bySrc.join(h.scores("h").withColumnRenamed("id", "src"), "src")
+        .groupBy(col("dst").as("id")).agg(sum(col("w") * col("h")).as("s")))
+      // hub step: authority mass flows AGAINST edge direction; the frame
+      // keeps the hub it replaces (hp) for the tol check
+      val nh = halfStep(h.scores("hp"), byDst.join(na.scores("a").withColumnRenamed("id", "dst"), "dst")
+        .groupBy(col("src").as("id")).agg(sum(col("w") * col("a")).as("s")))
+      if (round > 0) Loop.release(h.raw)
+      a.foreach(s => Loop.release(s.raw))
+      val delta =
+        if (tol > 0.0 && round + 1 < numIter)
+          Some(Loop.fold(nh.raw, 0.0)((d, r) => d + math.abs(r.getDouble(1) / nh.z - r.getDouble(2)),
+            _ + _))
+        else None
+      ((nh, Some(na)), delta)
+    }
+    val (h, Some(a)) = result.state
+    val out = h.scores("h").join(a.scores("a"), "id")
+      .select(col("id").as(idOut), col("h").as(hubOut), col("a").as(authOut))
+    result.copy(state = Loop.keep(out, h.raw, a.raw, bySrc, byDst, nodes))
   }
 }

@@ -1,7 +1,9 @@
 package graft.graph
 
+import graft.iteration.{Loop, LoopResult, TerminateOnMaxIterOrTol}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -26,24 +28,25 @@ import org.apache.spark.storage.StorageLevel
  * By default the graph is treated as UNDIRECTED (edges symmetrized —
  * the standard LPA setting); `directed = true` propagates along edge
  * direction only. Synchronous updates can 2-cycle on bipartite
- * structures — `numIter` bounds the loop and `lastIterations` reports
- * whether the early-stop (no label changed) fired instead.
+ * structures — `numIter` bounds the loop, and the result's `rounds`
+ * shows whether the early stop (no label changed) fired instead.
  *
  * Scale shape (100 TB link graph): the symmetrized edge table
  * persists HASH-PARTITIONED ON src, so every iteration's label join
  * reuses that partitioning and only the O(V) label table shuffles per
  * round; the (dst, label) vote count is map-side combined; the
  * argmax-with-min-tiebreak is two O(V·distinct-neighbor-labels)
- * aggregates, no window over raw edges. Same per-round
- * materialization discipline as PageRank: the changed-label count —
- * needed for the early stop anyway — is the action that materializes
- * each round's cache BEFORE its parent unpersists, and
- * localCheckpoint every few rounds keeps the plan flat.
+ * aggregates, no window over raw edges. Each round's frame carries
+ * its own `changed` flag, and the one job that stores the round
+ * ([[graft.iteration.Loop.materialize]]) counts the flags — the early
+ * stop costs no job of its own (the minlabel ConnectedComponents
+ * round). A round is released once its successor is stored, and a
+ * local checkpoint every few rounds keeps the plan flat.
  *
- * Cache-release contract: identical to [[PageRank.run]] — the result
- * is a same-order pure-rename projection of the final label table, so
- * `result.unpersist()` genuinely releases it; rename only through
- * `idOut`/`labelOut`.
+ * Cache-release contract: the (idOut, labelOut) frame is stored before
+ * every internal cache and checkpoint is released, so after the
+ * caller's `unpersist()` nothing of the call remains.
+ * Executor loss: rerun the call, as for [[graft.dedup.ConnectedComponents]].
  *
  * Semantic communities at scale (the SemDeDup-shaped composition):
  * build the edge list with
@@ -60,9 +63,6 @@ import org.apache.spark.storage.StorageLevel
  */
 object LabelPropagation {
 
-  /** Instrumentation only: iterations the last run() took. */
-  @volatile var lastIterations: Int = 0
-
   private val CheckpointEvery = 4
 
   /**
@@ -78,10 +78,12 @@ object LabelPropagation {
    *                  representable); with float weights a near-tie is
    *                  ulp-sensitive to accumulation order and argmax
    *                  results can differ run-to-run at the margin.
+   * @return in `state`, (idOut, labelOut) — one row per vertex; `rounds`
+   *         run and, in `history`, each round's changed-label count.
    */
   def run(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
       numIter: Int = 10, directed: Boolean = false, weightCol: String = "",
-      idOut: String = "id", labelOut: String = "label"): DataFrame = {
+      idOut: String = "id", labelOut: String = "label"): LoopResult[DataFrame] = {
     require(numIter > 0, s"numIter must be positive, got $numIter")
 
     // the guard tests the CASTED value for null, so a non-numeric
@@ -98,6 +100,17 @@ object LabelPropagation {
               .cast("double"))
           .otherwise(wd)
       }
+    // distinct() already leaves the table hash-partitioned on id — an
+    // explicit repartition(id) on top would be a second identical
+    // exchange of the same O(V) rows. label₀(v) = v, stored and counted
+    // in one job.
+    val (labels0, n) = Loop.materialize(
+      edges.select(col(srcCol).as("id")).union(edges.select(col(dstCol).as("id")))
+        .distinct().withColumn("lab", col("id")),
+      checkpoint = false, 0L)((c, _) => c + 1, _ + _)
+    if (n == 0) Loop.release(labels0)
+    require(n > 0, "LabelPropagation on an empty edge list is undefined")
+
     val raw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
       .where(col("src") =!= col("dst")) // self-votes would freeze the start state
     val sym =
@@ -107,41 +120,26 @@ object LabelPropagation {
     // only the O(V) label table shuffles per round
     val adj = sym.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
 
-    // distinct() already leaves the table hash-partitioned on id — an
-    // explicit repartition(id) on top would be a second identical
-    // exchange of the same O(V) rows
-    val nodes = edges.select(col(srcCol).as("id"))
-      .union(edges.select(col(dstCol).as("id")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    require(nodes.count() > 0, "LabelPropagation on an empty edge list is undefined")
-
-    var labels = nodes.withColumn("lab", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    var iter = 0
-    var converged = false
-    while (iter < numIter && !converged) {
+    // argmax with min-label tiebreak. Labels are vertex ids, so for
+    // integral ids ONE aggregation does it: max over (cnt, ~lab) struct
+    // ordering picks the highest count and, on ties, the smallest label
+    // (A/B at 2.5M vertices / 10M edges: the generic two-aggregation path
+    // re-shuffles the vote table per round). Bitwise NOT, not negation:
+    // ~x = -x-1 is a strictly DECREASING bijection over the whole signed
+    // domain, so hash-derived ids at Long.MinValue stay exact where -x
+    // would overflow (silently in non-ANSI mode, an error under ANSI).
+    // Non-integral ids fall back to max-count-then-min-label.
+    val integralLabels = labels0.schema("lab").dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    // the criterion is the round's changed-label count: stop at 0
+    val result = Loop.iterate(labels0, TerminateOnMaxIterOrTol(numIter, 0.0)) { (labels, round) =>
       // votes: neighbor labels arriving at each dst — edge-weight sums
       // (multiplicity when unweighted: every edge votes 1.0)
-      val votes = adj.join(labels.withColumnRenamed("id", "src"), "src")
+      val votes = adj.join(labels.select(col("id").as("src"), col("lab")), "src")
         .groupBy(col("dst").as("id"), col("lab"))
         .agg(sum("w").as("cnt"))
-      // argmax with min-label tiebreak. Labels are vertex ids, so for
-      // integral ids ONE aggregation does it: max over (cnt, ~lab)
-      // struct ordering picks the highest count and, on ties, the
-      // smallest label (A/B at 2.5M vertices / 10M edges: the generic
-      // two-aggregation path re-shuffles the vote table per round).
-      // bitwise NOT, not negation: ~x = -x-1 is a strictly DECREASING
-      // bijection over the whole signed domain, so hash-derived ids at
-      // Long.MinValue stay exact where -x would overflow (silently in
-      // non-ANSI mode, an error under ANSI). Non-integral ids fall
-      // back to max-count-then-min-label.
-      import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
-      val integralLabels = votes.schema("lab").dataType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      }
       val picked =
         if (integralLabels)
           votes.groupBy("id")
@@ -154,26 +152,15 @@ object LabelPropagation {
             .groupBy("id").agg(min("lab").as("newLab"))
         }
       val next = labels.join(picked, Seq("id"), "left")
-        .select(col("id"), coalesce(col("newLab"), col("lab")).as("lab"))
-      val mat =
-        if ((iter + 1) % CheckpointEvery == 0) next.localCheckpoint(true)
-        else next.persist(StorageLevel.MEMORY_AND_DISK)
-      // full-scan changed count: the early-stop probe doubles as the
-      // action that materializes mat BEFORE its parent unpersists
-      // (the PageRank/ConnectedComponents recompute lesson)
-      val changed = mat.join(labels.withColumnRenamed("lab", "lab0"), "id")
-        .where(col("lab") =!= col("lab0")).count()
-      labels.unpersist(blocking = false)
-      labels = mat
-      converged = changed == 0L
-      iter += 1
+        .select(col("id"), coalesce(col("newLab"), col("lab")).as("lab"),
+          coalesce(col("newLab") =!= col("lab"), lit(false)).as("changed"))
+      val (mat, changed) = Loop.materialize(next, checkpoint = (round + 1) % CheckpointEvery == 0,
+        0L)((c, r) => if (r.getBoolean(2)) c + 1 else c, _ + _)
+      Loop.release(labels)
+      (mat, Some(changed.toDouble))
     }
-    lastIterations = iter
-    adj.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    // same-order pure-rename projection: sameResult-matches the cache
-    // entry, so the caller's unpersist genuinely releases it (see
-    // PageRank.run's contract comment for the Spark 4.1.2 probe)
-    labels.select(col("id").as(idOut), col("lab").as(labelOut))
+    val last = result.state
+    result.copy(state = Loop.keep(last.select(col("id").as(idOut), col("lab").as(labelOut)),
+      last, adj))
   }
 }

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.iteration.Loop
+import graft.iteration.{Loop, LoopResult}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -42,9 +42,6 @@ import org.apache.spark.storage.StorageLevel
  */
 object PageRank {
 
-  /** Instrumentation only: iterations the last run() took. */
-  @volatile var lastIterations: Int = 0
-
   private val CheckpointEvery = 4
 
   /**
@@ -61,8 +58,10 @@ object PageRank {
    *                  otherwise rename via a `.select` projection should
    *                  pass the final name here instead — see @return).
    * @param rankOut   output rank column name.
-   * @return (idOut, rankOut) — one row per vertex appearing in
-   *         `edges`; ranks sum to 1. Every internal cache except the
+   * @return in `state`, (idOut, rankOut) — one row per vertex appearing
+   *         in `edges`; ranks sum to 1. `rounds` is the rounds run and
+   *         `history` each checked round's L1 delta (tol > 0 only).
+   *         Every internal cache except the
    *         final rank table is released before returning. The result
    *         is a same-order pure-rename projection of that table, which
    *         sameResult-matches its cache entry — so `result.unpersist()`
@@ -81,7 +80,7 @@ object PageRank {
   def run(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
       dampingFactor: Double = 0.85, numIter: Int = 20, tol: Double = 0.0,
       weightCol: String = "", idOut: String = "id",
-      rankOut: String = "pagerank"): DataFrame =
+      rankOut: String = "pagerank"): LoopResult[DataFrame] =
     runImpl(edges, srcCol, dstCol, dampingFactor, numIter, tol, weightCol,
       idOut, rankOut, teleport = None)
 
@@ -109,14 +108,14 @@ object PageRank {
       srcCol: String = "src", dstCol: String = "dst",
       seedCol: String = "id", dampingFactor: Double = 0.85,
       numIter: Int = 20, tol: Double = 0.0, weightCol: String = "",
-      idOut: String = "id", rankOut: String = "pagerank"): DataFrame =
+      idOut: String = "id", rankOut: String = "pagerank"): LoopResult[DataFrame] =
     runImpl(edges, srcCol, dstCol, dampingFactor, numIter, tol, weightCol,
       idOut, rankOut, teleport = Some((seeds, seedCol)))
 
   private def runImpl(edges: DataFrame, srcCol: String, dstCol: String,
       dampingFactor: Double, numIter: Int, tol: Double,
       weightCol: String, idOut: String, rankOut: String,
-      teleport: Option[(DataFrame, String)]): DataFrame = {
+      teleport: Option[(DataFrame, String)]): LoopResult[DataFrame] = {
     require(dampingFactor > 0.0 && dampingFactor < 1.0,
       s"dampingFactor must be in (0, 1), got $dampingFactor")
     require(numIter > 0, s"numIter must be positive, got $numIter")
@@ -204,6 +203,7 @@ object PageRank {
     var ranks = nodes.select(col("id"), p.as("r"), col("dangling"))
     var danglingMass = danglingSeeds.toDouble / s
     var liveCheckpoint = Option.empty[DataFrame]
+    val history = Array.newBuilder[Double]
     var iter = 0
     var converged = false
     while (iter < numIter && !converged) {
@@ -232,6 +232,7 @@ object PageRank {
       if (tol > 0.0) {
         val delta = mat.join(ranks.select(col("id"), col("r").as("r0")), "id")
           .agg(sum(abs(col("r") - col("r0")))).head().getDouble(0)
+        history += delta
         converged = delta < tol
       }
       // persisted rounds go as soon as their successor is stored; a
@@ -246,7 +247,6 @@ object PageRank {
       danglingMass = nextMass
       iter += 1
     }
-    lastIterations = iter
     if (iter < numIter) {
       // tol stopped the loop before its last round: store (id, r) now
       val (out, _) = Loop.materialize(ranks.select("id", "r"), checkpoint = false, 0L)(
@@ -266,6 +266,6 @@ object PageRank {
     // projection instead would be worse than useless: the persist
     // no-ops against the sameResult-matching entry and an internal
     // unpersist would then drop the caller's data out from under it.
-    ranks.select(col("id").as(idOut), col("r").as(rankOut))
+    LoopResult(ranks.select(col("id").as(idOut), col("r").as(rankOut)), iter, history.result())
   }
 }

@@ -36,8 +36,21 @@ final case class TerminateOnMaxIterOrTol(maxIter: Int, tol: Double) extends Term
 }
 
 /** Result of a [[Loop]] run: the final state, rounds executed, and
-  * every round's reported criterion value in order. */
+  * every round's reported criterion value in order. The graph operators
+  * return one too, so concurrent calls each read their own rounds. */
 final case class LoopResult[S](state: S, rounds: Int, history: Array[Double])
+
+object LoopResult {
+  import scala.language.implicitConversions
+
+  /** Code written when the graph operators' `run` returned the bare frame
+    * still compiles against the `LoopResult` they return now. Its only
+    * user is `perfbench/` (`Workloads.scala` sinks the results of
+    * `ConnectedComponents.run` and `PageRank.run` as frames); the next
+    * change to the benchmark should call `.state` there and delete this
+    * conversion. New code reads `.state` and keeps `rounds`/`history`. */
+  implicit def frameOf(r: LoopResult[DataFrame]): DataFrame = r.state
+}
 
 /**
  * Driver-loop iteration: the Spark-first replacement for the
@@ -57,8 +70,10 @@ final case class LoopResult[S](state: S, rounds: Int, history: Array[Double])
  * its plan needs, plus ONE job that both stores the round's frame and
  * computes what the driver must know about it (a convergence count, a
  * signature, the next round's scalar). [[materialize]] is that job;
- * [[release]] frees what it stored. ConnectedComponents, PageRank and
- * [[iterateDataFrame]] are built on the pair.
+ * [[release]] frees what it stored, and [[keep]] stores the frame a loop
+ * returns before releasing the loop's own. ConnectedComponents,
+ * PageRank, LabelPropagation, Hits, Bfs and [[iterateDataFrame]] are
+ * built on them.
  */
 object Loop {
 
@@ -109,17 +124,16 @@ object Loop {
       criterion: (DataFrame, DataFrame) => Option[Double] = (_, _) => None)(
       body: (DataFrame, Int) => DataFrame): LoopResult[DataFrame] = {
     var prev: Option[DataFrame] = None
-    val result = iterate(init, termination) { (state, round) =>
-      // materialized before the parent is unpersisted
+    iterate(init, termination) { (state, round) =>
+      // materialized before the parent is released
       val (next, _) = materialize(body(state, round),
         checkpoint = checkpointEvery > 0 && (round + 1) % checkpointEvery == 0, 0L)(
         (n, _) => n + 1, _ + _)
       val crit = criterion(state, next)
-      prev.foreach(_.unpersist(blocking = false))
+      prev.foreach(release)
       prev = Some(next)
       (next, crit)
     }
-    result
   }
 
   /**
@@ -150,7 +164,15 @@ object Loop {
     val kept =
       if (checkpoint) df.localCheckpoint(eager = false)
       else df.persist(StorageLevel.MEMORY_AND_DISK)
-    val qe = kept.queryExecution
+    (kept, fold(kept, zero)(seqOp, combOp))
+  }
+
+  /** Fold the rows of a frame [[materialize]] stored, in ONE job, in
+    * partition order: a second pass for a fold that needs what the store
+    * job returned (HITS' hub delta needs the hub sum). */
+  def fold[A: ClassTag](stored: DataFrame, zero: A)(
+      seqOp: (A, Row) => A, combOp: (A, A) => A): A = {
+    val qe = stored.queryExecution
     // the job runs on the stored rows directly: the checkpoint RDD, whose
     // blocks it writes, or a scan of the new cache entry, whose buffers
     // it builds. Reading the cache through a query instead would let AQE
@@ -159,7 +181,7 @@ object Loop {
     // cached plan's generated code misses the codegen cache and is
     // compiled again on every call.
     SQLExecution.withNewExecutionId(qe, Some("materialize")) {
-      val stored = qe.logical match {
+      val rows = qe.logical match {
         case r: LogicalRDD => r.rdd
         case _ =>
           val rel = qe.sparkSession.sharedState.cacheManager
@@ -168,12 +190,12 @@ object Loop {
             .cachedRepresentation
           InMemoryTableScanExec(rel.output, Nil, rel).execute()
       }
-      val schema = kept.schema
-      val partials = stored.sparkContext.runJob(stored, (it: Iterator[InternalRow]) => {
+      val schema = stored.schema
+      val partials = rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
         val toRow = CatalystTypeConverters.createToScalaConverter(schema)
         it.foldLeft(zero)((a, r) => seqOp(a, toRow(r).asInstanceOf[Row]))
       })
-      (kept, partials.foldLeft(zero)(combOp))
+      partials.foldLeft(zero)(combOp)
     }
   }
 
@@ -186,5 +208,15 @@ object Loop {
   def release(df: DataFrame): Unit = df.queryExecution.logical match {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false)
     case _ => df.unpersist(blocking = false)
+  }
+
+  /** Store `out`, the frame a loop call returns (one job), then [[release]]
+    * `frames`, the stored frames and cached inputs it reads: the caller's
+    * `unpersist` then frees all the call stored. As with [[materialize]],
+    * `out` must not match a frame already cached. */
+  def keep(out: DataFrame, frames: DataFrame*): DataFrame = {
+    val (kept, _) = materialize(out, checkpoint = false, 0L)((n, _) => n + 1, _ + _)
+    frames.foreach(release)
+    kept
   }
 }

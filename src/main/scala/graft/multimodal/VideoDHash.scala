@@ -197,7 +197,7 @@ class VideoDHasher extends Transformer[VideoDHasher]
   def clusterComponents(df: DataFrame, idCol: String, maxHamming: Int,
       numBands: Int = 4): DataFrame = {
     val p = similarityJoin(df, idCol, maxHamming, numBands)
-    val comp = graft.dedup.ConnectedComponents.run(p, "id_a", "id_b")
+    val comp = graft.dedup.ConnectedComponents.run(p, "id_a", "id_b").state
       .withColumnRenamed("id", idCol)
     df.select(col(idCol))
       .join(comp, Seq(idCol), "left")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.api.{Estimator, Model, StageLoader}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -150,7 +151,9 @@ class BpeTrainer extends Estimator[BpeTrainer, BpeModel]
     var syms = words
       .select(col("freq"), split(col("w"), "").as("s"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    words.unpersist(blocking = false)
+    // freed after the next pair count fills `syms`: freed first, Spark
+    // would recompile the unfilled cache to recompute from the corpus
+    var parent = words
 
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     // every multi-char symbol in `syms` is the concatenation of some
@@ -173,6 +176,7 @@ class BpeTrainer extends Estimator[BpeTrainer, BpeModel]
         .where(col("a") =!= col("b")) // see scaladoc: no self-pair candidates
         .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
         .limit(fetch).collect()
+      Loop.release(parent)
       // `exhausted` = the list above IS the complete pair set, so running
       // past its end means no follower exists at all
       val exhausted = top.length < fetch
@@ -270,13 +274,14 @@ class BpeTrainer extends Estimator[BpeTrainer, BpeModel]
           next.unpersist(blocking = false) // checkpoint holds the data now
           c
         } else next
-        syms.unpersist(blocking = false)
+        parent = syms
         syms = mat
         merges ++= accepted.map(m => (m._1, m._2))
         createdSymbols ++= accepted.map(m => m._1 + m._2)
       }
     }
-    syms.unpersist(blocking = false)
+    Loop.release(parent)
+    Loop.release(syms)
 
     import spark.implicits._
     val modelDf = merges.toSeq.zipWithIndex

@@ -83,7 +83,7 @@ class KeywordExtractor extends AlgoOperator[KeywordExtractor]
     // non-cascading no-op against PageRank's persisted plan.
     val ranks = graft.graph.PageRank.run(edges, "src", "dst",
       getDampingFactor, getNumIter, getTol,
-      idOut = "word", rankOut = "rank")
+      idOut = "word", rankOut = "rank").state
     val k = getTopK
     if (k == 0) Array(ranks)
     else {

@@ -185,7 +185,7 @@ class PlanShapeSpec extends SparkSpec {
   test("label propagation's result plan carries no cartesian / nested-loop join") {
     import spark.implicits._
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val out = graft.graph.LabelPropagation.run(edges, numIter = 2)
+    val out = graft.graph.LabelPropagation.run(edges, numIter = 2).state
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)

@@ -292,9 +292,9 @@ class PropertySpec extends SparkSpec {
     cases.foreach { case (name, es) =>
       if (es.nonEmpty) {
         val edges = es.toDF("src", "dst")
-        val want = graft.dedup.ConnectedComponents.run(edges)       // driver union-find
+        val want = graft.dedup.ConnectedComponents.run(edges).state       // driver union-find
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val got = graft.dedup.ConnectedComponents.run(edges, driverEdgeLimit = 0)
+        val got = graft.dedup.ConnectedComponents.run(edges, driverEdgeLimit = 0).state
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(got === want, name)
       }

@@ -9,7 +9,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     // 1-2-3 chain, 10-11 pair, 20-20 self loop (degenerate, dropped)
     val edges = Seq((2L, 1L), (2L, 3L), (10L, 11L), (20L, 20L)).toDF("src", "dst")
-    val got = ConnectedComponents.run(edges)
+    val got = ConnectedComponents.run(edges).state
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)))
   }
@@ -63,7 +63,7 @@ class DedupSpec extends SparkSpec {
     val chain = (1L to 5L).map(i => (i, i + 1)).toDF("src", "dst")
     val e = intercept[IllegalStateException] {
       ConnectedComponents.run(chain, maxIter = 2, driverEdgeLimit = 0,
-        algorithm = "minlabel")
+        algorithm = "minlabel").state
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -71,12 +71,12 @@ class DedupSpec extends SparkSpec {
   test("ConnectedComponents distributed loops (star and minlabel) match the driver fast path") {
     import spark.implicits._
     val edges = Seq((2L, 1L), (2L, 3L), (10L, 11L), (7L, 3L), (20L, 21L)).toDF("src", "dst")
-    val driver = ConnectedComponents.run(edges)
+    val driver = ConnectedComponents.run(edges).state
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val star = ConnectedComponents.run(edges, driverEdgeLimit = 0)
+    val star = ConnectedComponents.run(edges, driverEdgeLimit = 0).state
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val minlabel = ConnectedComponents.run(edges, driverEdgeLimit = 0,
-        algorithm = "minlabel")
+        algorithm = "minlabel").state
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(driver === star)
     assert(driver === minlabel)
@@ -89,11 +89,10 @@ class DedupSpec extends SparkSpec {
     // a 64-hop path (diameter 64): min-label needs 64+ rounds; the
     // alternating large-star/small-star contraction needs ~log2(65)
     val chain = (100L until 164L).map(i => (i, i + 1)).toDF("src", "dst")
-    val got = ConnectedComponents.run(chain, driverEdgeLimit = 0, maxIter = 15)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val cc = ConnectedComponents.run(chain, driverEdgeLimit = 0, maxIter = 15)
+    val got = cc.state.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === (100L to 164L).map(i => (i, 100L)).toSet)
-    assert(ConnectedComponents.lastRounds <= 10,
-      s"star took ${ConnectedComponents.lastRounds} rounds on a 64-chain")
+    assert(cc.rounds <= 10, s"star took ${cc.rounds} rounds on a 64-chain")
   }
 
   test("ConnectedComponents star matches driver union-find on a random graph") {
@@ -102,9 +101,9 @@ class DedupSpec extends SparkSpec {
     val edges = Seq.fill(300)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
       .filter { case (a, b) => a != b }
       .toDF("src", "dst")
-    val driver = ConnectedComponents.run(edges)
+    val driver = ConnectedComponents.run(edges).state
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val star = ConnectedComponents.run(edges, driverEdgeLimit = 0)
+    val star = ConnectedComponents.run(edges, driverEdgeLimit = 0).state
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(star === driver)
   }
@@ -116,7 +115,7 @@ class DedupSpec extends SparkSpec {
     for (algorithm <- Seq("star", "minlabel")) {
       // every round's cache and checkpoint is registered here until freed
       val before = sc.getPersistentRDDs.keySet
-      val out = ConnectedComponents.run(chain, driverEdgeLimit = 0, algorithm = algorithm)
+      val out = ConnectedComponents.run(chain, driverEdgeLimit = 0, algorithm = algorithm).state
       assert(out.collect().map(_.getLong(1)).toSet == Set(100L), algorithm)
       out.unpersist(blocking = true)
       val left = sc.getPersistentRDDs.keySet -- before
@@ -127,7 +126,7 @@ class DedupSpec extends SparkSpec {
   test("ConnectedComponents star works on string vertex ids") {
     import spark.implicits._
     val edges = Seq(("b", "a"), ("b", "c"), ("x", "y")).toDF("src", "dst")
-    val got = ConnectedComponents.run(edges, driverEdgeLimit = 0)
+    val got = ConnectedComponents.run(edges, driverEdgeLimit = 0).state
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(got === Set(("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")))
   }

@@ -30,8 +30,9 @@ class HitsSpec extends SparkSpec {
     // hubs 1,2 link both authorities; hub 3 links only 10
     val edges = Seq((1L, 10L), (1L, 11L), (2L, 10L), (2L, 11L), (3L, 10L))
       .toDF("src", "dst")
-    val got = scores(Hits.run(edges, numIter = 8))
-    assert(Hits.lastIterations == 8)
+    val res = Hits.run(edges, numIter = 8)
+    val got = scores(res.state)
+    assert(res.rounds == 8)
     // pure hubs have zero authority, pure authorities zero hub
     assert(got(1L)._2 == 0.0 && got(10L)._1 == 0.0)
     // both distributions sum to 1
@@ -48,7 +49,7 @@ class HitsSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     val edges = Seq.fill(300)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
       .filter { case (s, d) => s != d }.distinct
-    val got = scores(Hits.run(edges.toDF("src", "dst"), numIter = 5))
+    val got = scores(Hits.run(edges.toDF("src", "dst"), numIter = 5).state)
     val (refH, refA) = reference(edges, 5)
     refH.foreach { case (v, h) =>
       assert(math.abs(got(v)._1 - h) < 1e-12, s"hub($v): ${got(v)._1} vs $h") }
@@ -59,14 +60,14 @@ class HitsSpec extends SparkSpec {
   test("weights multiply votes; self-loops are legal; parallel edges accumulate") {
     import spark.implicits._
     val w = Seq((1L, 10L, 3.0), (2L, 11L, 1.0), (1L, 1L, 1.0)).toDF("src", "dst", "w")
-    val got = scores(Hits.run(w, weightCol = "w", numIter = 4))
+    val got = scores(Hits.run(w, weightCol = "w", numIter = 4).state)
     assert(got(10L)._2 > got(11L)._2, "the weight-3 edge must dominate")
     assert(math.abs(got.values.map(_._2).sum - 1.0) < 1e-12)
     // parallel edges == one edge of summed weight
     val par = Seq((1L, 10L), (1L, 10L), (1L, 10L), (2L, 11L)).toDF("src", "dst")
-    val got2 = scores(Hits.run(par, numIter = 4))
+    val got2 = scores(Hits.run(par, numIter = 4).state)
     val wEq = Seq((1L, 10L, 3.0), (2L, 11L, 1.0)).toDF("src", "dst", "w")
-    val got3 = scores(Hits.run(wEq, weightCol = "w", numIter = 4))
+    val got3 = scores(Hits.run(wEq, weightCol = "w", numIter = 4).state)
     got2.foreach { case (v, (h, a)) =>
       assert(math.abs(h - got3(v)._1) < 1e-15 && math.abs(a - got3(v)._2) < 1e-15) }
   }
@@ -74,7 +75,7 @@ class HitsSpec extends SparkSpec {
   test("checkpoint rounds (numIter > CheckpointEvery) and output naming") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    val out = Hits.run(edges, numIter = 9, idOut = "v", hubOut = "hb", authOut = "au")
+    val out = Hits.run(edges, numIter = 9, idOut = "v", hubOut = "hb", authOut = "au").state
     assert(out.columns.toSeq == Seq("v", "hb", "au"))
     // a directed 3-cycle is perfectly symmetric: all scores equal
     val got = out.collect().map(r => (r.getDouble(1), r.getDouble(2)))
@@ -85,17 +86,17 @@ class HitsSpec extends SparkSpec {
   test("guards: empty edges, non-positive weights, non-numeric weights") {
     import spark.implicits._
     intercept[IllegalArgumentException] {
-      Hits.run(Seq.empty[(Long, Long)].toDF("src", "dst"), numIter = 1)
+      Hits.run(Seq.empty[(Long, Long)].toDF("src", "dst"), numIter = 1).state
     }
     intercept[Exception] {
       Hits.run(Seq((1L, 2L, 0.0)).toDF("src", "dst", "w"),
-        weightCol = "w", numIter = 1).collect()
+        weightCol = "w", numIter = 1).state.collect()
     }
     // a string weight that doesn't parse must RAISE, not cast to null
     // and silently drop the edge inside sum()
     intercept[Exception] {
       Hits.run(Seq((1L, 2L, "oops")).toDF("src", "dst", "w"),
-        weightCol = "w", numIter = 1).collect()
+        weightCol = "w", numIter = 1).state.collect()
     }
   }
 
@@ -104,16 +105,32 @@ class HitsSpec extends SparkSpec {
     // hubs {1,2} each link authorities {10,11}: from iteration 2 on
     // both vectors are the exact fixed point, so the L1 delta is 0
     val edges = Seq((1L, 10L), (1L, 11L), (2L, 10L), (2L, 11L)).toDF("src", "dst")
-    val got = scores(Hits.run(edges, numIter = 20, tol = 1e-9))
-    assert(Hits.lastIterations < 20,
-      s"converged graph must stop early, ran ${Hits.lastIterations}")
-    assert(Hits.lastIterations >= 2)
+    val early = Hits.run(edges, numIter = 20, tol = 1e-9)
+    val got = scores(early.state)
+    assert(early.rounds < 20, s"converged graph must stop early, ran ${early.rounds}")
+    assert(early.rounds >= 2)
+    // one hub delta per round, the last one under tol
+    assert(early.history.length == early.rounds && early.history.last < 1e-9)
     // early-stopped scores equal the full-run fixed point
-    val full = scores(Hits.run(edges, numIter = 20))
+    val full = scores(Hits.run(edges, numIter = 20).state)
     got.foreach { case (v, (h, a)) =>
       assert(math.abs(h - full(v)._1) < 1e-12 && math.abs(a - full(v)._2) < 1e-12) }
     // tol = 0 (default) keeps the exact-replay contract: all rounds run
-    Hits.run(edges, numIter = 7)
-    assert(Hits.lastIterations == 7)
+    assert(Hits.run(edges, numIter = 7).rounds == 7)
+  }
+
+  test("nothing outlives run() plus the caller's unpersist") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (2L, 5L)).toDF("src", "dst")
+    for (tol <- Seq(0.0, 1e-12)) {
+      // every half-step's checkpoint is registered here until freed
+      val before = sc.getPersistentRDDs.keySet
+      val out = Hits.run(edges, numIter = 5, tol = tol).state
+      assert(out.count() == 5)
+      out.unpersist(blocking = true)
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"tol=$tol left RDDs $left registered")
+    }
   }
 }

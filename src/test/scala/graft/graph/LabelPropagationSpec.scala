@@ -17,12 +17,26 @@ class LabelPropagationSpec extends SparkSpec {
       i <- 0 until 4; j <- (i + 1) until 4
     } yield (base + i, base + j)
     val edges = cliques.toDF("src", "dst")
-    val out = LabelPropagation.run(edges, numIter = 10)
-    val got = labelsOf(out)
-    out.unpersist()
+    val res = LabelPropagation.run(edges, numIter = 10)
+    val got = labelsOf(res.state)
+    res.state.unpersist()
     (0L to 3L).foreach(v => assert(got(v) == 0L, s"vertex $v"))
     (10L to 13L).foreach(v => assert(got(v) == 10L, s"vertex $v"))
-    assert(LabelPropagation.lastIterations < 10, "no-change early stop should fire")
+    assert(res.rounds < 10, "no-change early stop should fire")
+    // the changed-label count of every round, the last one 0
+    assert(res.history.length == res.rounds && res.history.last == 0.0)
+    // concurrent calls each report their own rounds: the path 0-1-2
+    // oscillates, so each runs exactly its numIter
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val path = Seq((0L, 1L), (1L, 2L)).toDF("src", "dst")
+    val calls = Seq(2, 5).map(n => Future {
+      val r = LabelPropagation.run(path, numIter = n)
+      r.state.unpersist()
+      r.rounds
+    })
+    assert(calls.map(Await.result(_, 5.minutes)) == Seq(2, 5))
   }
 
   test("extreme ids: Long.MinValue label survives the one-aggregation tiebreak") {
@@ -34,7 +48,7 @@ class LabelPropagationSpec extends SparkSpec {
     val mn = Long.MinValue
     val mx = Long.MaxValue
     val edges = Seq((mn, mx), (mn, 7L), (mx, 7L)).toDF("src", "dst")
-    val got = labelsOf(LabelPropagation.run(edges, numIter = 4))
+    val got = labelsOf(LabelPropagation.run(edges, numIter = 4).state)
     assert(got.values.toSet == Set(mn),
       s"triangle must converge to the min label Long.MinValue, got $got")
   }
@@ -43,21 +57,21 @@ class LabelPropagationSpec extends SparkSpec {
     import spark.implicits._
     val path = Seq((0L, 1L), (1L, 2L)).toDF("src", "dst")
     // path 0-1-2 oscillates: [1,0,1] -> [0,1,0] -> [1,0,1] ...
-    val r1 = labelsOf(LabelPropagation.run(path, numIter = 1))
+    val r1 = labelsOf(LabelPropagation.run(path, numIter = 1).state)
     assert(r1 == Map(0L -> 1L, 1L -> 0L, 2L -> 1L))
-    val r2 = labelsOf(LabelPropagation.run(path, numIter = 2))
+    val r2 = labelsOf(LabelPropagation.run(path, numIter = 2).state)
     assert(r2 == Map(0L -> 0L, 1L -> 1L, 2L -> 0L))
-    val r3 = labelsOf(LabelPropagation.run(path, numIter = 3))
+    val r3 = labelsOf(LabelPropagation.run(path, numIter = 3).state)
     assert(r3 == r1, "period-2 oscillation must replay exactly")
   }
 
   test("directed propagation follows edge direction; self-loops are dropped") {
     import spark.implicits._
     val edges = Seq((0L, 1L), (5L, 5L)).toDF("src", "dst")
-    val directed = labelsOf(LabelPropagation.run(edges, numIter = 5, directed = true))
+    val directed = labelsOf(LabelPropagation.run(edges, numIter = 5, directed = true).state)
     // 0 has no in-edges -> keeps 0; 1 adopts 0; 5 only self-loops -> keeps 5
     assert(directed == Map(0L -> 0L, 1L -> 0L, 5L -> 5L))
-    val undirected = labelsOf(LabelPropagation.run(edges, numIter = 2))
+    val undirected = labelsOf(LabelPropagation.run(edges, numIter = 2).state)
     // undirected 0<->1 swaps labels each round: after 2 rounds back home
     assert(undirected == Map(0L -> 0L, 1L -> 1L, 5L -> 5L))
   }
@@ -68,14 +82,14 @@ class LabelPropagationSpec extends SparkSpec {
     // weight-5 edge: weighted LPA must pick 1 where unweighted picks 0
     val edges = Seq((0L, 2L, 1.0), (0L, 2L, 1.0), (1L, 2L, 5.0)).toDF("src", "dst", "w")
     val weighted = LabelPropagation.run(edges, numIter = 1, directed = true,
-      weightCol = "w")
+      weightCol = "w").state
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(weighted(2L) == 1L)
-    val unweighted = labelsOf(LabelPropagation.run(edges, numIter = 1, directed = true))
+    val unweighted = labelsOf(LabelPropagation.run(edges, numIter = 1, directed = true).state)
     assert(unweighted(2L) == 0L)
     val e = intercept[Exception] {
       LabelPropagation.run(Seq((0L, 1L, 0.0)).toDF("src", "dst", "w"),
-        numIter = 1, weightCol = "w").collect()
+        numIter = 1, weightCol = "w").state.collect()
     }
     def causes(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ causes(t.getCause)
@@ -85,7 +99,7 @@ class LabelPropagationSpec extends SparkSpec {
     // the edge inside sum()
     intercept[Exception] {
       LabelPropagation.run(Seq((0L, 1L, "oops")).toDF("src", "dst", "w"),
-        numIter = 1, weightCol = "w").collect()
+        numIter = 1, weightCol = "w").state.collect()
     }
   }
 
@@ -124,7 +138,7 @@ class LabelPropagationSpec extends SparkSpec {
       val edges = Seq.fill(n * 2)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       val want = referenceLpa(edges, numIter = 4, directed = directed)
       val got = labelsOf(LabelPropagation.run(
-        edges.toDF("src", "dst"), numIter = 4, directed = directed))
+        edges.toDF("src", "dst"), numIter = 4, directed = directed).state)
       assert(got == want, s"trial=$trial directed=$directed")
     }
   }
@@ -135,13 +149,26 @@ class LabelPropagationSpec extends SparkSpec {
     // multiplicity must win over the smaller label only via count
     val edges = Seq((0L, 2L), (0L, 2L), (1L, 2L)).toDF("src", "dst")
     val out = LabelPropagation.run(edges, numIter = 1, directed = true,
-      idOut = "vertex", labelOut = "community")
+      idOut = "vertex", labelOut = "community").state
     assert(out.columns.toSeq == Seq("vertex", "community"))
     val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got(2L) == 0L)
     // tie at multiplicity 1 each -> min label: rebuild with single edges
     val tie = Seq((0L, 2L), (1L, 2L)).toDF("src", "dst")
-    val gotTie = labelsOf(LabelPropagation.run(tie, numIter = 1, directed = true))
+    val gotTie = labelsOf(LabelPropagation.run(tie, numIter = 1, directed = true).state)
     assert(gotTie(2L) == 0L)
+  }
+
+  test("nothing outlives run() plus the caller's unpersist") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // the path oscillates, so all 5 rounds run, one of them a checkpoint
+    val path = Seq((0L, 1L), (1L, 2L)).toDF("src", "dst")
+    val before = sc.getPersistentRDDs.keySet
+    val out = LabelPropagation.run(path, numIter = 5).state
+    assert(labelsOf(out) == Map(0L -> 1L, 1L -> 0L, 2L -> 1L))
+    out.unpersist(blocking = true)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"left RDDs $left registered")
   }
 }

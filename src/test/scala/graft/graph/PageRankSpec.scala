@@ -33,7 +33,7 @@ class PageRankSpec extends SparkSpec {
     import spark.implicits._
     val df = edges.toDF("src", "dst", "w")
     PageRank.run(df, "src", "dst", dampingFactor = d, numIter = iters,
-        tol = tol, weightCol = if (weighted) "w" else "")
+        tol = tol, weightCol = if (weighted) "w" else "").state
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
   }
 
@@ -73,13 +73,13 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("self-loops are legal; tol stops early") {
+    import spark.implicits._
     val edges = Seq((1L, 1L, 1.0), (1L, 2L, 1.0), (2L, 1L, 1.0))
     val got = runOn(edges, iters = 40)
     val want = reference(edges, 0.85, 40)
     got.foreach { case (v, r) => assert(math.abs(r - want(v)) < 1e-12) }
-    runOn(edges, iters = 500, tol = 1e-10)
-    assert(PageRank.lastIterations < 200,
-      s"tol did not stop early: ${PageRank.lastIterations}")
+    val rounds = PageRank.run(edges.toDF("src", "dst", "w"), numIter = 500, tol = 1e-10).rounds
+    assert(rounds < 200, s"tol did not stop early: $rounds")
   }
 
   test("caller unpersist releases the rank cache; nothing else leaks per run") {
@@ -88,7 +88,7 @@ class PageRankSpec extends SparkSpec {
     spark.sharedState.cacheManager.clearCache()
     // numIter = 5: the final round is a persist round -> the result's
     // same-order rename projection sameResult-matches the cache entry
-    val out = PageRank.run(edges, numIter = 5, idOut = "vertex", rankOut = "score")
+    val out = PageRank.run(edges, numIter = 5, idOut = "vertex", rankOut = "score").state
     assert(out.columns.toSeq == Seq("vertex", "score"))
     assert(out.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
       "the returned rename projection must see the final rank cache")
@@ -98,7 +98,7 @@ class PageRankSpec extends SparkSpec {
         "(the r12 ADVICE leak class)")
     // numIter = 4: the final round localCheckpoints instead -> no cache
     // manager entry exists at all, even before the caller unpersists
-    val out4 = PageRank.run(edges, numIter = 4)
+    val out4 = PageRank.run(edges, numIter = 4).state
     assert(out4.count() == 4)
     assert(spark.sharedState.cacheManager.isEmpty,
       "a checkpoint-final run must leave no cache-manager entries behind")
@@ -110,7 +110,7 @@ class PageRankSpec extends SparkSpec {
     val edges = Seq.fill(400)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
       .toDF("src", "dst").repartition(3)
     def ranks(): Map[Long, Double] = {
-      val out = PageRank.run(edges, numIter = 6)
+      val out = PageRank.run(edges, numIter = 6).state
       val got = out.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       out.unpersist()
       got
@@ -126,14 +126,14 @@ class PageRankSpec extends SparkSpec {
   test("guards: bad damping, empty graph, non-positive weight") {
     import spark.implicits._
     intercept[IllegalArgumentException] {
-      PageRank.run(Seq((1L, 2L)).toDF("src", "dst"), dampingFactor = 1.0)
+      PageRank.run(Seq((1L, 2L)).toDF("src", "dst"), dampingFactor = 1.0).state
     }
     intercept[IllegalArgumentException] {
-      PageRank.run(Seq.empty[(Long, Long)].toDF("src", "dst"))
+      PageRank.run(Seq.empty[(Long, Long)].toDF("src", "dst")).state
     }
     val e = intercept[Exception] {
       PageRank.run(Seq((1L, 2L, 0.0)).toDF("src", "dst", "w"),
-        weightCol = "w", numIter = 2).collect()
+        weightCol = "w", numIter = 2).state.collect()
     }
     def causes(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ causes(t.getCause)
@@ -143,7 +143,7 @@ class PageRankSpec extends SparkSpec {
     // the edge inside sum()
     intercept[Exception] {
       PageRank.run(Seq((1L, 2L, "oops")).toDF("src", "dst", "w"),
-        weightCol = "w", numIter = 2).collect()
+        weightCol = "w", numIter = 2).state.collect()
     }
   }
 
@@ -176,7 +176,7 @@ class PageRankSpec extends SparkSpec {
       (10L, 11L), (11L, 12L), (12L, 10L)).map { case (a, b) => (a, b, 1.0) }
     val seeds = Seq(0L).toDF("id")
     val got = PageRank.runPersonalized(edges.toDF("src", "dst", "w"), seeds,
-        numIter = 25)
+        numIter = 25).state
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val want = referencePersonalized(edges, Set(0L), 0.85, 25)
     assert(math.abs(got.values.sum - 1.0) < 1e-9)
@@ -190,7 +190,7 @@ class PageRankSpec extends SparkSpec {
     val edges = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (3L, 1L, 1.0), (1L, 3L, 1.0))
     val classic = runOn(edges, iters = 15)
     val all = Seq(1L, 2L, 3L).toDF("id")
-    val ppr = PageRank.runPersonalized(edges.toDF("src", "dst", "w"), all, numIter = 15)
+    val ppr = PageRank.runPersonalized(edges.toDF("src", "dst", "w"), all, numIter = 15).state
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     classic.foreach { case (v, r) => assert(math.abs(r - ppr(v)) < 1e-12, s"node $v") }
   }
@@ -200,12 +200,12 @@ class PageRankSpec extends SparkSpec {
     val edges = Seq((1L, 2L, 1.0), (2L, 1L, 1.0)).toDF("src", "dst", "w")
     // 30 iterations: the 2-cycle's oscillation has damped by then and
     // the seed holds the larger stationary share (0.54 vs 0.46)
-    val got = PageRank.runPersonalized(edges, Seq(1L, 99L).toDF("id"), numIter = 30)
+    val got = PageRank.runPersonalized(edges, Seq(1L, 99L).toDF("id"), numIter = 30).state
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(math.abs(got.values.sum - 1.0) < 1e-9)
     assert(got(1L) > got(2L)) // 99 ignored, 1 is the only seed
     intercept[IllegalArgumentException] {
-      PageRank.runPersonalized(edges, Seq(99L).toDF("id"), numIter = 5)
+      PageRank.runPersonalized(edges, Seq(99L).toDF("id"), numIter = 5).state
     }
   }
 }

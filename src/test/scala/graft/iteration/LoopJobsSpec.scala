@@ -82,8 +82,13 @@ class LoopJobsSpec extends SparkSpec {
   test("ConnectedComponents star: jobs per call on a fixed 32-vertex chain") {
     import spark.implicits._
     val chain = (100L until 131L).map(i => (i, i + 1)).toDF("src", "dst")
-    val jobs = jobsOf(consume(graft.dedup.ConnectedComponents.run(chain, driverEdgeLimit = 0)))
-    assert(graft.dedup.ConnectedComponents.lastRounds == 6)
+    var rounds = 0
+    val jobs = jobsOf {
+      val cc = graft.dedup.ConnectedComponents.run(chain, driverEdgeLimit = 0)
+      rounds = cc.rounds
+      consume(cc.state)
+    }
+    assert(rounds == 6)
     // setup 2 (canonical-edge exchange, first checkpoint); per round 4
     // (two window exchanges, the distinct's, the checkpoint-and-signature
     // job); the final except check and the stored result 4; the
@@ -94,11 +99,51 @@ class LoopJobsSpec extends SparkSpec {
   test("PageRank: jobs per call on a fixed 5-vertex graph, 3 rounds") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (2L, 5L)).toDF("src", "dst")
-    val jobs = jobsOf(consume(graft.graph.PageRank.run(edges, numIter = 3)))
+    val jobs = jobsOf(consume(graft.graph.PageRank.run(edges, numIter = 3).state))
     // setup 2 (node-table exchange, its store-and-count job); the share
     // table's 3 (two exchanges and its cache) in round 1; per round 4
     // (rank broadcast, contribution exchange and broadcast, the
     // store-and-dangling-mass job); the caller's read 1
     assert(jobs == 2 + 3 + 3 * 4 + 1, s"PageRank launched $jobs jobs")
+  }
+
+  private lazy val graph = {
+    import spark.implicits._
+    Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (2L, 5L), (5L, 6L), (6L, 4L)).toDF("src", "dst")
+  }
+
+  test("LabelPropagation: jobs per call on a fixed 6-vertex graph, 3 rounds") {
+    val jobs = jobsOf(consume(graft.graph.LabelPropagation.run(graph, numIter = 3).state))
+    // setup 2 (node exchange, the label table's store-and-count job); per
+    // round 5 (four exchange and broadcast jobs, the store-and-count-
+    // changed job) plus the edge table's 2 in round 1; the stored result
+    // 1; the caller's read 1 (34 when a separate join and count probed
+    // each round)
+    assert(jobs == 2 + 3 * 5 + 2 + 1 + 1, s"LabelPropagation launched $jobs jobs")
+  }
+
+  test("Hits: jobs per call on a fixed 6-vertex graph, 3 rounds, with and without tol") {
+    val jobs = jobsOf(consume(graft.graph.Hits.run(graph, numIter = 3).state))
+    // setup 2 (node exchange, its store-and-count job); per round two
+    // half-steps of 3 and 4 exchange and broadcast jobs plus one
+    // checkpoint-and-sum job each, and the two edge tables' 4 in round 1;
+    // the result's join exchanges and store 4; the caller's read 1 (50
+    // with a separate checkpoint and sum per half-step)
+    assert(jobs == 2 + 3 * 9 + 4 + 4 + 1, s"Hits launched $jobs jobs")
+    val tolJobs = jobsOf(consume(graft.graph.Hits.run(graph, numIter = 3, tol = 1e-12).state))
+    // plus one hub-delta pass over the stored half-step in each round
+    // but the last (56 with a join and aggregate per check)
+    assert(tolJobs == jobs + 2, s"Hits with tol launched $tolJobs jobs")
+  }
+
+  test("Bfs: jobs per call on a fixed 10-hop chain") {
+    import spark.implicits._
+    val chain = (100L until 110L).map(i => (i, i + 1)).toDF("src", "dst")
+    val jobs = jobsOf(consume(graft.graph.Bfs.run(chain, Seq(100L).toDF("id")).state))
+    // the seed checkpoint 1; per frontier 4 (three exchange jobs, the
+    // checkpoint-and-count job) for the 10 settled and the empty 11th,
+    // plus the edge table's 3 in round 1; the stored result 1; the
+    // caller's read 1 (59 with an emptiness probe per frontier)
+    assert(jobs == 1 + 11 * 4 + 3 + 1 + 1, s"Bfs launched $jobs jobs")
   }
 }

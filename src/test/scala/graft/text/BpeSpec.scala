@@ -260,4 +260,24 @@ class BpeSpec extends SparkSpec {
     assert(loaded.transform(df).head.select("bpe").head().getSeq[String](0) ==
       model.transform(df).head.select("bpe").head().getSeq[String](0))
   }
+
+  test("the distributed rounds read the corpus once") {
+    import org.apache.spark.sql.functions.{col, udf}
+    // every corpus row the fit evaluates is counted: a round whose parent
+    // is freed before the round is stored recomputes from the corpus
+    val rows = spark.sparkContext.longAccumulator("corpus rows")
+    val text = udf { (i: Long) =>
+      rows.add(1)
+      Seq("lowest", "newer", "wider", "lower", "abc" + (i % 13)).mkString(" ")
+    }
+    for (batch <- Seq(1, 8)) {
+      rows.reset()
+      val corpus = spark.range(0, 400, 1, 4).select(text(col("id")).as("text"))
+      val t = new BpeTrainer().setInputCol("text").setOutputCol("bpe")
+        .setNumMerges(12).setBatchSize(batch).setDriverWordLimit(0L)
+      t.fit(corpus)
+      assert(t.lastFitRounds > 1, s"batchSize=$batch")
+      assert(rows.value == 400, s"batchSize=$batch evaluated ${rows.value} corpus rows")
+    }
+  }
 }

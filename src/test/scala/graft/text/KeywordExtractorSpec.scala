@@ -62,7 +62,16 @@ class KeywordExtractorSpec extends SparkSpec {
     val ke = new KeywordExtractor().setInputCol("text")
       .setNumIter(50).setTol(1e-9)
     val out = ke.transform(docs).head.collect()
-    assert(graft.graph.PageRank.lastIterations < 50)
+    // the extractor's graph (adjacent word pairs, both directions) under
+    // the same PageRank call stops early, and the extractor returns it
+    val pairs = docs.select(explode(NgramLm.bigrams(NgramLm.tokens(col("text")))).as("p"))
+    val pr = graft.graph.PageRank.run(pairs.select(col("p.w1").as("src"), col("p.w2").as("dst"))
+        .union(pairs.select(col("p.w2").as("src"), col("p.w1").as("dst"))),
+      numIter = 50, tol = 1e-9, idOut = "word", rankOut = "rank")
+    assert(pr.rounds < 50)
+    assert(out.map(r => r.getString(0) -> r.getDouble(1)).toMap ==
+      pr.state.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
+    pr.state.unpersist()
     assert(math.abs(out.map(_.getDouble(1)).sum - 1.0) < 1e-9)
 
     val dir = tmpDir()

@@ -117,7 +117,7 @@ class LinkGraphExtractorSpec extends SparkSpec {
       ("https://hub.org/", """<a href="https://s1.com/">s</a>"""))
       .toDF("url", "html")
     val ranks = graft.graph.PageRank
-      .run(LinkGraphExtractor.hostEdges(pages), "src_host", "dst_host", 0.85, 30)
+      .run(LinkGraphExtractor.hostEdges(pages), "src_host", "dst_host", 0.85, 30).state
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     // converged fixpoint: hub 0.4797, s1 0.4452, s2 = s3 = teleport 0.0375
     assert(ranks("hub.org") > ranks("s1.com") && ranks("s1.com") > ranks("s2.com"))
