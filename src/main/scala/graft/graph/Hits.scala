@@ -103,67 +103,69 @@ object Hits {
           .otherwise(wd)
       }
 
-    // distinct() already leaves the table hash-partitioned on id — an
-    // explicit repartition(id) on top would be a second identical
-    // exchange of the same O(V) rows. Stored and counted in one job.
-    val (nodes, n) = Loop.materialize(edges.select(col(srcCol).as("id"))
-      .union(edges.select(col(dstCol).as("id")))
-      .distinct(), checkpoint = false, 0L)((c, _) => c + 1, _ + _)
-    if (n == 0) Loop.release(nodes)
-    require(n > 0, "HITS on an empty edge list is undefined")
+    Loop.scoped { stored =>
+      // distinct() already leaves the table hash-partitioned on id — an
+      // explicit repartition(id) on top would be a second identical
+      // exchange of the same O(V) rows. Stored and counted in one job.
+      val (nodes, n) = Loop.materialize(edges.select(col(srcCol).as("id"))
+        .union(edges.select(col(dstCol).as("id")))
+        .distinct(), checkpoint = false, 0L)((c, _) => c + 1, _ + _)
+      stored(nodes)
+      require(n > 0, "HITS on an empty edge list is undefined")
 
-    val agg = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-    val bySrc = agg.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-    // derived from the CACHED src-keyed table, not from agg: the merge
-    // aggregation scans the edge input once instead of twice (bySrc is
-    // always materialized first — the authority half-step runs before
-    // the hub half-step in round 1)
-    val byDst = bySrc.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
+      val agg = edges
+        .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
+        .groupBy("src", "dst").agg(sum("w").as("w"))
+      val bySrc = stored(agg.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK))
+      // derived from the CACHED src-keyed table, not from agg: the merge
+      // aggregation scans the edge input once instead of twice (bySrc is
+      // always materialized first — the authority half-step runs before
+      // the hub half-step in round 1)
+      val byDst = stored(bySrc.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK))
 
-    // Every half-step stores the UNNORMALIZED per-vertex sums of `base`'s
-    // vertices (0 where no mass arrives, base's other columns carried) as
-    // a local checkpoint, and the job that writes it folds their L1
-    // constant; the normalization is a flat projection with the constant
-    // as a literal. Checkpointing per half-step is not optional here: a
-    // two-table iteration chains FOUR InMemoryRelations per round, and
-    // IMR string rendering re-prints its child tree — measured ×16
-    // plan-TEXT growth per round, 300 MB of explain string by round 3
-    // (AQE renders it on every plan update), an OOM on any modest
-    // driver. With the checkpoint the plan is a LogicalRDD scan every
-    // round: flat forever.
-    def halfStep(base: DataFrame, sums: DataFrame): Step = {
-      val (raw, z) = Loop.materialize(base.join(sums, Seq("id"), "left")
-          .select(col("id") +: coalesce(col("s"), lit(0.0)).as("s") +: base.columns.tail.map(col): _*),
-        checkpoint = true, 0.0)((z, r) => z + r.getDouble(1), _ + _)
-      Step(raw, z)
+      // Every half-step stores the UNNORMALIZED per-vertex sums of `base`'s
+      // vertices (0 where no mass arrives, base's other columns carried) as
+      // a local checkpoint, and the job that writes it folds their L1
+      // constant; the normalization is a flat projection with the constant
+      // as a literal. Checkpointing per half-step is not optional here: a
+      // two-table iteration chains FOUR InMemoryRelations per round, and
+      // IMR string rendering re-prints its child tree — measured ×16
+      // plan-TEXT growth per round, 300 MB of explain string by round 3
+      // (AQE renders it on every plan update), an OOM on any modest
+      // driver. With the checkpoint the plan is a LogicalRDD scan every
+      // round: flat forever.
+      def halfStep(base: DataFrame, sums: DataFrame): Step = {
+        val (raw, z) = Loop.materialize(base.join(sums, Seq("id"), "left")
+            .select(col("id") +: coalesce(col("s"), lit(0.0)).as("s") +: base.columns.tail.map(col): _*),
+          checkpoint = true, 0.0)((z, r) => z + r.getDouble(1), _ + _)
+        Step(stored(raw), z)
+      }
+      // h₀ = 1/n: unit sums over the node table, constant n
+      val h0 = Step(nodes.select(col("id"), lit(1.0).as("s")), n.toDouble)
+      // TerminateOnMaxIterOrTol stops at delta ≤ its tol: one ulp below
+      // `tol` makes that delta < tol, the documented rule
+      val result = Loop.iterate((h0, Option.empty[Step]),
+          TerminateOnMaxIterOrTol(numIter, math.nextDown(tol))) { case ((h, a), round) =>
+        // authority step: hub mass flows along edge direction
+        val na = halfStep(nodes, bySrc.join(h.scores("h").withColumnRenamed("id", "src"), "src")
+          .groupBy(col("dst").as("id")).agg(sum(col("w") * col("h")).as("s")))
+        // hub step: authority mass flows AGAINST edge direction; the frame
+        // keeps the hub it replaces (hp) for the tol check
+        val nh = halfStep(h.scores("hp"), byDst.join(na.scores("a").withColumnRenamed("id", "dst"), "dst")
+          .groupBy(col("src").as("id")).agg(sum(col("w") * col("a")).as("s")))
+        if (round > 0) Loop.release(h.raw)
+        a.foreach(s => Loop.release(s.raw))
+        val delta =
+          if (tol > 0.0 && round + 1 < numIter)
+            Some(Loop.fold(nh.raw, 0.0)((d, r) => d + math.abs(r.getDouble(1) / nh.z - r.getDouble(2)),
+              _ + _))
+          else None
+        ((nh, Some(na)), delta)
+      }
+      val (h, Some(a)) = result.state
+      val out = h.scores("h").join(a.scores("a"), "id")
+        .select(col("id").as(idOut), col("h").as(hubOut), col("a").as(authOut))
+      result.copy(state = Loop.keep(out))
     }
-    // h₀ = 1/n: unit sums over the node table, constant n
-    val h0 = Step(nodes.select(col("id"), lit(1.0).as("s")), n.toDouble)
-    // TerminateOnMaxIterOrTol stops at delta ≤ its tol: one ulp below
-    // `tol` makes that delta < tol, the documented rule
-    val result = Loop.iterate((h0, Option.empty[Step]),
-        TerminateOnMaxIterOrTol(numIter, math.nextDown(tol))) { case ((h, a), round) =>
-      // authority step: hub mass flows along edge direction
-      val na = halfStep(nodes, bySrc.join(h.scores("h").withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(sum(col("w") * col("h")).as("s")))
-      // hub step: authority mass flows AGAINST edge direction; the frame
-      // keeps the hub it replaces (hp) for the tol check
-      val nh = halfStep(h.scores("hp"), byDst.join(na.scores("a").withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id")).agg(sum(col("w") * col("a")).as("s")))
-      if (round > 0) Loop.release(h.raw)
-      a.foreach(s => Loop.release(s.raw))
-      val delta =
-        if (tol > 0.0 && round + 1 < numIter)
-          Some(Loop.fold(nh.raw, 0.0)((d, r) => d + math.abs(r.getDouble(1) / nh.z - r.getDouble(2)),
-            _ + _))
-        else None
-      ((nh, Some(na)), delta)
-    }
-    val (h, Some(a)) = result.state
-    val out = h.scores("h").join(a.scores("a"), "id")
-      .select(col("id").as(idOut), col("h").as(hubOut), col("a").as(authOut))
-    result.copy(state = Loop.keep(out, h.raw, a.raw, bySrc, byDst, nodes))
   }
 }

@@ -100,67 +100,69 @@ object LabelPropagation {
               .cast("double"))
           .otherwise(wd)
       }
-    // distinct() already leaves the table hash-partitioned on id — an
-    // explicit repartition(id) on top would be a second identical
-    // exchange of the same O(V) rows. label₀(v) = v, stored and counted
-    // in one job.
-    val (labels0, n) = Loop.materialize(
-      edges.select(col(srcCol).as("id")).union(edges.select(col(dstCol).as("id")))
-        .distinct().withColumn("lab", col("id")),
-      checkpoint = false, 0L)((c, _) => c + 1, _ + _)
-    if (n == 0) Loop.release(labels0)
-    require(n > 0, "LabelPropagation on an empty edge list is undefined")
+    Loop.scoped { stored =>
+      // distinct() already leaves the table hash-partitioned on id — an
+      // explicit repartition(id) on top would be a second identical
+      // exchange of the same O(V) rows. label₀(v) = v, stored and counted
+      // in one job.
+      val (labels0, n) = Loop.materialize(
+        edges.select(col(srcCol).as("id")).union(edges.select(col(dstCol).as("id")))
+          .distinct().withColumn("lab", col("id")),
+        checkpoint = false, 0L)((c, _) => c + 1, _ + _)
+      stored(labels0)
+      require(n > 0, "LabelPropagation on an empty edge list is undefined")
 
-    val raw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
-      .where(col("src") =!= col("dst")) // self-votes would freeze the start state
-    val sym =
-      if (directed) raw
-      else raw.union(raw.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-    // partitioned on src: the per-iteration label join reuses this,
-    // only the O(V) label table shuffles per round
-    val adj = sym.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+      val raw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
+        .where(col("src") =!= col("dst")) // self-votes would freeze the start state
+      val sym =
+        if (directed) raw
+        else raw.union(raw.select(col("dst").as("src"), col("src").as("dst"), col("w")))
+      // partitioned on src: the per-iteration label join reuses this,
+      // only the O(V) label table shuffles per round
+      val adj = stored(sym.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK))
 
-    // argmax with min-label tiebreak. Labels are vertex ids, so for
-    // integral ids ONE aggregation does it: max over (cnt, ~lab) struct
-    // ordering picks the highest count and, on ties, the smallest label
-    // (A/B at 2.5M vertices / 10M edges: the generic two-aggregation path
-    // re-shuffles the vote table per round). Bitwise NOT, not negation:
-    // ~x = -x-1 is a strictly DECREASING bijection over the whole signed
-    // domain, so hash-derived ids at Long.MinValue stay exact where -x
-    // would overflow (silently in non-ANSI mode, an error under ANSI).
-    // Non-integral ids fall back to max-count-then-min-label.
-    val integralLabels = labels0.schema("lab").dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
+      // argmax with min-label tiebreak. Labels are vertex ids, so for
+      // integral ids ONE aggregation does it: max over (cnt, ~lab) struct
+      // ordering picks the highest count and, on ties, the smallest label
+      // (A/B at 2.5M vertices / 10M edges: the generic two-aggregation path
+      // re-shuffles the vote table per round). Bitwise NOT, not negation:
+      // ~x = -x-1 is a strictly DECREASING bijection over the whole signed
+      // domain, so hash-derived ids at Long.MinValue stay exact where -x
+      // would overflow (silently in non-ANSI mode, an error under ANSI).
+      // Non-integral ids fall back to max-count-then-min-label.
+      val integralLabels = labels0.schema("lab").dataType match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      }
+      // the criterion is the round's changed-label count: stop at 0
+      val result = Loop.iterate(labels0, TerminateOnMaxIterOrTol(numIter, 0.0)) { (labels, round) =>
+        // votes: neighbor labels arriving at each dst — edge-weight sums
+        // (multiplicity when unweighted: every edge votes 1.0)
+        val votes = adj.join(labels.select(col("id").as("src"), col("lab")), "src")
+          .groupBy(col("dst").as("id"), col("lab"))
+          .agg(sum("w").as("cnt"))
+        val picked =
+          if (integralLabels)
+            votes.groupBy("id")
+              .agg(max(struct(col("cnt").as("c"), bitwise_not(col("lab")).as("nl"))).as("m"))
+              .select(col("id"), bitwise_not(col("m.nl")).as("newLab"))
+          else {
+            val best = votes.groupBy("id").agg(max("cnt").as("mc"))
+            votes.join(best, "id")
+              .where(col("cnt") === col("mc"))
+              .groupBy("id").agg(min("lab").as("newLab"))
+          }
+        val next = labels.join(picked, Seq("id"), "left")
+          .select(col("id"), coalesce(col("newLab"), col("lab")).as("lab"),
+            coalesce(col("newLab") =!= col("lab"), lit(false)).as("changed"))
+        val (mat, changed) = Loop.materialize(next, checkpoint = (round + 1) % CheckpointEvery == 0,
+          0L)((c, r) => if (r.getBoolean(2)) c + 1 else c, _ + _)
+        stored(mat)
+        Loop.release(labels)
+        (mat, Some(changed.toDouble))
+      }
+      val last = result.state
+      result.copy(state = Loop.keep(last.select(col("id").as(idOut), col("lab").as(labelOut))))
     }
-    // the criterion is the round's changed-label count: stop at 0
-    val result = Loop.iterate(labels0, TerminateOnMaxIterOrTol(numIter, 0.0)) { (labels, round) =>
-      // votes: neighbor labels arriving at each dst — edge-weight sums
-      // (multiplicity when unweighted: every edge votes 1.0)
-      val votes = adj.join(labels.select(col("id").as("src"), col("lab")), "src")
-        .groupBy(col("dst").as("id"), col("lab"))
-        .agg(sum("w").as("cnt"))
-      val picked =
-        if (integralLabels)
-          votes.groupBy("id")
-            .agg(max(struct(col("cnt").as("c"), bitwise_not(col("lab")).as("nl"))).as("m"))
-            .select(col("id"), bitwise_not(col("m.nl")).as("newLab"))
-        else {
-          val best = votes.groupBy("id").agg(max("cnt").as("mc"))
-          votes.join(best, "id")
-            .where(col("cnt") === col("mc"))
-            .groupBy("id").agg(min("lab").as("newLab"))
-        }
-      val next = labels.join(picked, Seq("id"), "left")
-        .select(col("id"), coalesce(col("newLab"), col("lab")).as("lab"),
-          coalesce(col("newLab") =!= col("lab"), lit(false)).as("changed"))
-      val (mat, changed) = Loop.materialize(next, checkpoint = (round + 1) % CheckpointEvery == 0,
-        0L)((c, r) => if (r.getBoolean(2)) c + 1 else c, _ + _)
-      Loop.release(labels)
-      (mat, Some(changed.toDouble))
-    }
-    val last = result.state
-    result.copy(state = Loop.keep(last.select(col("id").as(idOut), col("lab").as(labelOut)),
-      last, adj))
   }
 }

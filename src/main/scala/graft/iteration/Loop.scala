@@ -71,7 +71,8 @@ object LoopResult {
  * computes what the driver must know about it (a convergence count, a
  * signature, the next round's scalar). [[materialize]] is that job;
  * [[release]] frees what it stored, and [[keep]] stores the frame a loop
- * returns before releasing the loop's own. ConnectedComponents,
+ * returns before releasing the loop's own; [[scoped]] releases what a
+ * call stored when the call ends, returned or thrown. ConnectedComponents,
  * PageRank, LabelPropagation, Hits, Bfs and [[iterateDataFrame]] are
  * built on them.
  */
@@ -164,7 +165,10 @@ object Loop {
     val kept =
       if (checkpoint) df.localCheckpoint(eager = false)
       else df.persist(StorageLevel.MEMORY_AND_DISK)
-    (kept, fold(kept, zero)(seqOp, combOp))
+    // when the job throws (a raise_error in the frame), the caller never
+    // receives the frame, so it is released here
+    try (kept, fold(kept, zero)(seqOp, combOp))
+    catch { case e: Throwable => release(kept); throw e }
   }
 
   /** Fold the rows of a frame [[materialize]] stored, in ONE job, in
@@ -208,6 +212,26 @@ object Loop {
   def release(df: DataFrame): Unit = df.queryExecution.logical match {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false)
     case _ => df.unpersist(blocking = false)
+  }
+
+  /** The frames one operator call stores, registered as it stores them;
+    * [[scoped]] releases them all when the call ends. */
+  final class Stored private[Loop] {
+    private[Loop] val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    /** Register `df` (a frame [[materialize]] stored, or a cache the call
+      * made) and return it. */
+    def apply(df: DataFrame): DataFrame = { frames += df; df }
+  }
+
+  /** Run one operator call, then [[release]] every frame it registered
+    * with `stored`, whether the call returns or throws: a failing round
+    * job or a rejected parameter leaves no cache entry or checkpoint
+    * behind. Releasing a frame the call already released is a no-op, so
+    * a loop registers every round's frame and still frees each as soon as
+    * it is superseded. The frame the call returns must not be registered. */
+  def scoped[A](body: Stored => A): A = {
+    val stored = new Stored
+    try body(stored) finally stored.frames.foreach(release)
   }
 
   /** Store `out`, the frame a loop call returns (one job), then [[release]]

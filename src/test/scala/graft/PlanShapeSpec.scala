@@ -85,13 +85,15 @@ class PlanShapeSpec extends SparkSpec {
     import spark.implicits._
     val rows = (0L until 30L).flatMap(u => Seq((u, 99L), (u, 100L + u % 5)))
     // Swing local-checkpoints its output, so the returned frame's plan is
-    // a scan of the checkpoint: the plan under test is the one the
-    // localCheckpoint action executed
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // a scan of the checkpoint: the plans under test are the ones the
+    // localCheckpoint action and the store jobs (`Loop.materialize`)
+    // executed. The hot-set join runs in the store job of the capped
+    // purchaser table.
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
           durationNs: Long): Unit =
-        if (funcName == "localCheckpoint") plans.add(qe.executedPlan.toString)
+        plans.add(funcName -> qe.executedPlan.toString)
       def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
@@ -102,10 +104,19 @@ class PlanShapeSpec extends SparkSpec {
         .transform(rows.toDF("user", "item")).head
       org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
-    assert(plans.size == 1, s"expected one localCheckpoint plan, got ${plans.size}")
-    val plan = plans.peek()
+    import scala.jdk.CollectionConverters._
+    val byName = plans.asScala.toSeq
+    val checkpointPlans = byName.collect { case ("localCheckpoint", p) => p }
+    assert(checkpointPlans.size == 1, s"expected one localCheckpoint plan, got ${checkpointPlans.size}")
+    val plan = checkpointPlans.head
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
+    // the over-cap item set is the build side of a left-outer broadcast
+    // join (the per-user item arrays broadcast into inner joins only)
+    val stores = byName.collect { case ("materialize", p) => p }
+    assert(stores.exists(_.linesIterator.exists(l =>
+        l.contains("BroadcastHashJoin") && l.contains("LeftOuter, BuildRight"))),
+      stores.mkString("\n----\n"))
   }
 
   private def countExchanges(plan: String): Int =

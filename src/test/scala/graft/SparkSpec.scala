@@ -30,4 +30,15 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
   def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft-test").toString
+
+  /** What `body` leaves registered: the ids of persistent RDDs it added,
+    * and whether the cache manager holds an entry (the session's cache is
+    * cleared before `body` runs). */
+  def residueOf(body: => Unit): (Set[Int], Boolean) = {
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    body
+    (sc.getPersistentRDDs.keySet.toSet -- before, !spark.sharedState.cacheManager.isEmpty)
+  }
 }

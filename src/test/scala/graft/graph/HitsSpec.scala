@@ -88,10 +88,14 @@ class HitsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Hits.run(Seq.empty[(Long, Long)].toDF("src", "dst"), numIter = 1).state
     }
-    intercept[Exception] {
-      Hits.run(Seq((1L, 2L, 0.0)).toDF("src", "dst", "w"),
-        weightCol = "w", numIter = 1).state.collect()
+    // the first half-step's job raises: the call must release what it stored
+    val residue = residueOf {
+      intercept[Exception] {
+        Hits.run(Seq((1L, 2L, 0.0)).toDF("src", "dst", "w"),
+          weightCol = "w", numIter = 1).state.collect()
+      }
     }
+    assert(residue == (Set.empty, false), s"a failing run left (RDDs, cache entry) $residue")
     // a string weight that doesn't parse must RAISE, not cast to null
     // and silently drop the edge inside sum()
     intercept[Exception] {

@@ -87,10 +87,15 @@ class LabelPropagationSpec extends SparkSpec {
     assert(weighted(2L) == 1L)
     val unweighted = labelsOf(LabelPropagation.run(edges, numIter = 1, directed = true).state)
     assert(unweighted(2L) == 0L)
-    val e = intercept[Exception] {
-      LabelPropagation.run(Seq((0L, 1L, 0.0)).toDF("src", "dst", "w"),
-        numIter = 1, weightCol = "w").state.collect()
+    var e: Exception = null
+    // the first round's job raises: the call must release what it stored
+    val residue = residueOf {
+      e = intercept[Exception] {
+        LabelPropagation.run(Seq((0L, 1L, 0.0)).toDF("src", "dst", "w"),
+          numIter = 1, weightCol = "w").state.collect()
+      }
     }
+    assert(residue == (Set.empty, false), s"a failing run left (RDDs, cache entry) $residue")
     def causes(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ causes(t.getCause)
     assert(causes(e).exists(_.contains("non-positive")), causes(e).mkString(" | "))

@@ -146,4 +146,38 @@ class LoopJobsSpec extends SparkSpec {
     // caller's read 1 (59 with an emptiness probe per frontier)
     assert(jobs == 1 + 11 * 4 + 3 + 1 + 1, s"Bfs launched $jobs jobs")
   }
+
+  private def swingJobs(df: DataFrame, minUserBehavior: Int, cap: Int): Int = jobsOf {
+    val out = new graft.recommendation.Swing().setMinUserBehavior(minUserBehavior)
+      .setMaxUserBehavior(10).setMaxUserNumPerItem(cap).setK(200).transform(df).head
+    out.write.format("noop").mode("overwrite").save()
+    Loop.release(out)
+  }
+
+  test("Swing: jobs per call when the cap binds (arrays path)") {
+    // 30 users buy item 0, all qualify, cap 5
+    val jobs = swingJobs(graft.recommendation.SwingSpec.bindingCap(spark), 2, 5)
+    // the qualified table 3 (the distinct's exchange, the per-user
+    // window's, the store-and-fold job); the hot-item probe 2 (per-item
+    // count exchange, the limited collect); the capped pair table 6 (two
+    // hot-set broadcasts, the two rank windows' and the de-singling
+    // window's exchanges, the store job); the scoring plan 7 (the anchor
+    // self-join's broadcast, the pair exchange, both item-array
+    // broadcasts, the score and rank exchanges, the checkpoint); the
+    // caller's read 1 (35 when the probe and the broadcast gate each
+    // re-read the behavior table and the plan rebuilt the cap per side)
+    assert(jobs == 3 + 2 + 6 + 7 + 1, s"Swing launched $jobs jobs")
+  }
+
+  test("Swing: jobs per call when an item is over the cap only through unqualified users") {
+    // item 0 has 30 purchasers, 6 of them qualified, cap 8: the cap is idle
+    val jobs = swingJobs(graft.recommendation.SwingSpec.qualifiedUnderCap(spark), 3, 8)
+    // the qualified table 3; the hot-item probe 2, which finds no hot
+    // item, so the flat path runs; the pair table 2 (the de-singling
+    // window's exchange, the store job); the scoring plan 6 (three
+    // broadcasts of the item and pair self-joins, the pair and score
+    // exchanges, the checkpoint); the caller's read 1 (35 when raw
+    // purchaser counts sent this input down the capped arrays path)
+    assert(jobs == 3 + 2 + 2 + 6 + 1, s"Swing launched $jobs jobs")
+  }
 }

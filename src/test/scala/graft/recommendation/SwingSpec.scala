@@ -80,14 +80,10 @@ class SwingSpec extends SparkSpec {
   }
 
   test("flat and arrays pair strategies score identically under a binding cap") {
-    import spark.implicits._
     // skewed catalog: every user buys hot item 0 plus 3 tail items,
     // cap=5 binds on item 0 — both strategies share the same
     // deterministic hash-ranked capped purchaser set
-    val rows = (0L until 30L).flatMap { u =>
-      Seq((u, 0L)) ++ (1L to 3L).map(j => (u, 1L + (u * 3 + j) % 15L))
-    }
-    val df = rows.toDF("user", "item")
+    val df = SwingSpec.bindingCap(spark)
     def run(strategy: String) = parseScores(
       new Swing().setMinUserBehavior(2).setMaxUserBehavior(10)
         .setMaxUserNumPerItem(5).setK(200).setPairStrategy(strategy)
@@ -130,8 +126,65 @@ class SwingSpec extends SparkSpec {
     val s = new Swing().setMinUserBehavior(1).setMaxUserBehavior(100)
       .setMaxUserNumPerItem(1)
     s.hotItemsGuard = 5
-    val ex = intercept[IllegalArgumentException] { s.transform(df) }
+    var ex: IllegalArgumentException = null
+    // the probe runs after the qualified table is stored: the failing
+    // call must release it
+    val residue = residueOf { ex = intercept[IllegalArgumentException] { s.transform(df) } }
     assert(ex.getMessage.contains("degenerate"), ex.getMessage)
     assert(ex.getMessage.contains("maxUserNumPerItem"), ex.getMessage)
+    assert(residue == (Set.empty, false), s"a failing call left (RDDs, cache entry) $residue")
+  }
+
+  test("a null user fails the call and leaves nothing stored") {
+    import spark.implicits._
+    // repartitioned so the null check runs in the store job, not while
+    // the optimizer folds a local relation
+    val df = Seq((Some(1L), 10L), (None, 11L)).toDF("user", "item").repartition(2)
+    val residue = residueOf {
+      val e = intercept[Exception] { new Swing().setMinUserBehavior(1).transform(df) }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("must not be null")), e)
+    }
+    assert(residue == (Set.empty, false), s"a failing call left (RDDs, cache entry) $residue")
+  }
+
+  test("an item over the cap only through unqualified users keeps every qualified purchaser") {
+    // item 0 has 30 purchasers but only users 0..5 buy the 3 items that
+    // minUserBehavior=3 asks for: 6 qualified purchasers, under the cap
+    // of 8, so no purchaser is capped out and auto takes the flat path
+    val df = SwingSpec.qualifiedUnderCap(spark)
+    def run(strategy: String, cap: Int) = parseScores(
+      new Swing().setMinUserBehavior(3).setMaxUserBehavior(10)
+        .setMaxUserNumPerItem(cap).setK(200).setPairStrategy(strategy)
+        .transform(df).head)
+    val auto = run("auto", 8)
+    val arr = run("arrays", 8)
+    // the same scores with a cap no item reaches: nobody was capped out
+    val uncapped = run("arrays", 1000)
+    assert(auto.keys.exists(_._1 == 0L), "item 0 must have neighbours")
+    for (other <- Seq(arr, uncapped)) {
+      assert(auto.keySet == other.keySet)
+      auto.foreach { case (k, v) => assert(math.abs(v - other(k)) <= 1e-9, s"$k: $v vs ${other(k)}") }
+    }
+  }
+}
+
+object SwingSpec {
+  /** 30 users buy item 0; users 0..5 also buy 3 of the items 1..8, so
+    * only they have 3 or more items. */
+  def qualifiedUnderCap(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    ((0L until 30L).map(u => (u, 0L)) ++
+      (0L until 6L).flatMap(u => (0L until 3L).map(j => (u, 1L + (u * 2 + j) % 8L))))
+      .toDF("user", "item")
+  }
+
+  /** 30 users buy hot item 0 plus 3 tail items: with min 2, max 10 every
+    * user qualifies, so a cap of 5 binds on item 0. */
+  def bindingCap(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    (0L until 30L).flatMap { u =>
+      Seq((u, 0L)) ++ (1L to 3L).map(j => (u, 1L + (u * 3 + j) % 15L))
+    }.toDF("user", "item")
   }
 }
