@@ -113,7 +113,7 @@ object DocGen {
         "the share table shuffles once, each iteration moves only the O(V) rank table.",
       Seq(
         "run(edges, srcCol, dstCol, dampingFactor, numIter, tol, weightCol, idOut, rankOut)" ->
-          "Classic PageRank: returns a LoopResult — state (idOut, rankOut), rounds, and the L1 deltas when tol > 0 in history. weightCol=\"\" = unweighted (parallel edges count); tol > 0 adds an L1 early stop. Result is persisted — call result.unpersist() once consumed; rename via idOut/rankOut, not .select.",
+          "Classic PageRank: returns a LoopResult — state (idOut, rankOut), rounds, and the L1 deltas when tol > 0 in history. weightCol=\"\" = unweighted (parallel edges count); tol > 0 adds an L1 early stop. Result is stored like every graph operator's: after result.unpersist() nothing of the call remains, and a failing call leaves nothing stored; rename via idOut/rankOut, not .select.",
         "runPersonalized(edges, seeds, srcCol, dstCol, seedCol, dampingFactor, numIter, tol, weightCol, idOut, rankOut)" ->
           "Personalized PageRank (Haveliwala 2002): teleport concentrates on the seed set; dangling mass returns to the seeds so ranks still sum to 1. Seeds absent from the graph are ignored (at least one must be present).")),
     ("graft.graph.Hits",
@@ -123,7 +123,7 @@ object DocGen {
         "never re-partitioned — per-round exchanges are reduced to O(V) by partial aggregation.",
       Seq(
         "run(edges, srcCol, dstCol, numIter, tol, weightCol, idOut, hubOut, authOut)" ->
-          "Returns a LoopResult — state (idOut, hubOut, authOut), one row per vertex; rounds; the hub L1 deltas when tol > 0 in history. weightCol=\"\" = unweighted (parallel edges accumulate); tol > 0 adds an L1 early stop on the hub vector (same contract as PageRank); vertices without in-edges get authority 0, without out-edges hub 0; self-loops legal. Result is persisted — call result.unpersist() once consumed; nothing else of the call remains.")),
+          "Returns a LoopResult — state (idOut, hubOut, authOut), one row per vertex; rounds; the hub L1 deltas when tol > 0 in history. weightCol=\"\" = unweighted (parallel edges accumulate); tol > 0 adds an L1 early stop on the hub vector (same contract as PageRank); vertices without in-edges get authority 0, without out-edges hub 0; self-loops legal. Result is stored — after result.unpersist() nothing of the call remains, and a failing call leaves nothing stored.")),
     ("graft.graph.Bfs",
       "Multi-source BFS hop distances over an unweighted edge list — crawl depth from a " +
         "seed whitelist, or distance-from-gold on any entity graph; the edge table is " +
@@ -131,7 +131,7 @@ object DocGen {
         "is O(E) across the whole run.",
       Seq(
         "run(edges, seeds, srcCol, dstCol, seedCol, maxIter, undirected, idOut, distOut)" ->
-          "Returns a LoopResult — state: one row per REACHED vertex (idOut, distOut), persisted; rounds = non-empty frontiers, their sizes in history. d(seed) = 0, integer minimum-hop distances (exactly SQL-replayable). Directed by default, undirected=true symmetrizes up front; unreached vertices emit no row; early-stops when the frontier empties.")),
+          "Returns a LoopResult — state: one row per REACHED vertex (idOut, distOut), persisted; rounds = non-empty frontiers, their sizes in history. d(seed) = 0, integer minimum-hop distances (exactly SQL-replayable). Directed by default, undirected=true symmetrizes up front; unreached vertices emit no row; early-stops when the frontier empties. After result.unpersist(), or a failing call, nothing of the call remains.")),
     ("graft.graph.LabelPropagation",
       "Synchronous label propagation (Raghavan et al. 2007) community detection: " +
         "deterministic, exactly replayable — argmax votes with min-label ties, " +
@@ -144,8 +144,8 @@ object DocGen {
         "a min-label variant for small-diameter graphs) — the closure step under every " +
         "transitive-dedup operator in the engine.",
       Seq(
-        "run(edges, srcCol, dstCol, idOut, componentOut, maxIter)" ->
-          "Returns a LoopResult — state (idOut, componentOut), persisted, with each vertex mapped to its component's minimum id. Star contraction: rounds of large/small-star operations, converging in O(log n) rounds on any diameter.")),
+        "run(edges, srcCol, dstCol, maxIter, driverEdgeLimit, algorithm)" ->
+          "Returns a LoopResult — state (id, component), each vertex mapped to its component's minimum id; stored, and after result.unpersist(), or a failing call, nothing else of the call remains. algorithm=\"star\" (default): large/small-star rounds, O(log n) on any diameter; history holds the edge count of every round that moved and 0 for the round confirming the fixpoint. algorithm=\"minlabel\": O(diameter) rounds; history holds each round's changed-label count. Edge lists up to driverEdgeLimit run union-find on the driver (0 rounds). Throws IllegalStateException if not converged within maxIter.")),
     ("graft.dedup.HammingJoin",
       "Banded near-duplicate machinery over 64-bit perceptual/SimHash fingerprints: " +
         "band-bucket equi-joins (never all pairs) with the exact bit_count filter inside " +

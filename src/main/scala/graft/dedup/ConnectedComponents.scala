@@ -1,9 +1,13 @@
 package graft.dedup
 
-import graft.iteration.{Loop, LoopResult}
-import org.apache.spark.sql.DataFrame
+import scala.annotation.tailrec
+import scala.jdk.CollectionConverters._
+
+import graft.iteration.{Loop, LoopResult, TerminateOnMaxIterOrTol}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -34,12 +38,15 @@ import org.apache.spark.storage.StorageLevel
  * similarity join is orders of magnitude smaller than the corpus
  * (only colliding pairs under the distance threshold). Lineage is
  * truncated with a local checkpoint every round (star) or every fifth
- * (minlabel) so the plan does not grow with iterations. Every round is
- * stored by [[graft.iteration.Loop.materialize]], whose one job also
- * returns what the driver needs to decide convergence, and released
- * once the next round is stored; the returned frame is stored before
- * the last round is released, so after the caller's `unpersist` no
- * cache or checkpoint of the call remains.
+ * (minlabel) so the plan does not grow with iterations. Both loops run
+ * on [[graft.iteration.Loop.iterate]] under
+ * [[graft.iteration.Loop.scoped]]: every round is stored by
+ * [[graft.iteration.Loop.materialize]], whose one job also returns what
+ * the driver needs to decide convergence, and released once the next
+ * round is stored; the returned frame is stored by
+ * [[graft.iteration.Loop.keep]], so after the caller's `unpersist`, or
+ * after a call that throws, no cache or checkpoint of the call remains.
+ * Executor loss: see [[graft.iteration.Loop]].
  */
 object ConnectedComponents {
 
@@ -61,12 +68,15 @@ object ConnectedComponents {
    * @return in `state`, the frame (id, component) — one row per vertex
    *         that appears in `edges`; `component` is the minimum vertex
    *         id reachable from `id` (a canonical cluster representative).
-   *         It is returned persisted (MEMORY_AND_DISK); callers may
+   *         The distributed paths return it persisted (MEMORY_AND_DISK),
+   *         the driver path as a local relation; callers may
    *         `unpersist()` it once consumed. `rounds` counts
    *         large-star+small-star passes (`star`) or label passes
    *         (`minlabel`), 0 on the driver path; `history` holds each
-   *         round's edge count (`star`) or changed-label count
-   *         (`minlabel`).
+   *         round's changed-label count (`minlabel`) or, for `star`,
+   *         the edge count of every round that moved the edge set and 0
+   *         for the last round, which confirms the fixpoint; either way
+   *         a converged call's history ends in 0.
    * @throws IllegalStateException if labels have not converged within
    *         `maxIter` rounds (labels spread one hop per round, so
    *         graphs with diameter > maxIter need a higher setting) —
@@ -88,64 +98,57 @@ object ConnectedComponents {
     // (into the first localCheckpoint), so persisting and counting it
     // there was a wasted cache build plus a wasted O(E) job per call.
     val checkDriver = driverEdgeLimit > 0
-    val sym =
-      if (checkDriver || algorithm == "minlabel")
-        symRaw.persist(StorageLevel.MEMORY_AND_DISK)
-      else symRaw
-    if (checkDriver) {
-      val edgeCount = sym.count()
-      if (edgeCount <= driverEdgeLimit) {
-        val out = runOnDriver(sym, edges.schema(edges.columns.indexOf(srcCol)).dataType)
-        sym.unpersist(blocking = false)
-        return LoopResult(out, 0, Array.empty)
-      }
+    val persisted = checkDriver || algorithm == "minlabel"
+    Loop.scoped { stored =>
+      // only a frame this call persisted is registered: releasing the
+      // unpersisted symRaw would drop a caller's sameResult-equal cache
+      val sym = if (persisted) stored(symRaw.persist(StorageLevel.MEMORY_AND_DISK)) else symRaw
+      if (checkDriver && sym.count() <= driverEdgeLimit)
+        LoopResult(runOnDriver(sym, edges.schema(edges.columns.indexOf(srcCol)).dataType), 0,
+          Array.empty[Double])
+      else if (algorithm == "star") runStar(sym, persisted, maxIter, stored)
+      else runMinLabel(sym, maxIter, stored)
     }
-    if (algorithm == "star") return runStar(sym, maxIter)
+  }
 
+  /** Min-label propagation: every round each vertex takes the minimum
+    * label of itself and its neighbors; the criterion is the round's
+    * changed-label count, and the loop stops at 0. */
+  private def runMinLabel(sym: DataFrame, maxIter: Int, stored: Loop.Stored): LoopResult[DataFrame] = {
     // edge table persisted HASH-PARTITIONED ON v, the per-round join
     // key (the PageRank/LabelPropagation discipline): each round then
     // joins the O(V) label table against it without re-exchanging the
     // O(E) edges — one setup exchange instead of one per round
-    val adj = sym.repartition(col("v")).persist(StorageLevel.MEMORY_AND_DISK)
-
-    var labels = sym.select(col("u").as("id")).distinct()
+    val adj = stored(sym.repartition(col("v")).persist(StorageLevel.MEMORY_AND_DISK))
+    val labels0 = stored(sym.select(col("u").as("id")).distinct()
       .withColumn("component", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK))
 
-    val history = Array.newBuilder[Double]
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    val result = Loop.iterate(labels0, TerminateOnMaxIterOrTol(maxIter, 0.0)) { (labels, round) =>
       // min neighbor label per vertex (partial aggregation map-side)
       val nbrMin = adj.join(labels.select(col("id").as("v"), col("component")), "v")
         .groupBy(col("u").as("id")).agg(min("component").as("nbrMin"))
       // the round's frame carries its own `changed` flag, and the job
       // that stores it also counts the flags: one job per round decides
-      // convergence. `labels` always holds the stored frame itself:
-      // unpersisting a projection of it would match no cache entry and
+      // convergence. The state is always the stored frame itself:
+      // releasing a projection of it would match no cache entry and
       // leak one O(V) cache per round.
       val next = labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("nbrMin"), col("component"))).as("component"),
           coalesce(col("nbrMin") < col("component"), lit(false)).as("changed"))
-      val (mat, changed) = Loop.materialize(next, checkpoint = (iter + 1) % 5 == 0, 0L)(
+      val (mat, changed) = Loop.materialize(next, checkpoint = (round + 1) % 5 == 0, 0L)(
         (n, r) => if (r.getBoolean(2)) n + 1 else n, _ + _)
-      converged = changed == 0L
-      history += changed.toDouble
+      stored(mat)
       Loop.release(labels)
-      labels = mat
-      iter += 1
+      (mat, Some(changed.toDouble))
     }
-    adj.unpersist()
-    sym.unpersist()
-    if (!converged) {
-      Loop.release(labels)
+    if (!result.history.lastOption.contains(0.0))
       throw new IllegalStateException(
         s"ConnectedComponents did not converge within $maxIter rounds — component labels " +
           "would be partial (members of one cluster keeping different canonical ids). " +
           "Raise maxIter past the graph diameter.")
-    }
-    LoopResult(Loop.keep(labels.select("id", "component"), labels), iter, history.result())
+    result.copy(state = Loop.keep(result.state.select("id", "component")))
   }
 
   /**
@@ -178,13 +181,9 @@ object ConnectedComponents {
    * check runs once, at the true final round. A round's checkpoint is
    * released once the next one is written and checked; the last one is
    * released once the returned (id, component) frame is stored.
-   *
-   * Executor loss: the released checkpoints held the only copy of the
-   * rounds, so losing an executor fails the running call, or a later
-   * read of the returned frame that needs a lost cache block rebuilt —
-   * rerun the call. The minlabel loop behaves the same.
    */
-  private def runStar(sym: DataFrame, maxIter: Int): LoopResult[DataFrame] = {
+  private def runStar(sym: DataFrame, symStored: Boolean, maxIter: Int,
+      stored: Loop.Stored): LoopResult[DataFrame] = {
     val byU = Window.partitionBy("u")
     def largeStar(e: DataFrame): DataFrame =
       e.union(e.select(col("v").as("u"), col("u").as("v")))
@@ -196,38 +195,36 @@ object ConnectedComponents {
       e.withColumn("m", min("v").over(byU))
         .select(when(col("v") === col("m"), col("u")).otherwise(col("v")).as("u"),
           col("m").as("v"))
-    def checkpointed(e: DataFrame): (DataFrame, (Long, Long)) =
-      Loop.materialize(e, checkpoint = true, (0L, 0L))(
+    def checkpointed(e: DataFrame): (DataFrame, (Long, Long)) = {
+      val (kept, sig) = Loop.materialize(e, checkpoint = true, (0L, 0L))(
         (s, r) => (s._1 + 1, s._2 ^ edgeHash(r.get(0), r.get(1))),
         (a, b) => (a._1 + b._1, a._2 ^ b._2))
-
-    var (edges, sig) = checkpointed(sym.where(col("u") > col("v")).select("u", "v"))
-    sym.unpersist(blocking = false)
-
-    val history = Array.newBuilder[Double]
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val (next, nextSig) = checkpointed(smallStar(largeStar(edges)).distinct())
-      converged = nextSig == sig && next.except(edges).isEmpty
-      history += nextSig._1.toDouble
-      Loop.release(edges)
-      edges = next
-      sig = nextSig
-      iter += 1
+      (stored(kept), sig)
     }
-    if (!converged) {
-      Loop.release(edges)
+
+    val first = checkpointed(sym.where(col("u") > col("v")).select("u", "v"))
+    if (symStored) Loop.release(sym)
+
+    // the criterion is the round's edge count while the edge set moves,
+    // and 0 for the round that confirms the fixpoint, which stops the loop
+    val result = Loop.iterate(first, TerminateOnMaxIterOrTol(maxIter, 0.0)) {
+      case ((edges, sig), _) =>
+        val (next, nextSig) = checkpointed(smallStar(largeStar(edges)).distinct())
+        val fixpoint = nextSig == sig && next.except(edges).isEmpty
+        Loop.release(edges)
+        ((next, nextSig), Some(if (fixpoint) 0.0 else nextSig._1.toDouble))
+    }
+    if (!result.history.lastOption.contains(0.0))
       throw new IllegalStateException(
         s"ConnectedComponents(star) did not converge within $maxIter rounds — " +
           "component labels would be partial. Raise maxIter (rounds grow with " +
           "log of the largest component, so this indicates a pathological input).")
-    }
     // the fixpoint is a star forest: one (member, center) row per member
     // (already a set), plus one (center, center) row per center
+    val (edges, _) = result.state
     val out = Loop.keep(edges.select(col("u").as("id"), col("v").as("component"))
-      .union(edges.select(col("v").as("id"), col("v").as("component")).distinct()), edges)
-    LoopResult(out, iter, history.result())
+      .union(edges.select(col("v").as("id"), col("v").as("component")).distinct()))
+    LoopResult(out, result.rounds, result.history)
   }
 
   /** 64-bit hash of an edge for the set signature (splitmix64 finalizer
@@ -242,49 +239,30 @@ object ConnectedComponents {
 
   /** Union-find over a collected edge list; component = min member
     * (vertex values are boxed JVM types, all Comparable). */
-  private def runOnDriver(sym: DataFrame,
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val pairs = sym.collect().map(r => (r.get(0), r.get(1)))
+  private def runOnDriver(sym: DataFrame, idType: DataType): DataFrame = {
     val parent = new java.util.HashMap[Any, Any]()
-    def find(x: Any): Any = {
-      var root = x
-      while (parent.getOrDefault(root, root) != root) root = parent.get(root)
-      // path compression
-      var cur = x
-      while (parent.getOrDefault(cur, cur) != root) {
-        val next = parent.get(cur); parent.put(cur, root); cur = next
-      }
-      root
+    @tailrec def root(x: Any): Any = {
+      val p = parent.getOrDefault(x, x)
+      if (p == x) x else root(p)
     }
-    pairs.foreach { case (u, v) =>
+    // path compression: every vertex on the way points at the root
+    @tailrec def compress(x: Any, r: Any): Unit = {
+      val p = parent.getOrDefault(x, x)
+      if (p != r) { parent.put(x, r); compress(p, r) }
+    }
+    def find(x: Any): Any = { val r = root(x); compress(x, r); r }
+    sym.collect().foreach { e =>
+      val (u, v) = (e.get(0), e.get(1))
       parent.putIfAbsent(u, u); parent.putIfAbsent(v, v)
       val (ru, rv) = (find(u), find(v))
       if (ru != rv) parent.put(ru, rv)
     }
-    val members = new java.util.HashMap[Any, java.util.ArrayList[Any]]()
-    val it = parent.keySet().iterator()
-    while (it.hasNext) {
-      val v = it.next()
-      members.computeIfAbsent(find(v), _ => new java.util.ArrayList[Any]()).add(v)
+    val byValue = Ordering.fromLessThan[Any](_.asInstanceOf[Comparable[Any]].compareTo(_) < 0)
+    val rows = parent.keySet.asScala.toSeq.groupBy(find).values.flatMap { group =>
+      val min = group.min(byValue)
+      group.map(Row(_, min))
     }
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    val mit = members.values().iterator()
-    while (mit.hasNext) {
-      val group = mit.next()
-      var min: Any = group.get(0)
-      var i = 1
-      while (i < group.size()) {
-        if (min.asInstanceOf[Comparable[Any]].compareTo(group.get(i)) > 0) min = group.get(i)
-        i += 1
-      }
-      i = 0
-      while (i < group.size()) {
-        rows.add(org.apache.spark.sql.Row(group.get(i), min)); i += 1
-      }
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", idType),
-      org.apache.spark.sql.types.StructField("component", idType)))
-    sym.sparkSession.createDataFrame(rows, schema)
+    val schema = StructType(Seq(StructField("id", idType), StructField("component", idType)))
+    sym.sparkSession.createDataFrame(rows.toSeq.asJava, schema)
   }
 }

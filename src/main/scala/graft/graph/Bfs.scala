@@ -48,10 +48,11 @@ import org.apache.spark.storage.StorageLevel
  * per-round rewrite). Early-stops the round the frontier empties (that
  * empty frontier is released at once, and not counted as a round).
  *
- * Cache-release contract: the (idOut, distOut) frame is stored before
- * the legs and the edge table are released, so after the caller's
- * `unpersist()` nothing of the call remains.
- * Executor loss: rerun the call, as for [[graft.dedup.ConnectedComponents]].
+ * Cache-release contract: the call runs under
+ * [[graft.iteration.Loop.scoped]] and its (idOut, distOut) frame is
+ * stored before the legs and the edge table are released, so after the
+ * caller's `unpersist()`, or after a call that throws, nothing of the
+ * call remains. Executor loss: see [[graft.iteration.Loop]].
  *
  * Exactly SQL-replayable: distances are INTEGERS and each round is a
  * min over (settled ∪ frontier-expansion) — the oracle replays k
@@ -83,38 +84,41 @@ object Bfs {
     val fwd = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e0 = if (undirected) fwd.union(
       edges.select(col(dstCol).as("src"), col(srcCol).as("dst"))) else fwd
-    val bySrc = e0.distinct().repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
     val compactEvery = 32
-    def stored(frontier: DataFrame): (DataFrame, Long) =
-      Loop.materialize(frontier, checkpoint = true, 0L)((c, _) => c + 1, _ + _)
     def union(legs: Seq[DataFrame]): DataFrame = legs.reduce(_ union _)
-    val (seeded, _) = stored(seeds.select(col(seedCol).as("id")).distinct()
-      .select(col("id"), lit(0).as("d")))
-    // state: the settled set's legs, the frontier last; the criterion is
-    // the frontier size, so an empty one stops the loop
-    val result = Loop.iterate(Vector(seeded), TerminateOnMaxIterOrTol(maxIter, 0.0)) { (legs, k) =>
-      // shuffle_hash on the settled side: the anti-join's build side
-      // is the visited set — hashing it beats sort-merge's per-round
-      // O(V log V) sort of the whole union (the frontier side is
-      // usually far smaller than the settled set on deep graphs)
-      val (next, size) = stored(bySrc.join(legs.last.select(col("id").as("src")), "src")
-        .select(col("dst").as("id")).distinct()
-        .join(union(legs).hint("shuffle_hash"), Seq("id"), "left_anti")
-        .select(col("id"), lit(k + 1).as("d")))
-      if (size == 0) {
-        Loop.release(next)
-        (legs, Some(0.0))
-      } else if (legs.size + 1 < compactEvery) (legs :+ next, Some(size.toDouble))
-      else {
-        val (compact, _) = stored(union(legs))
-        legs.foreach(Loop.release)
-        (Vector(compact, next), Some(size.toDouble))
+    Loop.scoped { stored =>
+      val bySrc = stored(e0.distinct().repartition(col("src"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
+      def checkpointed(frontier: DataFrame): (DataFrame, Long) = {
+        val (kept, size) = Loop.materialize(frontier, checkpoint = true, 0L)((c, _) => c + 1, _ + _)
+        (stored(kept), size)
       }
+      val (seeded, _) = checkpointed(seeds.select(col(seedCol).as("id")).distinct()
+        .select(col("id"), lit(0).as("d")))
+      // state: the settled set's legs, the frontier last; the criterion is
+      // the frontier size, so an empty one stops the loop
+      val result = Loop.iterate(Vector(seeded), TerminateOnMaxIterOrTol(maxIter, 0.0)) { (legs, k) =>
+        // shuffle_hash on the settled side: the anti-join's build side
+        // is the visited set — hashing it beats sort-merge's per-round
+        // O(V log V) sort of the whole union (the frontier side is
+        // usually far smaller than the settled set on deep graphs)
+        val (next, size) = checkpointed(bySrc.join(legs.last.select(col("id").as("src")), "src")
+          .select(col("dst").as("id")).distinct()
+          .join(union(legs).hint("shuffle_hash"), Seq("id"), "left_anti")
+          .select(col("id"), lit(k + 1).as("d")))
+        if (size == 0) {
+          Loop.release(next)
+          (legs, Some(0.0))
+        } else if (legs.size + 1 < compactEvery) (legs :+ next, Some(size.toDouble))
+        else {
+          val (compact, _) = checkpointed(union(legs))
+          legs.foreach(Loop.release)
+          (Vector(compact, next), Some(size.toDouble))
+        }
+      }
+      val sizes = result.history.takeWhile(_ > 0)
+      val out = union(result.state).select(col("id").as(idOut), col("d").as(distOut))
+      LoopResult(Loop.keep(out), sizes.length, sizes)
     }
-    val sizes = result.history.takeWhile(_ > 0)
-    val out = union(result.state).select(col("id").as(idOut), col("d").as(distOut))
-    LoopResult(Loop.keep(out, bySrc +: result.state: _*), sizes.length, sizes)
   }
 }

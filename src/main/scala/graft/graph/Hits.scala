@@ -51,10 +51,11 @@ import org.apache.spark.storage.StorageLevel
  * [[PageRank]]; the hub step's checkpoint carries the hub it replaces,
  * so the movement is one more pass over that checkpoint.
  *
- * Cache-release contract: the final (id, hub, authority) frame is
- * stored before every internal cache and checkpoint is released, so
- * after the caller's `unpersist()` nothing of the call remains.
- * Executor loss: rerun the call, as for [[graft.dedup.ConnectedComponents]].
+ * Cache-release contract: the call runs under
+ * [[graft.iteration.Loop.scoped]]; the final (id, hub, authority) frame
+ * is stored before every internal cache and checkpoint is released, so
+ * after the caller's `unpersist()`, or after a call that throws, nothing
+ * of the call remains. Executor loss: see [[graft.iteration.Loop]].
  */
 object Hits {
 

@@ -46,7 +46,7 @@ import org.apache.spark.storage.StorageLevel
  * Cache-release contract: the (idOut, labelOut) frame is stored before
  * every internal cache and checkpoint is released, so after the
  * caller's `unpersist()` nothing of the call remains.
- * Executor loss: rerun the call, as for [[graft.dedup.ConnectedComponents]].
+ * Executor loss: see [[graft.iteration.Loop]].
  *
  * Semantic communities at scale (the SemDeDup-shaped composition):
  * build the edge list with

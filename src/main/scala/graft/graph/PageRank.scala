@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.iteration.{Loop, LoopResult}
+import graft.iteration.{Loop, LoopResult, TerminateOnMaxIterOrTol}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -36,9 +36,15 @@ import org.apache.spark.storage.StorageLevel
  * needs no join: the one job that stores round t
  * ([[graft.iteration.Loop.materialize]]) also sums D_t for round t+1,
  * in partition order, so two runs give bit-identical ranks. Lineage is
- * cut with a local checkpoint every few rounds (the
- * ConnectedComponents lesson: iterative plans must not nest); a
- * checkpoint is released once a later one supersedes it.
+ * cut with a local checkpoint every few rounds, never in the last one
+ * (the ConnectedComponents lesson: iterative plans must not nest). The
+ * loop runs on [[graft.iteration.Loop.iterate]] under
+ * [[graft.iteration.Loop.scoped]]: a round is released once its
+ * successor is stored, checkpoint rounds included, and a call that
+ * throws leaves nothing stored. A round after a released checkpoint,
+ * and the result, therefore cannot be rebuilt once a cached block of
+ * theirs is lost: the running call, or a later read of the result,
+ * fails instead of recomputing (see [[graft.iteration.Loop]]).
  */
 object PageRank {
 
@@ -60,22 +66,13 @@ object PageRank {
    * @param rankOut   output rank column name.
    * @return in `state`, (idOut, rankOut) — one row per vertex appearing
    *         in `edges`; ranks sum to 1. `rounds` is the rounds run and
-   *         `history` each checked round's L1 delta (tol > 0 only).
-   *         Every internal cache except the
-   *         final rank table is released before returning. The result
-   *         is a same-order pure-rename projection of that table, which
-   *         sameResult-matches its cache entry — so `result.unpersist()`
-   *         genuinely releases it (and `result.storageLevel` reports
-   *         it). When all numIter rounds ran and the last one was a
-   *         localCheckpoint round (numIter ≡ 0 mod 4) there is no
-   *         cache-manager entry at all: the data sits in a checkpoint
-   *         RDD freed by the ContextCleaner once the DataFrame is
-   *         unreachable, and unpersist is a harmless no-op. The latest
-   *         checkpoint the result's lineage reaches is likewise left
-   *         to the ContextCleaner. Either way nothing leaks per run.
-   *         Callers must NOT re-project with different column ORDER
-   *         before unpersisting (a reordered projection does not
-   *         sameResult-match; rename through idOut/rankOut instead).
+   *         `history` each checked round's L1 delta (tol > 0 only). The
+   *         frame is stored, as every graph operator's result is, and
+   *         nothing else of the call remains after its `unpersist()`. It
+   *         is a same-order rename of the stored final rank table, so
+   *         callers must NOT re-project it with a different column ORDER
+   *         before unpersisting (a reordered projection matches no cache
+   *         entry; rename through idOut/rankOut instead).
    */
   def run(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
       dampingFactor: Double = 0.85, numIter: Int = 20, tol: Double = 0.0,
@@ -102,7 +99,7 @@ object PageRank {
    *                ignored. Seeds that do not appear in `edges` are
    *                ignored (they have no edges to spread rank through);
    *                at least one seed must be present in the graph.
-   * Other params and the cache-release contract: see [[run]].
+   * Other params and the result's storage: see [[run]].
    */
   def runPersonalized(edges: DataFrame, seeds: DataFrame,
       srcCol: String = "src", dstCol: String = "dst",
@@ -135,137 +132,130 @@ object PageRank {
           .otherwise(wd)
       }
 
-    // (src, dst, share) with share = w / out(src); parallel edges keep
-    // their multiplicity through the weight sum. Partitioned on src so
-    // the per-iteration rank join never reshuffles the edge table.
-    // out(src) is a WINDOW sum over the merged edge table rather than
-    // a groupBy + self-join: the window's hash(src) exchange IS the
-    // partitioning the loop needs, so setup pays two exchanges total
-    // (the (src,dst) merge, then src) instead of four (merge, the
-    // outW groupBy, re-exchange of the merged table for the join, and
-    // the explicit repartition) — round-16 measurement, setup-bound
-    // queries (numIter=3 graph rows) drop ~15-20%. The window sums the
-    // identical merged per-(src,dst) weights, but its accumulation
-    // ORDER differs from the old groupBy+join (row order after the
-    // hash exchange vs partial-agg merge order), so shares agree only
-    // within FP tolerance — do not rely on bit identity here; the
-    // declared queries round at 1e-10, far above ulp drift.
-    val agg = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-    val srcWindow = org.apache.spark.sql.expressions.Window.partitionBy("src")
-    val shares = agg
-      .withColumn("share", col("w") / sum("w").over(srcWindow))
-      .select(col("src"), col("dst"), col("share"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    Loop.scoped { stored =>
+      // (src, dst, share) with share = w / out(src); parallel edges keep
+      // their multiplicity through the weight sum. Partitioned on src so
+      // the per-iteration rank join never reshuffles the edge table.
+      // out(src) is a WINDOW sum over the merged edge table rather than
+      // a groupBy + self-join: the window's hash(src) exchange IS the
+      // partitioning the loop needs, so setup pays two exchanges total
+      // (the (src,dst) merge, then src) instead of four (merge, the
+      // outW groupBy, re-exchange of the merged table for the join, and
+      // the explicit repartition) — round-16 measurement, setup-bound
+      // queries (numIter=3 graph rows) drop ~15-20%. The window sums the
+      // identical merged per-(src,dst) weights, but its accumulation
+      // ORDER differs from the old groupBy+join (row order after the
+      // hash exchange vs partial-agg merge order), so shares agree only
+      // within FP tolerance — do not rely on bit identity here; the
+      // declared queries round at 1e-10, far above ulp drift.
+      val agg = edges
+        .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
+        .groupBy("src", "dst").agg(sum("w").as("w"))
+      val srcWindow = org.apache.spark.sql.expressions.Window.partitionBy("src")
+      val shares = stored(agg
+        .withColumn("share", col("w") / sum("w").over(srcWindow))
+        .select(col("src"), col("dst"), col("share"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
-    // ONE node table (id, dangling[, seed]), persisted HASH-PARTITIONED
-    // ON id by its single groupBy(id) exchange: every vertex, whether it
-    // has no out-edge, and — personalized — whether it is a seed (seed
-    // rows carry a null `out`, so seeds outside the graph drop out). The
-    // per-round join against it reuses that partitioning (the rank table
-    // inherits it through the join), so only the rank→src shuffle moves
-    // data each round; and the rank frame carries the dangling flag, so
-    // no round joins a dangling table.
-    val personalized = teleport.isDefined
-    val endpoints = edges.select(col(srcCol).as("id"), lit(true).as("out"))
-      .union(edges.select(col(dstCol).as("id"), lit(false).as("out")))
-    val dangling = (!bool_or(col("out"))).as("dangling")
-    val flagged = teleport match {
-      case None => endpoints.groupBy("id").agg(dangling)
-      case Some((seedDf, seedCol)) =>
-        endpoints.withColumn("seed", lit(false))
-          .union(seedDf.select(col(seedCol).as("id"), lit(null).cast("boolean").as("out"),
-            lit(true).as("seed")))
-          .groupBy("id").agg(dangling, bool_or(col("seed")).as("seed"))
-          .where(col("dangling").isNotNull)
-    }
-    // (vertices, teleport vertices, dangling teleport vertices) in the
-    // job that stores the table; classic teleport is every vertex
-    val (nodes, (n, s, danglingSeeds)) = Loop.materialize(flagged, checkpoint = false,
-      (0L, 0L, 0L))(
-      (a, r) => {
-        val seed = !personalized || r.getBoolean(2)
-        (a._1 + 1, if (seed) a._2 + 1 else a._2, if (seed && r.getBoolean(1)) a._3 + 1 else a._3)
-      },
-      (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
-    if (n == 0 || s == 0) nodes.unpersist(blocking = false)
-    require(n > 0, "PageRank on an empty edge list is undefined")
-    require(s > 0, "personalized PageRank: no seed appears in the graph")
+      // ONE node table (id, dangling[, seed]), persisted HASH-PARTITIONED
+      // ON id by its single groupBy(id) exchange: every vertex, whether it
+      // has no out-edge, and — personalized — whether it is a seed (seed
+      // rows carry a null `out`, so seeds outside the graph drop out). The
+      // per-round join against it reuses that partitioning (the rank table
+      // inherits it through the join), so only the rank→src shuffle moves
+      // data each round; and the rank frame carries the dangling flag, so
+      // no round joins a dangling table.
+      val personalized = teleport.isDefined
+      val endpoints = edges.select(col(srcCol).as("id"), lit(true).as("out"))
+        .union(edges.select(col(dstCol).as("id"), lit(false).as("out")))
+      val dangling = (!bool_or(col("out"))).as("dangling")
+      val flagged = teleport match {
+        case None => endpoints.groupBy("id").agg(dangling)
+        case Some((seedDf, seedCol)) =>
+          endpoints.withColumn("seed", lit(false))
+            .union(seedDf.select(col(seedCol).as("id"), lit(null).cast("boolean").as("out"),
+              lit(true).as("seed")))
+            .groupBy("id").agg(dangling, bool_or(col("seed")).as("seed"))
+            .where(col("dangling").isNotNull)
+      }
+      // (vertices, teleport vertices, dangling teleport vertices) in the
+      // job that stores the table; classic teleport is every vertex
+      val (nodes, (n, s, danglingSeeds)) = Loop.materialize(flagged, checkpoint = false,
+        (0L, 0L, 0L))(
+        (a, r) => {
+          val seed = !personalized || r.getBoolean(2)
+          (a._1 + 1, if (seed) a._2 + 1 else a._2, if (seed && r.getBoolean(1)) a._3 + 1 else a._3)
+        },
+        (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
+      stored(nodes)
+      require(n > 0, "PageRank on an empty edge list is undefined")
+      require(s > 0, "personalized PageRank: no seed appears in the graph")
 
-    // teleport p: uniform 1/n (classic), or 1/|seeds∩graph| on the seed
-    // set and 0 elsewhere (personalized)
-    val p =
-      if (personalized) when(col("seed"), lit(1.0 / s)).otherwise(lit(0.0))
-      else lit(1.0 / n)
-    // r₀ = p, a projection of the cached node table; D₀ = Σ p over the
-    // dangling vertices
-    var ranks = nodes.select(col("id"), p.as("r"), col("dangling"))
-    var danglingMass = danglingSeeds.toDouble / s
-    var liveCheckpoint = Option.empty[DataFrame]
-    val history = Array.newBuilder[Double]
-    var iter = 0
-    var converged = false
-    while (iter < numIter && !converged) {
-      val contribs = shares.join(ranks.select(col("id").as("src"), col("r")), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("share") * col("r")).as("c"))
-      // the uniform branch keeps the EXACT r12 expression ((1-d)/n and
-      // dm/n as divisions): x/n and x*(1/n) differ at the ulp level,
-      // and the classic path's oracle parity (ROUND(r, 10) after 3
-      // iterations) is pinned to the division form
-      val rankExpr =
-        if (personalized)
-          lit(1.0 - d) * p + lit(d) * (coalesce(col("c"), lit(0.0)) + lit(danglingMass) * p)
-        else
-          lit((1.0 - d) / n) +
-            lit(d) * (coalesce(col("c"), lit(0.0)) + lit(danglingMass / n))
-      // the last round stores exactly (id, r) — see the rename below; the
-      // others keep the flag, and the job that stores the round sums the
-      // next round's dangling mass
-      val last = iter == numIter - 1
-      val next = nodes.join(contribs, Seq("id"), "left")
-        .select(Seq(col("id"), rankExpr.as("r")) ++ (if (last) Nil else Seq(col("dangling"))): _*)
-      val checkpoint = (iter + 1) % CheckpointEvery == 0
-      val (mat, nextMass) = Loop.materialize(next, checkpoint, 0.0)(
-        (m, r) => if (!last && r.getBoolean(2)) m + r.getDouble(1) else m, _ + _)
-      if (tol > 0.0) {
-        val delta = mat.join(ranks.select(col("id"), col("r").as("r0")), "id")
-          .agg(sum(abs(col("r") - col("r0")))).head().getDouble(0)
-        history += delta
-        converged = delta < tol
+      // teleport p: uniform 1/n (classic), or 1/|seeds∩graph| on the seed
+      // set and 0 elsewhere (personalized)
+      val p =
+        if (personalized) when(col("seed"), lit(1.0 / s)).otherwise(lit(0.0))
+        else lit(1.0 / n)
+      // r₀ = p, a projection of the cached node table; D₀ = Σ p over the
+      // dangling vertices. The criterion is the round's L1 delta (tol > 0
+      // only); TerminateOnMaxIterOrTol stops at delta ≤ its tol, and one
+      // ulp below `tol` makes that delta < tol, the documented rule
+      val ranks0 = nodes.select(col("id"), p.as("r"), col("dangling"))
+      val result = Loop.iterate((ranks0, danglingSeeds.toDouble / s),
+          TerminateOnMaxIterOrTol(numIter, math.nextDown(tol))) { case ((ranks, danglingMass), iter) =>
+        val contribs = shares.join(ranks.select(col("id").as("src"), col("r")), "src")
+          .groupBy(col("dst").as("id"))
+          .agg(sum(col("share") * col("r")).as("c"))
+        // the uniform branch keeps the EXACT r12 expression ((1-d)/n and
+        // dm/n as divisions): x/n and x*(1/n) differ at the ulp level,
+        // and the classic path's oracle parity (ROUND(r, 10) after 3
+        // iterations) is pinned to the division form
+        val rankExpr =
+          if (personalized)
+            lit(1.0 - d) * p + lit(d) * (coalesce(col("c"), lit(0.0)) + lit(danglingMass) * p)
+          else
+            lit((1.0 - d) / n) +
+              lit(d) * (coalesce(col("c"), lit(0.0)) + lit(danglingMass / n))
+        // the last round stores exactly (id, r), never as a checkpoint: the
+        // returned rename projection below matches its cache entry, so it
+        // is the call's result and not registered. The others keep the
+        // flag, and the job that stores the round sums the next round's
+        // dangling mass
+        val last = iter == numIter - 1
+        val next = nodes.join(contribs, Seq("id"), "left")
+          .select(Seq(col("id"), rankExpr.as("r")) ++ (if (last) Nil else Seq(col("dangling"))): _*)
+        val (mat, nextMass) = Loop.materialize(next,
+          checkpoint = !last && (iter + 1) % CheckpointEvery == 0, 0.0)(
+          (m, r) => if (!last && r.getBoolean(2)) m + r.getDouble(1) else m, _ + _)
+        if (!last) stored(mat)
+        // a delta job that throws must not leave the unregistered last
+        // round stored (releasing a registered round again is a no-op)
+        val delta =
+          try {
+            if (tol > 0.0)
+              Some(mat.join(ranks.select(col("id"), col("r").as("r0")), "id")
+                .agg(sum(abs(col("r") - col("r0")))).head().getDouble(0))
+            else None
+          } catch { case e: Throwable => Loop.release(mat); throw e }
+        if (iter > 0) Loop.release(ranks)
+        ((mat, nextMass), delta)
       }
-      // persisted rounds go as soon as their successor is stored; a
-      // checkpoint stays until a later checkpoint supersedes it, because
-      // the persisted rounds after it recompute from it
-      if (iter > 0 && iter % CheckpointEvery != 0) ranks.unpersist(blocking = false)
-      if (checkpoint) {
-        liveCheckpoint.foreach(Loop.release)
-        liveCheckpoint = Some(mat)
-      }
-      ranks = mat
-      danglingMass = nextMass
-      iter += 1
-    }
-    if (iter < numIter) {
       // tol stopped the loop before its last round: store (id, r) now
-      val (out, _) = Loop.materialize(ranks.select("id", "r"), checkpoint = false, 0L)(
-        (c, _) => c + 1, _ + _)
-      if (iter % CheckpointEvery != 0) ranks.unpersist(blocking = false)
-      ranks = out
+      val ranks =
+        if (result.rounds < numIter) Loop.keep(result.state._1.select("id", "r"))
+        else result.state._1
+      // SAME-ORDER pure-rename projection, deliberately: canonicalization
+      // collapses such a Project, so the returned plan sameResult-matches
+      // the final rank table's cache entry — result.storageLevel reports
+      // it and result.unpersist() genuinely releases it (probed on Spark
+      // 4.1.2: a REORDERED projection does NOT collapse and its unpersist
+      // silently leaks the cache, which is why the rename happens here,
+      // through idOut/rankOut, and not at call sites). Persisting this
+      // projection instead would be worse than useless: the persist
+      // no-ops against the sameResult-matching entry and an internal
+      // unpersist would then drop the caller's data out from under it.
+      LoopResult(ranks.select(col("id").as(idOut), col("r").as(rankOut)), result.rounds,
+        result.history)
     }
-    shares.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    // SAME-ORDER pure-rename projection, deliberately: canonicalization
-    // collapses such a Project, so the returned plan sameResult-matches
-    // the final rank table's cache entry — result.storageLevel reports
-    // it and result.unpersist() genuinely releases it (probed on Spark
-    // 4.1.2: a REORDERED projection does NOT collapse and its unpersist
-    // silently leaks the cache, which is why the rename happens here,
-    // through idOut/rankOut, and not at call sites). Persisting this
-    // projection instead would be worse than useless: the persist
-    // no-ops against the sameResult-matching entry and an internal
-    // unpersist would then drop the caller's data out from under it.
-    LoopResult(ranks.select(col("id").as(idOut), col("r").as(rankOut)), iter, history.result())
   }
 }

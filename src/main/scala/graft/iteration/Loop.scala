@@ -69,12 +69,24 @@ object LoopResult {
  * they launch, so a round should launch as few as it can: the exchanges
  * its plan needs, plus ONE job that both stores the round's frame and
  * computes what the driver must know about it (a convergence count, a
- * signature, the next round's scalar). [[materialize]] is that job;
- * [[release]] frees what it stored, and [[keep]] stores the frame a loop
- * returns before releasing the loop's own; [[scoped]] releases what a
- * call stored when the call ends, returned or thrown. ConnectedComponents,
- * PageRank, LabelPropagation, Hits, Bfs and [[iterateDataFrame]] are
- * built on them.
+ * signature, the next round's scalar). [[materialize]] is that job, and
+ * the operators built on it share one lifetime rule:
+ *
+ *  - a call runs inside [[scoped]] and registers every frame it stores;
+ *    when the call ends, returned or thrown, [[scoped]] releases them;
+ *  - a round is released with [[release]] as soon as its successor is
+ *    stored, so a loop holds O(1) rounds, not one per round;
+ *  - the frame a call returns is stored by [[keep]] (or is the stored
+ *    last round itself) and is not registered: the caller's `unpersist`
+ *    frees it, and then nothing of the call remains.
+ *
+ * Executor loss: a released round cannot be recomputed, and a stored
+ * frame's lineage may reach one (a released checkpoint, or a cache whose
+ * blocks were lost), so losing an executor fails the running call or a
+ * later read of its result that needs a lost block rebuilt — rerun the
+ * call. ConnectedComponents, PageRank, LabelPropagation, Hits, Bfs,
+ * Swing and BpeTrainer follow this rule; [[iterateDataFrame]] stores and
+ * releases its rounds the same way.
  */
 object Loop {
 
@@ -205,9 +217,9 @@ object Loop {
 
   /**
    * Free what [[materialize]] stored for `df`: its cache entry, or its
-   * local checkpoint's blocks. A released checkpoint cannot be
-   * recomputed, so release a frame only once nothing will read it —
-   * including through the lineage of a cache that may need rebuilding.
+   * local checkpoint's blocks. Release a frame once only stored frames
+   * read it: a cache whose lineage reaches a released checkpoint serves
+   * its rows while its blocks last (executor loss: see [[Loop]]).
    */
   def release(df: DataFrame): Unit = df.queryExecution.logical match {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false)
@@ -234,13 +246,10 @@ object Loop {
     try body(stored) finally stored.frames.foreach(release)
   }
 
-  /** Store `out`, the frame a loop call returns (one job), then [[release]]
-    * `frames`, the stored frames and cached inputs it reads: the caller's
-    * `unpersist` then frees all the call stored. As with [[materialize]],
-    * `out` must not match a frame already cached. */
-  def keep(out: DataFrame, frames: DataFrame*): DataFrame = {
-    val (kept, _) = materialize(out, checkpoint = false, 0L)((n, _) => n + 1, _ + _)
-    frames.foreach(release)
-    kept
-  }
+  /** Store `out`, the frame a loop call returns, in one job. Called inside
+    * [[scoped]], whose release of the call's frames then leaves `out` the
+    * only storage of the call: the caller's `unpersist` frees it. As with
+    * [[materialize]], `out` must not match a frame already cached. */
+  def keep(out: DataFrame): DataFrame =
+    materialize(out, checkpoint = false, 0L)((n, _) => n + 1, _ + _)._1
 }

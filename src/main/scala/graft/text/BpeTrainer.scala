@@ -26,8 +26,11 @@ import graft.util.ReadWrite
  *    merges per round without changing the learned sequence).
  *    Per-round results are persisted so the next round reads a
  *    materialized column (never a recursively nested expression),
- *    with `localCheckpoint` every [[BpeTrainer.CheckpointEvery]]
- *    rounds to keep lineage flat — the ConnectedComponents pattern.
+ *    with a local checkpoint ([[graft.iteration.Loop.materialize]])
+ *    every [[BpeTrainer.CheckpointEvery]] merges to keep lineage flat
+ *    — the ConnectedComponents pattern. The fit runs under
+ *    [[graft.iteration.Loop.scoped]], so returned or thrown, it leaves
+ *    nothing stored.
  *
  * Documented divergence from textbook BPE: self-pairs (x, x) are
  * never merge candidates. With left ≠ right guaranteed, occurrences
@@ -114,43 +117,52 @@ class BpeTrainer extends Estimator[BpeTrainer, BpeModel]
     require(inputs.size == 1)
     val df = inputs.head
     val spark = df.sparkSession
-    // one pass over the corpus: distinct words + frequencies
-    val words = df
-      .select(explode(NgramLm.tokens(col(getInputCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     roundsRun0 = 0
-    // row count alone does not bound driver memory — 1M "words" that
-    // are URLs or base64 blobs collect to gigabytes. The same
-    // materializing aggregation also sums symbol lengths, and the
-    // driver path additionally requires the total under
-    // [[BpeTrainer.DriverCollectCharLimit]]; oversized vocabularies
-    // fall back to the distributed rounds.
-    val vocabStats = words
-      .agg(count(lit(1)).as("n"), coalesce(sum(length(col("w"))), lit(0L)).as("chars"))
-      .head()
-    val vocabRows = vocabStats.getLong(0)
-    val vocabChars = vocabStats.getLong(1)
-    if (getDriverWordLimit > 0L && vocabRows <= getDriverWordLimit &&
-        vocabChars <= getDriverCharLimit) {
-      // vocabulary fits on the driver: learn merges locally over the
-      // aggregated (word, freq) table — exact same sequence as the
-      // distributed rounds, without their per-round job latency
-      val collected = words.collect().map(r => (r.getString(0), r.getLong(1)))
-      words.unpersist(blocking = false)
-      val learned = BpeTrainer.fitOnDriver(collected, getNumMerges, getMinPairCount)
-      import spark.implicits._
-      val modelDf = learned.zipWithIndex
-        .map { case ((a, b), i) => (i, a, b) }
-        .toDF("rank", "left", "right")
-      val m = new BpeModel().setModelData(modelDf)
-      copyParamsTo(m)
-      return m
+    // every frame the fit stores is registered, and released when the
+    // fit returns or throws
+    val merges = Loop.scoped { stored =>
+      // one pass over the corpus: distinct words + frequencies
+      val words = stored(df
+        .select(explode(NgramLm.tokens(col(getInputCol))).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("freq"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
+      // row count alone does not bound driver memory — 1M "words" that
+      // are URLs or base64 blobs collect to gigabytes. The same
+      // materializing aggregation also sums symbol lengths, and the
+      // driver path additionally requires the total under
+      // [[BpeTrainer.DriverCollectCharLimit]]; oversized vocabularies
+      // fall back to the distributed rounds.
+      val vocabStats = words
+        .agg(count(lit(1)).as("n"), coalesce(sum(length(col("w"))), lit(0L)).as("chars"))
+        .head()
+      val vocabRows = vocabStats.getLong(0)
+      val vocabChars = vocabStats.getLong(1)
+      if (getDriverWordLimit > 0L && vocabRows <= getDriverWordLimit &&
+          vocabChars <= getDriverCharLimit) {
+        // vocabulary fits on the driver: learn merges locally over the
+        // aggregated (word, freq) table — exact same sequence as the
+        // distributed rounds, without their per-round job latency
+        val collected = words.collect().map(r => (r.getString(0), r.getLong(1)))
+        Loop.release(words)
+        BpeTrainer.fitOnDriver(collected, getNumMerges, getMinPairCount)
+      } else distributedRounds(words, stored)
     }
+    import spark.implicits._
+    val modelDf = merges.zipWithIndex
+      .map { case ((a, b), i) => (i, a, b) }
+      .toDF("rank", "left", "right")
+    val m = new BpeModel().setModelData(modelDf)
+    copyParamsTo(m)
+    m
+  }
+
+  /** The distributed pair-count rounds over the stored (word, freq)
+    * table; every frame they store is registered with `stored`. */
+  private def distributedRounds(words: DataFrame, stored: Loop.Stored): Seq[(String, String)] = {
     // initial symbols = characters
-    var syms = words
+    var syms = stored(words
       .select(col("freq"), split(col("w"), "").as("s"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK))
     // freed after the next pair count fills `syms`: freed first, Spark
     // would recompile the unfilled cache to recompute from the corpus
     var parent = words
@@ -162,7 +174,6 @@ class BpeTrainer extends Estimator[BpeTrainer, BpeModel]
     // merge history alone — no corpus lookup needed
     val createdSymbols = scala.collection.mutable.Set.empty[String]
     var done = false
-    roundsRun0 = 0
     while (merges.size < getNumMerges && !done) {
       roundsRun0 += 1
       val cap = math.min(getBatchSize, getNumMerges - merges.size)
@@ -171,7 +182,7 @@ class BpeTrainer extends Estimator[BpeTrainer, BpeModel]
         .select(col("freq"), explode(NgramLm.bigrams(col("s"))).as("p"))
         .groupBy(col("p.w1").as("a"), col("p.w2").as("b"))
         .agg(sum("freq").as("cnt"))
-      if (cap > 1) pairCounts.persist(StorageLevel.MEMORY_AND_DISK)
+      if (cap > 1) stored(pairCounts.persist(StorageLevel.MEMORY_AND_DISK))
       val top = pairCounts
         .where(col("a") =!= col("b")) // see scaladoc: no self-pair candidates
         .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
@@ -197,7 +208,7 @@ class BpeTrainer extends Estimator[BpeTrainer, BpeModel]
             .where(col("a") === col("b") && col("a").isin(symsInWindow: _*))
             .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
         }
-      if (cap > 1) pairCounts.unpersist(blocking = false)
+      if (cap > 1) Loop.release(pairCounts)
 
       // longest safe prefix above minPairCount: pairwise symbol-disjoint,
       // consuming no symbol created this batch, and creating no symbol
@@ -264,32 +275,22 @@ class BpeTrainer extends Estimator[BpeTrainer, BpeModel]
             }
             applyAll(col("s"))
           }
-        val next = syms
-          .select(col("freq"), merged.as("s"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val next = syms.select(col("freq"), merged.as("s"))
         val crossedCheckpoint =
           (merges.size + accepted.size) / BpeTrainer.CheckpointEvery > merges.size / BpeTrainer.CheckpointEvery
-        val mat = if (crossedCheckpoint) {
-          val c = next.localCheckpoint(true)
-          next.unpersist(blocking = false) // checkpoint holds the data now
-          c
-        } else next
+        // a checkpoint round is written, lineage cut, in one job; the
+        // other rounds are filled by the next round's pair count
+        val mat =
+          if (crossedCheckpoint)
+            Loop.materialize(next, checkpoint = true, 0L)((c, _) => c + 1, _ + _)._1
+          else next.persist(StorageLevel.MEMORY_AND_DISK)
         parent = syms
-        syms = mat
+        syms = stored(mat)
         merges ++= accepted.map(m => (m._1, m._2))
         createdSymbols ++= accepted.map(m => m._1 + m._2)
       }
     }
-    Loop.release(parent)
-    Loop.release(syms)
-
-    import spark.implicits._
-    val modelDf = merges.toSeq.zipWithIndex
-      .map { case ((a, b), i) => (i, a, b) }
-      .toDF("rank", "left", "right")
-    val m = new BpeModel().setModelData(modelDf)
-    copyParamsTo(m)
-    m
+    merges.toSeq
   }
 }
 object BpeTrainer extends StageLoader[BpeTrainer] {

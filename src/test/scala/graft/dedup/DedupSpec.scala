@@ -110,16 +110,22 @@ class DedupSpec extends SparkSpec {
 
   test("ConnectedComponents: nothing outlives run() plus the caller's unpersist") {
     import spark.implicits._
-    val sc = spark.sparkContext
     val chain = (100L until 120L).map(i => (i, i + 1)).toDF("src", "dst")
     for (algorithm <- Seq("star", "minlabel")) {
       // every round's cache and checkpoint is registered here until freed
-      val before = sc.getPersistentRDDs.keySet
-      val out = ConnectedComponents.run(chain, driverEdgeLimit = 0, algorithm = algorithm).state
-      assert(out.collect().map(_.getLong(1)).toSet == Set(100L), algorithm)
-      out.unpersist(blocking = true)
-      val left = sc.getPersistentRDDs.keySet -- before
-      assert(left.isEmpty, s"$algorithm left RDDs $left registered")
+      val left = residueOf {
+        val out = ConnectedComponents.run(chain, driverEdgeLimit = 0, algorithm = algorithm).state
+        assert(out.collect().map(_.getLong(1)).toSet == Set(100L), algorithm)
+        out.unpersist(blocking = true)
+      }
+      assert(left == (Set.empty, false), s"$algorithm left (RDDs, cache entry) $left")
+      // a call that does not converge throws and leaves nothing either
+      val residue = residueOf {
+        intercept[IllegalStateException] {
+          ConnectedComponents.run(chain, maxIter = 2, driverEdgeLimit = 0, algorithm = algorithm)
+        }
+      }
+      assert(residue == (Set.empty, false), s"$algorithm: a failing run left $residue")
     }
   }
 

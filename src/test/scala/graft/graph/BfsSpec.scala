@@ -88,18 +88,24 @@ class BfsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Bfs.run(Seq((1L, 2L)).toDF("src", "dst"), Seq(1L).toDF("id"), maxIter = 0).state
     }
+    // repartitioned, so the raise fires in the seed frame's store job
+    val badSeeds = Seq(1L, -1L).toDF("id").repartition(2)
+      .select(when($"id" < 0L, raise_error(lit("bad seed")).cast("long")).otherwise($"id").as("id"))
+    val residue = residueOf {
+      intercept[Exception](Bfs.run(Seq((1L, 2L)).toDF("src", "dst"), badSeeds).state)
+    }
+    assert(residue == (Set.empty, false), s"a failing run left (RDDs, cache entry) $residue")
   }
 
   test("nothing outlives run() plus the caller's unpersist") {
     import spark.implicits._
-    val sc = spark.sparkContext
     // 40 hops: frontier legs, one compaction, and the empty last frontier
     val chain = (0L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
-    val before = sc.getPersistentRDDs.keySet
-    val out = Bfs.run(chain, Seq(0L).toDF("id"), maxIter = 64).state
-    assert(out.count() == 41)
-    out.unpersist(blocking = true)
-    val left = sc.getPersistentRDDs.keySet -- before
-    assert(left.isEmpty, s"left RDDs $left registered")
+    val residue = residueOf {
+      val out = Bfs.run(chain, Seq(0L).toDF("id"), maxIter = 64).state
+      assert(out.count() == 41)
+      out.unpersist(blocking = true)
+    }
+    assert(residue == (Set.empty, false), s"left (RDDs, cache entry) $residue")
   }
 }

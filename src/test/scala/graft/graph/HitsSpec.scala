@@ -125,16 +125,15 @@ class HitsSpec extends SparkSpec {
 
   test("nothing outlives run() plus the caller's unpersist") {
     import spark.implicits._
-    val sc = spark.sparkContext
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (2L, 5L)).toDF("src", "dst")
     for (tol <- Seq(0.0, 1e-12)) {
       // every half-step's checkpoint is registered here until freed
-      val before = sc.getPersistentRDDs.keySet
-      val out = Hits.run(edges, numIter = 5, tol = tol).state
-      assert(out.count() == 5)
-      out.unpersist(blocking = true)
-      val left = sc.getPersistentRDDs.keySet -- before
-      assert(left.isEmpty, s"tol=$tol left RDDs $left registered")
+      val residue = residueOf {
+        val out = Hits.run(edges, numIter = 5, tol = tol).state
+        assert(out.count() == 5)
+        out.unpersist(blocking = true)
+      }
+      assert(residue == (Set.empty, false), s"tol=$tol left (RDDs, cache entry) $residue")
     }
   }
 }

@@ -166,14 +166,13 @@ class LabelPropagationSpec extends SparkSpec {
 
   test("nothing outlives run() plus the caller's unpersist") {
     import spark.implicits._
-    val sc = spark.sparkContext
     // the path oscillates, so all 5 rounds run, one of them a checkpoint
     val path = Seq((0L, 1L), (1L, 2L)).toDF("src", "dst")
-    val before = sc.getPersistentRDDs.keySet
-    val out = LabelPropagation.run(path, numIter = 5).state
-    assert(labelsOf(out) == Map(0L -> 1L, 1L -> 0L, 2L -> 1L))
-    out.unpersist(blocking = true)
-    val left = sc.getPersistentRDDs.keySet -- before
-    assert(left.isEmpty, s"left RDDs $left registered")
+    val residue = residueOf {
+      val out = LabelPropagation.run(path, numIter = 5).state
+      assert(labelsOf(out) == Map(0L -> 1L, 1L -> 0L, 2L -> 1L))
+      out.unpersist(blocking = true)
+    }
+    assert(residue == (Set.empty, false), s"left (RDDs, cache entry) $residue")
   }
 }

@@ -96,12 +96,17 @@ class PageRankSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty,
       "internal caches must all be released by run() + caller unpersist " +
         "(the r12 ADVICE leak class)")
-    // numIter = 4: the final round localCheckpoints instead -> no cache
-    // manager entry exists at all, even before the caller unpersists
-    val out4 = PageRank.run(edges, numIter = 4).state
-    assert(out4.count() == 4)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "a checkpoint-final run must leave no cache-manager entries behind")
+    // every 4th round is a checkpoint round, but never the last: numIter 4
+    // and 8 end where one would fall, 9 one round after the second. The
+    // result is the stored last round, and no checkpoint outlives the call
+    for (numIter <- Seq(4, 8, 9)) {
+      val residue = residueOf {
+        val r = PageRank.run(edges, numIter = numIter).state
+        assert(r.count() == 4)
+        r.unpersist(blocking = true)
+      }
+      assert(residue == (Set.empty, false), s"numIter=$numIter left (RDDs, cache entry) $residue")
+    }
   }
 
   test("two runs give bit-identical ranks") {
@@ -138,6 +143,15 @@ class PageRankSpec extends SparkSpec {
     def causes(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ causes(t.getCause)
     assert(causes(e).exists(_.contains("non-positive")), causes(e).mkString(" | "))
+    // repartitioned, so the guard fires in a round's job, after the node
+    // table is stored (a local relation fails in the optimizer first)
+    val residue = residueOf {
+      intercept[Exception] {
+        PageRank.run(Seq((1L, 2L, 0.0), (2L, 3L, 1.0)).toDF("src", "dst", "w").repartition(2),
+          weightCol = "w", numIter = 2).state.collect()
+      }
+    }
+    assert(residue == (Set.empty, false), s"a failing run left (RDDs, cache entry) $residue")
     // a string weight that doesn't parse must RAISE (ANSI cast error
     // or the guard's own message), not cast to null and silently drop
     // the edge inside sum()

@@ -107,9 +107,35 @@ class LoopJobsSpec extends SparkSpec {
     assert(jobs == 2 + 3 + 3 * 4 + 1, s"PageRank launched $jobs jobs")
   }
 
+  test("personalized PageRank: jobs per call on a fixed 5-vertex graph, 3 rounds") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (2L, 5L)).toDF("src", "dst")
+    val jobs = jobsOf(consume(
+      graft.graph.PageRank.runPersonalized(edges, Seq(1L).toDF("id"), numIter = 3).state))
+    // as for classic PageRank: setup 2 (the node table's exchange, its
+    // store-and-count job, seeds included); the share table's 3 in round 1;
+    // per round 4; the caller's read 1
+    assert(jobs == 2 + 3 + 3 * 4 + 1, s"personalized PageRank launched $jobs jobs")
+  }
+
   private lazy val graph = {
     import spark.implicits._
     Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (2L, 5L), (5L, 6L), (6L, 4L)).toDF("src", "dst")
+  }
+
+  test("ConnectedComponents minlabel: jobs per call on a fixed 6-vertex graph") {
+    var rounds = 0
+    val jobs = jobsOf {
+      val cc = graft.dedup.ConnectedComponents.run(graph, driverEdgeLimit = 0, algorithm = "minlabel")
+      rounds = cc.rounds
+      consume(cc.state)
+    }
+    assert(rounds == 3)
+    // per round 4 (three exchange and broadcast jobs, the store-and-count-
+    // changed job) plus, in round 1, the 6 exchange jobs that fill the
+    // edge, adjacency and label caches; the stored result 1; the caller's
+    // read 1
+    assert(jobs == 3 * 4 + 6 + 1 + 1, s"minlabel CC launched $jobs jobs")
   }
 
   test("LabelPropagation: jobs per call on a fixed 6-vertex graph, 3 rounds") {
@@ -134,6 +160,15 @@ class LoopJobsSpec extends SparkSpec {
     // plus one hub-delta pass over the stored half-step in each round
     // but the last (56 with a join and aggregate per check)
     assert(tolJobs == jobs + 2, s"Hits with tol launched $tolJobs jobs")
+  }
+
+  test("Hits: jobs per call at the default 20 rounds") {
+    val jobs = jobsOf(consume(graft.graph.Hits.run(graph).state))
+    // as at 3 rounds: 9 per round and a fixed 11 per call. Carrying the
+    // authority in the hub step's checkpoint instead of joining the last
+    // two checkpoints saves the join's 4 jobs but adds one exchange to
+    // every round after the first: 10N + 7 jobs, 37 at 3 rounds, 207 here
+    assert(jobs == 2 + 20 * 9 + 4 + 4 + 1, s"Hits launched $jobs jobs")
   }
 
   test("Bfs: jobs per call on a fixed 10-hop chain") {
