@@ -4,6 +4,7 @@ import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{Estimator, Model, StageLoader}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -117,18 +118,13 @@ class CosineIndexModel extends Model[CosineIndexModel] with HasSeed[CosineIndexM
   override def setModelData(data: DataFrame*): CosineIndexModel = { modelData = data.head; this }
   override def getModelData: Array[DataFrame] = Array(modelData)
 
-  private[dedup] var unionsSinceCompact: Int = 0
-
-  /** A new model whose index additionally contains `docs`; compacts
-    * the union lineage every [[MinHashIndexModel.CompactEvery]]
-    * additions (see MinHashIndexModel.addToIndex). */
+  /** A new model whose index additionally contains `docs`; the index
+    * grows through [[graft.iteration.Loop.append]], whose rule bounds
+    * its lineage. */
   def addToIndex(docs: DataFrame): CosineIndexModel = {
-    val grown = modelData.unionByName(docs.select(col(getIdCol), col(getInputCol)))
-    val compact = unionsSinceCompact + 1 >= MinHashIndexModel.CompactEvery
     val m = new CosineIndexModel()
-      .setModelData(if (compact) grown.localCheckpoint(true) else grown)
+      .setModelData(Loop.append(modelData, docs.select(col(getIdCol), col(getInputCol))))
     copyParamsTo(m)
-    m.unionsSinceCompact = if (compact) 0 else unionsSinceCompact + 1
     m
   }
 

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{Estimator, Model, StageLoader}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -23,8 +24,8 @@ import graft.util.ReadWrite
  * fingerprints are already computed upstream, so the index is exactly
  * the two columns that must persist, nothing recomputes on load, and
  * it can be extended batch-over-batch with
- * [[HammingIndexModel.addToIndex]] (lineage bounded by the same
- * CompactEvery localCheckpoint pattern as MinHashIndexModel).
+ * [[HammingIndexModel.addToIndex]] (lineage bounded by the
+ * [[graft.iteration.Loop.append]] rule).
  *
  * transform(batch) appends
  *   - `matchedCol`: the smallest indexed id within `maxHamming` bits
@@ -97,23 +98,14 @@ class HammingIndexModel extends Model[HammingIndexModel]
   override def setModelData(data: DataFrame*): HammingIndexModel = { modelData = data.head; this }
   override def getModelData: Array[DataFrame] = Array(modelData)
 
-  /** Unions appended since the index plan was last compacted (carried
-    * across the models addToIndex returns). */
-  private[dedup] var unionsSinceCompact: Int = 0
-
   /** A new model whose index additionally contains `docs` — the
     * batch-over-batch growth path (the index is just (id, fp) rows, so
-    * appending is all it takes). Every
-    * [[HammingIndexModel.CompactEvery]] additions the index DataFrame
-    * is eagerly localCheckpoint-ed so plan depth stays O(1) on long
-    * streaming runs (the MinHashIndexModel pattern). */
+    * appending is all it takes). The index grows through
+    * [[graft.iteration.Loop.append]], whose rule bounds its lineage. */
   def addToIndex(docs: DataFrame): HammingIndexModel = {
-    val grown = modelData.unionByName(docs.select(col(getIdCol), col(getFpCol)))
-    val compact = unionsSinceCompact + 1 >= HammingIndexModel.CompactEvery
     val m = new HammingIndexModel()
-      .setModelData(if (compact) grown.localCheckpoint(true) else grown)
+      .setModelData(Loop.append(modelData, docs.select(col(getIdCol), col(getFpCol))))
     copyParamsTo(m)
-    m.unionsSinceCompact = if (compact) 0 else unionsSinceCompact + 1
     m
   }
 
@@ -150,11 +142,6 @@ class HammingIndexModel extends Model[HammingIndexModel]
   }
 }
 object HammingIndexModel extends StageLoader[HammingIndexModel] {
-  /** Index-plan compaction period for [[HammingIndexModel.addToIndex]]:
-    * every this-many unions the index is localCheckpoint-ed so lineage
-    * stays bounded when the index grows per micro-batch. */
-  val CompactEvery = 32
-
   def load(spark: SparkSession, path: String): HammingIndexModel = {
     val m = ReadWrite.applyParams(new HammingIndexModel, path)
     m.setModelData(ReadWrite.loadModelData(spark, path))

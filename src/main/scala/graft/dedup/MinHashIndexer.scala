@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{Estimator, Model, StageLoader}
 import graft.feature.{LSHParams, MinHashLSH}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -96,23 +97,14 @@ class MinHashIndexModel extends Model[MinHashIndexModel]
   override def setModelData(data: DataFrame*): MinHashIndexModel = { modelData = data.head; this }
   override def getModelData: Array[DataFrame] = Array(modelData)
 
-  /** Unions appended since the index plan was last compacted (carried
-    * across the models addToIndex returns). */
-  private[dedup] var unionsSinceCompact: Int = 0
-
   /** A new model whose index additionally contains `docs` — the
     * batch-over-batch growth path (signatures regenerate from params,
-    * so appending rows is all it takes). Every
-    * [[MinHashIndexModel.CompactEvery]] additions the index DataFrame
-    * is eagerly localCheckpoint-ed so plan depth stays O(1) on long
-    * streaming runs (same pattern as OnlineLogisticRegression). */
+    * so appending rows is all it takes). The index grows through
+    * [[graft.iteration.Loop.append]], whose rule bounds its lineage. */
   def addToIndex(docs: DataFrame): MinHashIndexModel = {
-    val grown = modelData.unionByName(docs.select(col(getIdCol), col(getInputCol)))
-    val compact = unionsSinceCompact + 1 >= MinHashIndexModel.CompactEvery
     val m = new MinHashIndexModel()
-      .setModelData(if (compact) grown.localCheckpoint(true) else grown)
+      .setModelData(Loop.append(modelData, docs.select(col(getIdCol), col(getInputCol))))
     copyParamsTo(m)
-    m.unionsSinceCompact = if (compact) 0 else unionsSinceCompact + 1
     m
   }
 
@@ -135,11 +127,6 @@ class MinHashIndexModel extends Model[MinHashIndexModel]
   }
 }
 object MinHashIndexModel extends StageLoader[MinHashIndexModel] {
-  /** Index-plan compaction period for [[MinHashIndexModel.addToIndex]]:
-    * every this-many unions the index is localCheckpoint-ed so lineage
-    * stays bounded when the index grows per micro-batch. */
-  val CompactEvery = 32
-
   def load(spark: SparkSession, path: String): MinHashIndexModel = {
     val m = ReadWrite.applyParams(new MinHashIndexModel, path)
     m.setModelData(ReadWrite.loadModelData(spark, path))

@@ -183,7 +183,7 @@ object StreamingSessionExample {
 
 /** Near-dup dedup of an unbounded feed: flag each micro-batch against
   * the index of everything seen, then fold the batch in (bounded plan
-  * depth via CompactEvery). */
+  * depth via [[graft.iteration.Loop.append]]). */
 object StreamingNearDupExample {
   def main(args: Array[String]): Unit = {
     val spark = ExampleSession.spark("StreamingNearDupExample")

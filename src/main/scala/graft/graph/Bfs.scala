@@ -41,11 +41,11 @@ import org.apache.spark.storage.StorageLevel
  * MATERIALIZATION is therefore O(V), not the O(V·depth) a per-round
  * settled rewrite pays — on a CC-style 1,000-hop chain that is the
  * difference between writing the visited set once and writing it a
- * thousand times. Once there are `compactEvery` (32) legs, every leg
- * but the frontier is compacted into a single checkpoint and released,
- * so the leg fan-in and per-round analysis stay bounded on deep graphs
- * (amortized materialization O(V·depth/32), still ~97% below the
- * per-round rewrite). Early-stops the round the frontier empties (that
+ * thousand times. Once there are [[graft.iteration.Loop.LeafBound]] (32)
+ * legs, every leg but the frontier is compacted into a single checkpoint
+ * and released, so the leg fan-in and per-round analysis stay bounded on
+ * deep graphs (amortized materialization O(V·depth/32), still ~97% below
+ * the per-round rewrite). Early-stops the round the frontier empties (that
  * empty frontier is released at once, and not counted as a round).
  *
  * Cache-release contract: the call runs under
@@ -84,7 +84,6 @@ object Bfs {
     val fwd = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e0 = if (undirected) fwd.union(
       edges.select(col(dstCol).as("src"), col(srcCol).as("dst"))) else fwd
-    val compactEvery = 32
     def union(legs: Seq[DataFrame]): DataFrame = legs.reduce(_ union _)
     Loop.scoped { stored =>
       val bySrc = stored(e0.distinct().repartition(col("src"))
@@ -109,7 +108,7 @@ object Bfs {
         if (size == 0) {
           Loop.release(next)
           (legs, Some(0.0))
-        } else if (legs.size + 1 < compactEvery) (legs :+ next, Some(size.toDouble))
+        } else if (legs.size + 1 < Loop.LeafBound) (legs :+ next, Some(size.toDouble))
         else {
           val (compact, _) = checkpointed(union(legs))
           legs.foreach(Loop.release)

@@ -87,8 +87,40 @@ object LoopResult {
  * call. ConnectedComponents, PageRank, LabelPropagation, Hits, Bfs,
  * Swing and BpeTrainer follow this rule; [[iterateDataFrame]] stores and
  * releases its rounds the same way.
+ *
+ * Growing model frames (an index that gains a batch, a model stream that
+ * gains a version) have no loop to scope: each growth step returns a new
+ * model. They grow through [[append]], whose rule is:
+ *
+ *  - the grown frame is a union; once its plan holds more than
+ *    [[LeafBound]] leaf relations, it is cut with an eager local
+ *    checkpoint (one job), so plan depth and analysis cost stay bounded
+ *    however long the model grows;
+ *  - a cut is never released: a model returned earlier may still read
+ *    the frame, and the ContextCleaner frees it once no model does;
+ *  - executor loss: a lost block of a cut model frame cannot be
+ *    recomputed, so later `transform`s of the model fail — reload the
+ *    saved model.
  */
 object Loop {
+
+  /** The most leaf relations a grown model frame's plan holds before
+    * [[append]] cuts it; [[graft.graph.Bfs]] bounds its settled-set legs
+    * with it too. */
+  val LeafBound = 32
+
+  /**
+   * `base.unionByName(rows)`, cut with an eager local checkpoint once its
+   * plan holds more than [[LeafBound]] leaf relations (the rule in
+   * [[Loop]]). The count is read from the frame's own plan, so a caller
+   * carries no counter: a one-leaf frame grown one leaf at a time is cut
+   * on every 32nd append.
+   */
+  def append(base: DataFrame, rows: DataFrame): DataFrame = {
+    val grown = base.unionByName(rows)
+    if (grown.queryExecution.logical.collectLeaves().size > LeafBound) grown.localCheckpoint(true)
+    else grown
+  }
 
   /**
    * Iterate `body` from `init` until `termination` fires. The body

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.api.{AlgoOperator, StageLoader}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -159,16 +160,16 @@ class FuzzyJoiner extends AlgoOperator[FuzzyJoiner]
     * ordering argument at the dispatch site); FuzzyJoinerSpec pins the
     * equivalence.
     *
-    * Cache lifetime (round-17 ADVICE): the result is eagerly
-    * localCheckpointed INSIDE the method and the three internal
-    * persists released before returning — a lazily returned plan would
-    * otherwise pin base/gramTable/prefixes for the session on every
-    * self-join transform() (unbounded cache growth for a library
-    * operator called repeatedly). The checkpoint also means downstream
-    * consumers (EntityResolver reads the pair table more than once)
-    * re-scan a materialized table instead of re-running the
-    * gram/window/verify chain. */
-  private def selfTransform(df: DataFrame): DataFrame = {
+    * Cache lifetime: the call runs under [[graft.iteration.Loop.scoped]]
+    * and registers its three internal persists, so they are released
+    * when it returns or throws, and the result is eagerly
+    * localCheckpointed first — a lazily returned plan would otherwise
+    * pin base/gramTable/prefixes for the session on every self-join
+    * transform(). The checkpoint also means downstream consumers
+    * (EntityResolver reads the pair table more than once) re-scan a
+    * materialized table instead of re-running the gram/window/verify
+    * chain. */
+  private def selfTransform(df: DataFrame): DataFrame = Loop.scoped { stored =>
     val k = getMaxDistance
     val q = getGramLength
     val shortBound = q - 1 + k * q
@@ -177,31 +178,31 @@ class FuzzyJoiner extends AlgoOperator[FuzzyJoiner]
     // slim (id, s, len) — feeds the gram path, both short-path sides
     // and both verify join-backs; persisted so the caller's upstream
     // lineage is evaluated once
-    val base = df.select(col(getIdCol).as("id"),
+    val base = stored(df.select(col(getIdCol).as("id"),
         col(getInputCol).cast("string").as("s"))
       .where(col("s").isNotNull)
       .withColumn("len", length(col("s")))
-      .persist(lvl)
+      .persist(lvl))
 
     // (gram, occ) multiset elements, as in grams() above — consumed by
     // the frequency aggregate AND the prefix join, so persisted
     val gs = expr(
       s"transform(sequence(0, len - $q), i -> substring(s, i + 1, $q))")
-    val gramTable = base.where(col("len") >= q)
+    val gramTable = stored(base.where(col("len") >= q)
       .select(col("id"), col("len"), posexplode(gs).as(Seq("pos", "gram")))
       .withColumn("occ", row_number().over(
         Window.partitionBy("id", "gram").orderBy("pos")))
       .drop("pos")
-      .persist(lvl)
+      .persist(lvl))
 
     val freq = gramTable.groupBy("gram", "occ").agg(count(lit(1)).as("cnt"))
-    val prefixes = gramTable
+    val prefixes = stored(gramTable
       .join(freq, Seq("gram", "occ"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("id").orderBy(col("cnt"), col("gram"), col("occ"))))
       .where(col("rk") <= k * q + 1)
       .select("id", "len", "gram", "occ")
-      .persist(lvl)
+      .persist(lvl))
 
     val gramCandidates = prefixes
       .select(col("id").as("left_id"), col("len").as("left_len"), col("gram"), col("occ"))
@@ -222,17 +223,13 @@ class FuzzyJoiner extends AlgoOperator[FuzzyJoiner]
       .where(greatest(col("left_len"), col("right_len")) <= shortBound)
       .select("left_id", "right_id")
 
-    val out = gramCandidates.union(shortCandidates)
+    gramCandidates.union(shortCandidates)
       .join(base.select(col("id").as("left_id"), col("s").as("left_s")), "left_id")
       .join(base.select(col("id").as("right_id"), col("s").as("right_s")), "right_id")
       .withColumn("distance", levenshtein(col("left_s"), col("right_s")))
       .where(col("distance") <= k)
       .select("left_id", "right_id", "distance")
       .localCheckpoint(true)
-    base.unpersist(blocking = false)
-    gramTable.unpersist(blocking = false)
-    prefixes.unpersist(blocking = false)
-    out
   }
 }
 

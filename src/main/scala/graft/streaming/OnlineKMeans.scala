@@ -4,6 +4,7 @@ import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api._
+import graft.iteration.Loop
 import graft.linalg.{DistanceMeasure, VectorWithNorm}
 import graft.param._
 import graft.util.ReadWrite
@@ -210,7 +211,8 @@ class OnlineKMeansModel extends Model[OnlineKMeansModel]
     * mapPartitions emits one partial per partition even when all
     * partitions are empty. Checking getNumPartitions is free; an
     * isEmpty check here would cost one extra Spark job per mini-batch
-    * in the bounded fit loop. */
+    * in the bounded fit loop. A versioned stream grows through
+    * [[graft.iteration.Loop.append]], whose rule bounds its lineage. */
   def update(batch: DataFrame): OnlineKMeansModel =
     update(batch, getFeaturesCol, Long.MinValue)
   // explicit overloads, not default args: py4j (the Python surface)
@@ -314,13 +316,7 @@ class OnlineKMeansModel extends Model[OnlineKMeansModel]
           else
             modelData.select(lit(0L).as("version"), lit(Long.MinValue).as("modelTimeMs"),
               col("centroidId"), col("centroid"), col("weight"))
-        // union-per-version lineage grows unboundedly over a long
-        // foreachBatch run; compact with an eager localCheckpoint every
-        // CompactEvery versions (same pattern as OnlineLrModel)
-        val chained = base.union(newRows)
-        if ((latestVersion + 1) % OnlineKMeansModel.CompactEvery == 0)
-          chained.localCheckpoint(true)
-        else chained
+        Loop.append(base, newRows)
       }
     val m = new OnlineKMeansModel().setModelData(next)
     copyParamsTo(m)
@@ -403,10 +399,6 @@ class OnlineKMeansModel extends Model[OnlineKMeansModel]
   }
 }
 object OnlineKMeansModel extends StageLoader[OnlineKMeansModel] {
-  /** Version-stream compaction period: every this-many appended
-    * versions the lineage is truncated with an eager localCheckpoint. */
-  val CompactEvery = 32L
-
   /** Seeded random initial model (uniform [0,1) per coordinate, like
     * the reference KMeansModelData.generateRandomModelData). */
   def randomInit(spark: SparkSession, k: Int, dim: Int, weight: Double, seed: Long): DataFrame = {

@@ -4,6 +4,7 @@ import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api._
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -178,7 +179,9 @@ class OnlineLogisticRegressionModel extends Model[OnlineLogisticRegressionModel]
   /** One FTRL mini-batch step. A ZERO-PARTITION micro-batch (a
     * rate/kafka source's first trigger) is a no-op — the only shape
     * that crashes treeReduce; all-empty partitions still emit one
-    * partial each. getNumPartitions is free, unlike an isEmpty job. */
+    * partial each. getNumPartitions is free, unlike an isEmpty job.
+    * The version stream grows through [[graft.iteration.Loop.append]],
+    * whose rule bounds its lineage. */
   def update(batch: DataFrame, featuresCol: String, labelCol: String,
       weightCol: String, modelTimeMs: Long = Long.MaxValue): OnlineLogisticRegressionModel = {
     val spark = batch.sparkSession
@@ -266,19 +269,7 @@ class OnlineLogisticRegressionModel extends Model[OnlineLogisticRegressionModel]
       else
         modelData.select(lit(0L).as("version"), lit(Long.MinValue).as("modelTimeMs"),
           col("coefficient"), col("zParam"), col("nParam"))
-    // each update unions one row onto the chain; left alone, plan
-    // depth (and Catalyst re-analysis cost in latestRow) would grow
-    // per micro-batch — O(n²) over a long foreachBatch run and a
-    // stack-depth risk after thousands of batches. Compacting every
-    // [[OnlineLogisticRegressionModel.CompactEvery]] versions with an
-    // eager localCheckpoint truncates lineage so the chain stays O(1)
-    // per update (same pattern as BpeTrainer/ConnectedComponents).
-    val chained = base.union(next)
-    val stream =
-      if ((latestVersion + 1) % OnlineLogisticRegressionModel.CompactEvery == 0)
-        chained.localCheckpoint(true)
-      else chained
-    val m = new OnlineLogisticRegressionModel().setModelData(stream)
+    val m = new OnlineLogisticRegressionModel().setModelData(Loop.append(base, next))
     copyParamsTo(m)
     m.latestCache = Some((latestVersion + 1, Vectors.dense(coefficient),
       Vectors.dense(zParam), Vectors.dense(nParam)))
@@ -376,11 +367,6 @@ class OnlineLogisticRegressionModel extends Model[OnlineLogisticRegressionModel]
   }
 }
 object OnlineLogisticRegressionModel extends StageLoader[OnlineLogisticRegressionModel] {
-  /** Version-stream compaction period: every this-many appended
-    * versions the model DataFrame is eagerly localCheckpoint-ed so
-    * plan depth stays bounded on long foreachBatch runs. */
-  val CompactEvery = 32
-
   /** Zero-initialized FTRL state for `dim` features: version 0 at
     * time Long.MinValue — the pre-training state, never servable
     * under delay-gated scoring. */

@@ -4,6 +4,7 @@ import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api._
+import graft.iteration.Loop
 import graft.linalg.Eigen
 import graft.param._
 import graft.util.ReadWrite
@@ -190,7 +191,9 @@ class OnlinePCAModel extends Model[OnlinePCAModel]
    * Call from foreachBatch: {{{ model = model.update(batchDf) }}}
    * The batch aggregation is a distributed treeAggregate; the fold
    * and eigendecomposition are O(d²)/O(d³) on the driver. An empty
-   * batch returns this model unchanged (no version).
+   * batch returns this model unchanged (no version). The version stream
+   * grows through [[graft.iteration.Loop.append]], whose rule bounds its
+   * lineage.
    */
   def update(batch: DataFrame, featuresCol: String = getInputCol,
       windowEndMs: Long = Long.MaxValue): OnlinePCAModel = {
@@ -241,18 +244,12 @@ class OnlinePCAModel extends Model[OnlinePCAModel]
       .toDF("version", "windowEndMs", "count", "dim",
         "mean", "eigenvalues", "components", "sum", "gram")
     // the new row is now the latest: strip the superseded row's
-    // moments (resume only ever reads the latest version's sum/gram),
-    // and bound the union-per-version lineage with an eager
-    // localCheckpoint every CompactEvery versions — the identical
-    // pattern as OnlineKMeansModel/OnlineLrModel (a days-long
-    // foreachBatch stream otherwise gets quadratic planning cost)
+    // moments (resume only ever reads the latest version's sum/gram)
     val chained =
       if (modelData == null) newRow
       else {
         val empt = array().cast("array<double>")
-        val base = modelData.withColumn("sum", empt).withColumn("gram", empt)
-        val u = base.union(newRow)
-        if (version % OnlinePCAModel.CompactEvery == 0) u.localCheckpoint(true) else u
+        Loop.append(modelData.withColumns(Map("sum" -> empt, "gram" -> empt)), newRow)
       }
     val m = new OnlinePCAModel().setModelData(chained)
     copyParamsTo(m)
@@ -341,11 +338,6 @@ class OnlinePCAModel extends Model[OnlinePCAModel]
   }
 }
 object OnlinePCAModel extends StageLoader[OnlinePCAModel] {
-  /** Version-stream compaction period: every this-many appended
-    * versions the union lineage is truncated with an eager
-    * localCheckpoint (same constant as its online siblings). */
-  val CompactEvery = 32L
-
   def load(spark: SparkSession, path: String): OnlinePCAModel = {
     val m = ReadWrite.applyParams(new OnlinePCAModel, path)
     m.setModelData(ReadWrite.loadModelData(spark, path))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.api._
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -142,6 +143,8 @@ class OnlineStandardScalerModel extends Model[OnlineStandardScalerModel]
    * {{{ model = model.update(batchDf) }}}
    * The batch aggregation is distributed; the fold is O(dim) on the
    * driver. An empty batch returns this model unchanged (no version).
+   * The version stream grows through [[graft.iteration.Loop.append]],
+   * whose rule bounds its lineage.
    */
   def update(batch: DataFrame, featuresCol: String = getInputCol,
       windowEndMs: Long = Long.MaxValue): OnlineStandardScalerModel = {
@@ -199,7 +202,7 @@ class OnlineStandardScalerModel extends Model[OnlineStandardScalerModel]
         org.apache.spark.ml.functions.array_to_vector(col("m")).as("mean"),
         org.apache.spark.ml.functions.array_to_vector(col("s")).as("std"))
     val m = new OnlineStandardScalerModel().setModelData(
-      if (modelData == null) newRow else modelData.union(newRow))
+      if (modelData == null) newRow else Loop.append(modelData, newRow))
     copyParamsTo(m)
     // the new model carries the exact running moments forward
     m.cumN = newN

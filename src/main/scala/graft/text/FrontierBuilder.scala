@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{Estimator, Model, StageLoader}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -22,10 +23,9 @@ import graft.util.ReadWrite
  *
  * fit(crawled) stores the DISTINCT canonical keys of the crawled
  * URLs as the model data; [[FrontierModel.addCrawled]] appends a new
- * batch's keys (compacted every
- * [[FrontierModel.CompactEvery]] additions so lineage stays bounded
- * on long crawls), and save/load persists the key set — a restarted
- * crawler continues exactly where it stopped.
+ * batch's keys (through [[graft.iteration.Loop.append]], so lineage
+ * stays bounded on long crawls), and save/load persists the key set —
+ * a restarted crawler continues exactly where it stopped.
  *
  * transform(candidates*) takes ANY number of candidate tables (each
  * carrying `urlCol`) and emits one row per NEW canonical key:
@@ -78,20 +78,14 @@ class FrontierModel extends Model[FrontierModel]
   override def setModelData(data: DataFrame*): FrontierModel = { modelData = data.head; this }
   override def getModelData: Array[DataFrame] = Array(modelData)
 
-  /** Additions since the key index was last compacted (carried across
-    * the models addCrawled returns). */
-  private[text] var unionsSinceCompact: Int = 0
-
   /** A new model whose crawled-key index additionally contains
     * `urls`' canonical keys — call after a batch is fetched so the
-    * next transform() stops re-enqueueing it. */
+    * next transform() stops re-enqueueing it. The index grows through
+    * [[graft.iteration.Loop.append]], whose rule bounds its lineage. */
   def addCrawled(urls: DataFrame): FrontierModel = {
-    val grown = modelData.unionByName(FrontierModel.keysOf(urls, getUrlCol))
-    val compact = unionsSinceCompact + 1 >= FrontierModel.CompactEvery
     val m = new FrontierModel()
-      .setModelData(if (compact) grown.localCheckpoint(true) else grown)
+      .setModelData(Loop.append(modelData, FrontierModel.keysOf(urls, getUrlCol)))
     copyParamsTo(m)
-    m.unionsSinceCompact = if (compact) 0 else unionsSinceCompact + 1
     m
   }
 
@@ -121,11 +115,6 @@ class FrontierModel extends Model[FrontierModel]
 }
 
 object FrontierModel extends StageLoader[FrontierModel] {
-  /** Key-index compaction period for [[FrontierModel.addCrawled]]:
-    * every this-many unions the index is localCheckpoint-ed so
-    * lineage stays bounded on long incremental crawls. */
-  val CompactEvery = 32
-
   private[text] def keysOf(urls: DataFrame, urlCol: String): DataFrame = {
     val canon = new UrlCanonicalizer().setInputCol(urlCol).setOutputCol("__fb")
       .transform(urls.select(col(urlCol))).head

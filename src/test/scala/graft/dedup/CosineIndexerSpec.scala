@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.ml.linalg.Vectors
 import graft.SparkSpec
+import graft.iteration.Loop
 
 /** Incremental embedding dedup: index, flag batch vs index, grow,
   * persist. */
@@ -45,5 +46,17 @@ class CosineIndexerSpec extends SparkSpec {
     val later = Seq((20L, Vectors.dense(0.0, 0.0, 0.0, 0.997))).toDF("id", "vec")
     val r = loaded.transform(later).head.select("matched_id", "is_duplicate").head()
     assert(r.getLong(0) == 13L && r.getBoolean(1))
+
+    // the loaded index keeps growing with its plan bounded
+    var grown = loaded
+    (1 to 40).foreach { i =>
+      grown = grown.addToIndex(
+        Seq((100L + i, Vectors.dense(1.0, i.toDouble, 0.0, 0.0))).toDF("id", "vec"))
+      val leaves = grown.getModelData.head.queryExecution.logical.collectLeaves().size
+      assert(leaves <= Loop.LeafBound, s"index carries $leaves leaves after $i additions")
+    }
+    assert(grown.getModelData.head.count() == 5L + 40L)
+    val again = grown.transform(later).head.select("matched_id", "is_duplicate").head()
+    assert(again.getLong(0) == 13L && again.getBoolean(1))
   }
 }

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
+import graft.iteration.Loop
 import org.apache.spark.sql.functions.col
 
 /** Incremental perceptual dedup: index a corpus's 64-bit fingerprints
@@ -81,13 +82,13 @@ class HammingIndexerSpec extends SparkSpec {
   test("addToIndex over many micro-batches keeps plan depth bounded (CompactEvery)") {
     import spark.implicits._
     var model = indexer.fit(corpus)
-    val rounds = HammingIndexModel.CompactEvery * 3 + 5 // forces 3 compactions
+    val rounds = Loop.LeafBound * 3 + 5 // forces 3 compactions
     (1 to rounds).foreach { i =>
       val one = Seq((1000L + i, 0x1111222233334444L + i * 1024L)).toDF("id", "fp")
       model = model.addToIndex(one)
     }
     val planNodes = model.getModelData.head.queryExecution.logical.collectLeaves().size
-    assert(planNodes <= HammingIndexModel.CompactEvery + 2,
+    assert(planNodes <= Loop.LeafBound + 2,
       s"plan carries $planNodes leaves after $rounds additions")
     assert(model.getModelData.head.count() == corpus.count() + rounds)
     val last = Seq((9999L, 0x1111222233334444L + rounds * 1024L)).toDF("id", "fp")

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.ml.linalg.Vectors
 import graft.SparkSpec
+import graft.iteration.Loop
 
 /** Incremental dedup: index a corpus once, flag later batches against
   * it, grow the index batch-over-batch, survive save/load. */
@@ -68,17 +69,17 @@ class MinHashIndexerSpec extends SparkSpec {
   test("addToIndex over many micro-batches keeps plan depth bounded (CompactEvery)") {
     import spark.implicits._
     var model = indexer.fit(corpus)
-    val rounds = MinHashIndexModel.CompactEvery * 3 + 5 // forces 3 compactions
+    val rounds = Loop.LeafBound * 3 + 5 // forces 3 compactions
     (1 to rounds).foreach { i =>
       val one = Seq((1000L + i, vec(i % 150, i % 150 + 1, i % 150 + 2, 190, 191, 192, 193, 194)))
         .toDF("id", "features")
       model = model.addToIndex(one)
     }
     // without compaction the logical plan would carry `rounds` Union
-    // nodes; with localCheckpoint every CompactEvery it is bounded by
-    // the residue since the last compaction
+    // nodes; Loop.append's cut bounds it by the residue since the last
+    // compaction
     val planNodes = model.getModelData.head.queryExecution.logical.collectLeaves().size
-    assert(planNodes <= MinHashIndexModel.CompactEvery + 2,
+    assert(planNodes <= Loop.LeafBound + 2,
       s"plan carries $planNodes leaves after $rounds additions")
     assert(model.getModelData.head.count() == corpus.count() + rounds)
     // the grown index still answers: an exact copy of the last added doc

@@ -76,4 +76,25 @@ class LoopSpec extends SparkSpec {
     val vs = r.state.orderBy("v").as[Double].collect().toSeq
     assert(vs == Seq(16.0 / 64, 32.0 / 64))
   }
+
+  test("append: one-leaf appends are cut on every LeafBound-th append, rows intact") {
+    import spark.implicits._
+    var grown = Seq(0).toDF("x")
+    var lastCut = 0
+    (1 to 100).foreach { i =>
+      grown = Loop.append(grown, Seq(i).toDF("x"))
+      val plan = grown.queryExecution.logical
+      val leaves = plan.collectLeaves().size
+      assert(leaves <= Loop.LeafBound, s"$leaves leaves after append $i")
+      if (leaves == 1) {
+        // a cut frame is one LogicalRDD, made on the LeafBound-th
+        // append after the previous cut
+        assert(plan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD], plan.treeString)
+        assert(i - lastCut == Loop.LeafBound, s"cut at append $i, previous at $lastCut")
+        lastCut = i
+      } else assert(leaves == i - lastCut + 1)
+    }
+    assert(lastCut == 3 * Loop.LeafBound)
+    assert(grown.as[Int].collect().sorted.toSeq == (0 to 100))
+  }
 }

@@ -86,6 +86,22 @@ class FuzzyJoinerSpec extends SparkSpec {
       s"missing=${(twoSided -- self).take(5)} extra=${(self -- twoSided).take(5)}")
   }
 
+  test("a self-join whose input raises in a job leaves nothing stored") {
+    import org.apache.spark.sql.functions.{col, concat, lit, raise_error, when}
+    // a range, repartitioned, so the raise runs in a job: over a local
+    // relation the optimizer would fold the pushed-down null filter
+    // (and raise) while the first cache is planned, before it exists
+    val df = spark.range(0, 6, 1, 2).repartition(2)
+      .select(col("id"), when(col("id") === 4L, raise_error(lit("bad row")))
+        .otherwise(concat(lit("word"), col("id").cast("string"))).as("s"))
+    val residue = residueOf {
+      val e = intercept[Exception] { joiner.setMaxDistance(1).transform(df, df) }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("bad row")), e)
+    }
+    assert(residue == (Set.empty, false), s"a failing call left (RDDs, cache entry) $residue")
+  }
+
   test("param save/load round-trip") {
     val dir = tmpDir()
     joiner.setMaxDistance(3).setGramLength(4).save(dir)

@@ -9,7 +9,7 @@ import graft.SparkSpec
  * Long-run lineage behavior of OnlineLogisticRegressionModel.update —
  * the foreachBatch surface (StreamingTrainer calls exactly this per
  * micro-batch). Each update unions one version row onto the model
- * stream; without the CompactEvery localCheckpoint, plan depth (and
+ * stream; without Loop.append's local checkpoint, plan depth (and
  * the Catalyst re-analysis inside latestRow) grows per batch — O(n²)
  * total work and a stack-overflow risk over a thousand-batch run.
  * Reference semantics: OnlineLogisticRegressionModel.java:68 (the
@@ -63,9 +63,8 @@ class OnlineLrLineageSpec extends SparkSpec {
     }
     batch.unpersist(blocking = false)
 
-    // plan depth stays bounded: the chain never exceeds CompactEvery
-    // unions over a checkpoint leaf. Unbounded lineage would be
-    // >3000 nodes here.
+    // plan depth stays bounded: the chain never holds more than
+    // Loop.LeafBound leaves. Unbounded lineage would be >3000 nodes here.
     assert(maxNodes < 300, s"plan grew to $maxNodes nodes — lineage not being compacted")
 
     // wall time stays flat: compare medians of an early (post-JIT)

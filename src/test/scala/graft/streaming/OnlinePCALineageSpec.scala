@@ -4,11 +4,12 @@ import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.iteration.Loop
 
 /**
  * Long-run lineage behavior of OnlinePCAModel.update — the
  * foreachBatch surface. Each update unions one version row onto the
- * model stream; without the CompactEvery localCheckpoint the plan
+ * model stream; without Loop.append's local checkpoint the plan
  * (and Catalyst re-analysis) grows per batch — quadratic total work
  * over a days-long stream. Also pins the round-14 storage contract:
  * the exact-resume moments (sum/gram) live ONLY on the latest
@@ -30,7 +31,7 @@ class OnlinePCALineageSpec extends SparkSpec {
   test("many foreachBatch updates: bounded plan depth via CompactEvery localCheckpoint") {
     var model = new OnlinePCAModel().setInputCol("vec").setOutputCol("proj")
     model.set(model.k, 2)
-    val rounds = (OnlinePCAModel.CompactEvery * 3 + 5).toInt // forces 3 compactions
+    val rounds = Loop.LeafBound * 3 + 5 // forces 3 compactions
     val batch = batchDf(0).persist()
     batch.count()
     var maxSinceCompact = 0
@@ -47,7 +48,7 @@ class OnlinePCALineageSpec extends SparkSpec {
     // each un-compacted update adds a union + two moment-stripping
     // projections over the checkpoint leaf; unbounded lineage would
     // be >300 nodes here
-    assert(maxSinceCompact <= (OnlinePCAModel.CompactEvery * 4 + 8).toInt,
+    assert(maxSinceCompact <= Loop.LeafBound * 4 + 8,
       s"plan grew to $maxSinceCompact nodes — lineage not being compacted")
     // the stream itself is intact: one row per version, latest wins
     val md = model.getModelData.head

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.SparkSpec
+import graft.iteration.Loop
 
 class FrontierBuilderSpec extends SparkSpec {
 
@@ -59,9 +60,11 @@ class FrontierBuilderSpec extends SparkSpec {
     import spark.implicits._
     var m = new FrontierBuilder().setUrlCol("url").setOutputCol("f")
       .fit(Seq.empty[String].toDF("url"))
-    // 40 single-url batches cross the CompactEvery=32 boundary
+    // 40 single-url batches cross the Loop.LeafBound=32 boundary
     (0 until 40).foreach { i =>
       m = m.addCrawled(Seq(s"https://ex.com/p$i").toDF("url"))
+      val leaves = m.getModelData.head.queryExecution.logical.collectLeaves().size
+      assert(leaves <= Loop.LeafBound, s"key index carries $leaves leaves after ${i + 1} batches")
     }
     val cand = (0 until 42).map(i => s"https://ex.com/p$i").toDF("url")
     val got = rows(m.transform(cand).head)
