@@ -200,7 +200,9 @@ object Loop {
    *
    * Pass a frame no action has run on: a sameResult-equal frame that is
    * already cached would make the persist a no-op, and [[release]] would
-   * then drop the other holder's cache.
+   * then drop the other holder's cache. Two concurrent calls on one input
+   * do share entries that way; when one releases an entry the other still
+   * reads, the other's fold and later reads recompute from lineage.
    *
    * @return the stored frame (release it with [[release]]) and the fold.
    */
@@ -232,11 +234,15 @@ object Loop {
       val rows = qe.logical match {
         case r: LogicalRDD => r.rdd
         case _ =>
-          val rel = qe.sparkSession.sharedState.cacheManager
+          qe.sparkSession.sharedState.cacheManager
             .lookupCachedData(qe.sparkSession, qe.analyzed)
-            .getOrElse(throw new IllegalStateException("persisted frame has no cache entry"))
-            .cachedRepresentation
-          InMemoryTableScanExec(rel.output, Nil, rel).execute()
+            .map { c =>
+              val rel = c.cachedRepresentation
+              InMemoryTableScanExec(rel.output, Nil, rel).execute()
+            }
+            // the entry was released by the call it was shared with: plan
+            // the frame afresh, so its rows come from its lineage
+            .getOrElse(qe.sparkSession.sessionState.executePlan(qe.logical).executedPlan.execute())
       }
       val schema = stored.schema
       val partials = rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {

@@ -97,4 +97,18 @@ class LoopSpec extends SparkSpec {
     assert(lastCut == 3 * Loop.LeafBound)
     assert(grown.as[Int].collect().sorted.toSeq == (0 to 100))
   }
+
+  test("fold reads a stored frame whose shared cache entry another holder released") {
+    // two sameResult-equal frames share one cache entry, as the rounds of
+    // two concurrent calls on one input do; the first holder's release
+    // must not fail the second's fold
+    def frame = spark.range(0, 10, 1, 2).select((col("id") + 1).as("x"))
+    val other = frame.persist()
+    other.count()
+    val (kept, n) = Loop.materialize(frame, checkpoint = false, 0L)((c, _) => c + 1, _ + _)
+    assert(n == 10L)
+    other.unpersist(blocking = true)
+    assert(Loop.fold(kept, 0L)((s, r) => s + r.getLong(0), _ + _) == 55L)
+    Loop.release(kept)
+  }
 }
