@@ -41,16 +41,6 @@ private[graft] object LinearTraining {
     }
   }
 
-  /** Persisted training points plus their dimension: the dimension read
-    * doubles as the cache-warming first job instead of a throwaway scan
-    * (SGD's persist of the same RDD is a no-op; its unpersist releases it). */
-  def pointsWithDim(df: DataFrame, featuresCol: String, labelCol: String, weightCol: String,
-      requireBinomialLabels: Boolean = false) = {
-    val pts = points(df, featuresCol, labelCol, weightCol, requireBinomialLabels)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (pts, pts.first().features.size)
-  }
-
   def coefficientDf(spark: SparkSession, coeff: Array[Double]): DataFrame = {
     import spark.implicits._
     Seq(Tuple1(coeff)).toDF("coefficient")
@@ -79,9 +69,9 @@ class LogisticRegression extends Estimator[LogisticRegression, LogisticRegressio
     require(getMultiClass == "auto" || getMultiClass == "binomial",
       LinearTraining.MultinomialUnsupported)
     val df = inputs.head
-    val (pts, dim) = LinearTraining.pointsWithDim(
+    val pts = LinearTraining.points(
       df, getFeaturesCol, getLabelCol, getWeightCol, requireBinomialLabels = true)
-    val (coeff, _) = SGD.optimize(pts, new Array[Double](dim), BinaryLogisticLoss, sgdParams)
+    val (coeff, _) = SGD.optimize(pts, BinaryLogisticLoss, sgdParams)
     // model data = (coefficient, modelVersion) — reference
     // LogisticRegressionModelData.java:36; a batch fit is version 0
     val m = new LogisticRegressionModel()
@@ -163,8 +153,8 @@ class LinearSVC extends Estimator[LinearSVC, LinearSVCModel]
   override def fit(inputs: DataFrame*): LinearSVCModel = {
     require(inputs.size == 1)
     val df = inputs.head
-    val (pts, dim) = LinearTraining.pointsWithDim(df, getFeaturesCol, getLabelCol, getWeightCol)
-    val (coeff, _) = SGD.optimize(pts, new Array[Double](dim), HingeLoss, sgdParams)
+    val pts = LinearTraining.points(df, getFeaturesCol, getLabelCol, getWeightCol)
+    val (coeff, _) = SGD.optimize(pts, HingeLoss, sgdParams)
     val m = new LinearSVCModel()
       .setModelData(LinearTraining.coefficientDf(df.sparkSession, coeff))
     copyParamsTo(m)

@@ -82,31 +82,50 @@ case class SGDParams(
  * allReduceSum of [cumGradient | totalWeight | totalLoss], driver
  * update + regularization, TerminateOnMaxIterOrTol on loss/weight).
  *
- * Each partition advances a deterministic batch offset per iteration
- * (same round-robin slicing as the reference's nextBatchOffset state);
- * gradients reduce via treeAggregate (the allReduce analogue).
+ * One job stores the training points and returns, per partition, its
+ * size and the feature size of its first point: the sizes fix the batch
+ * slicing and the first non-empty partition's feature size is the model
+ * dimension. The model starts at zero. Each round is then one job over
+ * the stored points: each partition advances a deterministic batch
+ * offset (same round-robin slicing as the reference's nextBatchOffset
+ * state) and gradients reduce via treeReduce (the allReduce analogue).
+ * The stored points are released when the call ends, also when it fails.
  */
 object SGD {
 
   def optimize(
       data: RDD[LabeledPointWithWeight],
-      initModel: Array[Double],
       lossFunc: LossFunc,
       params: SGDParams): (Array[Double], Array[Double]) = {
-
     val cached = data.persist(StorageLevel.MEMORY_AND_DISK)
-    val numPartitions = cached.getNumPartitions
-    // per-partition sizes fix the batch slicing; one cheap count pass
-    val partSizes = cached.mapPartitionsWithIndex { (pid, it) =>
-      Iterator.single((pid, it.size))
-    }.collect().sortBy(_._1).map(_._2)
+    try optimizeStored(cached, lossFunc, params)
+    finally cached.unpersist(blocking = false)
+  }
+
+  private def optimizeStored(
+      cached: RDD[LabeledPointWithWeight],
+      lossFunc: LossFunc,
+      params: SGDParams): (Array[Double], Array[Double]) = {
+    val loaded = cached.mapPartitions { it =>
+      var size = 0
+      var dim = -1
+      while (it.hasNext) {
+        val p = it.next()
+        if (size == 0) dim = p.features.size
+        size += 1
+      }
+      Iterator.single((size, dim))
+    }.collect()
+    val partSizes = loaded.map(_._1)
+    val dim = loaded.collectFirst { case (size, d) if size > 0 => d }
+      .getOrElse(throw new UnsupportedOperationException("SGD: no training points"))
+    val numPartitions = partSizes.length
 
     val localBatchSizes = Array.tabulate(numPartitions) { pid =>
       params.globalBatchSize / numPartitions +
         (if (params.globalBatchSize % numPartitions > pid) 1 else 0)
     }
 
-    val dim = initModel.length
     val offsets = new Array[Int](numPartitions)
 
     val sc = cached.sparkContext
@@ -116,7 +135,7 @@ object SGD {
     // stream). The loop utility records the per-round criterion as
     // the loss history.
     val result = graft.iteration.Loop.iterate(
-        initModel.clone(), graft.iteration.TerminateOnMaxIterOrTol(params.maxIter, params.tol)) {
+        new Array[Double](dim), graft.iteration.TerminateOnMaxIterOrTol(params.maxIter, params.tol)) {
       (w, _) =>
       val bcW = sc.broadcast(w)
       val offsetsNow = offsets.clone()
@@ -167,7 +186,6 @@ object SGD {
       val criterion = if (totalWeight > 0) totalLoss / totalWeight else 0.0
       (w, Some(criterion))
     }
-    cached.unpersist(blocking = false)
     (result.state, result.history)
   }
 

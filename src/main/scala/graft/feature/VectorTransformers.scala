@@ -1,8 +1,9 @@
 package graft.feature
 
-import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector, Vectors}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ml.linalg.{DenseVector, SQLDataTypes, SparseVector, Vector, Vectors}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.NumericType
 import graft.api.{OneToOne, StageLoader, Transformer}
 import graft.param._
 import graft.util.ReadWrite
@@ -210,9 +211,14 @@ class Interaction extends Transformer[Interaction] with OneToOne[Interaction]
     with HasInputCols[Interaction] with HasOutputCol[Interaction] {
 
   override protected def transformOne(df: DataFrame): DataFrame = {
-    val interact = udf { cols: Seq[Vector] =>
-      if (cols == null || cols.exists(_ == null)) null
+    val (inputs, isNumeric) = VectorAssembler.inputStruct(df, getInputCols)
+    val interact = udf { row: Row =>
+      if ((0 until row.length).exists(row.isNullAt)) null
       else {
+        // a number is a 1-element dense vector
+        val cols = Seq.tabulate(row.length) { i =>
+          if (isNumeric(i)) Vectors.dense(row.getDouble(i)) else row.getAs[Vector](i)
+        }
         // fold outer products left-to-right; pairs of (index, value)
         var size = 1
         var pairs: Array[(Int, Double)] = Array((0, 1.0))
@@ -243,16 +249,7 @@ class Interaction extends Transformer[Interaction] with OneToOne[Interaction]
         }
       }
     }
-    val schema = df.schema
-    val vecCols = getInputCols.map { c =>
-      schema(c).dataType match {
-        case _: org.apache.spark.sql.types.NumericType =>
-          when(col(c).isNull, lit(null))
-            .otherwise(org.apache.spark.ml.functions.array_to_vector(array(col(c).cast("double"))))
-        case _ => col(c)
-      }
-    }
-    df.withColumn(getOutputCol, interact(array(vecCols.toIndexedSeq: _*)))
+    df.withColumn(getOutputCol, interact(inputs))
   }
 }
 object Interaction extends StageLoader[Interaction] {
@@ -438,9 +435,18 @@ object DCT extends StageLoader[DCT] {
 
 /**
  * VectorAssembler: merge numeric/vector columns into one vector;
- * handleInvalid keep (null/NaN filled) / skip (drop row) / error;
- * dense vs sparse output chosen by nnz ratio (reference RATIO = 1.5).
+ * handleInvalid keep (null/NaN filled) / skip (drop row) / error.
  * Reference: feature/vectorassembler/VectorAssembler.java:77.
+ *
+ * One UDF over one struct of the inputs (numerics cast to double,
+ * vectors as they are) assembles each row in two passes: the first sums
+ * the output size and the stored-entry count and runs the checks, the
+ * second copies every input into one preallocated output. The output is
+ * dense when stored entries × 1.5 > size (the reference's RATIO), else
+ * sparse; a sparse output stores every entry its inputs store, zeros
+ * included (a number's, a dense vector's, a sparse vector's stored ones).
+ * Under keep a null input fills its declared size with NaN and a present
+ * vector takes its actual size.
  */
 class VectorAssembler extends Transformer[VectorAssembler] with OneToOne[VectorAssembler]
     with HasInputCols[VectorAssembler] with HasOutputCol[VectorAssembler]
@@ -458,48 +464,67 @@ class VectorAssembler extends Transformer[VectorAssembler] with OneToOne[VectorA
     require(cols.length == sizes.length, "inputCols and inputSizes must align")
     val invalid = getHandleInvalid
     val keep = invalid == HandleInvalid.KEEP
+    val (inputs, isNumeric) = VectorAssembler.inputStruct(df, cols)
+    val n = cols.length
 
-    val schema = df.schema
-    val isNumeric = cols.map(c =>
-      schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
-
-    // Null columns stay null in the array; numerics become 1-d vectors so
-    // the UDF sees a uniform Seq[Vector]. `wasNumeric` recovers the
-    // reference's NaN-is-invalid check, which applies to numbers only.
-    val assemble = udf { parts: Seq[Vector] =>
+    val assemble = udf { row: Row =>
       try {
-        val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-        var offset = 0
+        var size = 0
         var nnz = 0
         var i = 0
-        while (i < parts.length) {
-          parts(i) match {
-            case null =>
-              if (!keep) throw new RuntimeException(
-                "Input column value is null. Please check the input data or using handleInvalid = 'keep'.")
-              var j = 0
-              while (j < sizes(i)) { buf += ((offset + j, Double.NaN)); j += 1 }
-              nnz += sizes(i)
-              offset += sizes(i)
-            case v: Vector =>
-              if (isNumeric(i) && v(0).isNaN && !keep) throw new RuntimeException(
-                "Encountered NaN while assembling a row with handleInvalid = 'error'.")
-              if (!keep && v.size != sizes(i)) throw new RuntimeException(
-                s"Input vector/number size does not meet with expected. Expected size: ${sizes(i)}, actual size: ${v.size}.")
-              v.foreachActive { (j, x) => buf += ((offset + j, x)) }
-              nnz += v.numActives
-              offset += v.size
+        while (i < n) {
+          if (row.isNullAt(i)) {
+            if (!keep) throw new RuntimeException(
+              "Input column value is null. Please check the input data or using handleInvalid = 'keep'.")
+            size += sizes(i)
+            nnz += sizes(i)
+          } else if (isNumeric(i)) {
+            if (!keep && row.getDouble(i).isNaN) throw new RuntimeException(
+              "Encountered NaN while assembling a row with handleInvalid = 'error'.")
+            if (!keep && sizes(i) != 1) throw VectorAssembler.sizeMismatch(sizes(i), 1)
+            size += 1
+            nnz += 1
+          } else {
+            val v = row.getAs[Vector](i)
+            if (!keep && v.size != sizes(i)) throw VectorAssembler.sizeMismatch(sizes(i), v.size)
+            size += v.size
+            nnz += v.numActives
           }
           i += 1
         }
-        val pairs = buf.toArray
-        if (nnz * 1.5 > offset) {
-          val values = new Array[Double](offset)
-          pairs.foreach { case (j, x) => values(j) = x }
-          Vectors.dense(values)
-        } else {
-          Vectors.sparse(offset, pairs.map(_._1), pairs.map(_._2))
+        val dense = nnz * 1.5 > size
+        val values = new Array[Double](if (dense) size else nnz)
+        val indices = if (dense) null else new Array[Int](nnz)
+        // output position j gets x: in place when dense, else as the next
+        // stored entry (positions only increase)
+        var k = 0
+        def put(j: Int, x: Double): Unit =
+          if (dense) values(j) = x else { indices(k) = j; values(k) = x; k += 1 }
+        var offset = 0
+        i = 0
+        while (i < n) {
+          if (row.isNullAt(i)) {
+            var j = 0
+            while (j < sizes(i)) { put(offset + j, Double.NaN); j += 1 }
+            offset += sizes(i)
+          } else if (isNumeric(i)) {
+            put(offset, row.getDouble(i))
+            offset += 1
+          } else {
+            val v = row.getAs[Vector](i)
+            v match {
+              case d: DenseVector =>
+                var j = 0
+                while (j < d.size) { put(offset + j, d.values(j)); j += 1 }
+              case s: SparseVector =>
+                var j = 0
+                while (j < s.indices.length) { put(offset + s.indices(j), s.values(j)); j += 1 }
+            }
+            offset += v.size
+          }
+          i += 1
         }
+        if (dense) Vectors.dense(values) else Vectors.sparse(size, indices, values)
       } catch {
         case e: Exception if invalid != HandleInvalid.ERROR => null
         case e: Exception =>
@@ -507,20 +532,29 @@ class VectorAssembler extends Transformer[VectorAssembler] with OneToOne[VectorA
       }
     }
 
-    val inputExprs = cols.zipWithIndex.map { case (c, i) =>
-      if (isNumeric(i))
-        when(col(c).isNull, lit(null))
-          .otherwise(org.apache.spark.ml.functions.array_to_vector(array(col(c).cast("double"))))
-      else col(c)
-    }
-    val out = df.withColumn(getOutputCol,
-      assemble(array(inputExprs.toIndexedSeq: _*)))
+    val out = df.withColumn(getOutputCol, assemble(inputs))
     if (invalid == HandleInvalid.SKIP) out.filter(col(getOutputCol).isNotNull) else out
   }
 }
 object VectorAssembler extends StageLoader[VectorAssembler] {
   def load(spark: SparkSession, path: String): VectorAssembler =
     ReadWrite.applyParams(new VectorAssembler, path)
+
+  private def sizeMismatch(expected: Int, actual: Int) = new RuntimeException(
+    s"Input vector/number size does not meet with expected. Expected size: $expected, actual size: $actual.")
+
+  /** `cols` as one struct for a row UDF (numerics cast to double, vectors
+    * as they are), and which of its fields are numeric. */
+  private[feature] def inputStruct(df: DataFrame, cols: Seq[String]): (Column, Array[Boolean]) = {
+    val isNumeric = cols.map(c => df.schema(c).dataType match {
+      case _: NumericType => true
+      case SQLDataTypes.VectorType => false
+      case t => throw new IllegalArgumentException(
+        s"Input column $c must be numeric or a vector, not ${t.simpleString}")
+    }).toArray
+    val fields = cols.zip(isNumeric).map { case (c, num) => if (num) col(c).cast("double") else col(c) }
+    (struct(fields: _*), isNumeric)
+  }
 }
 
 /**

@@ -19,8 +19,8 @@ class LinearRegression extends Estimator[LinearRegression, LinearRegressionModel
   override def fit(inputs: DataFrame*): LinearRegressionModel = {
     require(inputs.size == 1)
     val df = inputs.head
-    val (pts, dim) = LinearTraining.pointsWithDim(df, getFeaturesCol, getLabelCol, getWeightCol)
-    val (coeff, _) = SGD.optimize(pts, new Array[Double](dim), LeastSquareLoss, sgdParams)
+    val pts = LinearTraining.points(df, getFeaturesCol, getLabelCol, getWeightCol)
+    val (coeff, _) = SGD.optimize(pts, LeastSquareLoss, sgdParams)
     val m = new LinearRegressionModel()
       .setModelData(LinearTraining.coefficientDf(df.sparkSession, coeff))
     copyParamsTo(m)

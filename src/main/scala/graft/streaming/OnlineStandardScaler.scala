@@ -130,11 +130,15 @@ class OnlineStandardScalerModel extends Model[OnlineStandardScalerModel]
   override def getModelData: Array[DataFrame] = Array(modelData)
 
   // exact cumulative moments across update() calls; when resuming from
-  // a fit() model they are recovered once from (count, mean, std) —
-  // css = std²·(n−1) + n·mean², exact algebra up to one sqrt round-trip
+  // a fit() or loaded model they are recovered once from the latest
+  // version's (count, mean, std) — css = std²·(n−1) + n·mean², exact
+  // algebra up to one sqrt round-trip
   private var cumN: Long = -1L
   private var cumS: Array[Double] = _
   private var cumSS: Array[Double] = _
+  // carried with the moments so a chained update() never pays a Spark
+  // job to re-read the latest row it itself just wrote
+  private var cumVersion: Long = -1L
 
   /**
    * Structured Streaming hook: treat one micro-batch as one window —
@@ -154,26 +158,24 @@ class OnlineStandardScalerModel extends Model[OnlineStandardScalerModel]
         .as(Seq("dim", "value")))
       .groupBy("dim")
       .agg(count(lit(1)).as("n"), sum("value").as("s"), sum(col("value") * col("value")).as("ss"))
-      .orderBy("dim").collect()
+      .collect().sortBy(_.getInt(0))
     if (partials.isEmpty) return this
 
     val dim = partials.length
-    val (latestVersion, prevN) = if (modelData == null) (-1L, 0L) else {
-      val rows = modelData.orderBy(col("version").desc).limit(1).collect()
-      if (rows.isEmpty) (-1L, 0L)
-      else (rows.head.getLong(0), rows.head.getLong(2))
-    }
     // local copies: update must not mutate the receiver
-    val (baseN, baseS, baseSS) =
-      if (cumN >= 0L) (cumN, cumS.clone(), cumSS.clone())
+    val (latestVersion, baseN, baseS, baseSS) =
+      if (cumN >= 0L) (cumVersion, cumN, cumS.clone(), cumSS.clone())
       else {
-        // first update: recover state from the latest persisted version
+        // first update: recover state from the latest stored version
+        val latest =
+          if (modelData == null) None
+          else modelData.orderBy(col("version").desc).limit(1).collect().headOption
         val s = new Array[Double](dim)
         val ss = new Array[Double](dim)
+        val prevN = latest.fold(0L)(_.getAs[Long]("count"))
         if (prevN > 0L) {
-          val latest = modelData.orderBy(col("version").desc).head()
-          val mean = latest.getAs[Vector]("mean").toArray
-          val std = latest.getAs[Vector]("std").toArray
+          val mean = latest.get.getAs[Vector]("mean").toArray
+          val std = latest.get.getAs[Vector]("std").toArray
           var d = 0
           while (d < dim) {
             s(d) = mean(d) * prevN
@@ -181,7 +183,7 @@ class OnlineStandardScalerModel extends Model[OnlineStandardScalerModel]
             d += 1
           }
         }
-        (prevN, s, ss)
+        (latest.fold(-1L)(_.getAs[Long]("version")), prevN, s, ss)
       }
     val n = partials.head.getLong(1)
     val newN = baseN + n
@@ -208,6 +210,7 @@ class OnlineStandardScalerModel extends Model[OnlineStandardScalerModel]
     m.cumN = newN
     m.cumS = baseS
     m.cumSS = baseSS
+    m.cumVersion = latestVersion + 1
     m
   }
 

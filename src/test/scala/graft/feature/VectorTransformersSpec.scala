@@ -1,6 +1,7 @@
 package graft.feature
 
 import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector, Vectors}
+import org.apache.spark.sql.DataFrame
 import graft.SparkSpec
 
 class VectorTransformersSpec extends SparkSpec {
@@ -151,6 +152,108 @@ class VectorTransformersSpec extends SparkSpec {
     val skip = new VectorAssembler().setInputCols("num", "vec").setOutputCol("f")
       .setInputSizes(1, 2).setHandleInvalid("skip")
     assert(skip.transform(df).head.count() == 1)
+  }
+
+  // Exact layout of an output vector: its class, size, stored indices and
+  // stored values. Double.toString round-trips every double, so equal
+  // strings mean equal bits (NaN and -0.0 included).
+  private def layout(v: Vector): (String, Int, Seq[Int], Seq[String]) = v match {
+    case d: DenseVector  => ("dense", d.size, Nil, d.values.toSeq.map(_.toString))
+    case s: SparseVector => ("sparse", s.size, s.indices.toSeq, s.values.toSeq.map(_.toString))
+  }
+  private def denseL(xs: Double*) = ("dense", xs.length, Nil, xs.map(_.toString))
+  private def sparseL(size: Int, idx: Seq[Int], xs: Double*) = ("sparse", size, idx, xs.map(_.toString))
+
+  private def assembled(df: DataFrame, invalid: String, sizes: Int*)(cols: String*) =
+    new VectorAssembler().setInputCols(cols: _*).setOutputCol("out")
+      .setInputSizes(sizes: _*).setHandleInvalid(invalid)
+      .transform(df).head.orderBy("id").select("id", "out").collect()
+      .map(r => r.getInt(0) -> layout(r.getAs[Vector](1))).toSeq
+
+  test("VectorAssembler golden: every numeric type, dense and sparse inputs, explicit zeros") {
+    import spark.implicits._
+    val sv: Vector = Vectors.sparse(30, Array(1, 3), Array(7.0, 0.0))
+    val dv30: Vector = Vectors.dense(Array.tabulate(30)(_ * 0.5))
+    val df = Seq(
+      (0, 1, 2L, 0.5f, BigDecimal("1.25"), 0.0, Vectors.dense(3.0, 0.0), sv),
+      (1, -3, 1L << 40, -2.5f, BigDecimal("-0.75"), 1e-3, Vectors.dense(-1.0, 2.0), dv30))
+      .toDF("id", "i", "l", "f", "dec", "d", "dv", "sv")
+    val got = assembled(df, "error", 1, 1, 1, 1, 1, 2, 30)("i", "l", "f", "dec", "d", "dv", "sv")
+    // row 0: 9 stored of 37 (9 · 1.5 <= 37) -> sparse; the zero numeric, the
+    // dense input's zero and the sparse input's stored zero stay stored
+    assert(got(0) == 0 -> sparseL(37, Seq(0, 1, 2, 3, 4, 5, 6, 8, 10),
+      1.0, 2.0, 0.5, 1.25, 0.0, 3.0, 0.0, 7.0, 0.0))
+    assert(got(1) == 1 -> denseL(
+      Seq(-3.0, (1L << 40).toDouble, -2.5, -0.75, 1e-3, -1.0, 2.0) ++ (0 until 30).map(_ * 0.5): _*))
+  }
+
+  test("VectorAssembler golden keep: null numeric and vector, NaN, sizes taken from the value") {
+    import spark.implicits._
+    val df = Seq(
+      (0, None, Some(Vectors.dense(1.0, 2.0)), 3.0),
+      (1, Some(4.0), None, Double.NaN),
+      (2, Some(0.0), Some(Vectors.sparse(5, Array(4), Array(9.0))), 0.0))
+      .toDF("id", "a", "v", "b")
+    // `a` is declared size 2: a null fills 2 slots, a present number takes 1;
+    // a size-5 vector declared size 2 takes 5
+    val got = assembled(df, "keep", 2, 2, 1)("a", "v", "b")
+    assert(got == Seq(
+      0 -> denseL(Double.NaN, Double.NaN, 1.0, 2.0, 3.0),
+      1 -> denseL(4.0, Double.NaN, Double.NaN, Double.NaN),
+      2 -> sparseL(7, Seq(0, 5, 6), 0.0, 9.0, 0.0)))
+  }
+
+  test("VectorAssembler golden skip: null, NaN and wrong-size rows are dropped") {
+    import spark.implicits._
+    val df = Seq(
+      (0, None, Some(Vectors.dense(1.0, 2.0)), 3.0),
+      (1, Some(1.0), None, 2.0),
+      (2, Some(1.0), Some(Vectors.dense(1.0, 2.0)), Double.NaN),
+      (3, Some(1.0), Some(Vectors.dense(1.0, 2.0, 3.0)), 2.0),
+      (4, Some(5.0), Some(Vectors.sparse(2, Array(1), Array(6.0))), 0.0),
+      (5, Some(0.0), Some(Vectors.sparse(2, Array.empty[Int], Array.empty[Double])), 0.0))
+      .toDF("id", "a", "v", "b")
+    assert(assembled(df, "skip", 1, 2, 1)("a", "v", "b") == Seq(
+      4 -> denseL(5.0, 0.0, 6.0, 0.0),
+      5 -> sparseL(4, Seq(0, 3), 0.0, 0.0)))
+  }
+
+  test("VectorAssembler golden error: the null, NaN and size-mismatch messages") {
+    import spark.implicits._
+    def messageOf(a: Option[Double], v: Vector, b: Double): Seq[String] = {
+      val df = Seq((0, a, Option(v), b)).toDF("id", "a", "v", "b")
+      val e = intercept[Exception](assembled(df, "error", 1, 2, 1)("a", "v", "b"))
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      msgs(e)
+    }
+    val prefix = "Vector assembler failed with exception : java.lang.RuntimeException: "
+    val cases = Seq(
+      messageOf(None, Vectors.dense(1.0, 2.0), 3.0) ->
+        "Input column value is null. Please check the input data or using handleInvalid = 'keep'.",
+      messageOf(Some(1.0), Vectors.dense(1.0, 2.0), Double.NaN) ->
+        "Encountered NaN while assembling a row with handleInvalid = 'error'.",
+      messageOf(Some(1.0), Vectors.dense(1.0, 2.0, 3.0), 2.0) ->
+        "Input vector/number size does not meet with expected. Expected size: 2, actual size: 3.")
+    cases.foreach { case (msgs, expected) =>
+      assert(msgs.contains(prefix + expected), msgs.mkString(" | "))
+    }
+  }
+
+  test("Interaction golden: numeric, dense and sparse inputs; a null input gives null") {
+    import spark.implicits._
+    val df = Seq(
+      (0, Option(2), Vectors.sparse(3, Array(0, 2), Array(2.0, 0.0)), Vectors.dense(1.0, -1.0)),
+      (1, Option(3), Vectors.dense(1.0, 2.0, 0.0), Vectors.dense(0.5, 2.0)),
+      (2, Option.empty[Int], Vectors.dense(1.0, 2.0, 0.0), Vectors.dense(0.5, 2.0)))
+      .toDF("id", "i", "s", "d")
+    val got = new Interaction().setInputCols("i", "s", "d").setOutputCol("out")
+      .transform(df).head.orderBy("id").select("out").collect().map(_.getAs[Vector](0))
+    // a sparse factor makes the product sparse, its stored zero (and the
+    // -0.0 it makes) kept; all-dense factors make it dense
+    assert(layout(got(0)) == sparseL(6, Seq(0, 1, 4, 5), 4.0, -4.0, 0.0, -0.0))
+    assert(layout(got(1)) == denseL(1.5, 6.0, 3.0, 12.0, 0.0, 0.0))
+    assert(got(2) == null)
   }
 
   test("VectorSlicer dense and sparse") {

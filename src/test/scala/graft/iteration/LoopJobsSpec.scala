@@ -1,10 +1,6 @@
 package graft.iteration
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
-import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 /**
@@ -14,28 +10,6 @@ import org.apache.spark.sql.DataFrame
  * jobs of a job group put around the call and the read of its result.
  */
 class LoopJobsSpec extends SparkSpec {
-
-  /** Jobs launched by `body` (inside its own job group). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"loop-jobs-${System.nanoTime()}"
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try body
-    finally {
-      sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get()
-  }
 
   private def consume(df: DataFrame): Unit = {
     df.write.format("noop").mode("overwrite").save()
@@ -214,5 +188,64 @@ class LoopJobsSpec extends SparkSpec {
     // exchanges, the checkpoint); the caller's read 1 (35 when raw
     // purchaser counts sent this input down the capped arrays path)
     assert(jobs == 3 + 2 + 2 + 6 + 1, s"Swing launched $jobs jobs")
+  }
+
+  /** 103 points with 3 features in 4 RDD partitions of 25, 26, 26 and 26
+    * rows: reading the frame launches no job of its own. */
+  private def linearFrame(label: (Double, Int) => Double): DataFrame = {
+    import spark.implicits._
+    val rows = (0 until 103).map { i =>
+      val x = Array(math.sin(i), math.cos(i * 0.7), (i % 7) - 3.0)
+      (org.apache.spark.ml.linalg.Vectors.dense(x), label(0.8 * x(0) - 1.2 * x(1) + 0.3 * x(2), i))
+    }
+    spark.sparkContext.parallelize(rows, 4).toDF("features", "label")
+  }
+  private val binaryLabel = (z: Double, i: Int) => if (z + 0.5 * math.sin(i * 13.0) > 0) 1.0 else 0.0
+  private val realLabel = (z: Double, i: Int) => z + 0.1 * math.cos(i * 5.0)
+
+  /** Jobs of one linear fit with `maxIter = 5` rounds (batches of 8, 8, 7
+    * and 7 points, so every partition's batch window wraps once), and the
+    * fitted coefficients. */
+  private def linearFit(df: DataFrame)(
+      fit: DataFrame => graft.api.Model[_]): (Int, Array[Double]) = {
+    var model: graft.api.Model[_] = null
+    val jobs = jobsOf { model = fit(df) }
+    (jobs, graft.classification.LinearTraining.loadCoefficient(model.getModelData.head))
+  }
+
+  // SGD's reduce merges the partitions' partial gradients in task
+  // completion order, so the last bit of a sum may differ between runs
+  private def assertCoefficients(got: Array[Double], expected: Array[Double]): Unit =
+    assert(got.length == expected.length && got.zip(expected).forall { case (g, e) =>
+      math.abs(g - e) <= 1e-12 * math.max(1.0, math.abs(e))
+    }, got.mkString(", "))
+
+  test("LogisticRegression.fit: one job stores the points, then one job per SGD round") {
+    val (jobs, coeff) = linearFit(linearFrame(binaryLabel)) { df =>
+      new graft.classification.LogisticRegression().setMaxIter(5).setTol(0.0)
+        .setGlobalBatchSize(30).setLearningRate(0.5).fit(df)
+    }
+    // 7 when the dimension was read by a first job over partition 0 and
+    // the partition sizes by a second job over all of them
+    assert(jobs == 1 + 5, s"LogisticRegression.fit launched $jobs jobs")
+    assertCoefficients(coeff, Array(0.3419402216362519, -0.4593909270737392, 0.37396620048025553))
+  }
+
+  test("LinearSVC.fit: one job stores the points, then one job per SGD round") {
+    val (jobs, coeff) = linearFit(linearFrame(binaryLabel)) { df =>
+      new graft.classification.LinearSVC().setMaxIter(5).setTol(0.0)
+        .setGlobalBatchSize(30).setLearningRate(0.5).fit(df)
+    }
+    assert(jobs == 1 + 5, s"LinearSVC.fit launched $jobs jobs")
+    assertCoefficients(coeff, Array(0.5953060794840304, -0.765480665980122, 0.2064102564102564))
+  }
+
+  test("LinearRegression.fit: one job stores the points, then one job per SGD round") {
+    val (jobs, coeff) = linearFit(linearFrame(realLabel)) { df =>
+      new graft.regression.LinearRegression().setMaxIter(5).setTol(0.0)
+        .setGlobalBatchSize(30).setLearningRate(0.5).fit(df)
+    }
+    assert(jobs == 1 + 5, s"LinearRegression.fit launched $jobs jobs")
+    assertCoefficients(coeff, Array(0.5308505876669622, -0.8748114433127046, 0.19723509199664976))
   }
 }

@@ -11,6 +11,8 @@ import graft.iteration.Loop
  * foreachBatch surface. Each update appends one version row to the model
  * stream through Loop.append, so the plan stays within Loop.LeafBound
  * leaves however many batches arrive, and the cuts change no version.
+ * An update pays for its batch's aggregate only: the model carries its
+ * version and moments, so it never re-reads its own stream.
  */
 class OnlineStandardScalerLineageSpec extends SparkSpec {
 
@@ -52,5 +54,52 @@ class OnlineStandardScalerLineageSpec extends SparkSpec {
         }
       }
     }
+  }
+
+  /** Count, mean and std after each of `batches`, folded on the driver. */
+  private def referenceMoments(
+      batches: Seq[Seq[(Long, Vector)]]): Seq[(Long, Seq[Double], Seq[Double])] =
+    batches.indices.map { b =>
+      val xs = batches.take(b + 1).flatten.map(_._2.toArray)
+      val n = xs.length
+      val dim = xs.head.length
+      val s = Array.tabulate(dim)(d => xs.map(_(d)).sum)
+      val ss = Array.tabulate(dim)(d => xs.map(x => x(d) * x(d)).sum)
+      val mean = s.map(_ / n)
+      val std = Array.tabulate(dim) { d =>
+        math.sqrt(math.max((ss(d) - n * mean(d) * mean(d)) / (n - 1), 0.0))
+      }
+      (n.toLong, mean.toSeq, std.toSeq)
+    }
+
+  private def assertMoments(model: OnlineStandardScalerModel,
+      expected: Seq[(Long, Seq[Double], Seq[Double])]): Unit = {
+    val got = model.getModelData.head.orderBy("version").collect()
+    assert(got.map(_.getLong(0)).toSeq == expected.indices.map(_.toLong))
+    got.zip(expected).foreach { case (g, (n, mean, std)) =>
+      assert(g.getLong(2) == n)
+      for ((c, e) <- Seq("mean" -> mean, "std" -> std))
+        g.getAs[Vector](c).toArray.zip(e).foreach { case (x, y) =>
+          assert(math.abs(x - y) <= 1e-12, s"version ${g.getLong(0)} $c: $x vs $y")
+        }
+    }
+  }
+
+  test("update: 2 jobs after the first; a loaded model recovers its state once") {
+    val batches = (0 until 8).map(batchRows)
+    var model = new OnlineStandardScalerModel().setInputCol("vec")
+    // the batch's moment aggregate (its exchange, then the collect); the
+    // version and count come from the model, not from a read of its frame
+    val jobs = batches.take(4).map(b => jobsOf { model = model.update(frame(b)) })
+    assert(jobs.tail.forall(_ == 2), s"jobs per update: $jobs")
+    assertMoments(model, referenceMoments(batches.take(4)))
+
+    val path = tmpDir()
+    model.save(path)
+    var loaded = OnlineStandardScalerModel.load(spark, path)
+    val loadedJobs = batches.drop(4).map(b => jobsOf { loaded = loaded.update(frame(b)) })
+    // the first update after a load reads the latest version once
+    assert(loadedJobs == Seq(3, 2, 2, 2), s"jobs per update after a load: $loadedJobs")
+    assertMoments(loaded, referenceMoments(batches))
   }
 }
