@@ -183,12 +183,15 @@ class Swing extends AlgoOperator[Swing]
     // Every later step reads this one stored table (the hot-item probe,
     // the cap, both pair strategies, the per-user item arrays), so the
     // input scan, the distinct and the per-user count each run once per
-    // call. The window count keeps the table hash-partitioned on u. The
-    // store job also folds a histogram cnt -> rows: Σcnt (the rows) and
-    // the user count (Σ rows/cnt, exact: a user of count c owns c rows)
-    // are the arrays path's broadcast-gate inputs.
+    // call. One hash(u) exchange ahead of the distinct serves both the
+    // distinct and the per-user window, and keeps the table
+    // hash-partitioned on u. The store job also folds a histogram
+    // cnt -> rows: Σcnt (the rows) and the user count (Σ rows/cnt, exact:
+    // a user of count c owns c rows) are the arrays path's broadcast-gate
+    // inputs.
     val (qualified, perCnt) = Loop.materialize(
-      df.select(notNull(getUserCol).as("u"), notNull(getItemCol).as("i")).distinct()
+      df.select(notNull(getUserCol).as("u"), notNull(getItemCol).as("i"))
+        .repartition(col("u")).distinct()
         .withColumn("cnt", count(lit(1)).over(Window.partitionBy("u")))
         .where(col("cnt").between(getMinUserBehavior, getMaxUserBehavior)),
       checkpoint = false, Map.empty[Long, Long])(

@@ -166,28 +166,29 @@ class LoopJobsSpec extends SparkSpec {
   test("Swing: jobs per call when the cap binds (arrays path)") {
     // 30 users buy item 0, all qualify, cap 5
     val jobs = swingJobs(graft.recommendation.SwingSpec.bindingCap(spark), 2, 5)
-    // the qualified table 3 (the distinct's exchange, the per-user
-    // window's, the store-and-fold job); the hot-item probe 2 (per-item
-    // count exchange, the limited collect); the capped pair table 6 (two
-    // hot-set broadcasts, the two rank windows' and the de-singling
-    // window's exchanges, the store job); the scoring plan 7 (the anchor
-    // self-join's broadcast, the pair exchange, both item-array
-    // broadcasts, the score and rank exchanges, the checkpoint); the
-    // caller's read 1 (35 when the probe and the broadcast gate each
-    // re-read the behavior table and the plan rebuilt the cap per side)
-    assert(jobs == 3 + 2 + 6 + 7 + 1, s"Swing launched $jobs jobs")
+    // the qualified table 2 (one hash(u) exchange serving the distinct
+    // and the per-user window, the store-and-fold job); the hot-item
+    // probe 2 (per-item count exchange, the limited collect); the capped
+    // pair table 6 (two hot-set broadcasts, the two rank windows' and the
+    // de-singling window's exchanges, the store job); the scoring plan 7
+    // (the anchor self-join's broadcast, the pair exchange, both
+    // item-array broadcasts, the score and rank exchanges, the
+    // checkpoint); the caller's read 1 (35 when the probe and the
+    // broadcast gate each re-read the behavior table and the plan rebuilt
+    // the cap per side)
+    assert(jobs == 2 + 2 + 6 + 7 + 1, s"Swing launched $jobs jobs")
   }
 
   test("Swing: jobs per call when an item is over the cap only through unqualified users") {
     // item 0 has 30 purchasers, 6 of them qualified, cap 8: the cap is idle
     val jobs = swingJobs(graft.recommendation.SwingSpec.qualifiedUnderCap(spark), 3, 8)
-    // the qualified table 3; the hot-item probe 2, which finds no hot
+    // the qualified table 2; the hot-item probe 2, which finds no hot
     // item, so the flat path runs; the pair table 2 (the de-singling
     // window's exchange, the store job); the scoring plan 6 (three
     // broadcasts of the item and pair self-joins, the pair and score
     // exchanges, the checkpoint); the caller's read 1 (35 when raw
     // purchaser counts sent this input down the capped arrays path)
-    assert(jobs == 3 + 2 + 2 + 6 + 1, s"Swing launched $jobs jobs")
+    assert(jobs == 2 + 2 + 2 + 6 + 1, s"Swing launched $jobs jobs")
   }
 
   /** 103 points with 3 features in 4 RDD partitions of 25, 26, 26 and 26
