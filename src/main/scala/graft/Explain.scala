@@ -32,6 +32,7 @@ object Explain {
           .format("noop").mode("overwrite").save())
         else SparkEntry.queries(n)(spark, sfDir).explain("formatted")
       } catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}") }
+      spark.catalog.clearCache()
     }
     spark.stop()
   }

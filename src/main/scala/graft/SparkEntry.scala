@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.iteration.Loop
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -1532,11 +1533,7 @@ object SparkEntry {
     // REAL PNG/BMP bytes hashed back through the full ImageIO decode;
     // banded Hamming join (HammingJoin, the SimHash machinery) finds
     // every variant; canonical = min doc_id among direct neighbors.
-    // The oracle replays the planted structure in closed form.
-    // clusterWithRep reads the fingerprint three times, so the slim
-    // (id, fp) projection is localCheckpoint'ed — ImageIO decodes run
-    // once and the O(rows) report never materializes on the driver
-    // (the RDD releases with the DataFrame via the ContextCleaner). ---
+    // The oracle replays the planted structure in closed form. ---
     "q_image_dedup" -> ((s, dir) => {
       val mkImg = udf { id: Long =>
         val g = id / 4
@@ -1549,10 +1546,9 @@ object SparkEntry {
       }
       val docs = tp(s, dir, "documents", "doc_id").select(col("doc_id"))
         .withColumn("img", mkImg(col("doc_id")))
-      val hashed = new graft.multimodal.ImageDHasher()
+      val hashed = Loop.keep(new graft.multimodal.ImageDHasher()
         .setInputCol("img").setOutputCol("dhash")
-        .transform(docs).head.select("doc_id", "dhash")
-        .localCheckpoint(true)
+        .transform(docs).head.select("doc_id", "dhash"))
       graft.dedup.HammingJoin.clusterWithRep(
         hashed, "doc_id", "dhash", maxHamming = 3, numBands = 4)
     }),
@@ -1578,10 +1574,9 @@ object SparkEntry {
       }
       val docs = tp(s, dir, "documents", "doc_id").select(col("doc_id"))
         .withColumn("img", mkImg(col("doc_id")))
-      val hashed = new graft.multimodal.ImageDHasher()
+      val hashed = Loop.keep(new graft.multimodal.ImageDHasher()
         .setInputCol("img").setOutputCol("dhash")
-        .transform(docs).head.select("doc_id", "dhash")
-        .localCheckpoint(true)
+        .transform(docs).head.select("doc_id", "dhash"))
       graft.dedup.HammingJoin.clusterComponents(
         hashed, "doc_id", "dhash", maxHamming = 3, numBands = 4)
     }),
@@ -1603,10 +1598,9 @@ object SparkEntry {
       }
       val docs = t(s, dir, "documents").select(col("doc_id"))
         .withColumn("wav", mkWav(col("doc_id")))
-      val hashed = new graft.multimodal.AudioDHasher()
+      val hashed = Loop.keep(new graft.multimodal.AudioDHasher()
         .setInputCol("wav").setOutputCol("ahash")
-        .transform(docs).head.select("doc_id", "ahash")
-        .localCheckpoint(true)
+        .transform(docs).head.select("doc_id", "ahash"))
       graft.dedup.HammingJoin.clusterWithRep(
         hashed, "doc_id", "ahash", maxHamming = 3, numBands = 4)
     }),
@@ -1633,8 +1627,7 @@ object SparkEntry {
         .withColumn("video", mkVid(col("doc_id")))
       val hasher = new graft.multimodal.VideoDHasher()
         .setInputCol("video").setOutputCol("sig")
-      val hashed = hasher.transform(docs).head.select("doc_id", "sig")
-        .localCheckpoint(true)
+      val hashed = Loop.keep(hasher.transform(docs).head.select("doc_id", "sig"))
       hasher.clusterWithRep(hashed, "doc_id", maxHamming = 3, numBands = 4)
     }),
 
@@ -1660,8 +1653,7 @@ object SparkEntry {
         .withColumn("video", mkVid(col("doc_id")))
       val hasher = new graft.multimodal.VideoDHasher()
         .setInputCol("video").setOutputCol("sig")
-      val hashed = hasher.transform(docs).head.select("doc_id", "sig")
-        .localCheckpoint(true)
+      val hashed = Loop.keep(hasher.transform(docs).head.select("doc_id", "sig"))
       hasher.clusterComponents(hashed, "doc_id", maxHamming = 3, numBands = 4)
     }),
 
@@ -1688,8 +1680,6 @@ object SparkEntry {
         .withColumn("video", mkVid(col("doc_id")))
       val hasher = new graft.multimodal.VideoShotHasher()
         .setInputCol("video").setOutputCol("shots").setMinOverlap(0.45)
-      // no caller-side checkpoint: containmentJoin checkpoints its slim
-      // projection internally (single-decode contract)
       val hashed = hasher.transform(docs).head.select("doc_id", "shots")
       hasher.containmentJoin(hashed, "doc_id")
         .select(col("id_a"), col("id_b"), col("shared"),
@@ -1732,10 +1722,9 @@ object SparkEntry {
       val withText = new graft.dedup.SimHasher()
         .setInputCol("tokens").setOutputCol("text_fp")
         .transform(docs).head
-      val hashed = new graft.multimodal.ImageDHasher()
+      val hashed = Loop.keep(new graft.multimodal.ImageDHasher()
         .setInputCol("img").setOutputCol("img_fp")
-        .transform(withText).head.select("doc_id", "text_fp", "img_fp")
-        .localCheckpoint(true)
+        .transform(withText).head.select("doc_id", "text_fp", "img_fp"))
       graft.dedup.HammingJoin.clusterComponentsMulti(hashed, "doc_id",
         Seq(("image", "img_fp", 3, 4), ("text", "text_fp", 3, 4)))
     }),
@@ -1758,10 +1747,9 @@ object SparkEntry {
       }
       val docs = t(s, dir, "documents").select(col("doc_id"))
         .withColumn("img", mkImg(col("doc_id")))
-      val hashed = new graft.multimodal.ImageDHasher()
+      val hashed = Loop.keep(new graft.multimodal.ImageDHasher()
         .setInputCol("img").setOutputCol("fp")
-        .transform(docs).head.select("doc_id", "fp")
-        .localCheckpoint(true)
+        .transform(docs).head.select("doc_id", "fp"))
       val indexer = new graft.dedup.HammingIndexer()
         .setIdCol("doc_id").setFpCol("fp").setMaxHamming(3).setNumBands(4)
       val model = indexer.fit(hashed.where(col("doc_id") % 4 === 0))
@@ -2978,11 +2966,9 @@ object SparkEntry {
         .setInputCol("src_raw").setOutputCol("s")
       val dstCanon = new graft.text.UrlCanonicalizer()
         .setInputCol("dst_raw").setOutputCol("d")
-      // eager checkpoint before PageRank's multi-read setup (the
-      // q_url_rank lesson)
-      val edges = dstCanon.transform(srcCanon.transform(allowed).head).head
-        .select(col("s_url").as("src"), col("d_url").as("dst"))
-        .localCheckpoint(true)
+      // stored before PageRank's multi-read setup (the q_url_rank lesson)
+      val edges = Loop.keep(dstCanon.transform(srcCanon.transform(allowed).head).head
+        .select(col("s_url").as("src"), col("d_url").as("dst")))
       graft.graph.PageRank.run(edges, "src", "dst",
           dampingFactor = 0.85, numIter = 3).state
         .select(col("id").as("url"), round(col("pagerank"), 10).as("pagerank"))
@@ -3363,13 +3349,12 @@ object SparkEntry {
         .setInputCol("src_raw").setOutputCol("s")
       val dstCanon = new graft.text.UrlCanonicalizer()
         .setInputCol("dst_raw").setOutputCol("d")
-      // eager checkpoint: PageRank's setup reads the edge plan several
+      // stored once: PageRank's setup reads the edge plan several
       // times (share weights, vertex set, dangling set) and the
       // extraction+double-canonicalization chain above it is the
       // expensive part — materialize it once (solo-measured 8.2 → 6.8 s warm, 21.4 → 13.5 cold)
-      val edges = dstCanon.transform(srcCanon.transform(links).head).head
-        .select(col("s_url").as("src"), col("d_url").as("dst"))
-        .localCheckpoint(true)
+      val edges = Loop.keep(dstCanon.transform(srcCanon.transform(links).head).head
+        .select(col("s_url").as("src"), col("d_url").as("dst")))
       graft.graph.PageRank.run(edges, "src", "dst",
           dampingFactor = 0.85, numIter = 3).state
         .select(col("id").as("url"), round(col("pagerank"), 10).as("pagerank"))

@@ -1,6 +1,6 @@
 package graft.benchmark
 
-import graft.iteration.LoopResult
+import graft.iteration.{Loop, LoopResult}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1323,10 +1323,8 @@ object ScaleUp {
         }.apply(col("id")).as("payload"))
       val hasher = new graft.multimodal.VideoShotHasher()
         .setInputCol("payload").setOutputCol("shots").setMinOverlap(0.45)
-      // no caller-side persist of the hashed table: containmentJoin
-      // checkpoints its slim projection internally (single-decode
-      // contract, pinned by VideoShotHashSpec's invocation counter and
-      // re-counted here at 200k)
+      // the single-decode contract, pinned by VideoShotHashSpec's
+      // invocation counter, re-counted at 200k
       graft.multimodal.VideoShotHash.decodeInvocations.set(0L)
       val hashed = hasher.transform(payloads).head.select("id", "shots")
       val pairs = hasher.containmentJoin(hashed, "id")
@@ -1378,7 +1376,7 @@ object ScaleUp {
       fps.where(col("id") % 2 === 1).write.mode("overwrite").parquet(batchPath)
       var model = new graft.dedup.HammingIndexer()
         .setMaxHamming(3).setNumBands(4)
-        .fit(fps.where(col("id") % 2 === 0).localCheckpoint(true))
+        .fit(Loop.keep(fps.where(col("id") % 2 === 0)))
       val chk = java.nio.file.Files.createTempDirectory("graft-shm-chk").toString
       val nFiles = Option(new java.io.File(batchPath).listFiles())
         .map(_.count(f => f.getName.endsWith(".parquet"))).getOrElse(1)

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{AlgoOperator, StageLoader}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -63,7 +64,7 @@ class EntityResolver extends AlgoOperator[EntityResolver]
   def getGramLength: Int = get(gramLength)
   def setGramLength(v: Int): EntityResolver = set(gramLength, v)
 
-  override def transform(inputs: DataFrame*): Array[DataFrame] = {
+  override def transform(inputs: DataFrame*): Array[DataFrame] = Loop.scoped { stored =>
     require(inputs.size == 1)
     val df = inputs.head
     val id = getIdCol
@@ -75,19 +76,18 @@ class EntityResolver extends AlgoOperator[EntityResolver]
     require(dupIds.isEmpty,
       s"EntityResolver: id column '$id' is not unique — first offender: ${dupIds.head.get(0)}")
 
-    val pairs = new graft.join.FuzzyJoiner()
+    val pairs = stored(new graft.join.FuzzyJoiner()
       .setIdCol(id).setInputCol(getInputCol)
       .setMaxDistance(getMaxDistance).setGramLength(getGramLength)
-      .transform(df, df).head
+      .transform(df, df).head)
       .where(col("left_id") < col("right_id"))
 
-    val comps = ConnectedComponents.run(pairs, "left_id", "right_id").state
+    val comps = stored(ConnectedComponents.run(pairs, "left_id", "right_id").state)
       .select(col("id").as("__er_id"), col("component").as("__er_comp"))
 
-    val out = df.join(comps, df(id) === comps("__er_id"), "left_outer")
+    Array(Loop.keep(df.join(comps, df(id) === comps("__er_id"), "left_outer")
       .withColumn(getEntityCol, coalesce(col("__er_comp"), df(id)))
-      .drop("__er_id", "__er_comp")
-    Array(out)
+      .drop("__er_id", "__er_comp")))
   }
 }
 

@@ -152,9 +152,8 @@ object CrawlPipelineExample {
       .setInputCol("src_raw").setOutputCol("s")
     val dstCanon = new graft.text.UrlCanonicalizer()
       .setInputCol("dst_raw").setOutputCol("d")
-    val edges = dstCanon.transform(srcCanon.transform(allowed).head).head
-      .select(col("s_url").as("src"), col("d_url").as("dst"))
-      .localCheckpoint(true)
+    val edges = graft.iteration.Loop.keep(dstCanon.transform(srcCanon.transform(allowed).head).head
+      .select(col("s_url").as("src"), col("d_url").as("dst")))
 
     graft.graph.PageRank.run(edges, "src", "dst", numIter = 3).state
       .orderBy(desc("pagerank"))

@@ -69,8 +69,20 @@ object LoopResult {
  * they launch, so a round should launch as few as it can: the exchanges
  * its plan needs, plus ONE job that both stores the round's frame and
  * computes what the driver must know about it (a convergence count, a
- * signature, the next round's scalar). [[materialize]] is that job, and
- * the operators built on it share one lifetime rule:
+ * signature, the next round's scalar). [[materialize]] is that job.
+ *
+ * Storage has three kinds, and only [[materialize]] and [[append]] cut
+ * lineage (`localCheckpoint`):
+ *
+ *  - rounds and the other tables a call reads more than once, stored by
+ *    [[materialize]] (persisted, or local-checkpointed to bound a long
+ *    loop's plan) and released when the call no longer reads them;
+ *  - grown model frames, cut by [[append]] (below);
+ *  - the frame a call or a query returns, stored by [[keep]]: persisted
+ *    with its lineage, so the caller's `unpersist` or
+ *    `catalog.clearCache()` frees it, and a lost block is recomputed.
+ *
+ * The operators built on them share one lifetime rule:
  *
  *  - a call runs inside [[scoped]] and registers every frame it stores;
  *    when the call ends, returned or thrown, [[scoped]] releases them;
@@ -80,13 +92,13 @@ object LoopResult {
  *    last round itself) and is not registered: the caller's `unpersist`
  *    frees it, and then nothing of the call remains.
  *
- * Executor loss: a released round cannot be recomputed, and a stored
- * frame's lineage may reach one (a released checkpoint, or a cache whose
- * blocks were lost), so losing an executor fails the running call or a
- * later read of its result that needs a lost block rebuilt — rerun the
- * call. ConnectedComponents, PageRank, LabelPropagation, Hits, Bfs,
- * Swing and BpeTrainer follow this rule; [[iterateDataFrame]] stores and
- * releases its rounds the same way.
+ * Executor loss: a released checkpointed round cannot be recomputed, and
+ * a stored frame's lineage may reach one, so losing an executor fails the
+ * running call or a later read of its result that needs a lost block
+ * rebuilt — rerun the call. ConnectedComponents, PageRank,
+ * LabelPropagation, Hits, Bfs, Swing, BpeTrainer, FuzzyJoiner,
+ * VideoShotHasher and EntityResolver follow this rule;
+ * [[iterateDataFrame]] stores and releases its rounds the same way.
  *
  * Growing model frames (an index that gains a batch, a model stream that
  * gains a version) have no loop to scope: each growth step returns a new
@@ -284,10 +296,13 @@ object Loop {
     try body(stored) finally stored.frames.foreach(release)
   }
 
-  /** Store `out`, the frame a loop call returns, in one job. Called inside
-    * [[scoped]], whose release of the call's frames then leaves `out` the
-    * only storage of the call: the caller's `unpersist` frees it. As with
-    * [[materialize]], `out` must not match a frame already cached. */
+  /** Store `out`, the frame a call or a query returns, in one job, with
+    * its lineage: the caller's `unpersist` or `catalog.clearCache()` frees
+    * it, and a lost block is recomputed. Inside [[scoped]], whose release
+    * of the call's frames follows, `out` is the only storage the call
+    * leaves; outside one (a query's shared projection) it is the only
+    * storage there is. As with [[materialize]], `out` must not match a
+    * frame already cached. */
   def keep(out: DataFrame): DataFrame =
     materialize(out, checkpoint = false, 0L)((n, _) => n + 1, _ + _)._1
 }

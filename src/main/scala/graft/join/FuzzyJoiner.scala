@@ -158,17 +158,7 @@ class FuzzyJoiner extends AlgoOperator[FuzzyJoiner]
     * both sides of the candidate join read them. Candidate set and
     * output are IDENTICAL to the two-sided path on (df, df) (see the
     * ordering argument at the dispatch site); FuzzyJoinerSpec pins the
-    * equivalence.
-    *
-    * Cache lifetime: the call runs under [[graft.iteration.Loop.scoped]]
-    * and registers its three internal persists, so they are released
-    * when it returns or throws, and the result is eagerly
-    * localCheckpointed first — a lazily returned plan would otherwise
-    * pin base/gramTable/prefixes for the session on every self-join
-    * transform(). The checkpoint also means downstream consumers
-    * (EntityResolver reads the pair table more than once) re-scan a
-    * materialized table instead of re-running the gram/window/verify
-    * chain. */
+    * equivalence. */
   private def selfTransform(df: DataFrame): DataFrame = Loop.scoped { stored =>
     val k = getMaxDistance
     val q = getGramLength
@@ -223,13 +213,12 @@ class FuzzyJoiner extends AlgoOperator[FuzzyJoiner]
       .where(greatest(col("left_len"), col("right_len")) <= shortBound)
       .select("left_id", "right_id")
 
-    gramCandidates.union(shortCandidates)
+    Loop.keep(gramCandidates.union(shortCandidates)
       .join(base.select(col("id").as("left_id"), col("s").as("left_s")), "left_id")
       .join(base.select(col("id").as("right_id"), col("s").as("right_s")), "right_id")
       .withColumn("distance", levenshtein(col("left_s"), col("right_s")))
       .where(col("distance") <= k)
-      .select("left_id", "right_id", "distance")
-      .localCheckpoint(true)
+      .select("left_id", "right_id", "distance"))
   }
 }
 

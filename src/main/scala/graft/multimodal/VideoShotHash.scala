@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{StageLoader, Transformer}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -132,23 +133,17 @@ class VideoShotHasher extends Transformer[VideoShotHasher]
     * same join key); n_a/n_b stay the FULL set sizes so a capped shot
     * lowers recall, never inflates overlap.
     *
-    * Caching contract: the slim (id, shots, n) projection is eagerly
-    * localCheckpointed INSIDE this method, so the dominant cost —
-    * decoding and dHashing every frame behind `df`'s hash column —
-    * runs exactly once per video no matter how many plan branches
-    * read it (the self-join reads it twice, the hot-shot cap a third
-    * time). Callers need no persist/checkpoint of their own; what
-    * moves is only the O(shots) long-array column, never payload
-    * bytes. */
-  def containmentJoin(df: DataFrame, idCol: String): DataFrame = {
+    * Single decode: the slim (id, shots) projection is stored inside
+    * this method, so decoding and dHashing every frame behind `df`'s
+    * hash column runs once per video however many plan branches read
+    * it; callers store nothing of their own. */
+  def containmentJoin(df: DataFrame, idCol: String): DataFrame = Loop.scoped { stored =>
     val out = getOutputCol
-    // the checkpointed projection references the hash column exactly
-    // ONCE: filtering on it or deriving size() in the same plan as the
-    // UDF evaluates the (deterministic) UDF per reference on the
-    // codegen path — measured 3× the all-frames decode at 200k videos
-    // when the where/size sat below the checkpoint
-    val hashedOnce = df.select(col(idCol).as("id"), col(out).as("shots"))
-      .localCheckpoint(true)
+    // the stored projection references the hash column exactly ONCE:
+    // filtering on it or deriving size() in the same plan as the UDF
+    // evaluates the (deterministic) UDF per reference on the codegen
+    // path — measured 3× the all-frames decode at 200k videos
+    val hashedOnce = stored(Loop.keep(df.select(col(idCol).as("id"), col(out).as("shots"))))
     val slim = hashedOnce
       .where(col("shots").isNotNull && size(col("shots")) > 0)
       .select(col("id"), col("shots"), size(col("shots")).as("n"))
@@ -164,13 +159,13 @@ class VideoShotHasher extends Transformer[VideoShotHasher]
       } else exploded
     val a = ex.select(col("id").as("id_a"), col("n").as("n_a"), col("shot"))
     val b = ex.select(col("id").as("id_b"), col("n").as("n_b"), col("shot"))
-    a.join(b, Seq("shot"))
+    Loop.keep(a.join(b, Seq("shot"))
       .where(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b", "n_a", "n_b")
       .agg(count("*").as("shared"))
       .withColumn("overlap", col("shared") / least(col("n_a"), col("n_b")))
       .where(col("overlap") >= getMinOverlap)
-      .select("id_a", "id_b", "shared", "n_a", "n_b", "overlap")
+      .select("id_a", "id_b", "shared", "n_a", "n_b", "overlap"))
   }
 }
 

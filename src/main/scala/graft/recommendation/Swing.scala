@@ -81,11 +81,11 @@ import graft.util.ReadWrite
  *    purchaser items (the flat path's `paired`, the arrays path's
  *    `capped`), read by every side of the strategy's self-joins.
  * Then one probe job collects the hot set, and the scoring plan runs
- * as one eagerly local-checkpointed execution. Measured with
- * `LoopJobsSpec`'s job counter on its small fixtures: 14 jobs on the
- * flat path and 19 on the capped arrays path, reading the result
+ * as one store job (`Loop.keep`). Measured with
+ * `LoopJobsSpec`'s job counter on its small fixtures: 13 jobs on the
+ * flat path and 18 on the capped arrays path, reading the result
  * included (35 for either before the qualified table existed); the
- * `swing_recs` benchmark call is 16 (35).
+ * `swing_recs` benchmark call is 15 (35).
  *
  * Scale notes from sf0.1 (the `q_swing` query: 598,789 capped
  * purchase rows fanning out to 8,961,888 co-purchase rows, 8.5 M
@@ -173,7 +173,7 @@ class Swing extends AlgoOperator[Swing]
     Loop.scoped(stored => Array(topK(df, stored)))
   }
 
-  /** The packed top-k table, eagerly checkpointed; every table it
+  /** The packed top-k table, stored by `Loop.keep`; every table it
     * stores is registered with `stored`. */
   private def topK(df: DataFrame, stored: Loop.Stored): DataFrame = {
     val notNull = (c: String) => when(col(c).isNull,
@@ -405,13 +405,8 @@ class Swing extends AlgoOperator[Swing]
     val pack = udf { rows: Seq[Row] =>
       rows.sortBy(_.getInt(0)).map(r => s"${r.getLong(1)},${r.getDouble(2)}").mkString(";")
     }
-    topk.groupBy(col("i").as(getItemCol))
-      .agg(pack(collect_list(struct(col("rk"), col("sim"), col("score")))).as(getOutputCol))
-      // eager checkpoint: the packed top-k table is O(items) — tiny next
-      // to the pair stream — and `scoped` releases every table the call
-      // stored once it is written; a lazily returned plan would need them
-      // for the lifetime of the SparkContext
-      .localCheckpoint(true)
+    Loop.keep(topk.groupBy(col("i").as(getItemCol))
+      .agg(pack(collect_list(struct(col("rk"), col("sim"), col("score")))).as(getOutputCol)))
   }
 }
 object Swing extends StageLoader[Swing] {

@@ -84,10 +84,10 @@ class PlanShapeSpec extends SparkSpec {
   test("Swing broadcasts the over-cap item set") {
     import spark.implicits._
     val rows = (0L until 30L).flatMap(u => Seq((u, 99L), (u, 100L + u % 5)))
-    // Swing local-checkpoints its output, so the returned frame's plan is
-    // a scan of the checkpoint: the plans under test are the ones the
-    // localCheckpoint action and the store jobs (`Loop.materialize`)
-    // executed. The hot-set join runs in the store job of the capped
+    // Swing stores its output (`Loop.keep`), so the returned frame's plan
+    // is a scan of the cache: the plans under test are the ones the store
+    // jobs (`Loop.materialize`) executed. The scoring plan runs in the
+    // last of them; the hot-set join in the store job of the capped
     // purchaser table.
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -106,14 +106,13 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
     val byName = plans.asScala.toSeq
-    val checkpointPlans = byName.collect { case ("localCheckpoint", p) => p }
-    assert(checkpointPlans.size == 1, s"expected one localCheckpoint plan, got ${checkpointPlans.size}")
-    val plan = checkpointPlans.head
+    val stores = byName.collect { case ("materialize", p) => p }
+    assert(stores.nonEmpty, "expected the store jobs' plans")
+    val plan = stores.last
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     // the over-cap item set is the build side of a left-outer broadcast
     // join (the per-user item arrays broadcast into inner joins only)
-    val stores = byName.collect { case ("materialize", p) => p }
     assert(stores.exists(_.linesIterator.exists(l =>
         l.contains("BroadcastHashJoin") && l.contains("LeftOuter, BuildRight"))),
       stores.mkString("\n----\n"))

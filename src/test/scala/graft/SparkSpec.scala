@@ -4,7 +4,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,6 +45,16 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val before = sc.getPersistentRDDs.keySet
     body
     (sc.getPersistentRDDs.keySet.toSet -- before, !spark.sharedState.cacheManager.isEmpty)
+  }
+
+  /** Drop the blocks that hold a stored frame's rows, as a lost executor
+    * would: its cache entry's buffers, or its checkpoint's blocks. */
+  def dropStoredBlocks(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = true)
+    case _ =>
+      val qe = df.queryExecution
+      qe.sparkSession.sharedState.cacheManager.lookupCachedData(qe.sparkSession, qe.analyzed).get
+        .cachedRepresentation.cacheBuilder.cachedColumnBuffers.unpersist(blocking = true)
   }
 
   /** Jobs launched by `body` (inside its own job group). */

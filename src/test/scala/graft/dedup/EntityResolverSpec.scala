@@ -65,6 +65,17 @@ class EntityResolverSpec extends SparkSpec {
     assert(out.where(col("entity_id") === 1L).count() == 2)
   }
 
+  test("nothing outlives transform() plus the caller's unpersist") {
+    import spark.implicits._
+    val df = Seq((1L, "jon"), (2L, "john"), (3L, "johnn"), (4L, "mary")).toDF("id", "s")
+    val residue = residueOf {
+      val out = resolver.setMaxDistance(1).transform(df).head
+      assert(out.where(col("entity_id") === 1L).count() == 3)
+      out.unpersist(blocking = true)
+    }
+    assert(residue == (Set.empty, false), s"transform + unpersist left (RDDs, cache entry) $residue")
+  }
+
   test("guards: duplicate ids and entityCol collisions are rejected") {
     import spark.implicits._
     val dup = Seq((1L, "a"), (1L, "b")).toDF("id", "s")

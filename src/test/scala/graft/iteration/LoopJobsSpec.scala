@@ -172,8 +172,8 @@ class LoopJobsSpec extends SparkSpec {
     // pair table 6 (two hot-set broadcasts, the two rank windows' and the
     // de-singling window's exchanges, the store job); the scoring plan 7
     // (the anchor self-join's broadcast, the pair exchange, both
-    // item-array broadcasts, the score and rank exchanges, the
-    // checkpoint); the caller's read 1 (35 when the probe and the
+    // item-array broadcasts, the score and rank exchanges, the stored
+    // result); the caller's read 1 (35 when the probe and the
     // broadcast gate each re-read the behavior table and the plan rebuilt
     // the cap per side)
     assert(jobs == 2 + 2 + 6 + 7 + 1, s"Swing launched $jobs jobs")
@@ -186,7 +186,7 @@ class LoopJobsSpec extends SparkSpec {
     // item, so the flat path runs; the pair table 2 (the de-singling
     // window's exchange, the store job); the scoring plan 6 (three
     // broadcasts of the item and pair self-joins, the pair and score
-    // exchanges, the checkpoint); the caller's read 1 (35 when raw
+    // exchanges, the stored result); the caller's read 1 (35 when raw
     // purchaser counts sent this input down the capped arrays path)
     assert(jobs == 2 + 2 + 2 + 6 + 1, s"Swing launched $jobs jobs")
   }

@@ -102,6 +102,29 @@ class FuzzyJoinerSpec extends SparkSpec {
     assert(residue == (Set.empty, false), s"a failing call left (RDDs, cache entry) $residue")
   }
 
+  test("a self-join's result is the call's only storage: clearCache frees it") {
+    import spark.implicits._
+    val df = Seq((1L, "kitten"), (2L, "mitten"), (3L, "flaw"), (4L, "flaws")).toDF("id", "s")
+    val residue = residueOf {
+      joiner.setMaxDistance(1).transform(df, df).head
+        .write.format("noop").mode("overwrite").save()
+      spark.catalog.clearCache()
+    }
+    assert(residue == (Set.empty, false), s"clearCache left (RDDs, cache entry) $residue")
+  }
+
+  test("a self-join's result survives lost blocks: a read recomputes them from lineage") {
+    import spark.implicits._
+    val df = Seq((1L, "kitten"), (2L, "mitten"), (3L, "flaw"), (4L, "flaws"), (5L, "kittens"))
+      .toDF("id", "s")
+    val out = joiner.setMaxDistance(1).transform(df, df).head
+    val rows = out.collect().toSet
+    assert(rows.map(r => Set(r.getLong(0), r.getLong(1))).contains(Set(1L, 2L)))
+    dropStoredBlocks(out)
+    assert(out.collect().toSet == rows)
+    out.unpersist(blocking = true)
+  }
+
   test("param save/load round-trip") {
     val dir = tmpDir()
     joiner.setMaxDistance(3).setGramLength(4).save(dir)

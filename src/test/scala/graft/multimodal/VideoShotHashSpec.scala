@@ -113,6 +113,29 @@ class VideoShotHashSpec extends SparkSpec {
       s"capped: the hot-shot aggregation branch must not re-decode, got ${VideoShotHash.decodeInvocations.get()}")
   }
 
+  test("containmentJoin's result is the call's only storage: clearCache frees it") {
+    import spark.implicits._
+    val df = (0 until 4).map(i => (i.toLong, mk(7L, Seq(0, 1, 10 + i)))).toDF("id", "video")
+    val h = new VideoShotHasher().setInputCol("video").setOutputCol("shots").setMinOverlap(0.5)
+    val residue = residueOf {
+      h.containmentJoin(h.transform(df).head, "id").write.format("noop").mode("overwrite").save()
+      spark.catalog.clearCache()
+    }
+    assert(residue == (Set.empty, false), s"clearCache left (RDDs, cache entry) $residue")
+  }
+
+  test("containmentJoin's result survives lost blocks: a read recomputes them from lineage") {
+    import spark.implicits._
+    val df = (0 until 4).map(i => (i.toLong, mk(8L, Seq(0, 1, 10 + i)))).toDF("id", "video")
+    val h = new VideoShotHasher().setInputCol("video").setOutputCol("shots").setMinOverlap(0.5)
+    val out = h.containmentJoin(h.transform(df).head, "id")
+    val rows = out.collect().toSet
+    assert(rows.size == 6)
+    dropStoredBlocks(out)
+    assert(out.collect().toSet == rows)
+    out.unpersist(blocking = true)
+  }
+
   test("param save/load round-trip") {
     val dir = java.nio.file.Files.createTempDirectory("vsh").toString
     new VideoShotHasher().setInputCol("v").setOutputCol("s")

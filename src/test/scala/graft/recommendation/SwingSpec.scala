@@ -148,6 +148,24 @@ class SwingSpec extends SparkSpec {
     assert(residue == (Set.empty, false), s"a failing call left (RDDs, cache entry) $residue")
   }
 
+  test("the result is the call's only storage: clearCache frees it") {
+    val residue = residueOf {
+      new Swing().setMinUserBehavior(2).setMaxUserBehavior(3).transform(input).head
+        .write.format("noop").mode("overwrite").save()
+      spark.catalog.clearCache()
+    }
+    assert(residue == (Set.empty, false), s"clearCache left (RDDs, cache entry) $residue")
+  }
+
+  test("the result survives lost blocks: a read recomputes them from lineage") {
+    val out = new Swing().setMinUserBehavior(1).setMaxUserBehavior(10).setMaxUserNumPerItem(5)
+      .transform(SwingSpec.bindingCap(spark)).head
+    val rows = out.collect().toSet
+    dropStoredBlocks(out)
+    assert(out.collect().toSet == rows)
+    out.unpersist(blocking = true)
+  }
+
   test("an item over the cap only through unqualified users keeps every qualified purchaser") {
     // item 0 has 30 purchasers but only users 0..5 buy the 3 items that
     // minUserBehavior=3 asks for: 6 qualified purchasers, under the cap
