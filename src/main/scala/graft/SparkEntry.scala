@@ -1153,12 +1153,11 @@ object SparkEntry {
         .where(size(col("shingles")) > 0)
       val hasher = new graft.dedup.SimHasher()
         .setInputCol("shingles").setOutputCol("fp")
-      // persist the slim hashed projection: it feeds the banded join
+      // store the slim hashed projection: it feeds the banded join
       // AND both sides of the exact-Jaccard check below — uncached, the
       // tokenize→shingle→fingerprint chain would re-run per consumer
-      val hashed = hasher.transform(grams).head
-        .select("doc_id", "shingles", "fp")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hashed = Loop.keep(hasher.transform(grams).head
+        .select("doc_id", "shingles", "fp"))
       val candidates = hasher.similarityJoin(hashed, "doc_id", maxHamming = 15, numBands = 16)
       // exact-Jaccard verification of the Hamming candidates (same
       // candidates → true-distance shape as the MinHash join; SimHash
@@ -1424,11 +1423,10 @@ object SparkEntry {
         .select(col("centroidId"),
           org.apache.spark.ml.functions.array_to_vector(col("carr")).as("centroid"))
       graft.functions.Functions.register(s)
-      val assigned = new graft.clustering.KMeansModel()
+      val assigned = Loop.keep(new graft.clustering.KMeansModel()
         .setFeaturesCol("vec").setModelData(initDf)
         .transform(emb).head
-        .select(col("vec_id"), col("prediction").cast("long").as("cluster"), col("arr"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("vec_id"), col("prediction").cast("long").as("cluster"), col("arr")))
       val dups = assigned.select(col("cluster"), col("vec_id").as("id_a"), col("arr").as("arr_a"))
         .join(assigned.select(col("cluster"), col("vec_id").as("id_b"), col("arr").as("arr_b")),
           Seq("cluster"))

@@ -4,6 +4,7 @@ import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{AlgoOperator, StageLoader}
+import graft.iteration.Loop
 import graft.linalg.{DistanceMeasure, VectorWithNorm}
 import graft.param._
 import graft.streaming._
@@ -100,65 +101,65 @@ class AgglomerativeClustering extends AlgoOperator[AgglomerativeClustering]
         ordered.withColumn("__agg_win", col(getTimeCol).cast("long"))
     }
 
-    // persist before collecting: the synthetic ids are re-evaluated by
-    // predictUdf on the output plan, and an unpersisted reordering
+    // store before collecting: the synthetic ids are re-evaluated by
+    // predictUdf on the output plan, and an unstored reordering
     // upstream would mislabel rows (or miss the broadcast map). Cache
-    // is bounded by the MaxPoints guard below.
-    val withIdx = keyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val collected0 = withIdx.select(col("__agg_idx"), col(getFeaturesCol), col("__agg_win"))
-      .collect().map(r => (r.getLong(0), r.getAs[Vector](1), r.getLong(2))).sortBy(_._1)
-    val n = collected0.length
-    require(n <= AgglomerativeClustering.MaxPoints,
-      s"AgglomerativeClustering is O(n²); got $n rows, max ${AgglomerativeClustering.MaxPoints}. " +
-        "Cluster a summary (e.g. KMeans centroids) instead of raw rows.")
+    // is bounded by the MaxPoints guard below, and released once the
+    // returned frame is stored.
+    Loop.scoped { stored =>
+      val withIdx = stored.cache(keyed)
+      val collected0 = withIdx.select(col("__agg_idx"), col(getFeaturesCol), col("__agg_win"))
+        .collect().map(r => (r.getLong(0), r.getAs[Vector](1), r.getLong(2))).sortBy(_._1)
+      val n = collected0.length
+      require(n <= AgglomerativeClustering.MaxPoints,
+        s"AgglomerativeClustering is O(n²); got $n rows, max ${AgglomerativeClustering.MaxPoints}. " +
+          "Cluster a summary (e.g. KMeans centroids) instead of raw rows.")
 
-    if (n == 0) {
-      withIdx.unpersist(blocking = false)
       import spark.implicits._
-      return Array(df.withColumn(getPredictionCol, lit(0)),
-        Seq.empty[(Int, Int, Double, Int)].toDF("clusterId1", "clusterId2", "distance", "sizeOfMergedCluster"))
-    }
-
-    // resolve window membership on the driver
-    val collected: Array[(Long, Vector, Long)] = getWindows match {
-      case EventTimeSessionWindows(gapMs) =>
-        // sorted gap walk over event time (carried in _3)
-        val byTs = collected0.sortBy(t => (t._3, t._1))
-        var session = 0L
-        var lastTs = Long.MinValue
-        byTs.map { case (idx, v, ts) =>
-          if (lastTs != Long.MinValue && ts - lastTs > gapMs) session += 1
-          lastTs = ts
-          (idx, v, session)
+      if (n == 0) Array(df.withColumn(getPredictionCol, lit(0)),
+        Seq.empty[(Int, Int, Double, Int)]
+          .toDF("clusterId1", "clusterId2", "distance", "sizeOfMergedCluster"))
+      else {
+        // resolve window membership on the driver
+        val collected: Array[(Long, Vector, Long)] = getWindows match {
+          case EventTimeSessionWindows(gapMs) =>
+            // sorted gap walk over event time (carried in _3)
+            val byTs = collected0.sortBy(t => (t._3, t._1))
+            var session = 0L
+            var lastTs = Long.MinValue
+            byTs.map { case (idx, v, ts) =>
+              if (lastTs != Long.MinValue && ts - lastTs > gapMs) session += 1
+              lastTs = ts
+              (idx, v, session)
+            }
+          case CountTumblingWindows(size) =>
+            // drop the trailing partial window (count triggers only fire full)
+            val full = collected0.groupBy(_._3).filter(_._2.length == size).keySet
+            collected0.filter(t => full.contains(t._3))
+          case _ => collected0
         }
-      case CountTumblingWindows(size) =>
-        // drop the trailing partial window (count triggers only fire full)
-        val full = collected0.groupBy(_._3).filter(_._2.length == size).keySet
-        collected0.filter(t => full.contains(t._3))
-      case _ => collected0
+
+        // one clustering problem per window, window-local labels
+        val windowKeys = collected.map(_._3).distinct.sorted
+        val idToCluster = scala.collection.mutable.HashMap.empty[Long, Int]
+        val mergeRows = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double, Int)]
+        windowKeys.foreach { w =>
+          val rows = collected.filter(_._3 == w)
+          val (labels, merges) = clusterWindow(rows.map(_._2), measure, useThreshold)
+          rows.map(_._1).zip(labels).foreach { case (idx, c) => idToCluster(idx) = c }
+          mergeRows ++= merges
+        }
+
+        val bc = spark.sparkContext.broadcast(idToCluster.toMap)
+        val predictUdf = udf { idx: Long => bc.value.get(idx).map(Integer.valueOf).orNull }
+        val out = Loop.keep(withIdx.withColumn(getPredictionCol, predictUdf(col("__agg_idx")))
+          .filter(col(getPredictionCol).isNotNull)
+          .drop("__agg_idx", "__agg_win"))
+        val mergeInfo = mergeRows.toSeq
+          .toDF("clusterId1", "clusterId2", "distance", "sizeOfMergedCluster")
+        Array(out, mergeInfo)
+      }
     }
-
-    // one clustering problem per window, window-local labels
-    val windowKeys = collected.map(_._3).distinct.sorted
-    val idToCluster = scala.collection.mutable.HashMap.empty[Long, Int]
-    val mergeRows = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double, Int)]
-    windowKeys.foreach { w =>
-      val rows = collected.filter(_._3 == w)
-      val (labels, merges) = clusterWindow(rows.map(_._2), measure, useThreshold)
-      rows.map(_._1).zip(labels).foreach { case (idx, c) => idToCluster(idx) = c }
-      mergeRows ++= merges
-    }
-
-    val bc = spark.sparkContext.broadcast(idToCluster.toMap)
-    val predictUdf = udf { idx: Long => bc.value.get(idx).map(Integer.valueOf).orNull }
-    val out = withIdx.withColumn(getPredictionCol, predictUdf(col("__agg_idx")))
-      .filter(col(getPredictionCol).isNotNull)
-      .drop("__agg_idx", "__agg_win")
-
-    import spark.implicits._
-    val mergeInfo = mergeRows.toSeq
-      .toDF("clusterId1", "clusterId2", "distance", "sizeOfMergedCluster")
-    Array(out, mergeInfo)
   }
 
   /** Cluster one window's points; returns (per-point labels, merge log). */

@@ -3,7 +3,6 @@ package graft.clustering
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.api._
 import graft.linalg.{DistanceMeasure, VectorWithNorm}
 import graft.param._
@@ -40,59 +39,59 @@ class KMeans extends Estimator[KMeans, KMeansModel]
     val numK = getK
     val measure = DistanceMeasure(getDistanceMeasure)
 
-    val points = df.select(col(getFeaturesCol)).rdd
-      .map(r => VectorWithNorm(r.getAs[Vector](0)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val centroids = graft.iteration.Loop.scoped { stored =>
+      val points = stored.cache(df.select(col(getFeaturesCol)).rdd
+        .map(r => VectorWithNorm(r.getAs[Vector](0))))
 
-    val initCentroids = initialModelData match {
-      case Some(init) => init.orderBy("centroidId").collect()
-        .map(r => VectorWithNorm(r.getAs[Vector]("centroid")))
-      case None => points.takeSample(withReplacement = false, numK, getSeed)
+      val initCentroids = initialModelData match {
+        case Some(init) => init.orderBy("centroidId").collect()
+          .map(r => VectorWithNorm(r.getAs[Vector]("centroid")))
+        case None => points.takeSample(withReplacement = false, numK, getSeed)
+      }
+      require(initCentroids.length == numK,
+        s"Expected $numK initial centroids, got ${initCentroids.length}")
+      val dim = initCentroids.head.vector.size
+      val sc = points.sparkContext
+
+      // reference KMeans.java:140-188 runs its iteration body under a
+      // plain TerminateOnMaxIter criteria stream — same here, on the
+      // shared driver-loop utility
+      graft.iteration.Loop.iterate(
+          initCentroids, graft.iteration.TerminateOnMaxIter(getMaxIter)) { (current, _) =>
+        val bc = sc.broadcast(current)
+        // per-partition local accumulation, then one treeReduce of
+        // (k × dim sums, k counts) — the allReduce analogue
+        val (sums, counts) = points.mapPartitions { it =>
+          val cs = bc.value
+          val sums = Array.fill(numK)(new Array[Double](dim))
+          val counts = new Array[Long](numK)
+          it.foreach { p =>
+            val c = measure.findClosest(cs, p)
+            graft.linalg.BLAS.axpy(1.0, p.vector, sums(c))
+            counts(c) += 1
+          }
+          Iterator.single((sums, counts))
+        }.treeReduce { (a, b) =>
+          var i = 0
+          while (i < numK) {
+            var j = 0
+            while (j < dim) { a._1(i)(j) += b._1(i)(j); j += 1 }
+            a._2(i) += b._2(i)
+            i += 1
+          }
+          a
+        }
+        bc.destroy()
+        val next = Array.tabulate(numK) { i =>
+          if (counts(i) > 0) {
+            val c = sums(i).clone()
+            graft.linalg.BLAS.scal(1.0 / counts(i), c)
+            VectorWithNorm(Vectors.dense(c))
+          } else current(i) // empty cluster keeps previous centroid
+        }
+        (next, None)
+      }.state
     }
-    require(initCentroids.length == numK,
-      s"Expected $numK initial centroids, got ${initCentroids.length}")
-    val dim = initCentroids.head.vector.size
-    val sc = points.sparkContext
-
-    // reference KMeans.java:140-188 runs its iteration body under a
-    // plain TerminateOnMaxIter criteria stream — same here, on the
-    // shared driver-loop utility
-    val centroids = graft.iteration.Loop.iterate(
-        initCentroids, graft.iteration.TerminateOnMaxIter(getMaxIter)) { (current, _) =>
-      val bc = sc.broadcast(current)
-      // per-partition local accumulation, then one treeReduce of
-      // (k × dim sums, k counts) — the allReduce analogue
-      val (sums, counts) = points.mapPartitions { it =>
-        val cs = bc.value
-        val sums = Array.fill(numK)(new Array[Double](dim))
-        val counts = new Array[Long](numK)
-        it.foreach { p =>
-          val c = measure.findClosest(cs, p)
-          graft.linalg.BLAS.axpy(1.0, p.vector, sums(c))
-          counts(c) += 1
-        }
-        Iterator.single((sums, counts))
-      }.treeReduce { (a, b) =>
-        var i = 0
-        while (i < numK) {
-          var j = 0
-          while (j < dim) { a._1(i)(j) += b._1(i)(j); j += 1 }
-          a._2(i) += b._2(i)
-          i += 1
-        }
-        a
-      }
-      bc.destroy()
-      val next = Array.tabulate(numK) { i =>
-        if (counts(i) > 0) {
-          val c = sums(i).clone()
-          graft.linalg.BLAS.scal(1.0 / counts(i), c)
-          VectorWithNorm(Vectors.dense(c))
-        } else current(i) // empty cluster keeps previous centroid
-      }
-      (next, None)
-    }.state
-    points.unpersist(blocking = false)
 
     val spark = df.sparkSession
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft.common.optim
 
 import org.apache.spark.ml.linalg.{DenseVector, Vector, Vectors}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.storage.StorageLevel
 import graft.linalg.BLAS
 
 /** A labeled feature vector with weight (reference
@@ -97,9 +96,7 @@ object SGD {
       data: RDD[LabeledPointWithWeight],
       lossFunc: LossFunc,
       params: SGDParams): (Array[Double], Array[Double]) = {
-    val cached = data.persist(StorageLevel.MEMORY_AND_DISK)
-    try optimizeStored(cached, lossFunc, params)
-    finally cached.unpersist(blocking = false)
+    graft.iteration.Loop.scoped(stored => optimizeStored(stored.cache(data), lossFunc, params))
   }
 
   private def optimizeStored(

@@ -8,7 +8,6 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Distributed connected components over an edge list, used to group
@@ -100,13 +99,11 @@ object ConnectedComponents {
     val checkDriver = driverEdgeLimit > 0
     val persisted = checkDriver || algorithm == "minlabel"
     Loop.scoped { stored =>
-      // only a frame this call persisted is registered: releasing the
-      // unpersisted symRaw would drop a caller's sameResult-equal cache
-      val sym = if (persisted) stored(symRaw.persist(StorageLevel.MEMORY_AND_DISK)) else symRaw
+      val sym = if (persisted) stored.cache(symRaw) else symRaw
       if (checkDriver && sym.count() <= driverEdgeLimit)
         LoopResult(runOnDriver(sym, edges.schema(edges.columns.indexOf(srcCol)).dataType), 0,
           Array.empty[Double])
-      else if (algorithm == "star") runStar(sym, persisted, maxIter, stored)
+      else if (algorithm == "star") runStar(sym, maxIter, stored)
       else runMinLabel(sym, maxIter, stored)
     }
   }
@@ -119,10 +116,9 @@ object ConnectedComponents {
     // key (the PageRank/LabelPropagation discipline): each round then
     // joins the O(V) label table against it without re-exchanging the
     // O(E) edges — one setup exchange instead of one per round
-    val adj = stored(sym.repartition(col("v")).persist(StorageLevel.MEMORY_AND_DISK))
-    val labels0 = stored(sym.select(col("u").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    val adj = stored.cache(sym.repartition(col("v")))
+    val labels0 = stored.cache(sym.select(col("u").as("id")).distinct()
+      .withColumn("component", col("id")))
 
     val result = Loop.iterate(labels0, TerminateOnMaxIterOrTol(maxIter, 0.0)) { (labels, round) =>
       // min neighbor label per vertex (partial aggregation map-side)
@@ -182,8 +178,7 @@ object ConnectedComponents {
    * released once the next one is written and checked; the last one is
    * released once the returned (id, component) frame is stored.
    */
-  private def runStar(sym: DataFrame, symStored: Boolean, maxIter: Int,
-      stored: Loop.Stored): LoopResult[DataFrame] = {
+  private def runStar(sym: DataFrame, maxIter: Int, stored: Loop.Stored): LoopResult[DataFrame] = {
     val byU = Window.partitionBy("u")
     def largeStar(e: DataFrame): DataFrame =
       e.union(e.select(col("v").as("u"), col("u").as("v")))
@@ -203,7 +198,7 @@ object ConnectedComponents {
     }
 
     val first = checkpointed(sym.where(col("u") > col("v")).select("u", "v"))
-    if (symStored) Loop.release(sym)
+    stored.release(sym)
 
     // the criterion is the round's edge count while the edge set moves,
     // and 0 for the round that confirms the fixpoint, which stops the loop

@@ -4,6 +4,7 @@ import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api._
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -25,8 +26,9 @@ object BinaryMetricNames {
  *
  * Scale shape: repartitionByRange(desc score) + sortWithinPartitions
  * (what orderBy does internally), per-partition (pos, neg) summaries
- * collected (O(partitions)), prefix-initialized partition walks, final
- * partial-metrics reduce. No single-task global window.
+ * collected (O(partitions)), prefix-initialized partition walks, their
+ * partial metrics collected and merged in partition-index order. No
+ * single-task global window.
  */
 class BinaryClassificationEvaluator extends AlgoOperator[BinaryClassificationEvaluator]
     with OneToOne[BinaryClassificationEvaluator]
@@ -55,54 +57,55 @@ class BinaryClassificationEvaluator extends AlgoOperator[BinaryClassificationEva
       (col(getLabelCol).cast("double") === 1.0).as("isPos"),
       weightExpr.as("weight"))
 
-    val sorted = data
-      .repartitionByRange(data.sparkSession.sessionState.conf.numShufflePartitions, desc("score"))
-      .sortWithinPartitions(desc("score"))
-      .rdd
-      .map(r => (r.getDouble(0), r.getBoolean(1), r.getDouble(2)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val partials = Loop.scoped { stored =>
+      val sorted = stored.cache(data
+        .repartitionByRange(data.sparkSession.sessionState.conf.numShufflePartitions, desc("score"))
+        .sortWithinPartitions(desc("score"))
+        .rdd
+        .map(r => (r.getDouble(0), r.getBoolean(1), r.getDouble(2))))
 
-    // per-partition (pos, neg) weight summaries — O(numPartitions) rows
-    val partSums = sorted.mapPartitionsWithIndex { (pid, it) =>
-      var pos = 0.0; var neg = 0.0
-      it.foreach { case (_, isPos, w) => if (isPos) pos += w else neg += w }
-      Iterator.single((pid, pos, neg))
-    }.collect().sortBy(_._1)
+      // per-partition (pos, neg) weight summaries — O(numPartitions) rows
+      val partSums = sorted.mapPartitionsWithIndex { (pid, it) =>
+        var pos = 0.0; var neg = 0.0
+        it.foreach { case (_, isPos, w) => if (isPos) pos += w else neg += w }
+        Iterator.single((pid, pos, neg))
+      }.collect().sortBy(_._1)
 
-    val totalPos = partSums.map(_._2).sum
-    val totalNeg = partSums.map(_._3).sum
-    val prefix = partSums.scanLeft((0.0, 0.0)) { case ((p, n), (_, pp, nn)) => (p + pp, n + nn) }
-      .dropRight(1) // prefix(pid) = sums of partitions before pid
+      val totalPos = partSums.map(_._2).sum
+      val totalNeg = partSums.map(_._3).sum
+      val prefix = partSums.scanLeft((0.0, 0.0)) { case ((p, n), (_, pp, nn)) => (p + pp, n + nn) }
+        .dropRight(1) // prefix(pid) = sums of partitions before pid
 
-    val bcPrefix = sorted.sparkContext.broadcast(prefix)
-    // partial metrics per partition: (aucRoc, aucLorenz, aucPr, ks)
-    val partials = sorted.mapPartitionsWithIndex { (pid, it) =>
-      val (startPos, startNeg) = bcPrefix.value(pid)
-      var cumPos = startPos; var cumNeg = startNeg
-      def tpr(p: Double) = if (totalPos == 0) 1.0 else p / totalPos
-      def fpr(n: Double) = if (totalNeg == 0) 1.0 else n / totalNeg
-      def prec(p: Double, n: Double) = if (p + n == 0) 1.0 else p / (p + n)
-      var prevTpr = tpr(cumPos); var prevFpr = fpr(cumNeg)
-      var prevPrec = prec(cumPos, cumNeg)
-      var prevRate = (cumPos + cumNeg) / (totalPos + totalNeg)
-      var roc = 0.0; var lorenz = 0.0; var pr = 0.0; var ks = 0.0
-      it.foreach { case (_, isPos, w) =>
-        if (isPos) cumPos += w else cumNeg += w
-        val t = tpr(cumPos); val f = fpr(cumNeg)
-        val p = prec(cumPos, cumNeg)
-        val rate = (cumPos + cumNeg) / (totalPos + totalNeg)
-        roc += (f - prevFpr) * (t + prevTpr) / 2
-        lorenz += (rate - prevRate) * (t + prevTpr) / 2
-        pr += (t - prevTpr) * (p + prevPrec) / 2
-        ks = math.max(ks, math.abs(f - t))
-        prevTpr = t; prevFpr = f; prevPrec = p; prevRate = rate
-      }
-      Iterator.single((roc, lorenz, pr, ks))
-    }.reduce { (a, b) =>
-      (a._1 + b._1, a._2 + b._2, a._3 + b._3, math.max(a._4, b._4))
+      val bcPrefix = sorted.sparkContext.broadcast(prefix)
+      // partial metrics per partition: (aucRoc, aucLorenz, aucPr, ks),
+      // merged on the driver in partition-index order (`RDD.reduce` merges
+      // in task-completion order, so the sums would vary from run to run)
+      try sorted.mapPartitionsWithIndex { (pid, it) =>
+        val (startPos, startNeg) = bcPrefix.value(pid)
+        var cumPos = startPos; var cumNeg = startNeg
+        def tpr(p: Double) = if (totalPos == 0) 1.0 else p / totalPos
+        def fpr(n: Double) = if (totalNeg == 0) 1.0 else n / totalNeg
+        def prec(p: Double, n: Double) = if (p + n == 0) 1.0 else p / (p + n)
+        var prevTpr = tpr(cumPos); var prevFpr = fpr(cumNeg)
+        var prevPrec = prec(cumPos, cumNeg)
+        var prevRate = (cumPos + cumNeg) / (totalPos + totalNeg)
+        var roc = 0.0; var lorenz = 0.0; var pr = 0.0; var ks = 0.0
+        it.foreach { case (_, isPos, w) =>
+          if (isPos) cumPos += w else cumNeg += w
+          val t = tpr(cumPos); val f = fpr(cumNeg)
+          val p = prec(cumPos, cumNeg)
+          val rate = (cumPos + cumNeg) / (totalPos + totalNeg)
+          roc += (f - prevFpr) * (t + prevTpr) / 2
+          lorenz += (rate - prevRate) * (t + prevTpr) / 2
+          pr += (t - prevTpr) * (p + prevPrec) / 2
+          ks = math.max(ks, math.abs(f - t))
+          prevTpr = t; prevFpr = f; prevPrec = p; prevRate = rate
+        }
+        Iterator.single((roc, lorenz, pr, ks))
+      }.collect().reduce { (a, b) =>
+        (a._1 + b._1, a._2 + b._2, a._3 + b._3, math.max(a._4, b._4))
+      } finally bcPrefix.destroy()
     }
-    sorted.unpersist(blocking = false)
-    bcPrefix.destroy()
 
     val valueOf = Map(
       BinaryMetricNames.AREA_UNDER_ROC -> partials._1,

@@ -3,6 +3,7 @@ package graft.feature
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{AlgoOperator, StageLoader}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -58,52 +59,54 @@ class DeterministicShuffler extends AlgoOperator[DeterministicShuffler]
       .foldLeft(lit(0))(_ + _)
 
     // range-partition + local sort on the (shard, key, id) total
-    // order; a shard may span several partitions
-    val keyed = df
-      .withColumn("__ds_key", key)
-      .withColumn("shard", shard)
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions,
-        col("shard"), col("__ds_key"), col(getIdCol))
-      .sortWithinPartitions(col("shard"), col("__ds_key"), col(getIdCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // pass 1: per-(partition, shard) row counts — O(parts·shards) to
-    // the driver, never rows
-    val counts = keyed.select(col("shard")).rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        val m = scala.collection.mutable.LinkedHashMap.empty[Int, Long]
-        it.foreach { r => val s = r.getInt(0); m(s) = m.getOrElse(s, 0L) + 1L }
-        m.iterator.map { case (s, c) => (pid, s, c) }
-      }.collect()
-    // driver scan in (partition, shard) order → start offset of each
-    // partition's slice of each shard
-    val perShardSeen = scala.collection.mutable.HashMap.empty[Int, Long]
-    val offsets = counts.sortBy(t => (t._1, t._2)).map { case (pid, s, c) =>
-      val off = perShardSeen.getOrElse(s, 0L)
-      perShardSeen(s) = off + c
-      ((pid, s), off)
-    }.toMap
-    val offsetsB = spark.sparkContext.broadcast(offsets)
-    // pass 2: sequential scan per partition assigns global ranks.
-    // mapPartitionsWithIndex bakes the TRUE partition index into the
-    // closure — TaskContext.getPartitionId() would lie under a
-    // downstream coalesce(), which runs parent partitions inside one
-    // task and mis-keys every offset lookup.
-    val shardIdx = keyed.schema.fieldIndex("shard")
-    val rdd2 = keyed.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val base = offsetsB.value
-      var cur = -1
-      var pos = 0L
-      it.map { r =>
-        val s = r.getInt(shardIdx)
-        if (s != cur) { cur = s; pos = base.getOrElse((pid, s), 0L) }
-        val ranked = org.apache.spark.sql.Row.fromSeq(r.toSeq :+ pos)
-        pos += 1L
-        ranked
+    // order; a shard may span several partitions. Stored: both passes
+    // read it, and it is released once the returned frame is stored.
+    Array(Loop.scoped { stored =>
+      val keyed = stored.cache(df
+        .withColumn("__ds_key", key)
+        .withColumn("shard", shard)
+        .repartitionByRange(spark.sessionState.conf.numShufflePartitions,
+          col("shard"), col("__ds_key"), col(getIdCol))
+        .sortWithinPartitions(col("shard"), col("__ds_key"), col(getIdCol)))
+      // pass 1: per-(partition, shard) row counts — O(parts·shards) to
+      // the driver, never rows
+      val counts = keyed.select(col("shard")).rdd
+        .mapPartitionsWithIndex { (pid, it) =>
+          val m = scala.collection.mutable.LinkedHashMap.empty[Int, Long]
+          it.foreach { r => val s = r.getInt(0); m(s) = m.getOrElse(s, 0L) + 1L }
+          m.iterator.map { case (s, c) => (pid, s, c) }
+        }.collect()
+      // driver scan in (partition, shard) order → start offset of each
+      // partition's slice of each shard
+      val perShardSeen = scala.collection.mutable.HashMap.empty[Int, Long]
+      val offsets = counts.sortBy(t => (t._1, t._2)).map { case (pid, s, c) =>
+        val off = perShardSeen.getOrElse(s, 0L)
+        perShardSeen(s) = off + c
+        ((pid, s), off)
+      }.toMap
+      val offsetsB = spark.sparkContext.broadcast(offsets)
+      // pass 2: sequential scan per partition assigns global ranks.
+      // mapPartitionsWithIndex bakes the TRUE partition index into the
+      // closure — TaskContext.getPartitionId() would lie under a
+      // downstream coalesce(), which runs parent partitions inside one
+      // task and mis-keys every offset lookup.
+      val shardIdx = keyed.schema.fieldIndex("shard")
+      val rdd2 = keyed.rdd.mapPartitionsWithIndex { (pid, it) =>
+        val base = offsetsB.value
+        var cur = -1
+        var pos = 0L
+        it.map { r =>
+          val s = r.getInt(shardIdx)
+          if (s != cur) { cur = s; pos = base.getOrElse((pid, s), 0L) }
+          val ranked = org.apache.spark.sql.Row.fromSeq(r.toSeq :+ pos)
+          pos += 1L
+          ranked
+        }
       }
-    }
-    val out = spark.createDataFrame(rdd2,
-      keyed.schema.add("shard_pos", org.apache.spark.sql.types.LongType))
-    Array(out.drop("__ds_key"))
+      val out = spark.createDataFrame(rdd2,
+        keyed.schema.add("shard_pos", org.apache.spark.sql.types.LongType))
+      Loop.keep(out.drop("__ds_key"))
+    })
   }
 }
 object DeterministicShuffler extends StageLoader[DeterministicShuffler] {

@@ -4,6 +4,7 @@ import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{Estimator, Model, StageLoader}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -199,17 +200,18 @@ class MinHashLSHModel extends Model[MinHashLSHModel] with LSHParams[MinHashLSHMo
    * All pairs (one row from `datasetA`, one from `datasetB`) that share
    * a hash bucket in some table AND have true Jaccard distance ≤
    * threshold (reference LSHModel.java:211-282). Output columns:
-   * datasetA_id, datasetB_id, distCol.
+   * datasetA_id, datasetB_id, distCol; returned stored
+   * ([[graft.iteration.Loop.keep]]), so the caller's `unpersist` frees it.
    */
   def approxSimilarityJoin(datasetA: DataFrame, datasetB: DataFrame, threshold: Double,
-      idCol: String, distCol: String = "distCol"): DataFrame = {
+      idCol: String, distCol: String = "distCol"): DataFrame = Loop.scoped { stored =>
     // each side's lineage is consumed by BOTH the bucket explode and the
-    // exact-distance vector join-back — persist the slim (id, vector[,
+    // exact-distance vector join-back — store the slim (id, vector[,
     // hashes]) projection so an expensive upstream (tokenize → shingle →
     // vectorize) isn't re-evaluated per consumer. Only the reused
     // projection is cached, never the caller's full table.
-    val pa = slimPersist(datasetA, idCol)
-    val pb = if (datasetB eq datasetA) pa else slimPersist(datasetB, idCol)
+    val pa = stored.cache(slim(datasetA, idCol))
+    val pb = if (datasetB eq datasetA) pa else stored.cache(slim(datasetB, idCol))
     // the (table, signature-array) bucket key is folded to one long
     // before the shuffle: 8-byte join keys instead of array<double>
     // comparisons. A 64-bit hash coincidence only ADDS a candidate
@@ -225,22 +227,21 @@ class MinHashLSHModel extends Model[MinHashLSHModel] with LSHParams[MinHashLSHMo
     val va = pa.select(col(idCol).as("datasetA_id"), col(getInputCol).as("va"))
     val vb = pb.select(col(idCol).as("datasetB_id"), col(getInputCol).as("vb"))
     val dist = udf { (x: Vector, y: Vector) => MinHashLSHModelData.jaccardDistance(x, y) }
-    candidates
+    Loop.keep(candidates
       .join(va, "datasetA_id")
       .join(vb, "datasetB_id")
       .withColumn(distCol, dist(col("va"), col("vb")))
       .where(col(distCol) <= threshold)
-      .select(col("datasetA_id"), col("datasetB_id"), col(distCol))
+      .select(col("datasetA_id"), col("datasetB_id"), col(distCol)))
   }
 
-  /** The reused (id, inputCol[, outputCol]) projection, cached. A plan
-    * already persisted upstream is recognized by the CacheManager and
-    * not cached twice. */
-  private def slimPersist(df: DataFrame, idCol: String): DataFrame = {
+  /** The reused (id, inputCol[, outputCol]) projection. When the caller
+    * already cached this projection, `Stored.cache` finds its entry,
+    * reads it and leaves it registered to the caller. */
+  private def slim(df: DataFrame, idCol: String): DataFrame = {
     val cols = Seq(idCol, getInputCol) ++
       (if (df.columns.contains(getOutputCol)) Seq(getOutputCol) else Nil)
     df.select(cols.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** (id, table index, signature-as-array) — one row per hash table. */

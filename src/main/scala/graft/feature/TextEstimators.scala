@@ -272,12 +272,6 @@ class StringIndexer extends Estimator[StringIndexer, StringIndexerModel]
     // receives only `cap` rows), an uncapped one a range-partitioned sort
     // whose collect is O(vocabulary) — the size the model must hold anyway.
     val cols = getInputCols
-    val counted = df.select(posexplode(array(
-      cols.map(c => col(c).cast("string")).toIndexedSeq: _*)).as(Seq("colIdx", "value")))
-      .where(col("value").isNotNull)
-      .groupBy("colIdx", "value").agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
     val sortExprs: Seq[org.apache.spark.sql.Column] = order match {
       case StringOrderType.FREQUENCY_DESC => Seq(col("cnt").desc, col("value").asc)
       case StringOrderType.FREQUENCY_ASC  => Seq(col("cnt").asc, col("value").asc)
@@ -285,12 +279,17 @@ class StringIndexer extends Estimator[StringIndexer, StringIndexerModel]
       case _                              => Seq(col("value").asc) // alphabetAsc + arbitrary
     }
     val cap = getMaxIndexNum
-    val arrays: Array[Array[String]] = cols.indices.map { i =>
-      val sorted = counted.where(col("colIdx") === i).orderBy(sortExprs: _*)
-      val capped = if (cap < Int.MaxValue) sorted.limit(cap) else sorted
-      capped.select("value").collect().map(_.getString(0))
-    }.toArray
-    counted.unpersist(blocking = false)
+    val arrays: Array[Array[String]] = graft.iteration.Loop.scoped { stored =>
+      val counted = stored.cache(df.select(posexplode(array(
+        cols.map(c => col(c).cast("string")).toIndexedSeq: _*)).as(Seq("colIdx", "value")))
+        .where(col("value").isNotNull)
+        .groupBy("colIdx", "value").agg(count(lit(1)).as("cnt")))
+      cols.indices.map { i =>
+        val sorted = counted.where(col("colIdx") === i).orderBy(sortExprs: _*)
+        val capped = if (cap < Int.MaxValue) sorted.limit(cap) else sorted
+        capped.select("value").collect().map(_.getString(0))
+      }.toArray
+    }
 
     val spark = df.sparkSession
     import spark.implicits._

@@ -3,7 +3,6 @@ package graft.graph
 import graft.iteration.{Loop, LoopResult, TerminateOnMaxIterOrTol}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Multi-source BFS hop distances — the graph tier's fifth member next
@@ -86,8 +85,7 @@ object Bfs {
       edges.select(col(dstCol).as("src"), col(srcCol).as("dst"))) else fwd
     def union(legs: Seq[DataFrame]): DataFrame = legs.reduce(_ union _)
     Loop.scoped { stored =>
-      val bySrc = stored(e0.distinct().repartition(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+      val bySrc = stored.cache(e0.distinct().repartition(col("src")))
       def checkpointed(frontier: DataFrame): (DataFrame, Long) = {
         val (kept, size) = Loop.materialize(frontier, checkpoint = true, 0L)((c, _) => c + 1, _ + _)
         (stored(kept), size)

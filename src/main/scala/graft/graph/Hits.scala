@@ -3,7 +3,6 @@ package graft.graph
 import graft.iteration.{Loop, LoopResult, TerminateOnMaxIterOrTol}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Distributed HITS — hubs and authorities (Kleinberg, "Authoritative
@@ -117,12 +116,12 @@ object Hits {
       val agg = edges
         .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
         .groupBy("src", "dst").agg(sum("w").as("w"))
-      val bySrc = stored(agg.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK))
+      val bySrc = stored.cache(agg.repartition(col("src")))
       // derived from the CACHED src-keyed table, not from agg: the merge
       // aggregation scans the edge input once instead of twice (bySrc is
       // always materialized first — the authority half-step runs before
       // the hub half-step in round 1)
-      val byDst = stored(bySrc.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK))
+      val byDst = stored.cache(bySrc.repartition(col("dst")))
 
       // Every half-step stores the UNNORMALIZED per-vertex sums of `base`'s
       // vertices (0 where no mass arrives, base's other columns carried) as

@@ -4,7 +4,6 @@ import graft.iteration.{Loop, LoopResult, TerminateOnMaxIterOrTol}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Synchronous label propagation (Raghavan, Albert & Kumara 2007,
@@ -119,7 +118,7 @@ object LabelPropagation {
         else raw.union(raw.select(col("dst").as("src"), col("src").as("dst"), col("w")))
       // partitioned on src: the per-iteration label join reuses this,
       // only the O(V) label table shuffles per round
-      val adj = stored(sym.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK))
+      val adj = stored.cache(sym.repartition(col("src")))
 
       // argmax with min-label tiebreak. Labels are vertex ids, so for
       // integral ids ONE aggregation does it: max over (cnt, ~lab) struct

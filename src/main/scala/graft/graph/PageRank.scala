@@ -3,7 +3,6 @@ package graft.graph
 import graft.iteration.{Loop, LoopResult, TerminateOnMaxIterOrTol}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Distributed PageRank over an edge list (Brin & Page 1998) — the
@@ -152,10 +151,9 @@ object PageRank {
         .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
         .groupBy("src", "dst").agg(sum("w").as("w"))
       val srcWindow = org.apache.spark.sql.expressions.Window.partitionBy("src")
-      val shares = stored(agg
+      val shares = stored.cache(agg
         .withColumn("share", col("w") / sum("w").over(srcWindow))
-        .select(col("src"), col("dst"), col("share"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .select(col("src"), col("dst"), col("share")))
 
       // ONE node table (id, dangling[, seed]), persisted HASH-PARTITIONED
       // ON id by its single groupBy(id) exchange: every vertex, whether it

@@ -2,6 +2,7 @@ package graft.iteration
 
 import scala.reflect.ClassTag
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
@@ -71,12 +72,15 @@ object LoopResult {
  * computes what the driver must know about it (a convergence count, a
  * signature, the next round's scalar). [[materialize]] is that job.
  *
- * Storage has three kinds, and only [[materialize]] and [[append]] cut
- * lineage (`localCheckpoint`):
+ * Storage has three kinds, all at one level (MEMORY_AND_DISK) that no
+ * operator chooses, and only [[materialize]] and [[append]] cut lineage
+ * (`localCheckpoint`):
  *
  *  - rounds and the other tables a call reads more than once, stored by
  *    [[materialize]] (persisted, or local-checkpointed to bound a long
- *    loop's plan) and released when the call no longer reads them;
+ *    loop's plan) or by [[Stored.cache]] (persisted, for a table the
+ *    call's own jobs fill), and released when the call no longer reads
+ *    them;
  *  - grown model frames, cut by [[append]] (below);
  *  - the frame a call or a query returns, stored by [[keep]]: persisted
  *    with its lineage, so the caller's `unpersist` or
@@ -95,9 +99,7 @@ object LoopResult {
  * Executor loss: a released checkpointed round cannot be recomputed, and
  * a stored frame's lineage may reach one, so losing an executor fails the
  * running call or a later read of its result that needs a lost block
- * rebuilt — rerun the call. ConnectedComponents, PageRank,
- * LabelPropagation, Hits, Bfs, Swing, BpeTrainer, FuzzyJoiner,
- * VideoShotHasher and EntityResolver follow this rule;
+ * rebuilt — rerun the call. Every operator follows this rule;
  * [[iterateDataFrame]] stores and releases its rounds the same way.
  *
  * Growing model frames (an index that gains a batch, a model stream that
@@ -120,6 +122,9 @@ object Loop {
     * [[append]] cuts it; [[graft.graph.Bfs]] bounds its settled-set legs
     * with it too. */
   val LeafBound = 32
+
+  /** The one level every stored frame and RDD is persisted at. */
+  private val Level = StorageLevel.MEMORY_AND_DISK
 
   /**
    * `base.unionByName(rows)`, cut with an eager local checkpoint once its
@@ -222,7 +227,7 @@ object Loop {
       seqOp: (A, Row) => A, combOp: (A, A) => A): (DataFrame, A) = {
     val kept =
       if (checkpoint) df.localCheckpoint(eager = false)
-      else df.persist(StorageLevel.MEMORY_AND_DISK)
+      else df.persist(Level)
     // when the job throws (a raise_error in the frame), the caller never
     // receives the frame, so it is released here
     try (kept, fold(kept, zero)(seqOp, combOp))
@@ -276,24 +281,54 @@ object Loop {
     case _ => df.unpersist(blocking = false)
   }
 
-  /** The frames one operator call stores, registered as it stores them;
-    * [[scoped]] releases them all when the call ends. */
+  /** The frames and RDDs one operator call stores, registered as it
+    * stores them; [[scoped]] releases them all when the call ends. */
   final class Stored private[Loop] {
-    private[Loop] val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    /** Register `df` (a frame [[materialize]] stored, or a cache the call
-      * made) and return it. */
+    private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private val rdds = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+
+    /** Register `df`, a frame [[materialize]] or [[keep]] stored, and
+      * return it. */
     def apply(df: DataFrame): DataFrame = { frames += df; df }
+
+    /** Persist `df` lazily (its first job fills the cache), register it and
+      * return it. A frame whose plan already matches a cache entry (a
+      * caller's own cache) is returned as it is and not registered, so the
+      * call's release never drops storage the call did not make. */
+    def cache(df: DataFrame): DataFrame = {
+      val qe = df.queryExecution
+      val cached = qe.sparkSession.sharedState.cacheManager
+        .lookupCachedData(qe.sparkSession, qe.analyzed).isDefined
+      if (cached) df else apply(df.persist(Level))
+    }
+
+    /** [[cache]] for an RDD: persisted and registered unless the RDD is
+      * already persisted by its caller. */
+    def cache[T](rdd: RDD[T]): RDD[T] = {
+      if (rdd.getStorageLevel == StorageLevel.NONE) rdds += rdd.persist(Level)
+      rdd
+    }
+
+    /** [[Loop.release]] `df` now, before the call ends, if this call
+      * registered it; a caller's cache that [[cache]] found is left alone. */
+    def release(df: DataFrame): Unit = if (frames.exists(_ eq df)) Loop.release(df)
+
+    private[Loop] def releaseAll(): Unit = {
+      frames.foreach(Loop.release)
+      rdds.foreach(_.unpersist(blocking = false))
+    }
   }
 
-  /** Run one operator call, then [[release]] every frame it registered
-    * with `stored`, whether the call returns or throws: a failing round
-    * job or a rejected parameter leaves no cache entry or checkpoint
-    * behind. Releasing a frame the call already released is a no-op, so
-    * a loop registers every round's frame and still frees each as soon as
-    * it is superseded. The frame the call returns must not be registered. */
+  /** Run one operator call, then release every frame and RDD it registered
+    * with `stored` ([[release]] for a frame), whether the call returns or
+    * throws: a failing round job or a rejected parameter leaves no cache
+    * entry or checkpoint behind. Releasing a frame the call already
+    * released is a no-op, so a loop registers every round's frame and still
+    * frees each as soon as it is superseded. The frame the call returns
+    * must not be registered. */
   def scoped[A](body: Stored => A): A = {
     val stored = new Stored
-    try body(stored) finally stored.frames.foreach(release)
+    try body(stored) finally stored.releaseAll()
   }
 
   /** Store `out`, the frame a call or a query returns, in one job, with

@@ -163,36 +163,32 @@ class FuzzyJoiner extends AlgoOperator[FuzzyJoiner]
     val k = getMaxDistance
     val q = getGramLength
     val shortBound = q - 1 + k * q
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
     // slim (id, s, len) — feeds the gram path, both short-path sides
     // and both verify join-backs; persisted so the caller's upstream
     // lineage is evaluated once
-    val base = stored(df.select(col(getIdCol).as("id"),
+    val base = stored.cache(df.select(col(getIdCol).as("id"),
         col(getInputCol).cast("string").as("s"))
       .where(col("s").isNotNull)
-      .withColumn("len", length(col("s")))
-      .persist(lvl))
+      .withColumn("len", length(col("s"))))
 
     // (gram, occ) multiset elements, as in grams() above — consumed by
     // the frequency aggregate AND the prefix join, so persisted
     val gs = expr(
       s"transform(sequence(0, len - $q), i -> substring(s, i + 1, $q))")
-    val gramTable = stored(base.where(col("len") >= q)
+    val gramTable = stored.cache(base.where(col("len") >= q)
       .select(col("id"), col("len"), posexplode(gs).as(Seq("pos", "gram")))
       .withColumn("occ", row_number().over(
         Window.partitionBy("id", "gram").orderBy("pos")))
-      .drop("pos")
-      .persist(lvl))
+      .drop("pos"))
 
     val freq = gramTable.groupBy("gram", "occ").agg(count(lit(1)).as("cnt"))
-    val prefixes = stored(gramTable
+    val prefixes = stored.cache(gramTable
       .join(freq, Seq("gram", "occ"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("id").orderBy(col("cnt"), col("gram"), col("occ"))))
       .where(col("rk") <= k * q + 1)
-      .select("id", "len", "gram", "occ")
-      .persist(lvl))
+      .select("id", "len", "gram", "occ"))
 
     val gramCandidates = prefixes
       .select(col("id").as("left_id"), col("len").as("left_len"), col("gram"), col("occ"))

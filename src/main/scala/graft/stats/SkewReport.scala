@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.api.{AlgoOperator, StageLoader}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -51,39 +52,38 @@ class SkewReport extends AlgoOperator[SkewReport] {
 
     val valueArr = array(cols.map(c => coalesce(col(c).cast("string"), lit("<null>"))): _*)
     val nameArr = array(cols.map(lit): _*)
-    val counts = df
-      .select(posexplode(valueArr).as(Seq("__sr_i", "key")))
-      .withColumn("column", element_at(nameArr, col("__sr_i") + 1))
-      .groupBy("column", "key").agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // total row count derived from the already-persisted counts table
-    // (each column contributes exactly one value per row, so summing n
-    // over any single column = input rows) — NOT a second scan of df;
-    // this aggregate also materializes the counts cache for the
-    // per-column TakeOrdereds below
-    val total = counts.where(col("column") === cols.head)
-      .agg(coalesce(sum("n"), lit(0L))).head.getLong(0)
-
     val k = getTopK
-    val perCol = cols.map { c =>
-      counts.where(col("column") === c)
-        .orderBy(col("n").desc, col("key").asc)
-        .limit(k)
-    }
-    val ranked = perCol.reduce(_ unionByName _)
-      .withColumn("rank",
-        row_number().over(Window.partitionBy("column")
-          .orderBy(col("n").desc, col("key").asc)))
-      .withColumn("share", col("n") / lit(total.toDouble))
-      .select("column", "key", "n", "share", "rank")
-    // materialize the (<= cols·topK)-row report so the shared counts
-    // cache releases inside the operator (the CollocationScorer
-    // convention — reports are dashboard-sized by construction)
-    val rows = ranked.collect()
-    counts.unpersist(blocking = false)
-    Array(df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), ranked.schema))
+    Array(Loop.scoped { stored =>
+      val counts = stored.cache(df
+        .select(posexplode(valueArr).as(Seq("__sr_i", "key")))
+        .withColumn("column", element_at(nameArr, col("__sr_i") + 1))
+        .groupBy("column", "key").agg(count(lit(1)).as("n")))
+
+      // total row count derived from the already-persisted counts table
+      // (each column contributes exactly one value per row, so summing n
+      // over any single column = input rows) — NOT a second scan of df;
+      // this aggregate also materializes the counts cache for the
+      // per-column TakeOrdereds below
+      val total = counts.where(col("column") === cols.head)
+        .agg(coalesce(sum("n"), lit(0L))).head.getLong(0)
+
+      val perCol = cols.map { c =>
+        counts.where(col("column") === c)
+          .orderBy(col("n").desc, col("key").asc)
+          .limit(k)
+      }
+      val ranked = perCol.reduce(_ unionByName _)
+        .withColumn("rank",
+          row_number().over(Window.partitionBy("column")
+            .orderBy(col("n").desc, col("key").asc)))
+        .withColumn("share", col("n") / lit(total.toDouble))
+        .select("column", "key", "n", "share", "rank")
+      // materialize the (<= cols·topK)-row report so the shared counts
+      // cache releases inside the operator (the CollocationScorer
+      // convention — reports are dashboard-sized by construction)
+      val rows = ranked.collect()
+      df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), ranked.schema)
+    })
   }
 }
 

@@ -83,34 +83,34 @@ class OnlineKMeans extends Estimator[OnlineKMeans, OnlineKMeansModel]
       if (getTimeCol == null) lit(Long.MinValue)
       else coalesce(col(getTimeCol).cast("long"), lit(Long.MinValue))
     import spark.implicits._
-    val indexed = df.select(col(getFeaturesCol), timeExpr).rdd.zipWithIndex()
-      .map { case (r, i) => (i / batchSize, r.getAs[Vector](0), r.getLong(1)) }
-      .toDF("batch", "features", "t")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val numBatches = indexed.count() / batchSize
-    // version timestamp = the batch's max event time; ONE aggregation
-    // over the persisted batch table instead of one job per batch
-    val batchTimes: Map[Long, Long] =
-      if (getTimeCol == null) Map.empty
-      else indexed.groupBy("batch").agg(max("t").as("mt"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // Long.MinValue is update()'s "legacy snapshot" sentinel; a
-    // versioned fit whose batch saw only null event times stamps
-    // MinValue+1 — kept in the version stream but below any realistic
-    // rowTime−delay key, i.e. effectively unservable under gating
-    val defaultStamp = if (getTimeCol == null) Long.MinValue else Long.MinValue + 1
-    var b = 0L
-    while (b < numBatches) {
-      val stamp = batchTimes.get(b) match {
-        case Some(t) if t > Long.MinValue => t
-        case _ => defaultStamp
+    graft.iteration.Loop.scoped { stored =>
+      val indexed = stored.cache(df.select(col(getFeaturesCol), timeExpr).rdd.zipWithIndex()
+        .map { case (r, i) => (i / batchSize, r.getAs[Vector](0), r.getLong(1)) }
+        .toDF("batch", "features", "t"))
+      val numBatches = indexed.count() / batchSize
+      // version timestamp = the batch's max event time; ONE aggregation
+      // over the persisted batch table instead of one job per batch
+      val batchTimes: Map[Long, Long] =
+        if (getTimeCol == null) Map.empty
+        else indexed.groupBy("batch").agg(max("t").as("mt"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // Long.MinValue is update()'s "legacy snapshot" sentinel; a
+      // versioned fit whose batch saw only null event times stamps
+      // MinValue+1 — kept in the version stream but below any realistic
+      // rowTime−delay key, i.e. effectively unservable under gating
+      val defaultStamp = if (getTimeCol == null) Long.MinValue else Long.MinValue + 1
+      var b = 0L
+      while (b < numBatches) {
+        val stamp = batchTimes.get(b) match {
+          case Some(t) if t > Long.MinValue => t
+          case _ => defaultStamp
+        }
+        model = model.update(indexed.where(col("batch") === b).select("features"),
+          "features", stamp)
+        b += 1
       }
-      model = model.update(indexed.where(col("batch") === b).select("features"),
-        "features", stamp)
-      b += 1
+      model
     }
-    indexed.unpersist(blocking = false)
-    model
   }
 }
 object OnlineKMeans extends StageLoader[OnlineKMeans] {

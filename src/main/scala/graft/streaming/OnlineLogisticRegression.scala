@@ -71,31 +71,32 @@ class OnlineLogisticRegression
       if (getTimeCol == null) lit(Long.MaxValue)
       else coalesce(col(getTimeCol).cast("long"), lit(Long.MinValue))
     import spark.implicits._
-    val indexed = df.select(col(getFeaturesCol), col(getLabelCol).cast("double"), weightExpr, timeExpr)
-      .rdd.zipWithIndex()
-      .map { case (r, i) =>
-        (i / batchSize, r.getAs[Vector](0), r.getDouble(1), r.getDouble(2), r.getLong(3))
+    graft.iteration.Loop.scoped { stored =>
+      val indexed = stored.cache(df
+        .select(col(getFeaturesCol), col(getLabelCol).cast("double"), weightExpr, timeExpr)
+        .rdd.zipWithIndex()
+        .map { case (r, i) =>
+          (i / batchSize, r.getAs[Vector](0), r.getDouble(1), r.getDouble(2), r.getLong(3))
+        }
+        .toDF("batch", "features", "label", "w", "t"))
+      val numBatches = indexed.count() / batchSize
+      // version timestamp = the batch's max event time (the moment the
+      // reference would emit this model version downstream); ONE
+      // aggregation over the persisted batch table instead of one job
+      // per batch
+      val batchTimes: Map[Long, Long] =
+        if (getTimeCol == null) Map.empty
+        else indexed.groupBy("batch").agg(max("t").as("mt"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      var b = 0L
+      while (b < numBatches) {
+        val batchDf = indexed.where(col("batch") === b)
+        model = model.update(batchDf, "features", "label", "w",
+          batchTimes.getOrElse(b, Long.MaxValue))
+        b += 1
       }
-      .toDF("batch", "features", "label", "w", "t")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val numBatches = indexed.count() / batchSize
-    // version timestamp = the batch's max event time (the moment the
-    // reference would emit this model version downstream); ONE
-    // aggregation over the persisted batch table instead of one job
-    // per batch
-    val batchTimes: Map[Long, Long] =
-      if (getTimeCol == null) Map.empty
-      else indexed.groupBy("batch").agg(max("t").as("mt"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    var b = 0L
-    while (b < numBatches) {
-      val batchDf = indexed.where(col("batch") === b)
-      model = model.update(batchDf, "features", "label", "w",
-        batchTimes.getOrElse(b, Long.MaxValue))
-      b += 1
+      model
     }
-    indexed.unpersist(blocking = false)
-    model
   }
 }
 object OnlineLogisticRegression extends StageLoader[OnlineLogisticRegression] {

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{StageLoader, Transformer}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -23,7 +24,9 @@ import graft.util.ReadWrite
  * Document frequencies (≤ |q| rows) and the corpus stats (1 row) join
  * back as broadcasts; per-document term scores are summed in sorted
  * term order for run-to-run determinism. Nothing is collected to the
- * driver.
+ * driver. The scored frame is returned stored ([[graft.iteration.Loop.keep]],
+ * one job): the caller's `unpersist` frees it, and nothing else of the
+ * call remains.
  */
 class Bm25Scorer extends Transformer[Bm25Scorer]
     with HasInputCol[Bm25Scorer] with HasOutputCol[Bm25Scorer] {
@@ -58,41 +61,42 @@ class Bm25Scorer extends Transformer[Bm25Scorer]
     val words = split(trim(text), "\\s+")
     val dl = when(length(trim(text)) === 0, 0L).otherwise(size(words)).cast("double")
 
-    // persist: consumed by both the corpus stats and the tf explode —
+    // stored: consumed by both the corpus stats and the tf explode —
     // without the cache each would re-tokenize the full corpus. The
     // cached projection is tiny (id, length, query-matching tokens
-    // only); callers may unpersist once the result is materialized.
-    val withLen = docs.select(col(id), dl.as("__dl"),
-      filter(words, t => array_contains(q, t)).as("__qtoks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = withLen.agg(
-      count(lit(1)).cast("double").as("__n_docs"), avg("__dl").as("__avgdl"))
-    val tf = withLen
-      .select(col(id), col("__dl"), explode(col("__qtoks")).as("__term"))
-      .groupBy(col(id), col("__dl"), col("__term"))
-      .agg(count(lit(1)).cast("double").as("__tf"))
-    val dfreq = tf.groupBy("__term").agg(count(lit(1)).cast("double").as("__df"))
+    // only) and is released once the returned frame is stored.
+    Array(Loop.scoped { stored =>
+      val withLen = stored.cache(docs.select(col(id), dl.as("__dl"),
+        filter(words, t => array_contains(q, t)).as("__qtoks")))
+      val stats = withLen.agg(
+        count(lit(1)).cast("double").as("__n_docs"), avg("__dl").as("__avgdl"))
+      val tf = withLen
+        .select(col(id), col("__dl"), explode(col("__qtoks")).as("__term"))
+        .groupBy(col(id), col("__dl"), col("__term"))
+        .agg(count(lit(1)).cast("double").as("__tf"))
+      val dfreq = tf.groupBy("__term").agg(count(lit(1)).cast("double").as("__df"))
 
-    val k1v = getK1
-    val bv = getB
-    val perTerm = tf
-      .join(broadcast(dfreq), "__term")
-      .crossJoin(broadcast(stats))
-      .withColumn("__idf",
-        log(lit(1.0) + (col("__n_docs") - col("__df") + 0.5) / (col("__df") + 0.5)))
-      .withColumn("__s",
-        col("__idf") * col("__tf") * (k1v + 1.0) /
-          (col("__tf") + lit(k1v) * (lit(1.0 - bv) + lit(bv) * col("__dl") / col("__avgdl"))))
-    // sum per-term contributions in term order: FP addition isn't
-    // associative and an unordered agg would make the score flap at
-    // the last ulp between runs
-    val scored = perTerm.groupBy(col(id))
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("__term"), col("__s")))),
-        lit(0.0), (acc, x) => acc + x.getField("__s")).as(getOutputCol))
+      val k1v = getK1
+      val bv = getB
+      val perTerm = tf
+        .join(broadcast(dfreq), "__term")
+        .crossJoin(broadcast(stats))
+        .withColumn("__idf",
+          log(lit(1.0) + (col("__n_docs") - col("__df") + 0.5) / (col("__df") + 0.5)))
+        .withColumn("__s",
+          col("__idf") * col("__tf") * (k1v + 1.0) /
+            (col("__tf") + lit(k1v) * (lit(1.0 - bv) + lit(bv) * col("__dl") / col("__avgdl"))))
+      // sum per-term contributions in term order: FP addition isn't
+      // associative and an unordered agg would make the score flap at
+      // the last ulp between runs
+      val scored = perTerm.groupBy(col(id))
+        .agg(aggregate(
+          sort_array(collect_list(struct(col("__term"), col("__s")))),
+          lit(0.0), (acc, x) => acc + x.getField("__s")).as(getOutputCol))
 
-    Array(docs.join(scored, Seq(id), "left")
-      .withColumn(getOutputCol, coalesce(col(getOutputCol), lit(0.0))))
+      Loop.keep(docs.join(scored, Seq(id), "left")
+        .withColumn(getOutputCol, coalesce(col(getOutputCol), lit(0.0))))
+    })
   }
 }
 object Bm25Scorer extends StageLoader[Bm25Scorer] {

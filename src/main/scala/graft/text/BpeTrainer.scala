@@ -2,7 +2,6 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.api.{Estimator, Model, StageLoader}
 import graft.iteration.Loop
 import graft.param._
@@ -122,10 +121,9 @@ class BpeTrainer extends Estimator[BpeTrainer, BpeModel]
     // fit returns or throws
     val merges = Loop.scoped { stored =>
       // one pass over the corpus: distinct words + frequencies
-      val words = stored(df
+      val words = stored.cache(df
         .select(explode(NgramLm.tokens(col(getInputCol))).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("freq"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .groupBy("w").agg(count(lit(1)).as("freq")))
       // row count alone does not bound driver memory — 1M "words" that
       // are URLs or base64 blobs collect to gigabytes. The same
       // materializing aggregation also sums symbol lengths, and the
@@ -160,9 +158,7 @@ class BpeTrainer extends Estimator[BpeTrainer, BpeModel]
     * table; every frame they store is registered with `stored`. */
   private def distributedRounds(words: DataFrame, stored: Loop.Stored): Seq[(String, String)] = {
     // initial symbols = characters
-    var syms = stored(words
-      .select(col("freq"), split(col("w"), "").as("s"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    var syms = stored.cache(words.select(col("freq"), split(col("w"), "").as("s")))
     // freed after the next pair count fills `syms`: freed first, Spark
     // would recompile the unfilled cache to recompute from the corpus
     var parent = words
@@ -182,7 +178,7 @@ class BpeTrainer extends Estimator[BpeTrainer, BpeModel]
         .select(col("freq"), explode(NgramLm.bigrams(col("s"))).as("p"))
         .groupBy(col("p.w1").as("a"), col("p.w2").as("b"))
         .agg(sum("freq").as("cnt"))
-      if (cap > 1) stored(pairCounts.persist(StorageLevel.MEMORY_AND_DISK))
+      if (cap > 1) stored.cache(pairCounts)
       val top = pairCounts
         .where(col("a") =!= col("b")) // see scaladoc: no self-pair candidates
         .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
@@ -280,12 +276,11 @@ class BpeTrainer extends Estimator[BpeTrainer, BpeModel]
           (merges.size + accepted.size) / BpeTrainer.CheckpointEvery > merges.size / BpeTrainer.CheckpointEvery
         // a checkpoint round is written, lineage cut, in one job; the
         // other rounds are filled by the next round's pair count
-        val mat =
-          if (crossedCheckpoint)
-            Loop.materialize(next, checkpoint = true, 0L)((c, _) => c + 1, _ + _)._1
-          else next.persist(StorageLevel.MEMORY_AND_DISK)
         parent = syms
-        syms = stored(mat)
+        syms =
+          if (crossedCheckpoint)
+            stored(Loop.materialize(next, checkpoint = true, 0L)((c, _) => c + 1, _ + _)._1)
+          else stored.cache(next)
         merges ++= accepted.map(m => (m._1, m._2))
         createdSymbols ++= accepted.map(m => m._1 + m._2)
       }

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{AlgoOperator, StageLoader}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -54,52 +55,50 @@ class CollocationScorer extends AlgoOperator[CollocationScorer]
     val df = inputs.head
 
     // the distinct-pair table feeds FOUR consumers (margins ×2, total,
-    // survivors) — persist it so the corpus explode+aggregate runs
+    // survivors) — store it so the corpus explode+aggregate runs
     // once, and release it after the (≤ topK)-row result materializes
-    val pairs = df
-      .select(explode(NgramLm.bigrams(NgramLm.tokens(col(getInputCol)))).as("p"))
-      .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .agg(count(lit(1)).as("n12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // margins and total from the (much smaller) distinct-pair table
-    val left = pairs.groupBy("w1").agg(sum("n12").as("n1"))
-    val right = pairs.groupBy("w2").agg(sum("n12").as("n2"))
-    val total = pairs.agg(sum("n12").as("__cs_n"))
+    Array(Loop.scoped { stored =>
+      val pairs = stored.cache(df
+        .select(explode(NgramLm.bigrams(NgramLm.tokens(col(getInputCol)))).as("p"))
+        .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
+        .agg(count(lit(1)).as("n12")))
+      // margins and total from the (much smaller) distinct-pair table
+      val left = pairs.groupBy("w1").agg(sum("n12").as("n1"))
+      val right = pairs.groupBy("w2").agg(sum("n12").as("n2"))
+      val total = pairs.agg(sum("n12").as("__cs_n"))
 
-    val n = col("__cs_n").cast("double")
-    val (k11, k12, k21) =
-      (col("n12").cast("double"), col("n1").cast("double") - col("n12"),
-        col("n2").cast("double") - col("n12"))
-    val k22 = n - col("n1") - col("n2") + col("n12")
-    // a zero cell contributes 0 (lim k→0 of k·ln(k·N/E) = 0)
-    def term(k: org.apache.spark.sql.Column, row: org.apache.spark.sql.Column,
-        c: org.apache.spark.sql.Column) =
-      when(k > 0.0, k * log(k * n / (row * c))).otherwise(0.0)
-    val llr = lit(2.0) * (
-      term(k11, col("n1").cast("double"), col("n2").cast("double")) +
-        term(k12, col("n1").cast("double"), n - col("n2")) +
-        term(k21, n - col("n1"), col("n2").cast("double")) +
-        term(k22, n - col("n1"), n - col("n2")))
-    val pmi = log2(col("n12") * n / (col("n1").cast("double") * col("n2")))
+      val n = col("__cs_n").cast("double")
+      val (k11, k12, k21) =
+        (col("n12").cast("double"), col("n1").cast("double") - col("n12"),
+          col("n2").cast("double") - col("n12"))
+      val k22 = n - col("n1") - col("n2") + col("n12")
+      // a zero cell contributes 0 (lim k→0 of k·ln(k·N/E) = 0)
+      def term(k: org.apache.spark.sql.Column, row: org.apache.spark.sql.Column,
+          c: org.apache.spark.sql.Column) =
+        when(k > 0.0, k * log(k * n / (row * c))).otherwise(0.0)
+      val llr = lit(2.0) * (
+        term(k11, col("n1").cast("double"), col("n2").cast("double")) +
+          term(k12, col("n1").cast("double"), n - col("n2")) +
+          term(k21, n - col("n1"), col("n2").cast("double")) +
+          term(k22, n - col("n1"), n - col("n2")))
+      val pmi = log2(col("n12") * n / (col("n1").cast("double") * col("n2")))
 
-    val scored = pairs
-      .where(col("n12") >= getMinCount)
-      .join(left, "w1")
-      .join(right, "w2")
-      .crossJoin(broadcast(total))
-      .select(col("w1"), col("w2"), col("n12"), col("n1"), col("n2"),
-        pmi.as("pmi"), llr.as("llr"))
-      .orderBy(col("llr").desc, col("w1"), col("w2"))
-      .limit(getTopK)
-    // materialize the (<= topK)-row result so the pair cache can be
-    // released now rather than leaking past the operator; topK bounds
-    // the driver transfer by construction (collocation lists are
-    // dashboard-sized — raise topK deliberately, not by default)
-    val rows = scored.collect()
-    val out = df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), scored.schema)
-    pairs.unpersist(blocking = false)
-    Array(out)
+      val scored = pairs
+        .where(col("n12") >= getMinCount)
+        .join(left, "w1")
+        .join(right, "w2")
+        .crossJoin(broadcast(total))
+        .select(col("w1"), col("w2"), col("n12"), col("n1"), col("n2"),
+          pmi.as("pmi"), llr.as("llr"))
+        .orderBy(col("llr").desc, col("w1"), col("w2"))
+        .limit(getTopK)
+      // materialize the (<= topK)-row result so the pair cache can be
+      // released now rather than leaking past the operator; topK bounds
+      // the driver transfer by construction (collocation lists are
+      // dashboard-sized — raise topK deliberately, not by default)
+      val rows = scored.collect()
+      df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), scored.schema)
+    })
   }
 }
 

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{AlgoOperator, StageLoader}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -67,10 +68,11 @@ class KeywordExtractor extends AlgoOperator[KeywordExtractor]
 
   /** @return (word, rank) — ranks sum to 1 over the corpus vocabulary
     *         (every word that co-occurs with any other, self-pairs
-    *         included). A topK = 0 result is the PageRank output
-    *         itself — persisted directly (NOT a projection over it, so
-    *         `result.unpersist()` really frees the O(vocab) cache);
-    *         a topK > 0 result is materialized and dashboard-sized. */
+    *         included). A topK = 0 result is PageRank's stored output
+    *         itself (NOT a projection over it, so `result.unpersist()`
+    *         really frees the O(vocab) cache); a topK > 0 result is a
+    *         collected, dashboard-sized local table, and the ranks are
+    *         released before the call returns. */
   override def transform(inputs: DataFrame*): Array[DataFrame] = {
     require(inputs.size == 1)
     val df = inputs.head
@@ -80,22 +82,20 @@ class KeywordExtractor extends AlgoOperator[KeywordExtractor]
       .union(pairs.select(col("p.w2").as("src"), col("p.w1").as("dst")))
     // Output names go INTO PageRank.run: a rename projection here
     // would make both this operator's and its callers' unpersist a
-    // non-cascading no-op against PageRank's persisted plan.
-    val ranks = graft.graph.PageRank.run(edges, "src", "dst",
+    // non-cascading no-op against PageRank's stored plan.
+    def ranks = graft.graph.PageRank.run(edges, "src", "dst",
       getDampingFactor, getNumIter, getTol,
       idOut = "word", rankOut = "rank").state
     val k = getTopK
     if (k == 0) Array(ranks)
-    else {
-      // TakeOrdered-shaped; materialize so PageRank's rank cache
-      // releases inside the operator (the CollocationScorer convention
-      // for dashboard-sized reports)
-      val top = ranks.orderBy(col("rank").desc, col("word").asc).limit(k)
+    else Array(Loop.scoped { stored =>
+      // TakeOrdered-shaped and dashboard-sized: the top rows are
+      // collected, so PageRank's stored ranks are registered and released
+      // when the call ends
+      val top = stored(ranks).orderBy(col("rank").desc, col("word").asc).limit(k)
       val rows = top.collect()
-      ranks.unpersist(blocking = false)
-      Array(df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), top.schema))
-    }
+      df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), top.schema)
+    })
   }
 }
 

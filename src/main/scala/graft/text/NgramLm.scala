@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{Estimator, Model, StageLoader}
+import graft.iteration.Loop
 import graft.param._
 import graft.util.ReadWrite
 
@@ -64,38 +65,35 @@ class NgramLm extends Estimator[NgramLm, NgramLmModel]
     import spark.implicits._
     val words = NgramLm.tokens(col(getInputCol))
     val toks = inputs.head.select(words.as("__w"))
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val m = new NgramLmModel()
     if (getHashBuckets > 0) {
       val b = getHashBuckets.toLong
       // one corpus scan: partial-agg the exploded grams down to
       // distinct (ctxBucket, bgBucket) pairs, then derive the two
       // bounded (≤ B rows each) model tables from that intermediate
-      val pairs = toks
-        .select(explode(NgramLm.bigrams(col("__w"))).as("__bg"))
-        .groupBy(pmod(xxhash64(col("__bg.w1")), lit(b)).as("ctx"),
-          pmod(xxhash64(col("__bg.w1"), col("__bg.w2")), lit(b)).as("bg"))
-        .agg(count(lit(1)).as("c"))
-        .persist(lvl)
-      val bgCounts = pairs.groupBy("bg").agg(sum("c").as("c")).persist(lvl)
-      val ctxCounts = pairs.groupBy("ctx").agg(sum("c").as("c")).persist(lvl)
-      bgCounts.count(); ctxCounts.count()
-      pairs.unpersist(blocking = false)
+      val (bgCounts, ctxCounts) = Loop.scoped { stored =>
+        val pairs = stored.cache(toks
+          .select(explode(NgramLm.bigrams(col("__w"))).as("__bg"))
+          .groupBy(pmod(xxhash64(col("__bg.w1")), lit(b)).as("ctx"),
+            pmod(xxhash64(col("__bg.w1"), col("__bg.w2")), lit(b)).as("bg"))
+          .agg(count(lit(1)).as("c")))
+        (Loop.keep(pairs.groupBy("bg").agg(sum("c").as("c"))),
+          Loop.keep(pairs.groupBy("ctx").agg(sum("c").as("c"))))
+      }
       // vocab over hashed tokens: ≤ B, and = exact vocab when collision-free
       val vocab = toks.select(explode(col("__w")).as("__t"))
         .agg(countDistinct(pmod(xxhash64(col("__t")), lit(b)))
           .cast("long").as("vocabSize")).head().getLong(0)
       m.setModelData(bgCounts, Seq(vocab).toDF("vocabSize"), ctxCounts)
     } else {
-      // persist: the model table would otherwise be unpersisted lineage
-      // over the corpus, and transform() consumes it twice (context
-      // totals + the per-document join) — each consumer would re-read
-      // and re-count the whole corpus
-      val bigrams = toks
+      // stored: the model table would otherwise be lineage over the
+      // corpus, and transform() consumes it twice (context totals + the
+      // per-document join) — each consumer would re-read and re-count the
+      // whole corpus
+      val bigrams = Loop.keep(toks
         .select(posexplode(NgramLm.bigrams(col("__w"))).as(Seq("__p", "__bg")))
         .groupBy(col("__bg.w1").as("w1"), col("__bg.w2").as("w2"))
-        .agg(count(lit(1)).as("c"))
-        .persist(lvl)
+        .agg(count(lit(1)).as("c")))
       // vocab size collapses to one number at fit time: a local-relation
       // stats table instead of a corpus-scan lineage per transform()
       val vocab = toks.select(explode(col("__w")).as("__t"))
